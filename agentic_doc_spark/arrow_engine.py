@@ -10,13 +10,17 @@ DataFrame plan needs NO exchange at all:
 
     scan → mapInArrow(extract_batch) → sink
 
-Inside the kernel everything is columnar: pyarrow ListArrays flatten to
-flat numpy/pandas columns, the classify contract runs the SAME
-classify_frame as the shuffle engine, per-part failure and markdown
-assembly are vectorized groupby/join ops, and the nested output
-(spans/chunks/errors ListArray<StructArray>) is rebuilt directly from
-flat arrays + offsets — zero per-row Python objects end to end, which is
-the north rule's execution constraint taken literally.
+Inside the kernel everything after the flatten stays in Arrow and numpy:
+the spans are sorted once by (doc, offset), the classify contract runs
+the SAME classify_arrays as the shuffle engine's classify_frame, and
+because part = page // split_size is monotone in offset, every (doc,
+part) group is one contiguous segment of rows. Per-part failure, error
+pages, dense offsets and page ranges are segment arithmetic (reduceat,
+starts/ends), markdown is two ``pc.binary_join`` calls over ListArrays
+built from segment offsets, and the nested output (spans/chunks/errors
+ListArray<StructArray>) is rebuilt directly from flat arrays + offsets.
+The only per-row Python is classify's regex loops (Python ``re`` has no
+vectorized form).
 
 Scale: parallelism = scan splits (a 100 TB corpus has ~10^6 of them);
 each Arrow batch is bounded by maxRecordsPerBatch; a mega-document is a
@@ -33,12 +37,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from agentic_doc_spark.config import DEFAULT_SETTINGS, Settings
-from agentic_doc_spark.functions.classify import classify_frame
+from agentic_doc_spark.functions.classify import classify_arrays
 from agentic_doc_spark.functions.markdown import PART_SEP
 
 _OUT_SCHEMA = pa.schema(
@@ -111,17 +115,23 @@ _OUT_SCHEMA = pa.schema(
 )
 
 
-def _render(kind: np.ndarray, text: pd.Series, media: pd.Series) -> pd.Series:
-    """Vectorized render_span twin (functions/markdown.py)."""
-    text = text.fillna("")
-    m = media.fillna("")
-    out = text.copy()
-    is_media = kind == "media"
-    has_media = media.notna() & (media != "")
-    is_fig = (kind == "figure") & has_media
-    out[is_media] = "![" + m[is_media] + "](" + m[is_media] + ")"
-    out[is_fig] = "![" + text[is_fig] + "](" + m[is_fig] + ")"
-    return out
+def _render(kind: pa.Array, text: pa.Array, media: pa.Array) -> pa.Array:
+    """Vectorized render_span twin (functions/markdown.py); ``text`` has
+    its nulls already filled with ''."""
+    m = pc.fill_null(media, "")
+    media_md = pc.binary_join_element_wise("![", m, "](", m, ")", "")
+    fig_md = pc.binary_join_element_wise("![", text, "](", m, ")", "")
+    is_fig = pc.and_(pc.equal(kind, "figure"), pc.greater(pc.binary_length(m), 0))
+    return pc.if_else(
+        pc.equal(kind, "media"), media_md, pc.if_else(is_fig, fig_md, text)
+    )
+
+
+def _offsets(counts: np.ndarray) -> pa.Array:
+    """List offsets (int32) for consecutive groups of the given sizes."""
+    out = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=out[1:])
+    return pa.array(out, pa.int32())
 
 
 def extract_batch(
@@ -130,185 +140,159 @@ def extract_batch(
     """One Arrow batch of documents → one batch of ParsedDocument rows."""
     spp, split = settings.spans_per_page, settings.split_size
     n_docs = batch.num_rows
-    doc_ids = batch.column("doc_id").to_pandas()
-    spans_col = batch.column("spans")
+    doc_ids, spans_col = batch.column("doc_id"), batch.column("spans")
     if isinstance(spans_col, pa.ChunkedArray):
-        spans_col = spans_col.combine_chunks()
+        doc_ids, spans_col = doc_ids.combine_chunks(), spans_col.combine_chunks()
 
     # --- flatten list<struct> to flat columns + per-span doc index -------
-    lengths = np.asarray(
-        pa.compute.list_value_length(spans_col).fill_null(0).to_numpy(
-            zero_copy_only=False
-        ),
-        dtype=np.int64,
-    )
-    parent = np.repeat(np.arange(n_docs), lengths)
+    lengths = pc.list_value_length(spans_col).fill_null(0).to_numpy()
     flat = spans_col.flatten()
-    pdf = pd.DataFrame(
-        {
-            "kind": flat.field("kind").to_pandas(),
-            "text": flat.field("text").to_pandas(),
-            "media_ref": flat.field("media_ref").to_pandas(),
-            "offset": flat.field("offset").to_pandas(),
-            "parent": parent,
-        }
-    )
+    offset = flat.field("offset")
     # tolerate garbage: null struct elements / null offsets are dropped
     # (the shuffle engine's explode_outer placeholder filter does the same)
-    pdf = pdf[pdf["offset"].notna()]
-    pdf["offset"] = pdf["offset"].astype("int64")
-    # restore in-document order (offset may arrive unsorted)
-    pdf = pdf.sort_values(["parent", "offset"], kind="stable").reset_index(
-        drop=True
+    valid = np.asarray(pc.and_(pc.is_valid(flat), pc.is_valid(offset)))
+    sel = np.flatnonzero(valid)
+    parent = np.repeat(np.arange(n_docs), lengths)[sel]
+    off = offset.fill_null(0).to_numpy().astype(np.int64)[sel]
+    # restore in-document order (offset may arrive unsorted); lexsort is
+    # stable, so duplicate offsets keep input-array order
+    order = np.lexsort((off, parent))
+    take = pa.array(sel[order])
+    parent, off = parent[order], off[order]
+    kind, text, media = (
+        flat.field(f).take(take) for f in ("kind", "text", "media_ref")
     )
 
     # --- classify + strip: the shared kernel contract --------------------
-    pdf = classify_frame(pdf)
-    pdf["page"] = np.floor_divide(pdf["offset"].to_numpy(), spp)
-    pdf["part"] = np.floor_divide(pdf["page"].to_numpy(), split)
+    kind_out, keep_span, corrupt = classify_arrays(kind, text, media)
+    page = off // spp
+    part = page // split
+
+    # --- (doc, part) segments --------------------------------------------
+    # rows are sorted by (parent, offset) and part is monotone in offset,
+    # so every (doc, part) group is one contiguous segment of rows
+    first = np.ones(len(off), dtype=bool)
+    first[1:] = (parent[1:] != parent[:-1]) | (part[1:] != part[:-1])
+    is_last = np.ones(len(off), dtype=bool)
+    is_last[:-1] = first[1:]
+    starts, last = np.flatnonzero(first), np.flatnonzero(is_last)
+    seg = np.cumsum(first) - 1
+    seg_parent = parent[starts]
 
     # --- per-part failure (agentic_doc/parse.py:722-739) -----------------
-    grp_part = pdf.groupby(["parent", "part"], sort=True)
-    pdf["part_failed"] = grp_part["corrupt"].transform("max")
-
-    keep = ~pdf["part_failed"]
+    seg_failed = np.logical_or.reduceat(corrupt, starts)
+    keep = ~seg_failed[seg]
     if settings.strip_boilerplate:
-        keep &= pdf["keep"]
+        keep &= keep_span
     if not settings.include_marginalia:
-        keep &= pdf["kind_out"] != "marginalia"
+        keep &= np.asarray(pc.not_equal(kind_out, "marginalia"))
 
-    # failed-part error rows: one per page in the part's span range
-    fr = grp_part.agg(
-        failed=("part_failed", "max"),
-        pg_lo=("page", "min"),
-        pg_hi=("page", "max"),
-    ).reset_index()
-    fr = fr[fr["failed"]]
-    if len(fr):
-        counts = (fr["pg_hi"] - fr["pg_lo"] + 1).to_numpy(dtype=np.int64)
-        err_parent = np.repeat(fr["parent"].to_numpy(), counts)
-        err_page = np.concatenate(
-            [np.arange(lo, hi + 1) for lo, hi in zip(fr["pg_lo"], fr["pg_hi"])]
-        )
-        order = np.argsort(err_parent, kind="stable")
-        err_parent, err_page = err_parent[order], err_page[order]
-    else:
-        err_parent = np.empty(0, dtype=np.int64)
-        err_page = np.empty(0, dtype=np.int64)
+    # failed-part error rows: one per page of the part's span range, in
+    # (doc, page) order because segments are
+    f_lo, f_hi = page[starts[seg_failed]], page[last[seg_failed]]
+    counts = f_hi - f_lo + 1
+    err_parent = np.repeat(seg_parent[seg_failed], counts)
+    err_page = np.arange(counts.sum()) + np.repeat(
+        f_lo - (np.cumsum(counts) - counts), counts
+    )
 
     # --- kept spans, ordered; dense output offsets -----------------------
-    out = pdf[keep].copy()
-    kind = out["kind_out"].to_numpy()
-    new_off = out.groupby("parent").cumcount().to_numpy(dtype=np.int32)
-    rendered = _render(kind, out["text"], out["media_ref"])
+    kidx = np.flatnonzero(keep)
+    kp = parent[kidx]
+    doc_counts = np.bincount(kp, minlength=n_docs)
+    kept_offsets = _offsets(doc_counts)
+    new_off = np.arange(len(kidx)) - np.repeat(
+        kept_offsets.to_numpy()[:-1], doc_counts
+    )
+    take = pa.array(kidx)
+    k_kind = kind_out.take(take)
+    k_text, k_media = text.take(take), media.take(take)
+    rendered = _render(k_kind, pc.fill_null(k_text, ""), k_media)
 
     # --- markdown: join spans within part, parts within doc --------------
-    # failed/empty parts contribute '' and still get a separator
-    # (parse.py:621 unconditional join): build the full part grid
-    all_parts = (
-        pdf.groupby(["parent", "part"], sort=True)
-        .size()
-        .reset_index()[["parent", "part"]]
+    # segments come from ALL rows, so a failed or fully stripped part
+    # still contributes '' and its separator (parse.py:621 join)
+    part_md = pc.binary_join(
+        pa.ListArray.from_arrays(
+            _offsets(np.bincount(seg[kidx], minlength=len(starts))), rendered
+        ),
+        PART_SEP,
     )
-    out["_r"] = rendered
-    part_md = out.groupby(["parent", "part"], sort=True)["_r"].agg(PART_SEP.join)
-    grid = all_parts.set_index(["parent", "part"]).join(part_md.rename("md"))
-    grid["md"] = grid["md"].fillna("")
-    doc_md = grid.groupby(level="parent")["md"].agg(PART_SEP.join)
-    markdown = pd.Series([""] * n_docs, dtype=object)
-    markdown.loc[doc_md.index] = doc_md.to_numpy()
+    markdown = pc.binary_join(
+        pa.ListArray.from_arrays(
+            _offsets(np.bincount(seg_parent, minlength=n_docs)), part_md
+        ),
+        PART_SEP,
+    )
 
-    # --- page range -------------------------------------------------------
-    end_page = pdf.groupby("parent")["page"].max()
+    # --- page range: max of the segments' last pages, floored at 0 -------
     end_page_idx = np.zeros(n_docs, dtype=np.int32)
-    end_page_idx[end_page.index.to_numpy()] = np.maximum(
-        end_page.to_numpy(), 0
-    ).astype(np.int32)
+    np.maximum.at(end_page_idx, seg_parent, page[last])
 
     # --- build nested outputs straight from flat arrays -------------------
-    def list_offsets(parents: np.ndarray) -> np.ndarray:
-        counts = np.bincount(parents, minlength=n_docs)
-        return np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
-
-    op = out["parent"].to_numpy()
     span_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(kind, pa.string()),
-            pa.array(out["text"].to_numpy(dtype=object), pa.string()),
-            pa.array(out["media_ref"].to_numpy(dtype=object), pa.string()),
-            pa.array(new_off, pa.int32()),
-        ],
+        [k_kind, k_text, k_media, pa.array(new_off, pa.int32())],
         names=["kind", "text", "media_ref", "offset"],
     )
-    spans_out = pa.ListArray.from_arrays(
-        pa.array(list_offsets(op), pa.int32()), span_struct
-    )
+    spans_out = pa.ListArray.from_arrays(kept_offsets, span_struct)
 
     h = 0.8 / spp
-    src_off = out["offset"].to_numpy()
+    src_off = off[kidx]
     t_raw = (src_off % spp) * h + 0.05
+    n_kept = len(kidx)
     box = pa.StructArray.from_arrays(
         [
-            pa.array(np.full(len(out), 0.1), pa.float64()),
+            pa.array(np.full(n_kept, 0.1), pa.float64()),
             pa.array(np.round(t_raw, 6), pa.float64()),
-            pa.array(np.full(len(out), 0.9), pa.float64()),
+            pa.array(np.full(n_kept, 0.9), pa.float64()),
             pa.array(np.round(t_raw + h - 0.01, 6), pa.float64()),
         ],
         names=["l", "t", "r", "b"],
     )
-    pages32 = out["page"].to_numpy().astype(np.int32)
+    pages32 = pa.array(page[kidx], pa.int32())
     grounding_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(pages32, pa.int32()),
-            box,
-            pa.array([None] * len(out), pa.string()),
-        ],
+        [pages32, box, pa.nulls(n_kept, pa.string())],
         names=["page", "box", "image_path"],
     )
     # exactly one grounding per chunk: offsets 0..n
     ground_list = pa.ListArray.from_arrays(
-        pa.array(np.arange(len(out) + 1, dtype=np.int32), pa.int32()),
-        grounding_struct,
+        pa.array(np.arange(n_kept + 1, dtype=np.int32)), grounding_struct
     )
-    did = doc_ids.to_numpy(dtype=object)[op]
-    chunk_ids = pd.Series(did).str.cat(
-        [pages32.astype(str), src_off.astype(str)], sep=":"
+    chunk_ids = pc.binary_join_element_wise(
+        doc_ids.take(pa.array(kp)),
+        pc.cast(pages32, pa.string()),
+        pc.cast(pa.array(src_off), pa.string()),
+        ":",
     )
-    chunk_type = np.where(kind == "media", "figure", kind)
+    chunk_type = pc.if_else(pc.equal(k_kind, "media"), "figure", k_kind)
     chunk_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(rendered.to_numpy(dtype=object), pa.string()),
-            ground_list,
-            pa.array(chunk_type, pa.string()),
-            pa.array(chunk_ids.to_numpy(dtype=object), pa.string()),
-        ],
+        [rendered, ground_list, chunk_type, chunk_ids],
         names=["text", "grounding", "chunk_type", "chunk_id"],
     )
-    chunks_out = pa.ListArray.from_arrays(
-        pa.array(list_offsets(op), pa.int32()), chunk_struct
-    )
+    chunks_out = pa.ListArray.from_arrays(kept_offsets, chunk_struct)
 
+    n_err = len(err_page)
     err_struct = pa.StructArray.from_arrays(
         [
-            pa.array(err_page.astype(np.int32), pa.int32()),
-            pa.array(["part unparseable"] * len(err_page), pa.string()),
-            pa.array(np.full(len(err_page), -1, dtype=np.int32), pa.int32()),
+            pa.array(err_page, pa.int32()),
+            pa.repeat(pa.scalar("part unparseable"), n_err),
+            pa.repeat(pa.scalar(-1, pa.int32()), n_err),
         ],
         names=["page_num", "error", "error_code"],
     )
     errors_out = pa.ListArray.from_arrays(
-        pa.array(list_offsets(err_parent), pa.int32()), err_struct
+        _offsets(np.bincount(err_parent, minlength=n_docs)), err_struct
     )
 
     return pa.RecordBatch.from_arrays(
         [
-            batch.column("doc_id"),
-            pa.array(markdown.to_numpy(dtype=object), pa.string()),
+            doc_ids,
+            markdown,
             chunks_out,
             spans_out,
-            pa.array(np.zeros(n_docs, dtype=np.int32), pa.int32()),
-            pa.array(end_page_idx, pa.int32()),
-            pa.array(["pdf"] * n_docs, pa.string()),
+            pa.array(np.zeros(n_docs, dtype=np.int32)),
+            pa.array(end_page_idx),
+            pa.repeat(pa.scalar("pdf"), n_docs),
             errors_out,
         ],
         schema=_OUT_SCHEMA,

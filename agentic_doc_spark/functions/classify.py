@@ -5,9 +5,13 @@ removal, implemented twice off the SAME regex constants:
 
 - scalar Python (``classify_kind`` / ``is_boilerplate``) — used by the
   pure-Python oracle in synth.py and by unit tests;
-- vectorized pandas (``classify_frame``) — the Arrow-batched kernel the
-  Spark pipeline runs inside mapInPandas (north rule: no per-row Python
-  in the hot path; pandas .str ops are C-vectorized).
+- vectorized (``classify_arrays``, with the pandas wrapper
+  ``classify_frame``) — the batch kernel both engines run. Arrow compute
+  kernels build every mask; each regex then runs as one bare Python loop
+  over only the rows whose result is used. Python ``re`` has no
+  C-vectorized form (pandas' object-dtype ``.str`` is the same
+  per-element loop with more overhead), so the saving is in running
+  fewer rows, not in hiding the loop.
 
 Kind vocabulary = reference ChunkType (agentic_doc/common.py:22-26:
 text|table|figure|marginalia) + 'media' for pure media spans. Boilerplate
@@ -22,7 +26,10 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # --- shared regex contract -------------------------------------------------
 
@@ -48,8 +55,6 @@ BOILER_PHRASE_RE = re.compile(
 
 #: anchor contents, for link-density: chars inside <a ...>...</a>.
 ANCHOR_RE = re.compile(r"<a[\s>].*?</a>", re.IGNORECASE | re.DOTALL)
-#: capturing variant — pandas extractall requires a capture group
-ANCHOR_CAP_RE = re.compile(r"(<a[\s>].*?</a>)", re.IGNORECASE | re.DOTALL)
 TAG_RE = re.compile(r"<[^>]+>")
 
 #: corrupt marker: NUL byte in text, or kind literal 'corrupt' — triggers
@@ -103,67 +108,89 @@ def classify_kind(kind: str | None, text: str | None, media_ref: str | None) -> 
 
 # --- vectorized implementation (Spark kernel) ------------------------------
 
+_KNOWN_KINDS = pa.array(["text", "table", "figure", "marginalia", "media"])
 
-def _anchor_chars(s: pd.Series) -> pd.Series:
-    """Total anchor-text chars per row, vectorized via extractall."""
-    out = pd.Series(0, index=s.index, dtype="int64")
-    hits = s.str.extractall(ANCHOR_CAP_RE)
-    if not hits.empty:
-        lengths = (
-            hits[0]
-            .str.replace(TAG_RE, "", regex=True)
-            .str.len()
-            .groupby(level=0)
-            .sum()
-        )
-        out.loc[lengths.index] = lengths
-    return out
+
+def _hits(find, texts: np.ndarray) -> np.ndarray:
+    """Row mask of a bound ``Pattern.search`` / ``match`` over an object
+    array of str — one bare loop, no per-row Series machinery."""
+    return np.array([find(t) is not None for t in texts], dtype=bool)
+
+
+def classify_arrays(
+    kind: pa.Array, text: pa.Array, media_ref: pa.Array
+) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """Vectorized classify + strip over flat Arrow span columns.
+
+    Returns (kind_out, keep, corrupt): the final kind as a string array,
+    whether the span survives the boilerplate strip, and whether it
+    triggers its part's failure. The Arrow kernels do the masks; each
+    regex runs as one bare loop over only the rows whose result is used:
+
+    - TABLE_RE / MARGINALIA_RE only on rows that are neither pre-labelled
+      nor media-bearing (every other row's kind is fixed without them),
+      and TABLE_RE only where the text holds two pipes;
+    - the tag and link-density checks only on rows containing '<'.
+
+    BOILER_PHRASE_RE and MARGINALIA_RE stay Python ``re``: their
+    IGNORECASE Unicode folding and Unicode ``\\s`` have no exact RE2 twin.
+    """
+    n = len(text)
+    text = pc.fill_null(text, "")
+    texts = text.to_numpy(zero_copy_only=False)
+
+    known = pc.fill_null(pc.is_in(kind, value_set=_KNOWN_KINDS), False)
+    has_media = pc.fill_null(pc.greater(pc.binary_length(media_ref), 0), False)
+
+    # heuristic kinds for the rows nothing else labels: table before
+    # marginalia, as in classify_kind
+    heur = ~np.asarray(pc.or_(known, has_media))
+    is_table = np.zeros(n, dtype=bool)
+    is_marg = np.zeros(n, dtype=bool)
+    piped = heur & (pc.count_substring(text, "|").to_numpy() >= 2)
+    idx = np.flatnonzero(piped)
+    is_table[idx] = _hits(TABLE_RE.search, texts[idx])
+    idx = np.flatnonzero(heur & ~is_table)
+    is_marg[idx] = _hits(MARGINALIA_RE.match, texts[idx])
+
+    heur_kind = pc.if_else(
+        is_table, "table", pc.if_else(is_marg, "marginalia", "text")
+    )
+    media_kind = pc.if_else(pc.equal(text, ""), "media", "figure")
+    kind_out = pc.if_else(
+        known, kind, pc.if_else(has_media, media_kind, heur_kind)
+    )
+
+    boiler = _hits(BOILER_PHRASE_RE.search, texts)
+    idx = np.flatnonzero(np.asarray(pc.match_substring(text, "<")))
+    tag = BOILER_TAG_RE.search
+    boiler[idx] |= np.array(
+        [
+            tag(t) is not None or link_density(t) > LINK_DENSITY_THRESHOLD
+            for t in texts[idx]
+        ],
+        dtype=bool,
+    )
+
+    corrupt = pc.or_(
+        pc.fill_null(pc.equal(kind, "corrupt"), False),
+        pc.match_substring(text, CORRUPT_MARKER),
+    )
+    return kind_out, ~boiler, np.asarray(corrupt)
 
 
 def classify_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized classify + strip over a span batch.
+    """Vectorized classify + strip over a span batch (pandas in, out).
 
     Input columns: kind, text, media_ref. Adds: kind_out (final kind),
     keep (survives boilerplate strip), corrupt (part-failure trigger).
-    Pure pandas .str ops — one Arrow batch in, one out.
-
-    The expensive DOM work (tag strip, anchor extraction, link density)
-    runs only on rows that contain '<' at all — on clean-text corpora
-    that's ~zero rows, so the kernel degrades to the cheap regexes.
+    A thin wrapper over :func:`classify_arrays`.
     """
-    kind = pdf["kind"]
-    text = pdf["text"].fillna("")
-    media = pdf["media_ref"]
-
-    known = kind.isin(["text", "table", "figure", "marginalia", "media"])
-    has_media = media.notna() & (media != "")
-    is_table = text.str.contains(TABLE_RE, na=False)
-    is_marg = text.str.match(MARGINALIA_RE, na=False)
-
-    kind_out = pd.Series("text", index=pdf.index, dtype="object")
-    kind_out[is_marg] = "marginalia"
-    kind_out[is_table & ~is_marg] = "table"
-    kind_out[has_media] = "figure"
-    kind_out[has_media & (text == "")] = "media"
-    kind_out[known] = kind[known]
-
-    boiler = text.str.contains(BOILER_PHRASE_RE, na=False)
-    htmlish = text.str.contains("<", regex=False)
-    if htmlish.any():
-        ht = text[htmlish]
-        stripped = ht.str.replace(TAG_RE, "", regex=True).str.len()
-        anchor = _anchor_chars(ht)
-        ld = anchor / stripped.replace(0, pd.NA)
-        boiler.loc[htmlish] = (
-            boiler[htmlish]
-            | ht.str.contains(BOILER_TAG_RE, na=False)
-            | (ld.fillna(0.0) > LINK_DENSITY_THRESHOLD)
-        )
-
-    corrupt = (kind == "corrupt") | text.str.contains(CORRUPT_MARKER, regex=False)
-
+    kind_out, keep, corrupt = classify_arrays(
+        *(pa.array(pdf[c], pa.string()) for c in ("kind", "text", "media_ref"))
+    )
     out = pdf.copy()
-    out["kind_out"] = kind_out
-    out["keep"] = ~boiler
+    out["kind_out"] = kind_out.to_numpy(zero_copy_only=False)
+    out["keep"] = keep
     out["corrupt"] = corrupt
     return out

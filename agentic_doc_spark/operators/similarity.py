@@ -324,8 +324,11 @@ def _fast_count(df: DataFrame) -> int:
     try:
         import pyarrow.parquet as _pq
 
+        files = df.inputFiles()
+        if not files:  # not file-based (e.g. a JDBC relation): no footers
+            return df.count()
         total = 0
-        for f in df.inputFiles():
+        for f in files:
             path = f[len("file:") :] if f.startswith("file:") else f
             total += _pq.ParquetFile(path).metadata.num_rows
         return total
@@ -608,6 +611,15 @@ def assign_cells(
     )
 
 
+def _require_cells(cells: list[tuple[int, list[float]]]) -> None:
+    """Driver-side guard for the ``_assign_np`` kernels: with no cells
+    there is no nearest one, and the kernel would fail in the executor."""
+    if not cells:
+        raise ValueError(
+            "no centroid cells to assign to (was the training sample empty?)"
+        )
+
+
 def assign_cells_fast(
     corpus: DataFrame,
     cells: list[tuple[int, list[float]]],
@@ -629,6 +641,7 @@ def assign_cells_fast(
     import numpy as np
     import pandas as pd
 
+    _require_cells(cells)
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, {vec_col} array<double>, cell bigint"
     if emit_norm:
@@ -1243,23 +1256,24 @@ def pq_topk(
     subvectors, corpus vectors are represented only by their codes;
     approximate distance = Σ_sub ‖q_sub − centroid(code_sub)‖².
 
-    Plan: the per-(query, sub, cell) distance TABLE is computed
-    DRIVER-SIDE over the collected queries (bounded — the same
-    queries ≪ corpus contract brute_force_topk's broadcast relies on;
-    |queries| × m × k doubles) and broadcast as ONE row per query; the
-    approximate distance is then an IN-ROW fold over the m codes in
-    ascending sub order — the exact double sequence the DuckDB twin's
-    list(dpart ORDER BY sub) sum sees. The corpus side is therefore a
-    pure map over the codes scan (m ints per row at 10^10 vectors):
-    no corpus × m explode, no per-(query, vector) hash aggregation,
-    and ranking is the two-phase bounded ``_topk_per_group`` — the
-    previous explode + broadcast-join + collect_list-agg + window plan
-    shuffled corpus-sized row sets twice.
+    Plan: the per-(query, sub, cell) distance TABLE is built IN-ROW on
+    the queries DataFrame by ``_adc_query_table`` (the codebook rides as
+    one nested literal; no driver collect of the queries) and
+    broadcast as ONE row per query (bounded — the same queries ≪ corpus
+    contract brute_force_topk's broadcast relies on; |queries| × m × k
+    doubles); the approximate distance is then an IN-ROW fold over the
+    m codes in ascending sub order — the exact double sequence the
+    DuckDB twin's list(dpart ORDER BY sub) sum sees. The corpus side is
+    therefore a pure map over the codes scan (m ints per row at 10^10
+    vectors): no corpus × m explode, no per-(query, vector) hash
+    aggregation, and ranking is the two-phase bounded
+    ``_topk_per_group`` — the previous explode + broadcast-join +
+    collect_list-agg + window plan shuffled corpus-sized row sets twice.
 
     Value parity: each dpart is the sequential ‖q_sub − c‖² fold
-    ((x−y)·(x−y) accumulated in element order). Python doubles ARE
-    IEEE-754 doubles executing the same op sequence, so the collected
-    table is bit-identical to the relational _l2 form it replaces."""
+    ((x−y)·(x−y) accumulated in element order) evaluated by Spark's
+    double arithmetic — the same IEEE-754 op sequence as the relational
+    _l2 form, so the table is bit-identical to it."""
     cb, m, d_sub, max_cell = _codebook_dict(codebook)
     qdf = _adc_query_table(queries, cb, m, d_sub, max_cell, vec_col, id_col)
     scored = (
@@ -1288,6 +1302,7 @@ def _assign_encode_fast(
     import numpy as np
     import pandas as pd
 
+    _require_cells(cells)
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, cell bigint, codes array<int>"
 

@@ -114,10 +114,9 @@ def classify_spans(
 ) -> DataFrame:
     """Stage 2: the classify/strip kernel.
 
-    Default path: Arrow-batched pandas kernel via mapInPandas (north rule:
-    vectorized pandas UDF, no per-row Python — classify_frame is pure
-    pandas .str ops). Alternate path: the Catalyst-expression twin for a
-    UDF-free plan.
+    Default path: Arrow-batched kernel via mapInPandas (classify_frame:
+    Arrow compute masks, regexes only on the rows whose result is used).
+    Alternate path: the Catalyst-expression twin for a UDF-free plan.
 
     No repartition happens here ON PURPOSE: classification is per-span, so
     it parallelizes on scan partitions (plentiful on a real corpus), and

@@ -594,10 +594,11 @@ def test_semantic_dedup_drops_higher_id_near_dups(spark):
     assert 9 not in kept
 
 
-def test_fast_count_matches_count(spark):
+def test_fast_count_matches_count(spark, monkeypatch):
     """_fast_count: footer-metadata count on pure project/repartition
-    plans equals df.count(); any other shape (filter, local relation)
-    falls back to df.count() — never a wrong number."""
+    plans equals df.count(); any other shape (filter, local relation,
+    a single relation with no input files) falls back to df.count() —
+    never a wrong number."""
     from agentic_doc_spark.operators.similarity import _fast_count
 
     emb = (
@@ -610,6 +611,26 @@ def test_fast_count_matches_count(spark):
     assert _fast_count(filtered) == filtered.count()
     local = spark.createDataFrame([(1, [0.5])], "vec_id long, embedding array<double>")
     assert _fast_count(local) == 1
+    # a non-file relation (e.g. JDBC) lists no input files
+    monkeypatch.setattr(emb, "inputFiles", lambda: [])
+    assert _fast_count(emb) == emb.count()
+
+
+def test_assign_kernels_reject_empty_cells(spark):
+    """An empty centroid list fails on the driver with a clear error
+    before any job launches, not inside the executor's numpy kernel."""
+    from agentic_doc_spark.operators.similarity import (
+        _assign_encode_fast,
+        assign_cells_fast,
+    )
+
+    emb = spark.createDataFrame(
+        [(1, [0.5, 0.5])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="no centroid cells"):
+        assign_cells_fast(emb, [])
+    with pytest.raises(ValueError, match="no centroid cells"):
+        _assign_encode_fast(emb, [], {}, 1, 2, "embedding", "vec_id")
 
 
 def test_assign_cells_fast_bit_identical(spark):
