@@ -3,18 +3,17 @@
 ``documents_raw`` already holds ONE ROW PER DOCUMENT, so the whole
 reference pipeline — classify, boilerplate strip, part split, per-part
 failure, ordered merge (agentic_doc/parse.py:472-629) — is row-local.
-The two-level shuffle pipeline (pipeline.py) exists because the reference
-splits documents to satisfy an external API's page limits; with local
-compute the split/merge is pure arithmetic inside the row, and the
-DataFrame plan needs NO exchange at all:
+The reference splits documents into parts to satisfy an external API's
+page limits; with local compute the split/merge is pure arithmetic
+inside the row, and the DataFrame plan needs NO exchange at all:
 
     scan → mapInArrow(extract_batch) → sink
 
 Inside the kernel everything after the flatten stays in Arrow and numpy:
 the spans are sorted once by (doc, offset), the classify contract runs
-the SAME classify_arrays as the shuffle engine's classify_frame, and
-because part = page // split_size is monotone in offset, every (doc,
-part) group is one contiguous segment of rows. Per-part failure, error
+as classify_arrays (functions/classify.py), and because part = page //
+split_size is monotone in offset, every (doc, part) group is one
+contiguous segment of rows. Per-part failure, error
 pages, dense offsets and page ranges are segment arithmetic (reduceat,
 starts/ends), markdown is two ``pc.binary_join`` calls over ListArrays
 built from segment offsets, and the nested output (spans/chunks/errors
@@ -28,8 +27,11 @@ single large row — 1000 pages ≈ 4k spans ≈ a few hundred KB, far below
 batch limits. Because Python workers share nothing, throughput scales
 with cores/executors linearly (no shuffle, no JVM allocation pressure).
 
-Equivalence with pipeline.extract is pinned by running the full
-span-equality fixture suite over BOTH engines (tests/test_pipeline.py).
+This is the only extraction engine (pipeline.extract calls it). Its
+span sequences, markdown, chunks, page ranges and errors are pinned
+against the pure-Python oracle synth.expected_parsed
+(tests/test_pipeline.py, tests/test_property_merge.py,
+tests/test_kernels.py).
 """
 
 from __future__ import annotations
@@ -149,7 +151,7 @@ def extract_batch(
     flat = spans_col.flatten()
     offset = flat.field("offset")
     # tolerate garbage: null struct elements / null offsets are dropped
-    # (the shuffle engine's explode_outer placeholder filter does the same)
+    # (as in the oracle and pipeline.explode_spans)
     valid = np.asarray(pc.and_(pc.is_valid(flat), pc.is_valid(offset)))
     sel = np.flatnonzero(valid)
     parent = np.repeat(np.arange(n_docs), lengths)[sel]

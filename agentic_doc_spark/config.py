@@ -8,7 +8,8 @@ config. Designed for a 1000-executor cluster; local[] for tests.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -28,9 +29,10 @@ class Settings:
     - strip_boilerplate: north-rule HTML boilerplate strip (no reference
       analog).
 
-    Mega-document skew needs no salt knob: the (doc_id, part_idx) shuffle
-    key IS the content-derived salt (pipeline.py stage 3), so there is no
-    salt-width parameter to tune.
+    Mega-document skew needs no salt knob: extraction is row-local
+    (arrow_engine.py), so a mega-document is one row — a 1000-page doc is
+    a few hundred KB inside one Arrow batch — and no shuffle key exists
+    to salt.
     """
 
     split_size: int = 10
@@ -39,13 +41,6 @@ class Settings:
     include_marginalia: bool = True
     include_metadata_in_markdown: bool = True
     strip_boilerplate: bool = True
-    use_pandas_udf: bool = True  # False = pure-JVM expression kernel
-    #: "arrow"  = zero-shuffle mapInArrow engine (default — fastest, the
-    #:            vectorized-Arrow-UDF execution the north rule mandates);
-    #: "shuffle" = the two-level split/merge DataFrame pipeline mirroring
-    #:            the reference's part fan-out (kept for plan-shape parity
-    #:            and as the cross-check engine).
-    engine: str = "arrow"
 
     def __post_init__(self) -> None:
         if not (0 < self.split_size <= 100):
@@ -135,16 +130,46 @@ def build_spark(
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to Python workers (the local-mode equivalent of
-    ``spark-submit --py-files``). Without it, the pandas-UDF kernel fails
+    ``spark-submit --py-files``). Without it, the Arrow kernels fail
     with ModuleNotFoundError whenever the driver's cwd isn't the repo
     root — workers unpickle kernel closures by module reference."""
+    zip_path = _package_zip(Path(__file__).resolve().parent)
+    spark.sparkContext.addPyFile(str(zip_path))
+
+
+def _package_zip(pkg_dir: Path) -> Path:
+    """Zip ``pkg_dir``'s ``*.py`` files into the temp dir under a name
+    derived from their paths and bytes.
+
+    Sessions started from different checkouts get different zips, so one
+    can never overwrite the code another's workers import. The zip is
+    written to a private temp file and moved into place with
+    ``os.replace``, so a reader sees either no zip or a complete one; an
+    existing zip of the same content is reused as is."""
+    import hashlib
     import tempfile
     import zipfile
-    from pathlib import Path
 
-    pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.gettempdir()) / "agentic_doc_spark_pyfiles.zip"
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for f in sorted(pkg_dir.rglob("*.py")):
-            zf.write(f, f"agentic_doc_spark/{f.relative_to(pkg_dir)}")
-    spark.sparkContext.addPyFile(str(zip_path))
+    files = [
+        (f.relative_to(pkg_dir).as_posix(), f.read_bytes())
+        for f in sorted(pkg_dir.rglob("*.py"))
+    ]
+    h = hashlib.sha256()
+    for rel, data in files:
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    out_dir = Path(tempfile.gettempdir())
+    zip_path = out_dir / f"agentic_doc_spark_pyfiles-{h.hexdigest()[:16]}.zip"
+    if zip_path.exists():
+        return zip_path
+    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for rel, data in files:
+                zf.writestr(f"agentic_doc_spark/{rel}", data)
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would lock out other users
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return zip_path

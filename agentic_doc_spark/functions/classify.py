@@ -6,9 +6,9 @@ removal, implemented twice off the SAME regex constants:
 - scalar Python (``classify_kind`` / ``is_boilerplate``) — used by the
   pure-Python oracle in synth.py and by unit tests;
 - vectorized (``classify_arrays``, with the pandas wrapper
-  ``classify_frame``) — the batch kernel both engines run. Arrow compute
-  kernels build every mask; each regex then runs as one bare Python loop
-  over only the rows whose result is used. Python ``re`` has no
+  ``classify_frame``) — the batch kernel the Arrow engine runs. Arrow
+  compute kernels build every mask; each regex then runs as one bare
+  Python loop over only the rows whose result is used. Python ``re`` has no
   C-vectorized form (pandas' object-dtype ``.str`` is the same
   per-element loop with more overhead), so the saving is in running
   fewer rows, not in hiding the loop.

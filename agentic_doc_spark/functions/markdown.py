@@ -1,9 +1,10 @@
-"""Markdown rendering of spans — shared scalar/Spark-expression contract.
+"""Markdown rendering of spans and extraction metadata.
 
 Reference semantics: part markdowns are concatenated with '\\n\\n'
-(agentic_doc/parse.py:621); figures render as images. The scalar form is
-the oracle; ``render_span_col`` is the equivalent Catalyst expression used
-by the pipeline (JVM-side, no UDF).
+(agentic_doc/parse.py:621); figures render as images. ``render_span`` is
+the scalar contract the oracle (synth.py) uses; arrow_engine._render is
+its vectorized Arrow twin. The metadata-table renderers are Catalyst
+expressions used by the extraction API.
 """
 
 from __future__ import annotations
@@ -22,19 +23,6 @@ def render_span(kind: str, text: str | None, media_ref: str | None) -> str:
     if kind == "figure" and media_ref:
         return f"![{text or ''}]({media_ref})"
     return text or ""
-
-
-def render_span_col(kind: Column, text: Column, media_ref: Column) -> Column:
-    """Catalyst-expression twin of :func:`render_span`."""
-    t = F.coalesce(text, F.lit(""))
-    m = F.coalesce(media_ref, F.lit(""))
-    img = F.concat(F.lit("!["), t, F.lit("]("), media_ref, F.lit(")"))
-    media_img = F.concat(F.lit("!["), m, F.lit("]("), m, F.lit(")"))
-    return (
-        F.when(kind == "media", media_img)
-        .when((kind == "figure") & media_ref.isNotNull() & (media_ref != ""), img)
-        .otherwise(t)
-    )
 
 
 def render_metadata_table(extraction: Column, schema: T.StructType) -> Column:

@@ -155,9 +155,9 @@ def expected_parsed(doc: dict, settings: Settings = DEFAULT_SETTINGS) -> dict:
     (agentic_doc/parse.py:597-629), dense output offsets.
     """
     spp, split = settings.spans_per_page, settings.split_size
-    # NULL elements / NULL offsets are dropped before ordering (both
-    # engines do the same); sorted() is stable, so duplicate offsets keep
-    # input order — pipeline.py carries pos as the explicit tie-break key
+    # NULL elements / NULL offsets are dropped before ordering (the arrow
+    # engine does the same); sorted() is stable, so duplicate offsets keep
+    # input order — as the engine's stable lexsort does
     spans = sorted(
         (
             s

@@ -5,7 +5,7 @@
         --input  <documents_raw parquet/table path> \
         --output <parsed table path> \
         --metrics <extraction_metrics table path> \
-        --run-id r42 [--engine arrow] [--split-size 10]
+        --run-id r42 [--split-size 10]
 
 Resume-aware: on restart the anti-join against the metrics table skips
 every completed document (operators/lineage.py). The input snapshot id is
@@ -29,7 +29,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--metrics", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--engine", default="arrow", choices=["arrow", "shuffle"])
     ap.add_argument("--split-size", type=int, default=10)
     ap.add_argument(
         "--include-marginalia",
@@ -71,7 +70,6 @@ def main() -> None:
     )
 
     settings = Settings(
-        engine=args.engine,
         split_size=args.split_size,
         include_marginalia=args.include_marginalia,
         strip_boilerplate=not args.no_strip_boilerplate,

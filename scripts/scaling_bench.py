@@ -38,7 +38,7 @@ r = spark.range(rep).select(F.col("id").alias("rep"))
 raw = raw.crossJoin(r).select(
     F.concat_ws("-", "doc_id", "rep").alias("doc_id"), "spans")
 n = raw.count()
-S = Settings(engine="arrow")
+S = Settings()
 extract(raw.limit(100), S).write.mode("overwrite").format("noop").save()
 ts = []
 for i in range(3):

@@ -11,9 +11,6 @@ configs, each in a fresh process, min-of-3:
 - arrow-no-reuse     : spark.python.worker.reuse=false (worker spawn cost)
 - arrow-passthrough  : identity mapInArrow kernel — Arrow IPC + Python
                        worker plumbing WITHOUT the extraction compute
-- jvm-only           : the shuffle engine with the pure-Catalyst classify
-                       twin — zero Python anywhere (isolates "Python
-                       workers at all" from "the Arrow engine's kernel")
 
 Hypothesis being tested: mapInArrow keeps BOTH a JVM thread (Arrow
 serialization) and a Python worker busy per task → at local[32] that is
@@ -59,17 +56,13 @@ raw = raw.crossJoin(r).select(
     F.concat_ws("-", "doc_id", "rep").alias("doc_id"), "spans")
 n = raw.count()
 
-if config == "jvm-only":
-    S = Settings(engine="shuffle", use_pandas_udf=False)
-    job = lambda df: extract(df, S)
-elif config == "arrow-passthrough":
+if config == "arrow-passthrough":
     def job(df):
         def ident(batches):
             yield from batches
         return df.mapInArrow(ident, df.schema)
 else:
-    S = Settings(engine="arrow")
-    job = lambda df: extract(df, S)
+    job = lambda df: extract(df, Settings())
 
 job(raw.limit(100)).write.mode("overwrite").format("noop").save()
 ts = []
@@ -87,7 +80,6 @@ CONFIGS = (
     "arrow-batch-50k",
     "arrow-no-reuse",
     "arrow-passthrough",
-    "jvm-only",
 )
 
 

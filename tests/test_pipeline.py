@@ -1,10 +1,11 @@
 """Span-sequence-equality fixture tests — the BASELINE.json correctness gate.
 
-Runs the Spark pipeline over the deterministic fixture corpus and asserts
-EXACT equality of (kind, text, media_ref, order) per doc_id against the
-pure-Python oracle (reference merge semantics, agentic_doc/parse.py:597-629),
-plus markdown / page-range / error equality and the reference's integ-test
-invariants (ordering, unique chunk ids, bbox validity —
+Runs the Spark pipeline (the Arrow engine behind ``extract``) over the
+deterministic fixture corpus and asserts EXACT equality of (kind, text,
+media_ref, order) per doc_id against the pure-Python oracle (reference
+merge semantics, agentic_doc/parse.py:597-629), plus markdown /
+page-range / error equality and the reference's integ-test invariants
+(ordering, unique chunk ids, bbox validity —
 tests/integ/test_parse_integ.py:75-401)."""
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from agentic_doc_spark.config import Settings
-from agentic_doc_spark.pipeline import extract, spans_long
+from agentic_doc_spark.pipeline import explode_spans, extract
 from agentic_doc_spark.synth import corpus_df, expected_corpus, make_corpus
 
 
@@ -20,9 +21,10 @@ def _rows_by_doc(parsed_rows):
     return {r["doc_id"]: r for r in parsed_rows}
 
 
-@pytest.fixture(scope="module", params=["arrow", "shuffle"])
+# ``arrow`` names the engine behind extract, the only one there is
+@pytest.fixture(scope="module", params=[Settings()], ids=["arrow"])
 def settings(request):
-    return Settings(engine=request.param)
+    return request.param
 
 
 @pytest.fixture(scope="module")
@@ -134,26 +136,9 @@ def test_empty_doc_identity(spark, settings):
         assert r["start_page_idx"] == 0 and r["end_page_idx"] == 0
 
 
-def test_native_kernel_matches_pandas(spark):
-    # the Catalyst-expression twin must agree with the pandas kernel
-    s_pandas = Settings(use_pandas_udf=True)
-    s_native = Settings(use_pandas_udf=False)
-    df = corpus_df(spark, n_per_profile=1, settings=s_pandas)
-    a = sorted(
-        spans_long(extract(df, s_pandas)).collect(),
-        key=lambda r: (r["doc_id"], r["offset"]),
-    )
-    b = sorted(
-        spans_long(extract(df, s_native)).collect(),
-        key=lambda r: (r["doc_id"], r["offset"]),
-    )
-    assert a == b
-
-
-@pytest.mark.parametrize("engine", ["arrow", "shuffle"])
-def test_marginalia_filter(spark, engine):
+@pytest.mark.parametrize("s", [Settings(include_marginalia=False)], ids=["arrow"])
+def test_marginalia_filter(spark, s):
     # P2: include_marginalia=False drops marginalia spans
-    s = Settings(include_marginalia=False, engine=engine)
     df = corpus_df(spark, n_per_profile=1, settings=s)
     got = {
         r["doc_id"]: r.asDict(recursive=True)
@@ -176,10 +161,9 @@ def test_marginalia_filter(spark, engine):
 
 
 def test_null_span_elements_tolerated(spark):
-    # NULL elements inside the spans array must be dropped identically by
-    # BOTH engines and the oracle — spans, markdown, errors all equal
-    # (a null element previously produced a phantom empty part and a
-    # leading '\n\n' in the shuffle engine's markdown)
+    # NULL elements inside the spans array must be dropped exactly as the
+    # oracle drops them — spans, markdown, errors all equal (a null
+    # element must not form a phantom empty part or a leading '\n\n')
     from agentic_doc_spark.schema import DOCUMENTS_RAW
     from agentic_doc_spark.synth import expected_parsed
 
@@ -205,29 +189,28 @@ def test_null_span_elements_tolerated(spark):
     ]
     df = spark.createDataFrame(docs, DOCUMENTS_RAW)
     want = {d["doc_id"]: expected_parsed(d, Settings()) for d in docs}
-    for engine in ("arrow", "shuffle"):
-        got = {
-            r["doc_id"]: r.asDict(recursive=True)
-            for r in extract(df, Settings(engine=engine)).collect()
-        }
-        for doc_id, exp in want.items():
-            g = got[doc_id]
-            assert g["markdown"] == exp["markdown"], (engine, doc_id)
-            assert [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in g["spans"]
-            ] == [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in exp["spans"]
-            ], (engine, doc_id)
-            assert g["errors"] == exp["errors"], (engine, doc_id)
+    got = {
+        r["doc_id"]: r.asDict(recursive=True)
+        for r in extract(df, Settings()).collect()
+    }
+    for doc_id, exp in want.items():
+        g = got[doc_id]
+        assert g["markdown"] == exp["markdown"], doc_id
+        assert [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in g["spans"]
+        ] == [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in exp["spans"]
+        ], doc_id
+        assert g["errors"] == exp["errors"], doc_id
     assert [s["text"] for s in want["nullspan-1"]["spans"]] == ["a", "b"]
     assert want["nullspan-allnull"]["markdown"] == ""
 
 
 def test_duplicate_offset_stable_order(spark):
-    # equal offsets must keep input-array order in every engine (pos is
-    # the explicit tie-break key in the shuffle engine's sort_array)
+    # equal offsets must keep input-array order: the engine's lexsort and
+    # the oracle's sorted() are both stable
     from agentic_doc_spark.schema import DOCUMENTS_RAW
     from agentic_doc_spark.synth import expected_parsed
 
@@ -244,18 +227,14 @@ def test_duplicate_offset_stable_order(spark):
     want = expected_parsed(doc, Settings())
     exp_texts = [s["text"] for s in want["spans"]]
     assert exp_texts == ["head", "z-first", "a-second", "m-third"]
-    for engine in ("arrow", "shuffle"):
-        got = extract(df, Settings(engine=engine)).collect()[0].asDict(
-            recursive=True
-        )
-        assert [s["text"] for s in got["spans"]] == exp_texts, engine
-        assert got["markdown"] == want["markdown"], engine
+    got = extract(df, Settings()).collect()[0].asDict(recursive=True)
+    assert [s["text"] for s in got["spans"]] == exp_texts
+    assert got["markdown"] == want["markdown"]
 
 
 def test_mega_document_stress(spark):
-    # one 2000-page document (8000 spans, 200 parts) through both engines:
-    # the arrow engine carries it as a single large row, the shuffle
-    # engine as 200 bounded part groups — identical results
+    # one 2000-page document (8000 spans, 200 parts): the engine carries
+    # it as a single large row and must still match the oracle
     spans = [
         {"kind": "raw", "text": f"w{i} " * 5, "media_ref": None, "offset": i}
         for i in range(8000)
@@ -266,16 +245,13 @@ def test_mega_document_stress(spark):
 
     df = spark.createDataFrame([doc], DOCUMENTS_RAW)
     want = expected_parsed(doc, Settings())
-    for engine in ("arrow", "shuffle"):
-        got = extract(df, Settings(engine=engine)).collect()[0].asDict(
-            recursive=True
-        )
-        assert len(got["spans"]) == 8000, engine
-        assert got["end_page_idx"] == 1999, engine
-        assert got["markdown"] == want["markdown"], engine
-        assert [
-            (s["kind"], s["text"], s["offset"]) for s in got["spans"][:5]
-        ] == [(s["kind"], s["text"], s["offset"]) for s in want["spans"][:5]]
+    got = extract(df, Settings()).collect()[0].asDict(recursive=True)
+    assert len(got["spans"]) == 8000
+    assert got["end_page_idx"] == 1999
+    assert got["markdown"] == want["markdown"]
+    assert [
+        (s["kind"], s["text"], s["offset"]) for s in got["spans"][:5]
+    ] == [(s["kind"], s["text"], s["offset"]) for s in want["spans"][:5]]
 
 
 def test_partition_count_invariance(spark, settings):
@@ -289,3 +265,55 @@ def test_partition_count_invariance(spark, settings):
         g = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in got[doc_id]["spans"]]
         e = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in exp["spans"]]
         assert g == e, doc_id
+
+
+def test_explode_spans_keys_and_placeholders(spark):
+    # X1 (the page_split query's stage): page_no / part_idx per span row,
+    # null elements and null offsets dropped, and exactly one all-null
+    # placeholder row per doc with no usable span
+    from agentic_doc_spark.schema import DOCUMENTS_RAW
+
+    s = Settings(spans_per_page=2, split_size=3)  # a part is 6 offsets
+
+    def sp(text, offset):
+        return {"kind": "raw", "text": text, "media_ref": None, "offset": offset}
+
+    docs = [
+        {"doc_id": "empty", "spans": []},
+        {"doc_id": "null", "spans": None},
+        {"doc_id": "allnull", "spans": [None, sp("x", None)]},
+        {
+            # offsets cross page (every 2) and part (every 6) boundaries,
+            # arrive unsorted, repeat, and are mixed with nulls
+            "doc_id": "mixed",
+            "spans": [
+                sp("e", 13), None, sp("a", 0), sp("b", 1), sp("n", None),
+                sp("c", 5), sp("d", 6), sp("d2", 6), sp("f", 12), sp("g", 2),
+            ],
+        },
+        {"doc_id": "one", "spans": [sp("z", 7)]},
+    ]
+    rows = explode_spans(spark.createDataFrame(docs, DOCUMENTS_RAW), s).collect()
+
+    got = sorted(
+        (r["doc_id"], r["offset"], r["text"], r["page_no"], r["part_idx"])
+        for r in rows
+        if r["offset"] is not None
+    )
+    want = sorted(
+        (d["doc_id"], x["offset"], x["text"], x["offset"] // 2, x["offset"] // 2 // 3)
+        for d in docs
+        for x in d["spans"] or []
+        if x is not None and x["offset"] is not None
+    )
+    assert got == want
+    # boundary spot checks: 5 ends part 0, 6 and 12 open parts 1 and 2
+    mixed = {(o, p, q) for d, o, _, p, q in got if d == "mixed"}
+    assert {(5, 2, 0), (6, 3, 1), (12, 6, 2), (13, 6, 2)} <= mixed
+
+    placeholders = [r for r in rows if r["offset"] is None]
+    assert sorted(r["doc_id"] for r in placeholders) == ["allnull", "empty", "null"]
+    for r in placeholders:
+        assert r["kind"] is None and r["text"] is None
+        assert r["page_no"] is None and r["part_idx"] is None
+    assert len(rows) == len(want) + 3

@@ -1,6 +1,6 @@
-"""Property test: for ARBITRARY span soups the Spark pipeline (both
-engines) must reproduce the pure-Python oracle's span sequences, markdown,
-page ranges, and errors. This is the SURVEY.md §7.3 mitigation for the
+"""Property test: for ARBITRARY span soups the Spark pipeline (the Arrow
+engine behind ``extract``) must reproduce the pure-Python oracle's span
+sequences, markdown, page ranges, and errors. This is the SURVEY.md §7.3 mitigation for the
 ordering-under-shuffles hazard — offsets arrive shuffled, sparse, with
 corrupt parts, boilerplate, media and marginalia mixed in."""
 
@@ -50,16 +50,15 @@ def doc_strategy(i: int):
     ).map(lambda spans: {"doc_id": f"prop-{i}", "spans": spans})
 
 
-@pytest.mark.parametrize("engine", ["arrow", "shuffle"])
+@pytest.mark.parametrize("s", [Settings()], ids=["arrow"])
 @given(data=st.data())
 @hsettings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_random_corpora_match_oracle(spark, engine, data):
+def test_random_corpora_match_oracle(spark, s, data):
     docs = [data.draw(doc_strategy(i)) for i in range(8)]
-    s = Settings(engine=engine)
     df = spark.createDataFrame(docs, DOCUMENTS_RAW).repartition(5)
     got = {
         r["doc_id"]: r.asDict(recursive=True) for r in extract(df, s).collect()
