@@ -48,7 +48,7 @@ SPLIT_SIZE = 10
 # IVF cell assignment of the embeddings table, shared by the ann_ivf and
 # semantic_dedup oracle twins: deterministic md5-mod training sample →
 # id-modulo seeds → one Lloyd round (6-dp-rounded per-dim means, the
-# cross-engine determinism contract of similarity.refine_centroids) →
+# cross-engine determinism contract of similarity._train_centroids) →
 # full-corpus nearest-centroid assignment.
 _SQL_IVF_ASSIGNED = """
             WITH e AS (
@@ -800,8 +800,8 @@ def q_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow fast path — bit-identical to text_profile (pinned by
-    # test_text_profile_fast_matches_expression)
+    # mapInPandas kernel — value-equal to this query's DuckDB twin
+    # (pinned by test_text_profile_fast_matches_duckdb_twin)
     from agentic_doc_spark.functions.textstats import text_profile_fast
 
     return text_profile_fast(_docs(spark, sf_dir)).select(
@@ -810,9 +810,12 @@ def q_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lang_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agentic_doc_spark.functions.textstats import text_profile, token_count_ws
+    from agentic_doc_spark.functions.textstats import (
+        text_profile_fast,
+        token_count_ws,
+    )
 
-    d = text_profile(_docs(spark, sf_dir)).select(
+    d = text_profile_fast(_docs(spark, sf_dir)).select(
         "pred_lang", token_count_ws(F.col("text")).alias("n_tok")
     )
     return d.groupBy("pred_lang").agg(

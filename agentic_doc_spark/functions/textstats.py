@@ -1,10 +1,12 @@
 """Text analysis for training-data pipelines: language-ID, quality
 scoring, token counting, fingerprinting.
 
-Every function is a pure Catalyst expression (JVM, whole-stage codegen,
-no UDF) and has an exact ANSI-SQL twin in __spark_entry__.oracle_sql() —
-portability across engines is part of the contract, so only portable
-primitives are used (md5, regexp, array ops).
+Column functions are pure Catalyst expressions (JVM, whole-stage
+codegen, no UDF); the ``*_fast`` functions are mapInPandas kernels.
+Every query built on them has an exact ANSI-SQL twin in
+__spark_entry__.oracle_sql() — portability across engines is part of
+the contract, so only portable primitives are used (md5, regexp, array
+ops).
 """
 
 from __future__ import annotations
@@ -133,87 +135,23 @@ def cjk_ratio(text: Column) -> Column:
     return F.when(n > 0, c / n).otherwise(F.lit(0.0))
 
 
-def lang_id(text: Column) -> Column:
-    """Language ID: CJK-character ratio decides 'zh' first (ideographic
-    text carries no space-separated stopwords), then argmax of stopword
-    marker hit ratios, 'und' when every signal is zero. Deterministic
-    tie-break by language order en > es > fr > de."""
-    ratios = {k: stopword_ratio(text, v) for k, v in LANG_MARKERS.items()}
-    return _lang_decision(cjk_ratio(text), ratios)
-
-
-def _lang_decision(cjk: Column, r: dict[str, Column]) -> Column:
-    """Shared decision chain (scalar lang_id AND text_profile use this so
-    the two paths cannot drift; the DuckDB _LANG_EXPR mirrors it)."""
-    return (
-        F.when(cjk > CJK_THRESHOLD, F.lit("zh"))
-        .when(
-            (r["en"] >= r["es"]) & (r["en"] >= r["fr"]) & (r["en"] >= r["de"])
-            & (r["en"] > 0),
-            F.lit("en"),
-        )
-        .when(
-            (r["es"] >= r["fr"]) & (r["es"] >= r["de"]) & (r["es"] > 0),
-            F.lit("es"),
-        )
-        .when((r["fr"] >= r["de"]) & (r["fr"] > 0), F.lit("fr"))
-        .when(r["de"] > 0, F.lit("de"))
-        .otherwise(F.lit("und"))
-    )
-
-
-def text_profile(df, text_col: str = "text"):
-    """pred_lang + quality in one pass with the tokenization MATERIALIZED
-    once (a `_w` column in its own projection): the naive composition
-    re-evaluates the split per marker set — ~8× per row. Values are
-    bit-identical to lang_id()/quality_score()."""
-    text = F.col(text_col)
-    staged = df.withColumn("_w", words(F.lower(text)))
-    w = F.col("_w")
-
-    def ratio(markers: tuple[str, ...]) -> Column:
-        hits = F.size(F.filter(w, lambda x: x.isin(*markers)))
-        return F.when(F.size(w) > 0, hits / F.size(w)).otherwise(F.lit(0.0))
-
-    # MATERIALIZE every marker ratio + the CJK ratio as columns: each is
-    # an interpreted-HOF/regexp subtree referenced by several CASE
-    # consumers below, and Catalyst re-evaluates inlined non-cheap
-    # expressions per consumer (the repo perf ground rule; staging these
-    # measured 0.98 s → ~0.5 s on the sf0.1 quality_langid query)
-    staged = staged.withColumns(
-        {f"_r_{k}": ratio(v) for k, v in LANG_MARKERS.items()}
-        | {"_cjk": cjk_ratio(text)}
-    )
-    r = {k: F.col(f"_r_{k}") for k in LANG_MARKERS}
-    pred = _lang_decision(F.col("_cjk"), r)
-    n = F.length(text)
-    len_ok = F.when((n >= 50) & (n <= 20000), 1.0).otherwise(0.0)
-    punct_ok = F.when(punct_ratio(text) < 0.2, 1.0).otherwise(0.0)
-    stop_ok = F.when(
-        (F.greatest(*r.values()) > 0.02) | (F.col("_cjk") > CJK_THRESHOLD),
-        1.0,
-    ).otherwise(0.0)
-    total = F.aggregate(F.transform(w, F.length), F.lit(0), lambda a, x: a + x)
-    wl = F.when(F.size(w) > 0, total / F.size(w)).otherwise(F.lit(0.0))
-    wl_ok = F.when((wl >= 2.0) & (wl <= 12.0), 1.0).otherwise(0.0)
-    quality = 0.3 * len_ok + 0.2 * punct_ok + 0.3 * stop_ok + 0.2 * wl_ok
-    return (
-        staged.withColumn("pred_lang", pred)
-        .withColumn("quality", F.round(quality, 6))
-        .drop("_w", "_cjk", *[f"_r_{k}" for k in LANG_MARKERS])
-    )
-
-
 def text_profile_fast(df, text_col: str = "text", id_col: str = "doc_id"):
-    """Arrow fast path of ``text_profile`` — BIT-IDENTICAL
-    (id, text, pred_lang, quality) rows (pinned by
-    test_text_profile_fast_matches_expression), computed in a
-    mapInPandas kernel: one tokenize pass per document feeds every
-    marker ratio (Python doubles ARE IEEE-754 doubles running the same
-    hits/size divisions, comparisons and 0.3/0.2-weighted sum in the
-    same order; rounding via the engine's HALF_UP rule), regexes
-    compile with re.ASCII so \\s matches Java's. The expression form
-    ran ~10 interpreted HOF/regexp subtrees per row."""
+    """Language ID + quality per document: (id, text, pred_lang,
+    quality) rows from one mapInPandas kernel.
+
+    Language ID: the CJK-character ratio decides 'zh' first (ideographic
+    text carries no space-separated stopwords), then the argmax of the
+    stopword marker hit ratios, 'und' when every signal is zero; ties
+    break by language order en > es > fr > de. Quality is
+    ``quality_score``'s formula, rounded to 6 dp.
+
+    One tokenize pass per document feeds every marker ratio (Python
+    doubles ARE IEEE-754 doubles running the same hits/size divisions,
+    comparisons and 0.3/0.2-weighted sum in the same order as
+    ``quality_score``; rounding via the engine's HALF_UP rule), and the
+    regexes compile with re.ASCII so \\s matches Java's. Values equal
+    the DuckDB ``quality_langid`` twin in oracle_sql() (pinned by
+    test_text_profile_fast_matches_duckdb_twin)."""
     import re as _re
     from typing import Iterator
 

@@ -130,14 +130,10 @@ def shingle_hashes(sh: Column) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """num_hashes min-hashes via seeded linear maps over the per-shingle
-    base hash: h_s(x) = ((2s+1)·x + 12289·s + 1) mod P. Portable: the
-    DuckDB oracle reproduces it with the same arithmetic."""
-    return minhash_signature_from_hashes(shingle_hashes(shingles(text, k)), num_hashes)
-
-
 def minhash_signature_from_hashes(hv: Column, num_hashes: int = 16) -> Column:
+    """num_hashes min-hashes via seeded linear maps over the per-shingle
+    base hashes ``hv``: h_s(x) = ((2s+1)·x + 12289·s + 1) mod P.
+    Portable: the DuckDB oracle reproduces it with the same arithmetic."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda s: F.array_min(

@@ -11,8 +11,10 @@
   is the difference between a full scan per query and a bucketed
   equi-join.
 
-All vector math is JVM higher-order functions (zip_with/aggregate) — no
-Python in the scoring loop.
+Pair scoring (brute force, IVF candidates, ADC) is JVM higher-order
+functions (zip_with/aggregate). Cell assignment, PQ encoding and
+SemDeDup's within-cell pairs are numpy kernels that keep the same IEEE
+op sequence, so every score is the same double either way.
 """
 
 from __future__ import annotations
@@ -198,85 +200,6 @@ def brute_force_topk(
     return _topk_per_group(scored, k, "cos", ascending=False)
 
 
-def derive_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Deterministic IVF centroids: the vector with the smallest id in
-    each of n_cells id-modulo buckets (cheap k-means++ stand-in; a real
-    trainer can replace this without changing the plan shape — and the
-    modulo form is reproducible in any engine, which the DuckDB oracle
-    uses). One map-side-combinable groupBy over n_cells groups — full
-    scan parallelism, no window sort."""
-    bucketed = corpus.select(
-        (F.col(id_col) % n_cells).alias("cell"),
-        F.col(id_col),
-        F.col(vec_col),
-    )
-    return bucketed.groupBy("cell").agg(
-        F.min_by(vec_col, id_col).alias("centroid")
-    )
-
-
-def refine_centroids(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """One Lloyd (k-means) refinement round: assign every vector to its
-    nearest current centroid, then move each centroid to the per-dim MEAN
-    of its members. Materially improves IVF recall over the id-modulo
-    seeds at the same query-time plan shape.
-
-    Determinism: the mean is computed in double and ROUNDED to 6
-    decimals, which absorbs the ~1e-16-relative summation-order drift of
-    Spark's partial aggregation in all but the pathological case — a
-    mean landing within ~1e-13 of a 6-dp rounding boundary could in
-    principle round differently under a different partition order. In
-    practice (and on every tested corpus) refined centroids are
-    bit-identical across partition counts and engines (DuckDB oracle
-    included; pinned by test_refine_centroids_partition_invariant); a
-    cell that attracts no members keeps its seed centroid.
-
-    Plan: zero-exchange assignment (centroid literals + in-row argmax
-    fold) + posexplode, then ONE exchange of ≤ partitions × n_cells ×
-    dim partially-aggregated rows (map-side combine) — bounded by the
-    centroid table size, not the corpus. ``ivf_topk`` does NOT call this
-    DataFrame form (it trains driver-side on a bounded sample via
-    ``_train_centroids`` — same values, fewer jobs); this form remains
-    the composable API for training over an unbounded frame."""
-    assigned = assign_cells(corpus, centroids, vec_col, id_col)
-    dims = assigned.select(
-        "cell", F.posexplode(F.col(vec_col)).alias("pos", "x")
-    )
-    means = dims.groupBy("cell", "pos").agg(F.avg("x").alias("m"))
-    refined = means.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: F.round(s["m"], 6),
-        ).alias("refined")
-    )
-    return (
-        centroids.select("cell", F.col("centroid").alias("seed"))
-        .join(refined, "cell", "left")
-        .select("cell", F.coalesce("refined", "seed").alias("centroid"))
-    )
-
-
-def _cells_of(centroids: DataFrame) -> list[tuple[int, list[float]]]:
-    """Collect the (small) centroid table to driver-side (cell, vector)
-    pairs, cells ascending. n_cells is bounded (≤ ~10⁴ even for
-    billion-vector IVF), so this is a dimension load, not a data
-    collect."""
-    return sorted(
-        (int(r["cell"]), [float(x) for x in r["centroid"]])
-        for r in centroids.collect()
-    )
-
-
 def _spark_round6(x: float) -> float:
     """Spark's ``round(double, 6)``: BigDecimal.valueOf(d) (shortest
     decimal repr — exactly Python's ``repr``) set to scale 6 with
@@ -337,14 +260,16 @@ def _fast_count(df: DataFrame) -> int:
 
 
 def _assign_np(V, cells: list[tuple[int, list[float]]], return_norm: bool = False):
-    """numpy nearest-centroid assignment with the EXACT IEEE op sequence
-    of the ``assign_cells`` expression fold: dots and norms accumulate
-    dimension-by-dimension in ascending order (((0 + x0·y0) + x1·y1)…),
-    centroid norms are the ``_seq_norm`` driver constants, cos =
-    dot/(vnorm·cnorm) with the try_divide+coalesce zero-denominator →
-    0.0 convention, and the winner is the FIRST maximum in cell order —
-    np.argmax's tie rule — with a NaN anywhere winning from its first
-    occurrence (np.argmax's NaN rule == the fold's isnan branch).
+    """numpy nearest-centroid assignment with the IEEE op sequence of
+    the ``_norm`` / ``_dot`` folds (and so of ``_scored_cells_sql``'s
+    probe scoring): dots and norms accumulate dimension-by-dimension in
+    ascending order (((0 + x0·y0) + x1·y1)…), centroid norms are the
+    ``_seq_norm`` driver constants, cos = dot/(vnorm·cnorm) with the
+    try_divide+coalesce zero-denominator → 0.0 convention, and the
+    winner is the FIRST maximum in cell order — np.argmax's tie rule —
+    with a NaN anywhere winning from its first occurrence (np.argmax's
+    NaN rule: NaN sorts greatest, as in the DuckDB oracle). Pinned
+    against a scalar loop by test_assign_cells_fast_bit_identical.
     Returns the int64 cell id per row (plus ‖v‖ per row when
     ``return_norm``)."""
     import numpy as np
@@ -370,13 +295,14 @@ def _assign_np(V, cells: list[tuple[int, list[float]]], return_norm: bool = Fals
 
 
 def _pq_codes_np(V, cb: dict[tuple[int, int], list[float]], m: int, d_sub: int):
-    """numpy PQ encoding with the EXACT IEEE op sequence of the
-    ``_pq_codes_sql`` fold: per subspace, squared-L2 to every PRESENT
-    cell accumulates (x−y)·(x−y) dimension-by-dimension in order; the
-    winner is the first STRICT minimum in cell order (np.argmin tie
-    rule == the fold's keep-first strict-less); a NaN distance is never
-    selected (masked to +inf) and a subspace with no finite distance
-    yields code −1 (the fold's untouched init). Returns (n, m) int64."""
+    """numpy PQ encoding: per subspace, squared-L2 to every PRESENT
+    cell accumulates (x−y)·(x−y) dimension-by-dimension in order (the
+    op sequence of ``_adc_query_table``'s in-row fold); the winner is
+    the first STRICT minimum in cell order (np.argmin's tie rule, ties →
+    lowest cell); a NaN distance is never selected (masked to +inf) and
+    a subspace with no finite distance yields code −1. Pinned against a
+    scalar loop by test_pq_encode_kernel_matches_scalar_loop. Returns
+    (n, m) int64."""
     import numpy as np
 
     n = V.shape[0]
@@ -443,14 +369,14 @@ def _scored_cells_sql(
     col: str, vnorm_col: str, cells: list[tuple[int, list[float]]]
 ) -> str:
     """SQL text for array<struct<cos, cell>> of the row vector scored
-    against every centroid, cells ascending — the shared scoring core of
-    assignment and probe selection.
+    against every centroid, cells ascending — the scoring core of probe
+    selection (``_probe_cells``).
 
     Why SQL text: building this expression through the Python Column API
     costs ~0.7 s PER CALL in py4j round-trips (hundreds of calls for the
-    per-cell literals and lambdas) — 3× the actual execution time of the
-    assignment job at sf0.1. One selectExpr string is parsed JVM-side in
-    a single call; the resulting Catalyst tree is identical.
+    per-cell literals and lambdas) — 3× the execution time of a
+    full-corpus assignment job at sf0.1. One selectExpr string is parsed
+    JVM-side in a single call; the resulting Catalyst tree is identical.
 
     Cost shape: the per-cell expressions are UNROLLED (not a transform
     over a literal array-of-structs), so per row the work is n_cells
@@ -466,7 +392,7 @@ def _scored_cells_sql(
     Value parity: dot/(vnorm*cnorm) with try_divide + coalesce(0.0) is
     the exact ``cosine()`` op order, so scores are bit-identical to the
     DuckDB oracle; zero-norm rows/centroids score 0.0, NaN-valued
-    embeddings propagate NaN (handled by the callers' comparators)."""
+    embeddings propagate NaN (handled by the caller's comparator)."""
     items = ",".join(
         "named_struct('cos', coalesce(try_divide("
         f"{_dot_sql(col, vec)}, {vnorm_col} * {_sql_double(_seq_norm(vec))}"
@@ -485,21 +411,20 @@ def _train_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Driver-orchestrated Lloyd training over a (bounded) train frame.
 
-    Value-identical to ``derive_centroids`` + ``refine_centroids`` chained
-    (seeds = min-id vector per id-modulo bucket; one Lloyd round per
-    ``refine`` with per-dim member means rounded to 6 dp — the
-    cross-engine determinism contract; empty cells keep their seed),
-    but runs as exactly ONE bounded collect of the training sample with
-    the Lloyd iterations in numpy on the driver (r6 rework): assignment
-    uses ``_assign_np`` (the exact IEEE op sequence of the expression
-    fold, so memberships are identical), means round through
-    ``_spark_round6`` (the engine's HALF_UP-on-shortest-repr rule), and
-    the 6-dp rounding absorbs summation-order drift exactly as it
-    already does between Spark's partial aggregation and the DuckDB
-    oracle (pinned by test_refine_centroids_partition_invariant). The
-    per-round job chain this replaces paid 1 + refine driver-blocking
-    aggregation jobs plus a persist — at sf1.0 local[32] that was ~3 s
-    of the ann_ivf/ann_ivfpq wall for a ≤ ~2k-row sample."""
+    Seeds are the min-id vector per id-modulo bucket; each of the
+    ``refine`` Lloyd rounds assigns the sample with ``_assign_np`` and
+    moves every centroid to its per-dim member mean rounded to 6 dp —
+    the cross-engine determinism contract; empty cells keep their seed.
+    It runs as exactly ONE bounded collect of the training sample with
+    the Lloyd iterations in numpy on the driver (r6 rework). Means round
+    through ``_spark_round6`` (the engine's HALF_UP-on-shortest-repr
+    rule), and the 6-dp rounding absorbs summation-order drift, so the
+    centroids do not depend on the partition count and equal the DuckDB
+    oracle's ``cents`` in ``_SQL_IVF_ASSIGNED`` (pinned by
+    test_train_centroids_partition_invariant). The per-round job chain
+    this replaced paid 1 + refine driver-blocking aggregation jobs plus
+    a persist — at sf1.0 local[32] that was ~3 s of the
+    ann_ivf/ann_ivfpq wall for a ≤ ~2k-row sample."""
     import numpy as np
 
     rows = train.select(F.col(id_col), F.col(vec_col)).collect()
@@ -508,7 +433,7 @@ def _train_centroids(
         i = int(r[0])
         # SQL % is a TRUNCATED remainder (sign of the dividend), unlike
         # Python's floor mod — mirror it so negative ids bucket the way
-        # derive_centroids' expression did
+        # the engines' ``id % n_cells`` does
         cell = i % n_cells if i >= 0 else -((-i) % n_cells)
         if cell not in seed or r[0] < seed[cell][0]:
             seed[cell] = (r[0], r[1])
@@ -569,48 +494,6 @@ def _train_sample(
     return corpus.filter(key == F.lit(0))
 
 
-def assign_cells(
-    corpus: DataFrame,
-    centroids: DataFrame | None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cells: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """Assign every vector to its nearest centroid — ZERO exchanges.
-
-    Centroids ride as unrolled literal expressions (``_scored_cells``)
-    and the argmax runs INSIDE the row (fold), so assignment is a pure
-    map over scan partitions: at 10^10 vectors there is no shuffle term
-    at all. (The previous crossJoin + Window form shuffled corpus ×
-    n_cells rows by vector id — the plan's scale-killer.) The row norm
-    is materialized once in a staged projection; centroid norms are
-    driver-side constants — see ``_scored_cells`` for the fold-count
-    math and the cross-engine parity argument.
-
-    Zero-norm vectors score 0.0 to every centroid, so they land in the
-    lowest cell via the fold's keep-first-on-tie behavior. The NaN
-    comparator branches cover NaN-VALUED embeddings only (NaN sorts
-    greatest → lowest cell, never a phantom cell), matching the DuckDB
-    oracle's ordering."""
-    if cells is None:
-        cells = _cells_of(centroids)
-    vq = f"`{vec_col}`"
-    staged = corpus.selectExpr(
-        f"`{id_col}`", vq, f"{_norm_sql(vq)} AS __vnorm"
-    )
-    scored = _scored_cells_sql(vq, "__vnorm", cells)
-    # fold over cells ASC == row_number over (cos DESC NULLS/NaN first,
-    # cell ASC): take s when strictly greater OR when s is the first NaN
-    best = (
-        f"aggregate({scored}, named_struct('cos', -2.0D, 'cell', -1L),"
-        " (acc, s) -> IF(s.cos > acc.cos"
-        " OR (isnan(s.cos) AND NOT isnan(acc.cos)), s, acc))"
-    )
-    return staged.selectExpr(
-        f"`{id_col}`", vq, f"({best}).cell AS cell"
-    )
-
-
 def _require_cells(cells: list[tuple[int, list[float]]]) -> None:
     """Driver-side guard for the ``_assign_np`` kernels: with no cells
     there is no nearest one, and the kernel would fail in the executor."""
@@ -627,17 +510,18 @@ def assign_cells_fast(
     id_col: str = "vec_id",
     emit_norm: bool = False,
 ) -> DataFrame:
-    """Arrow fast path of ``assign_cells`` — BIT-IDENTICAL cells (the
-    ``_assign_np`` op-sequence contract; pinned by
-    test_assign_cells_fast_bit_identical), computed in a mapInPandas
-    kernel instead of the unrolled centroid-literal expression fold:
-    same zero-exchange pure-map plan shape (the kernel node replaces
-    the Project), but the per-row n_cells × dim interpreted-HOF fold
-    becomes vectorized numpy and the ~n_cells × dim-literal SQL string
-    never has to be built or analyzed. Output (id, vec, cell) matches
-    ``assign_cells``; ``emit_norm`` appends ``_vnorm`` (the row's
-    ‖v‖ computed with the exact ``_norm``-fold op sequence) so scoring
-    can reuse it instead of re-folding per candidate pair."""
+    """Assign every vector to its nearest centroid — ZERO exchanges: a
+    mapInPandas kernel over the scan partitions (``_assign_np``: cosine
+    argmax, ties and zero-norm rows → lowest cell, a NaN score wins from
+    its first cell; pinned against a scalar loop by
+    test_assign_cells_fast_bit_identical). The centroids ride in the
+    kernel closure, so at 10^10 vectors there is no shuffle term and no
+    n_cells × dim-literal SQL string to build or analyze. Output
+    (id, vec, cell); ``emit_norm`` appends ``_vnorm`` (the row's ‖v‖
+    computed with the exact ``_norm``-fold op sequence) so scoring can
+    reuse it instead of re-folding per candidate pair. Known defect: the
+    pandas → Arrow return trip turns NaN components of the passed-through
+    ``vec`` into NULL (cells and norms are computed before it)."""
     import numpy as np
     import pandas as pd
 
@@ -665,21 +549,17 @@ def assign_cells_fast(
 
 def _probe_cells(
     queries: DataFrame,
-    centroids: DataFrame | None,
+    cells: list[tuple[int, list[float]]],
     n_probe: int,
     vec_col: str,
     id_col: str,
-    cells: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Top-n_probe nearest cells per query, selected INSIDE the row
     (array_sort with a (cos DESC, cell ASC) comparator + slice) — no
-    query-side shuffle either. Scoring shares ``_scored_cells`` with
-    assignment (staged query norm, constant centroid norms). Zero-norm
-    queries score 0.0 everywhere and probe the lowest cells; the NaN
-    branches in the comparator handle NaN-valued embeddings only (NaN
-    greatest)."""
-    if cells is None:
-        cells = _cells_of(centroids)
+    query-side shuffle either. Scoring is ``_scored_cells_sql`` (staged
+    query norm, constant centroid norms). Zero-norm queries score 0.0
+    everywhere and probe the lowest cells; the NaN branches in the
+    comparator handle NaN-valued embeddings only (NaN greatest)."""
     vq = f"`{vec_col}`"
     staged = queries.selectExpr(
         f"`{id_col}` AS query_id",
@@ -749,7 +629,7 @@ def ivf_topk(
     assigned = assign_cells_fast(
         proj, cents, vec_col, id_col, emit_norm=True
     )
-    probes = _probe_cells(queries, None, n_probe, vec_col, id_col, cells=cents)
+    probes = _probe_cells(queries, cents, n_probe, vec_col, id_col)
     cand = assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -856,11 +736,12 @@ def semantic_dedup(
     # measured 7.6 s wall at sf1.0 was almost entirely this stage);
     # here each cell's vectors shuffle once (the same single exchange
     # the join's build side paid) and the pair math is vectorized
-    # numpy. BIT-PARITY with the expression form is preserved by
+    # numpy. BIT-PARITY with the expression pair join is preserved by
     # accumulating dots and norms dimension-by-dimension in ascending
     # order — the exact IEEE op sequence of the Catalyst
     # aggregate/zip_with folds (same doubles, same cos, same ≥
-    # decisions; pinned by test_semantic_dedup_kernel_matches_join) —
+    # decisions; pinned by
+    # test_semantic_dedup_kernel_matches_expression_join) —
     # with Spark's NaN semantics (NaN ≥ threshold is TRUE) and the
     # try_divide+coalesce zero-denominator convention (cos = 0.0)
     # replicated explicitly. Memory is bounded: cells are capped by
@@ -937,7 +818,7 @@ def pq_train_codebook(
     quantization, public method): split the vector into ``m``
     subspaces, run the repo's deterministic sampled k-means in each —
     id-modulo seeds, one Lloyd round with 6-dp-rounded means (the
-    cross-engine determinism contract shared with ``refine_centroids``)
+    cross-engine determinism contract shared with ``_train_centroids``)
     — over the SAME bounded md5-mod training sample for every subspace.
 
     Returns (sub, cell, centroid: array<double>) — m × k rows, a
@@ -948,10 +829,9 @@ def pq_train_codebook(
     collect of the deterministic training sample (the modulus comes
     from parquet footer metadata when possible — ``_fast_count``), then
     seeds + the Lloyd round run in numpy on the driver (r6 rework):
-    per-subspace encoding against the seeds uses ``_pq_codes_np`` (the
-    exact squared-L2 op sequence and ties→lowest-cell rule of the
-    relational min_by(struct) chain AND the ``_pq_codes_sql`` fold, so
-    memberships are identical), and member means round through
+    per-subspace encoding against the seeds uses ``_pq_codes_np``
+    (pq_encode's kernel: squared L2, ties → lowest cell), and member
+    means round through
     ``_spark_round6`` — the 6-dp rounding absorbs summation-order
     drift exactly as it already does between Spark's partial
     aggregation and the DuckDB oracle. The seed/mean coalesce for
@@ -1042,52 +922,6 @@ def _pq_train_rows(
     return rows, dim
 
 
-def _pq_codes_sql(vec_col: str, cb: dict[tuple[int, int], list[float]],
-                  m: int, d_sub: int) -> str:
-    """SQL text computing the m-code array for one row: per subspace, a
-    strict-less keep-first fold over the PRESENT centroid LITERALS
-    (exact round-trip doubles, (cell, centroid) pairs — cells may be
-    sparse when sampled id-modulo seeds skip residues) — the same IEEE
-    op sequence as the relational ``_l2`` + min(struct) form, so
-    encodings are bit-identical, but the whole encode is a pure in-row
-    map: ZERO exchanges over the corpus (the ann_ivf centroid-literal
-    pattern; SQL text, not the Column API, per the py4j
-    expression-construction lesson)."""
-    per_sub = []
-    for s in range(m):
-        cells = sorted(c for (ss, c) in cb if ss == s)
-        per_sub.append(
-            "array(" + ",".join(
-                f"named_struct('cl', {c}, 'ct', array("
-                + ",".join(_sql_double(x) for x in cb[(s, c)])
-                + "))"
-                for c in cells
-            ) + ")"
-        )
-    cbs = "array(" + ",".join(per_sub) + ")"
-    v = f"`{vec_col}`"
-    dist = (
-        f"aggregate(zip_with(slice({v}, s * {d_sub} + 1, {d_sub}),"
-        " e.ct,"
-        " (x, y) -> (x - y) * (x - y)), 0.0D, (a, z) -> a + z)"
-    )
-    # score once per cell, THEN fold — inlining the dist fold into both
-    # arms of the IF would evaluate it twice per cell (no CSE inside
-    # interpreted higher-order lambdas)
-    fold = (
-        f"aggregate("
-        f"transform(element_at(__cbs, s + 1),"
-        f" e -> named_struct('d', {dist}, 'c', e.cl)),"
-        " named_struct('d', CAST('Infinity' AS DOUBLE), 'c', -1),"
-        " (acc, sc) -> IF(sc.d < acc.d, sc, acc)).c"
-    )
-    return (
-        f"transform(sequence(0, {m - 1}), s -> "
-        + fold.replace("__cbs", cbs)
-        + ")"
-    )
-
-
 def _codebook_dict(
     codebook: DataFrame,
 ) -> tuple[dict[tuple[int, int], list[float]], int, int, int]:
@@ -1134,13 +968,12 @@ def pq_encode(
     10^10-vector memory story: m codes replace the full vector (dim=64,
     m=32, k=16 → 32 nibbles vs 512 bytes of doubles). Plan: the
     codebook (bounded m × k × d_sub doubles) rides in the kernel
-    closure and the argmin runs inside the row (``_pq_codes_np`` — the
-    exact op sequence of the ``_pq_codes_sql`` fold it replaces, pinned
-    by test_pq_encode_kernel_matches_expression), so encoding is one
-    pure map over the scan — zero exchanges at any corpus size — with
-    the per-row m × k interpreted-HOF fold replaced by vectorized
-    numpy. ``passthrough`` columns (e.g. the IVF cell) ride along
-    unchanged."""
+    closure and the argmin runs inside the row (``_pq_codes_np``,
+    pinned against a scalar loop by
+    test_pq_encode_kernel_matches_scalar_loop), so encoding is one pure
+    map over the scan — zero exchanges at any corpus size — in
+    vectorized numpy. ``passthrough`` columns (e.g. the IVF cell) ride
+    along unchanged."""
     import numpy as np
     import pandas as pd
 
@@ -1297,8 +1130,9 @@ def _assign_encode_fast(
     """Fused IVF assignment + PQ encoding in ONE mapInPandas kernel:
     (id, cell, codes) from a single pass over the corpus scan — the
     vectors cross the Arrow boundary once instead of riding through two
-    chained kernels. Assignment is ``_assign_np``, encoding is
-    ``_pq_codes_np`` — both bit-identical to their expression twins."""
+    chained kernels. Assignment is ``_assign_np`` and encoding is
+    ``_pq_codes_np``, the same functions ``assign_cells_fast`` and
+    ``pq_encode`` run, so cells and codes are identical to theirs."""
     import numpy as np
     import pandas as pd
 
@@ -1368,9 +1202,9 @@ def ivfpq_topk(
     )
     cb, mm, d_sub, max_cell = _cb_from_rows(cb_rows)
     codes = _assign_encode_fast(proj, cents, cb, mm, d_sub, vec_col, id_col)
-    probes = _probe_cells(
-        queries, None, n_probe, vec_col, id_col, cells=cents
-    ).select("query_id", "cell")
+    probes = _probe_cells(queries, cents, n_probe, vec_col, id_col).select(
+        "query_id", "cell"
+    )
     qdf = _adc_query_table(queries, cb, mm, d_sub, max_cell, vec_col, id_col)
     probe_tab = probes.join(qdf, "query_id")  # ≤ queries × n_probe rows
     scored = (

@@ -134,17 +134,13 @@ def _dedup_stage(
     Lineage is TRUNCATED (reliable checkpoint on clusters,
     localCheckpoint locally — dedup._truncate_lineage) right after the
     profile projection — BEFORE the quality gate — and again after the
-    exact-dedup semi-join. Two distinct wins, values untouched:
-    (1) a filter on the computed ``quality`` column would otherwise be
-    pushed BELOW text_profile's staged projections, inlining the whole
-    marker-ratio subtree into the predicate and resurrecting the ~8×
-    re-evaluation the staging exists to prevent (measured: the
-    profile+filter stage alone was ~7.7 s at sf1.0 local[32], vs
-    0.85 s for the unfiltered profile); (2) every downstream stage
+    exact-dedup semi-join, values untouched: every downstream stage
     references its input from BOTH sides of a join/anti-join (dedup's
     canon agg + semi-join left, decontaminate's shingle explode +
     anti-join left), so without the cuts the composed plan paid the
-    profile ~4× more (training_set 18.7 s → ~4 s total)."""
+    profile ~4× more (training_set 18.7 s → ~4 s total). The profile is
+    a mapInPandas kernel, so a filter on its ``quality`` output cannot
+    be pushed below it; the cut is not needed for that."""
     from agentic_doc_spark.operators.dedup import _truncate_lineage
 
     out = _truncate_lineage(

@@ -272,31 +272,35 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert r1 >= r0, f"refined {r1:.3f} < seed {r0:.3f}"
 
 
-def test_refine_centroids_partition_invariant(spark):
+def test_train_centroids_partition_invariant(spark):
     # the 6-dp rounding contract: refined centroids must come out
-    # bit-identical regardless of partition count (summation order), and
-    # the driver-orchestrated trainer used by ivf_topk must produce the
-    # exact same values as the composable DataFrame form
-    from agentic_doc_spark.operators.similarity import (
-        _train_centroids,
-        derive_centroids,
-        refine_centroids,
-    )
+    # bit-identical regardless of partition count (summation order) and
+    # equal to the DuckDB oracle's seeds + one Lloyd round
+    import duckdb
+
+    import __spark_entry__ as e
+    from agentic_doc_spark.operators.similarity import _train_centroids
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     )
-
-    def refined(parts: int) -> dict:
-        e = emb.repartition(parts)
-        cents = refine_centroids(e, derive_centroids(e, n_cells=8))
-        return {r["cell"]: list(r["centroid"]) for r in cents.collect()}
-
-    a, b = refined(1), refined(13)
-    assert a == b
-    got = dict(_train_centroids(emb.repartition(5), 8, 1, "embedding", "vec_id"))
-    assert {c: list(v) for c, v in got.items()} == a
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings(vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)", [tuple(r) for r in emb.collect()]
+    )
+    ref = dict(
+        con.execute(
+            e._SQL_IVF_ASSIGNED + " SELECT cell, centroid FROM cents"
+        ).fetchall()
+    )
+    assert len(ref) == 8
+    for parts in (1, 5, 13):
+        got = _train_centroids(
+            emb.repartition(parts), 8, 1, "embedding", "vec_id"
+        )
+        assert {c: list(v) for c, v in got} == ref, parts
 
 
 def test_near_dedup_survivors(spark):
@@ -318,17 +322,19 @@ def test_ivf_zero_norm_vector_assignment(spark):
     from pyspark.sql import functions as F
 
     from agentic_doc_spark.operators.similarity import (
-        assign_cells,
-        derive_centroids,
+        assign_cells_fast,
         ivf_topk,
     )
 
     rows = [(i, [float(i + 1), float(2 * i + 1)]) for i in range(8)]
     rows.append((99, [0.0, 0.0]))  # zero-norm
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = derive_centroids(emb, n_cells=4)
+    # seeds: the min-id vector of each vec_id % 4 bucket
+    cents = [
+        (c, min(r for r in rows if r[0] % 4 == c)[1]) for c in range(4)
+    ]
     got = {
-        r["vec_id"]: r["cell"] for r in assign_cells(emb, cents).collect()
+        r["vec_id"]: r["cell"] for r in assign_cells_fast(emb, cents).collect()
     }
     assert got[99] == 0  # NaN-greatest → first (lowest) cell
     assert all(c >= 0 for c in got.values())  # nobody in a phantom cell
@@ -634,13 +640,15 @@ def test_assign_kernels_reject_empty_cells(spark):
 
 
 def test_assign_cells_fast_bit_identical(spark):
-    """assign_cells_fast (numpy kernel) vs the assign_cells expression
-    fold: same cells on real embeddings + zero-norm and NaN vectors
-    (first-NaN-wins / tie-to-lowest-cell rules)."""
+    """assign_cells_fast (numpy kernel) vs a scalar nearest-centroid
+    loop: same cells on real embeddings + zero-norm and NaN vectors
+    (first-NaN-wins / tie-to-lowest-cell rules). DuckDB cannot be the
+    reference here: list_cosine_similarity rejects the NaN rows."""
+    import math
+
     from agentic_doc_spark.operators.similarity import (
         _train_centroids,
         _train_sample,
-        assign_cells,
         assign_cells_fast,
     )
 
@@ -660,10 +668,29 @@ def test_assign_cells_fast_bit_identical(spark):
     cents = _train_centroids(
         _train_sample(emb, 8, 256, "vec_id"), 8, 1, "embedding", "vec_id"
     )
-    a = sorted(
-        (r["vec_id"], r["cell"])
-        for r in assign_cells(emb, None, cells=cents).collect()
-    )
+
+    def seq_dot(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc += a * b
+        return acc
+
+    def nearest(v):
+        # cos = sequential dot / (sequential norms), 0.0 on a zero
+        # denominator; the first maximum wins, and a NaN wins from its
+        # first occurrence
+        vn = math.sqrt(seq_dot(v, v))
+        best_cell = best = None
+        for cell, c in cents:
+            den = vn * math.sqrt(seq_dot(c, c))
+            cos = seq_dot(v, c) / den if den != 0 else 0.0
+            if best_cell is None or (
+                not math.isnan(best) and (math.isnan(cos) or cos > best)
+            ):
+                best_cell, best = cell, cos
+        return best_cell
+
+    a = sorted((r["vec_id"], nearest(r["embedding"])) for r in emb.collect())
     b = sorted(
         (r["vec_id"], r["cell"])
         for r in assign_cells_fast(emb, cents).collect()
@@ -671,12 +698,12 @@ def test_assign_cells_fast_bit_identical(spark):
     assert a == b
 
 
-def test_pq_encode_kernel_matches_expression(spark):
-    """pq_encode's numpy kernel vs the _pq_codes_sql literal fold it
-    replaced: identical code arrays, including sparse codebook cells."""
+def test_pq_encode_kernel_matches_scalar_loop(spark):
+    """pq_encode's numpy kernel vs a scalar per-subspace loop: identical
+    code arrays, including sparse codebook cells and vectors with NaN
+    components (a NaN distance never wins; no finite one → code -1)."""
     from agentic_doc_spark.operators.similarity import (
         _codebook_dict,
-        _pq_codes_sql,
         pq_encode,
         pq_train_codebook,
     )
@@ -687,18 +714,40 @@ def test_pq_encode_kernel_matches_expression(spark):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cb = pq_train_codebook(emb, m=8, k=16)
+    dim = len(emb.select("embedding").first()[0])
+    edge = spark.createDataFrame(
+        [
+            (900001, [0.0] * dim),
+            (900002, [float("nan")] * dim),
+            (900003, [float("nan")] + [0.5] * (dim - 1)),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    emb = emb.unionByName(edge)
     got = sorted(
         (r["vec_id"], tuple(r["codes"]))
         for r in pq_encode(emb, cb).collect()
     )
     cbd, m, d_sub, _ = _codebook_dict(cb)
-    expr = _pq_codes_sql("embedding", cbd, m, d_sub)
-    ref = sorted(
-        (r["vec_id"], tuple(r["codes"]))
-        for r in emb.selectExpr(
-            "vec_id", f"CAST({expr} AS array<int>) AS codes"
-        ).collect()
-    )
+
+    def encode(v):
+        # per subspace: strict-less keep-first over the present cells in
+        # cell order; a NaN distance never wins, and no finite distance
+        # leaves code -1
+        codes = []
+        for s in range(m):
+            best, code = float("inf"), -1
+            for c in sorted(cc for (ss, cc) in cbd if ss == s):
+                d = 0.0
+                for i in range(d_sub):
+                    diff = v[s * d_sub + i] - cbd[(s, c)][i]
+                    d += diff * diff
+                if d < best:
+                    best, code = d, c
+            codes.append(code)
+        return tuple(codes)
+
+    ref = sorted((r["vec_id"], encode(r["embedding"])) for r in emb.collect())
     assert got == ref
 
 
@@ -728,8 +777,6 @@ def test_adc_query_table_is_distributed(spark):
     # and it evaluates to the same doubles the driver-side loops built
     import math
 
-    for r in qdf.collect():
-        qv = None
     rows = {r["query_id"]: r["dtab"] for r in qdf.collect()}
     vecs = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
@@ -759,7 +806,7 @@ def test_semantic_dedup_kernel_matches_expression_join(spark):
     from agentic_doc_spark.operators.similarity import (
         _train_centroids,
         _train_sample,
-        assign_cells,
+        assign_cells_fast,
         semantic_dedup,
     )
 
@@ -790,7 +837,11 @@ def test_semantic_dedup_kernel_matches_expression_join(spark):
     proj = emb.select("vec_id", "embedding")
     train = _train_sample(proj, 8, 256, "vec_id")
     cents = _train_centroids(train, 8, 1, "embedding", "vec_id")
-    assigned = assign_cells(proj, None, "embedding", "vec_id", cells=cents)
+    # only the cells come from the kernel: its vector passthrough turns
+    # NaN components into NULL, and the pair join must see the originals
+    assigned = proj.join(
+        assign_cells_fast(proj, cents).select("vec_id", "cell"), "vec_id"
+    )
     normed = assigned.withColumn("_n", _norm(F.col("embedding")))
     a = normed.select(
         F.col("vec_id").alias("_a"),

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 from agentic_doc_spark.functions.textstats import (
     fingerprint,
     fingerprint_rolling,
-    lang_id,
     punct_ratio,
     quality_score,
+    text_profile_fast,
     token_count_bpe,
     token_count_ws,
 )
@@ -23,47 +23,50 @@ def _one(spark, text, col):
     )
 
 
+def _langs(spark, texts):
+    """text_profile_fast's pred_lang per text, in input order."""
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["pred_lang"] for r in text_profile_fast(df).collect()}
+    return [got[i] for i in range(len(texts))]
+
+
 def test_token_counts(spark):
     assert _one(spark, "a b  c", token_count_ws) == 3
     assert _one(spark, "hello, world!", token_count_bpe) == 4  # hello , world !
 
 
-def test_text_profile_fast_matches_expression(spark):
-    """text_profile_fast kernel vs the staged-expression text_profile:
-    identical (pred_lang, quality) on real data + edge texts (empty,
-    whitespace-only, CJK-heavy, punct-heavy, null, marker-tie cases)."""
-    from pyspark.sql import functions as F
+def test_text_profile_fast_matches_duckdb_twin(spark):
+    """text_profile_fast kernel vs the DuckDB quality_langid twin in
+    oracle_sql(): identical (pred_lang, quality) on real data + edge
+    texts (empty, whitespace-only, CJK-heavy, punct-heavy, null,
+    marker-tie cases)."""
+    import duckdb
 
-    from agentic_doc_spark.functions.textstats import (
-        text_profile,
-        text_profile_fast,
-    )
+    import __spark_entry__ as e
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    edge = spark.createDataFrame(
-        [
-            (9000001, ""),
-            (9000002, "   \t\n "),
-            (9000003, "的話這是一段中文字符測試 covering the cjk gate ok"),
-            (9000004, "!!! ??? ;;; ###"),
-            (9000005, None),
-            (9000006, "le la de que y et dans est der die und das ist"),
-            (9000007, "x"),
-            (9000008, "the of and to a " * 20),
-        ],
-        "doc_id long, text string",
-    )
+    edge_rows = [
+        (9000001, ""),
+        (9000002, "   \t\n "),
+        (9000003, "的話這是一段中文字符測試 covering the cjk gate ok"),
+        (9000004, "!!! ??? ;;; ###"),
+        (9000005, None),
+        (9000006, "le la de que y et dans est der die und das ist"),
+        (9000007, "x"),
+        (9000008, "the of and to a " * 20),
+    ]
+    edge = spark.createDataFrame(edge_rows, "doc_id long, text string")
     corpus = docs.unionByName(edge)
-    ref = sorted(
-        map(
-            tuple,
-            text_profile(corpus).select(
-                "doc_id", "pred_lang", "quality"
-            ).collect(),
-        )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?)", [tuple(r) for r in corpus.collect()]
     )
+    ref = sorted(con.execute(e.oracle_sql()["quality_langid"]).fetchall())
     got = sorted(
         map(
             tuple,
@@ -120,28 +123,24 @@ def test_punct_ratio(spark):
 
 
 def test_lang_id(spark):
-    assert _one(spark, "the cat sat on the mat of the house", lang_id) == "en"
-    assert _one(spark, "el perro y la casa de que y el", lang_id) == "es"
-    assert _one(spark, "der hund und die katze ist das", lang_id) == "de"
-    assert _one(spark, "zzz qqq xxx", lang_id) == "und"
+    assert _langs(
+        spark,
+        [
+            "the cat sat on the mat of the house",
+            "el perro y la casa de que y el",
+            "der hund und die katze ist das",
+            "zzz qqq xxx",
+        ],
+    ) == ["en", "es", "de", "und"]
 
 
 def test_lang_id_fr_and_zh(spark):
     fr = "le chien et les chats sont dans le jardin et la maison est belle"
     zh = "这是一个用于测试语言识别的中文句子包含很多汉字"
     mixed = "short note 这段文字主要是中文所以应该判成中文 end"
-    assert _one(spark, fr, lang_id) == "fr"
-    assert _one(spark, zh, lang_id) == "zh"
-    assert _one(spark, mixed, lang_id) == "zh"  # CJK ratio dominates
-    # profile path stays bit-identical to the scalar path
-    from agentic_doc_spark.functions.textstats import text_profile
-
-    df = spark.createDataFrame(
-        [(1, fr), (2, zh), (3, "the of and to a plain english line")],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r["pred_lang"] for r in text_profile(df).collect()}
-    assert got == {1: "fr", 2: "zh", 3: "en"}
+    en = "the of and to a plain english line"
+    # mixed: the CJK ratio dominates
+    assert _langs(spark, [fr, zh, mixed, en]) == ["fr", "zh", "zh", "en"]
 
 
 def test_lang_id_duckdb_twin_agrees_on_all_five(spark):
@@ -158,12 +157,16 @@ def test_lang_id_duckdb_twin_agrees_on_all_five(spark):
         (4, "el perro y la casa de que y el"),
         (5, "der hund und die katze ist das"),
         (6, "zzz qqq xxx"),
+        # equal marker ratios: the tie-break order en > es > fr > de
+        (7, "the el"),
+        (8, "el le"),
+        (9, "le der"),
     ]
     spark_got = {
-        r["doc_id"]: r["l"]
-        for r in spark.createDataFrame(rows, ["doc_id", "text"])
-        .select("doc_id", lang_id(__import__("pyspark.sql.functions", fromlist=["col"]).col("text")).alias("l"))
-        .collect()
+        r["doc_id"]: r["pred_lang"]
+        for r in text_profile_fast(
+            spark.createDataFrame(rows, "doc_id long, text string")
+        ).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
@@ -174,7 +177,10 @@ def test_lang_id_duckdb_twin_agrees_on_all_five(spark):
         ).fetchall()
     )
     assert spark_got == duck_got
-    assert spark_got == {1: "fr", 2: "zh", 3: "en", 4: "es", 5: "de", 6: "und"}
+    assert spark_got == {
+        1: "fr", 2: "zh", 3: "en", 4: "es", 5: "de", 6: "und",
+        7: "en", 8: "es", 9: "fr",
+    }
 
 
 def test_top_ngram_fraction(spark):
