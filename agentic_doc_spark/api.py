@@ -147,10 +147,11 @@ def parse(
                     image_media_table,
                 )
 
-                # decodable-only: an undecodable real page (WebP, a
-                # CCITT TIFF page) must NOT anti-join away the doc's
-                # synthesized fallback pages — image_path would then
-                # point at crop files that are never written
+                # decodable-only: an undecodable real page (WebP, a bad
+                # TIFF page, a JPEG with a corrupt body) must NOT
+                # anti-join away the doc's synthesized fallback pages —
+                # image_path would then point at crop files that are
+                # never written
                 real = (
                     image_media_table(binary_routed)
                     .filter(F.col("decodable"))

@@ -42,79 +42,20 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from agentic_doc_spark.config import DEFAULT_SETTINGS, Settings
 from agentic_doc_spark.functions.classify import classify_arrays
 from agentic_doc_spark.functions.markdown import PART_SEP
+from agentic_doc_spark.schema import PARSED_DOCUMENT
 
-_OUT_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("markdown", pa.string()),
-        pa.field(
-            "chunks",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("text", pa.string()),
-                        pa.field(
-                            "grounding",
-                            pa.list_(
-                                pa.struct(
-                                    [
-                                        pa.field("page", pa.int32()),
-                                        pa.field(
-                                            "box",
-                                            pa.struct(
-                                                [
-                                                    pa.field("l", pa.float64()),
-                                                    pa.field("t", pa.float64()),
-                                                    pa.field("r", pa.float64()),
-                                                    pa.field("b", pa.float64()),
-                                                ]
-                                            ),
-                                        ),
-                                        pa.field("image_path", pa.string()),
-                                    ]
-                                )
-                            ),
-                        ),
-                        pa.field("chunk_type", pa.string()),
-                        pa.field("chunk_id", pa.string()),
-                    ]
-                )
-            ),
-        ),
-        pa.field(
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("kind", pa.string()),
-                        pa.field("text", pa.string()),
-                        pa.field("media_ref", pa.string()),
-                        pa.field("offset", pa.int32()),
-                    ]
-                )
-            ),
-        ),
-        pa.field("start_page_idx", pa.int32()),
-        pa.field("end_page_idx", pa.int32()),
-        pa.field("doc_type", pa.string()),
-        pa.field(
-            "errors",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("page_num", pa.int32()),
-                        pa.field("error", pa.string()),
-                        pa.field("error_code", pa.int32()),
-                    ]
-                )
-            ),
-        ),
-    ]
+#: ParsedDocument with a nullable ``doc_id``: the schema extract_arrow
+#: declares to mapInArrow (a fresh StructType — never mutate schema.py's)
+_OUT_STRUCT = T.StructType(
+    [T.StructField("doc_id", T.StringType())] + PARSED_DOCUMENT.fields[1:]
 )
+_OUT_SCHEMA = to_arrow_schema(_OUT_STRUCT)
 
 
 def _render(kind: pa.Array, text: pa.Array, media: pa.Array) -> pa.Array:
@@ -309,13 +250,4 @@ def extract_arrow(df: DataFrame, settings: Settings = DEFAULT_SETTINGS) -> DataF
             if b.num_rows:
                 yield extract_batch(b, settings)
 
-    ddl = (
-        "doc_id string, markdown string, "
-        "chunks array<struct<text:string,grounding:array<struct<page:int,"
-        "box:struct<l:double,t:double,r:double,b:double>,image_path:string>>,"
-        "chunk_type:string,chunk_id:string>>, "
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
-        "start_page_idx int, end_page_idx int, doc_type string, "
-        "errors array<struct<page_num:int,error:string,error_code:int>>"
-    )
-    return df.mapInArrow(run, ddl)
+    return df.mapInArrow(run, _OUT_STRUCT)

@@ -37,7 +37,14 @@ def is_tiff(data: bytes) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _lzw_decode_tiff(data: bytes, max_out: int) -> bytes:
+def lzw_decode(data: bytes, max_out: int, early: int = 1) -> bytes:
+    """TIFF LZW (TIFF 6.0 §13), also PDF ``/LZWDecode`` (PDF 7.4.4):
+    MSB-first codes of 9→12 bits, 256 = clear table, 257 = end of data.
+    ``early`` = 1 grows the code width one code early (TIFF always; the
+    PDF EarlyChange default), 0 on the boundary. Raises ValueError on a
+    corrupt stream (a code beyond the table, including after a clear)
+    or when the output exceeds ``max_out``; a stream that runs out of
+    bits before end-of-data returns what it decoded."""
     CLEAR, EOI = 256, 257
     base = [bytes([i]) for i in range(256)] + [b"", b""]
     table = list(base)
@@ -72,14 +79,14 @@ def _lzw_decode_tiff(data: bytes, max_out: int) -> bytes:
         elif code == len(table) and prev is not None:
             entry = prev + prev[:1]
         else:
-            raise ValueError(f"corrupt TIFF LZW: code {code}")
+            raise ValueError(f"corrupt LZW: code {code}")
         out += entry
         if len(out) > max_out:
-            raise ValueError("TIFF LZW output exceeds strip size")
+            raise ValueError("LZW output exceeds its ceiling")
         if prev is not None and len(table) < 4096:
             table.append(prev + entry[:1])
-            # EARLY CHANGE: width grows one code sooner than GIF
-            if len(table) == (1 << width) - 1 and width < 12:
+            # early change: width grows one code sooner than GIF
+            if len(table) + early >= 1 << width and width < 12:
                 width += 1
         prev = entry
 
@@ -300,7 +307,7 @@ def _decode_page(data: bytes, tags: dict[int, list[int]]) -> np.ndarray:
         if comp == 1:
             raw += strip
         elif comp == 5:
-            raw += _lzw_decode_tiff(strip, cap)
+            raw += lzw_decode(strip, cap)
         else:
             raw += _packbits_decode(strip, cap)
     need = row_bytes * h

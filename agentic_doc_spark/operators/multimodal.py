@@ -1,11 +1,12 @@
 """Multimodal column plumbing (training-data-pipeline requirement).
 
 Images/audio/video ride as opaque BINARY columns with typed metadata
-(schema.MEDIA_REFS). Image decode is REAL for PNG and for baseline AND
-progressive JPEG, GIF (incl. animation), and BMP via the pure-stdlib
-codecs in functions/{png,jpeg,gif,bmp,tiff,jpx}.py (PIL slots in ahead of them
-when installed) — see ``_decode_array``'s decode ladder. Payloads
-outside that ladder (arithmetic/12-bit JPEG, other formats)
+(schema.MEDIA_REFS). Image decode is REAL for PNG, baseline AND
+progressive JPEG, GIF (incl. animation), BMP, TIFF and JPEG 2000 via the
+pure-stdlib codecs in functions/{png,jpeg,gif,bmp,tiff,jpx}.py (PIL
+replaces them when installed): ``raster_format`` sniffs the format and
+``_decode_array`` dispatches on it. Payloads outside that ladder
+(arithmetic/12-bit JPEG, WebP, other formats)
 fall back to a deterministic fake derived from the bytes,
 and every row SURFACES which path it took via the ``decoded`` flag.
 Audio features are REAL for WAV/PCM payloads (functions/riff.py
@@ -30,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from agentic_doc_spark.functions import bmp, gif, jpeg, jpx, png, tiff
+
 try:  # real decoder if ever available — not in this container
     from PIL import Image  # noqa: F401
 
@@ -38,68 +41,74 @@ except ImportError:
     _HAS_PIL = False
 
 
+#: magic-byte tests in ladder order; the first hit names the format
+_RASTER_MAGIC = (
+    ("tiff", tiff.is_tiff),
+    ("png", png.is_png),
+    ("jpeg", jpeg.is_jpeg),
+    ("gif", gif.is_gif),
+    # sniff_bmp, not is_bmp: the bare 'BM' magic false-positives on
+    # ordinary text ("BMW sales rose ..."), which must keep the text
+    # path — the strict probe validates the DIB header
+    ("bmp", bmp.sniff_bmp),
+    # RIFF container with WEBP form type; VP8/VP8L payload decode is
+    # outside the pure-stdlib ladder, but the FILE must still route as
+    # a raster document, not fall through to the utf-8 text path
+    ("webp", lambda d: d[:4] == b"RIFF" and d[8:12] == b"WEBP"),
+    ("jpx", jpx.is_jpx),
+)
+
+#: pure-stdlib decoder per sniffed format (WebP has none)
+_DECODERS = {
+    "tiff": tiff.decode_tiff,
+    "png": png.decode_png,
+    "jpeg": jpeg.decode_jpeg,
+    "gif": gif.decode_gif,
+    "bmp": bmp.decode_bmp,
+    "jpx": jpx.decode_jpx,
+}
+
+
+def raster_format(data: bytes) -> str | None:
+    """Magic-byte sniff → 'tiff' | 'png' | 'jpeg' | 'gif' | 'bmp' |
+    'webp' | 'jpx', or None for everything else (text, PDF, markup).
+
+    The ONE still-image decision: layout routing (a raster document
+    vs. the text path), the ``image_media_table`` sidecar and
+    ``_decode_array`` all sniff through it. Header bytes only — it
+    never decodes."""
+    return next((fmt for fmt, is_fmt in _RASTER_MAGIC if is_fmt(data)), None)
+
+
+def _pil_decode(data: bytes) -> np.ndarray:
+    import io
+
+    return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"), dtype=np.uint8)
+
+
 def _decode_array(data: bytes) -> np.ndarray | None:
     """bytes → uint8 (h, w, ch) array, or None when undecodable.
 
-    Decode ladder: PIL (any format, when installed) → the pure-stdlib
-    codecs: PNG (functions/png.py), baseline+progressive JPEG
-    (functions/jpeg.py), GIF (functions/gif.py), BMP
-    (functions/bmp.py) — all REAL even in this container → None."""
-    if not data:
+    ``raster_format`` picks the decoder: PIL when installed, else the
+    pure-stdlib codec for the sniffed format (functions/{png,jpeg,gif,
+    bmp,tiff,jpx}.py, no third-party dependency). Bytes the sniff does
+    not name, WebP without PIL, and any payload whose codec fails are
+    None."""
+    fmt = raster_format(data)
+    decode = _pil_decode if _HAS_PIL else _DECODERS.get(fmt)
+    if fmt is None or decode is None:
         return None
-    if _HAS_PIL:
-        import io
-
-        try:
-            img = Image.open(io.BytesIO(data)).convert("RGB")
-            return np.asarray(img, dtype=np.uint8)
-        except Exception:
-            pass
-    from agentic_doc_spark.functions import jpeg, png
-
-    if png.is_png(data):
-        try:
-            return png.decode_png(data)
-        except Exception:
-            return None
-    if jpeg.is_jpeg(data):
-        try:
-            arr = jpeg.decode_jpeg(data)
-            return arr[:, :, None] if arr.ndim == 2 else arr
-        except Exception:
-            return None
-    from agentic_doc_spark.functions import bmp, gif, tiff
-
-    if gif.is_gif(data):
-        try:
-            return gif.decode_gif(data)
-        except Exception:
-            return None
-    if bmp.is_bmp(data):
-        try:
-            return bmp.decode_bmp(data)
-        except Exception:
-            return None
-    if tiff.is_tiff(data):
-        try:
-            return tiff.decode_tiff(data)
-        except Exception:
-            return None
-    from agentic_doc_spark.functions import jpx
-
-    if jpx.is_jpx(data):
-        try:
-            arr = jpx.decode_jpx(data)
-            return arr[:, :, None] if arr.ndim == 2 else arr
-        except Exception:
-            return None
-    return None
+    try:
+        arr = decode(data)
+    except Exception:  # every codec failure means "undecodable" (R6)
+        return None
+    return arr[:, :, None] if arr.ndim == 2 else arr
 
 
 def _decode_image(data: bytes) -> tuple[int, int, np.ndarray, bool]:
     """Decode → (width, height, 8-dim feature vector, decoded flag).
 
-    Real path: decode (PIL or pure-PNG) → 4×2 nearest downsample →
+    Real path: decode (``_decode_array``) → 4×2 nearest downsample →
     per-cell channel means /255 (reference page_to_image,
     agentic_doc/utils.py:110-124). Fallback for undecodable payloads: a
     deterministic fake — dims from the byte hash, features from a seeded
@@ -146,7 +155,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     """media(media_ref, content BINARY) → per-media features.
 
     ``decoded`` SURFACES the codec boundary per row: True = features came
-    from real pixel data (PIL or the pure PNG codec), False = the payload
+    from real pixel data (``_decode_array``), False = the payload
     was undecodable and the features are the deterministic hash fake —
     downstream consumers (ANN, dedup) filter on it instead of silently
     training on fakes.
@@ -258,8 +267,10 @@ def attach_grounding_image_paths(parsed: DataFrame, save_dir: str) -> DataFrame:
     image_path stays NULL for groundings the renderer would SKIP
     (invalid/degenerate boxes — the same box_is_valid predicate
     grounding_crop_specs filters on), so no path ever points at a file
-    that cannot exist. A page that later fails to decode is the one case
-    this in-row transform cannot see; the renderer logs those by absence.
+    that cannot exist. A caller-supplied ``page_rasters`` page that fails
+    to decode is the one case this in-row transform cannot see (the
+    renderer skips it); parse() checks its own raster-document pages with
+    ``_decode_array`` and falls back to synthesized pages for the rest.
     NULL chunk / grounding elements pass through as NULL."""
     from pyspark.sql import functions as F
 
@@ -578,7 +589,7 @@ _RESIZED_SCHEMA = T.StructType(
 
 def resize_media(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
     """Resize images to a fixed training shape (media_ref, width, height,
-    content). REAL path: decode (PIL or the pure-stdlib PNG codec) →
+    content). REAL path: decode (``_decode_array``) →
     nearest-neighbor resize → PNG re-encode; fallback for undecodable
     payloads: a deterministic sha-derived payload of the target shape so
     batching/schema stay production-shaped.
@@ -654,17 +665,12 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
                             )
                         )
                     continue
-                from agentic_doc_spark.functions.gif import (
-                    gif_frames,
-                    is_gif,
-                )
-
-                if is_gif(b):
+                if gif.is_gif(b):
                     try:
                         # stride retains only the sampled frames: every
                         # frame is still COMPOSED (disposal semantics),
                         # but memory holds n/every_n canvases, not n
-                        composed = gif_frames(b, stride=every_n)
+                        composed = gif.gif_frames(b, stride=every_n)
                     except Exception:
                         composed = []
                     if composed:

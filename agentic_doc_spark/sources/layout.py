@@ -1,18 +1,19 @@
-"""Layout parse: raw document bytes → (doc_id, spans).
+"""Layout parse: raw document bytes → documents_raw (doc_id, spans).
 
 The reference obtains layout from its remote API; the north rule replaces
-that with local parsing. This module implements the text-family decoders
-for real (plain text, markdown, HTML — blank-line block segmentation, the
-classic layout heuristic), and leaves PDF/image raster decoding behind the
-same deterministic stub boundary as operators/multimodal.py (no PDF/image
-libraries ship in this container; the kernel signature, schema, and
-batching are production-shaped).
+that with local parsing. Plain text, markdown and HTML split into
+blank-line blocks (the classic layout heuristic); PDFs go through
+sources/pdf_text.py (text layer plus embedded rasters); image files that
+``operators.multimodal.raster_format`` names become one media span per
+page, their bytes served by ``image_media_table``. A document that
+reaches the parser but cannot be decoded becomes a one-span corrupt
+marker, which extract turns into failed-part error rows.
 
-Everything is one mapInPandas kernel over binaryFile rows: bytes decode
-and block splitting are bulk per-document work, vectorized where pandas
-allows; span structs are emitted as flat rows and re-assembled to arrays
-by collect_list ONLY if the caller wants the nested shape — the flat form
-feeds pipeline/extract directly.
+Everything is one mapInPandas kernel over binaryFile rows: it emits flat
+(doc_id, kind, text, media_ref, offset) rows, and a groupBy(doc_id) +
+collect_list re-assembles them into the nested spans array
+pipeline.extract consumes. A document with no blocks at all emits one
+NULL-offset placeholder row, so it still reaches extract (spans=[]).
 """
 
 from __future__ import annotations
@@ -143,45 +144,27 @@ def _pdf_spans(data: bytes, doc_id: str) -> list[tuple[str, str | None, str | No
 def _raster_spans(
     data: bytes, doc_id: str
 ) -> list[tuple[str, str | None, str | None]] | None:
-    """Raster DOCUMENT (png/jpeg/gif/bmp/tiff file fed to parse()) →
+    """Raster DOCUMENT (any ``raster_format`` file fed to parse()) →
     one media span per page under ``imgdoc://{doc_id}/p{i}`` refs, the
     scanned-document analog of the ``pdfimg://`` path; multi-page TIFFs
     (the fax/scanner shape) get one span per IFD via a header-only page
     walk. None when the bytes are not a known raster format (text/md
-    keep the block path). Bytes are served by ``image_media_table`` —
-    span rows never carry payloads."""
-    from agentic_doc_spark.functions import bmp, gif, tiff
-    from agentic_doc_spark.functions.jpeg import is_jpeg
-    from agentic_doc_spark.functions.png import is_png
+    keep the block path). Magic bytes only — routing never decodes;
+    bytes are served by ``image_media_table``, span rows never carry
+    payloads."""
+    from agentic_doc_spark.functions import tiff
+    from agentic_doc_spark.operators.multimodal import raster_format
 
-    if tiff.is_tiff(data):
+    fmt = raster_format(data)
+    if fmt is None:
+        return None
+    n = 1
+    if fmt == "tiff":
         try:
-            n = tiff.tiff_page_count(data)
+            n = max(tiff.tiff_page_count(data), 1)
         except ValueError:
-            n = 1
-        return [
-            ("raw", "", f"imgdoc://{doc_id}/p{i}") for i in range(max(n, 1))
-        ]
-    if (
-        is_png(data)
-        or is_jpeg(data)
-        or gif.is_gif(data)
-        # sniff_bmp, not is_bmp: the bare 'BM' magic false-positives on
-        # ordinary text ("BMW sales rose ..."), which must keep the
-        # text path — the strict probe validates the DIB header
-        or bmp.sniff_bmp(data)
-        or _is_webp(data)
-    ):
-        return [("raw", "", f"imgdoc://{doc_id}/p0")]
-    return None
-
-
-def _is_webp(data: bytes) -> bool:
-    # RIFF container with WEBP form type; VP8/VP8L payload decode is
-    # outside the pure-stdlib ladder (surfaced by the `decoded` flag
-    # downstream), but the FILE must still route as a raster document,
-    # not fall through to the utf-8 text path
-    return data[:4] == b"RIFF" and data[8:12] == b"WEBP"
+            pass
+    return [("raw", "", f"imgdoc://{doc_id}/p{i}") for i in range(n)]
 
 
 def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
@@ -239,6 +222,17 @@ def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
                     refs.append(None)
                     offs.append(0)
                     continue
+                if not spans:
+                    # no blocks (whitespace-only text, markup-only HTML):
+                    # one NULL-offset placeholder row keeps the document
+                    # in the groupBy below, whose collect_list drops it,
+                    # so the doc reaches extract with spans=[]
+                    ids.append(doc_id)
+                    kinds.append(None)
+                    texts.append(None)
+                    refs.append(None)
+                    offs.append(None)
+                    continue
                 ids.extend([doc_id] * len(spans))
                 kinds.extend(k for k, _t, _m in spans)
                 texts.extend(t for _k, t, _m in spans)
@@ -255,9 +249,15 @@ def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
             )
 
     flat = binary_df.mapInPandas(run, _SPANS_FLAT)
-    # sort key must lead the struct (sort_array orders by field position)
+    # sort key must lead the struct (sort_array orders by field position);
+    # collect_list skips the NULL a placeholder row maps to
     ordered = F.sort_array(
-        F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
+        F.collect_list(
+            F.when(
+                F.col("offset").isNotNull(),
+                F.struct("offset", "kind", "text", "media_ref"),
+            )
+        )
     )
     spans = F.transform(
         ordered,
@@ -343,20 +343,26 @@ _IMG_MEDIA_TABLE = T.StructType(
 
 def image_media_table(binary_df: DataFrame) -> DataFrame:
     """(doc_id, content, doc_type) → (doc_id, media_ref, page, content,
-    decodable): payloads behind ``_raster_spans``'s ``imgdoc://`` refs.
+    decodable): payloads behind ``_raster_spans``'s ``imgdoc://`` refs —
+    one row per routed page, the same ``raster_format`` decision.
     Single-image formats pass their original bytes through; multi-page
     TIFFs transcode each page to PNG (pure functions/tiff.py →
     functions/png.py) PER PAGE — one bad page (CCITT, corrupt strip)
     yields an undecodable row, not the loss of the document's good
-    pages. ``decodable`` marks rows the pure-stdlib ladder can decode
-    (False for WebP and failed TIFF pages — PIL may still handle them,
-    but grounding falls back to synthesized pages for those). Same
-    narrow-table discipline as ``pdf_media_table``."""
+    pages. ``decodable`` is exactly "``_decode_array`` returns an
+    array" (per page for TIFF), so a sniffed-but-corrupt image (a JPEG
+    SOI over a broken body, WebP without PIL) is False and grounding
+    falls back to the synthesized page for it — the crop renderer
+    decodes with the same function. Same narrow-table discipline as
+    ``pdf_media_table``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from agentic_doc_spark.functions import bmp, gif, tiff
-        from agentic_doc_spark.functions.jpeg import is_jpeg
-        from agentic_doc_spark.functions.png import encode_png, is_png
+        from agentic_doc_spark.functions import tiff
+        from agentic_doc_spark.functions.png import encode_png
+        from agentic_doc_spark.operators.multimodal import (
+            _decode_array,
+            raster_format,
+        )
 
         for pdf in batches:
             rows = []
@@ -366,50 +372,21 @@ def image_media_table(binary_df: DataFrame) -> DataFrame:
                 if dt == "pdf":
                     continue
                 data = bytes(content)
-                if tiff.is_tiff(data):
+                fmt = raster_format(data)
+                if fmt == "tiff":
                     try:
                         for i, arr in tiff.iter_tiff_pages(data):
-                            ref = f"imgdoc://{doc_id}/p{i}"
-                            if arr is None:
-                                rows.append(
-                                    (doc_id, ref, i, bytearray(), False)
-                                )
-                            else:
-                                rows.append(
-                                    (
-                                        doc_id,
-                                        ref,
-                                        i,
-                                        bytearray(encode_png(arr)),
-                                        True,
-                                    )
-                                )
+                            png = b"" if arr is None else encode_png(arr)
+                            rows.append(
+                                (doc_id, f"imgdoc://{doc_id}/p{i}", i,
+                                 bytearray(png), arr is not None)
+                            )
                     except ValueError:
                         continue  # broken container: no pages to serve
-                elif (
-                    is_png(data)
-                    or is_jpeg(data)
-                    or gif.is_gif(data)
-                    or bmp.sniff_bmp(data)
-                ):
+                elif fmt is not None:
                     rows.append(
-                        (
-                            doc_id,
-                            f"imgdoc://{doc_id}/p0",
-                            0,
-                            bytearray(data),
-                            True,
-                        )
-                    )
-                elif _is_webp(data):
-                    rows.append(
-                        (
-                            doc_id,
-                            f"imgdoc://{doc_id}/p0",
-                            0,
-                            bytearray(data),
-                            False,
-                        )
+                        (doc_id, f"imgdoc://{doc_id}/p0", 0, bytearray(data),
+                         _decode_array(data) is not None)
                     )
             yield pd.DataFrame(
                 rows,

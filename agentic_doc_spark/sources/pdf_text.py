@@ -29,7 +29,8 @@ a simple-font hex string that reads as text keeps its latin-1 reading.
 
 Also handled: PDF 1.5+ compressed object streams (``/ObjStm`` — where
 modern writers put page/font dictionaries), ``/LZWDecode`` streams (the
-TIFF-variant LZW older PDFs use, with EarlyChange), and embedded raster
+TIFF-variant LZW older PDFs use, with EarlyChange; decoded by
+functions/tiff.lzw_decode), and embedded raster
 images (``extract_pdf_images``: DCTDecode = JPEG baseline/progressive,
 Flate/LZW/raw 8-bit Gray/RGB and 1-bit bilevel → PNG, CCITTFaxDecode
 Group 4 fax → PNG via functions/ccitt.py, JBIG2Decode generic-region
@@ -334,52 +335,6 @@ def _expand_object_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> None:
                 objs[onum] = (content[first + off : first + end], None)
 
 
-def _lzw_decode(data: bytes, early: int = 1, max_out: int | None = None) -> bytes:
-    """PDF LZWDecode (the TIFF LZW variant, PDF spec 7.4.4): MSB-first
-    variable-width codes 9→12 bits, 256 = clear table, 257 = EOD,
-    ``early`` = EarlyChange (default 1: the code width grows one code
-    early). Raises ValueError on a corrupt stream."""
-    out = bytearray()
-    table: dict[int, bytes] = {i: bytes([i]) for i in range(256)}
-    next_code, width = 258, 9
-    prev: bytes | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc = ((acc << 8) | byte) & 0xFFFFFFFF
-        nbits += 8
-        while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:  # clear table
-                next_code, width, prev = 258, 9, None
-                continue
-            if code == 257:  # EOD
-                return bytes(out)
-            if prev is None:
-                entry = table.get(code)
-                if entry is None:
-                    raise ValueError("lzw: bad first code")
-            elif code < next_code:
-                entry = table.get(code)
-                if entry is None:
-                    raise ValueError("lzw: bad code")
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-            elif code == next_code:  # the KwKwK case
-                entry = prev + prev[:1]
-                table[next_code] = entry
-                next_code += 1
-            else:
-                raise ValueError("lzw: code beyond table")
-            out += entry
-            prev = entry
-            if max_out is not None and len(out) > max_out:
-                raise ValueError("lzw: output exceeds stream ceiling")
-            if next_code + early >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out)
-
-
 #: decompression ceiling per stream — far above any real content/image
 #: stream, far below what a crafted zip bomb could expand to across a
 #: worker's concurrent tasks
@@ -397,11 +352,12 @@ def _inflate(header: bytes, payload: bytes) -> bytes | None:
         except zlib.error:
             return None
     if b"LZWDecode" in header:
+        from agentic_doc_spark.functions.tiff import lzw_decode
+
         em = re.search(rb"/EarlyChange\s+(\d+)", header)
         try:
-            return _lzw_decode(
-                payload, int(em.group(1)) if em else 1,
-                max_out=_MAX_STREAM_BYTES,
+            return lzw_decode(
+                payload, _MAX_STREAM_BYTES, int(em.group(1)) if em else 1
             )
         except ValueError:
             return None

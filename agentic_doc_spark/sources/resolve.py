@@ -9,11 +9,8 @@ document list; here every route lands on a DataFrame:
 - raw bytes                         → one-row binary DataFrame (S6)
 - list of paths                     → binaryFile over the list
 
-Raw-binary routes produce ``(doc_id, content BINARY, doc_type)`` — the
-layout-parse step that would turn real PDF bytes into spans needs a PDF
-library this container doesn't ship, so ``binary_to_spans`` is the clearly
-marked stub boundary (schema/plumbing real, decode faked deterministically;
-see operators/multimodal.py for the same pattern on media).
+Raw-binary routes produce ``(doc_id, content BINARY, doc_type)``, which
+``sources/layout.layout_parse`` turns into ``(doc_id, spans)``.
 """
 
 from __future__ import annotations

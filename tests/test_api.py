@@ -266,6 +266,51 @@ def test_parse_undecodable_doc_yields_error_rows(spark, tmp_path):
     assert not good["errors"]
 
 
+def test_parse_span_less_docs_keep_their_row(spark, tmp_path):
+    # a whitespace-only .md and a markup-only .html split into no blocks;
+    # they must still come back — one row per input file — with empty
+    # spans, not vanish from the output
+    d = tmp_path / "blank"
+    d.mkdir()
+    (d / "good.txt").write_text("alpha\n\nbeta")
+    (d / "blank.md").write_text("  \n\n \t\n")
+    (d / "bare.html").write_text("<html><body></body></html>")
+    rows = {
+        r["doc_id"].rsplit("/", 1)[-1]: r.asDict(recursive=True)
+        for r in parse(spark, str(d)).collect()
+    }
+    assert set(rows) == {"good.txt", "blank.md", "bare.html"}
+    for name in ("blank.md", "bare.html"):
+        row = rows[name]
+        assert row["spans"] == [] and row["chunks"] == []
+        assert row["markdown"] == "" and row["errors"] == []
+    assert [s["text"] for s in rows["good.txt"]["spans"]] == ["alpha", "beta"]
+
+
+def test_grounding_paths_exist_for_undecodable_raster(spark, tmp_path):
+    # a .jpg whose SOI marker sniffs as JPEG but whose body does not
+    # decode: its crops come from the synthesized page, so every
+    # image_path parse() reports names a file that was written
+    import os
+
+    d = tmp_path / "docs"
+    d.mkdir()
+    (d / "broken.jpg").write_bytes(b"\xff\xd8\xff\xe0" + b"\x00" * 200)
+    (d / "note.txt").write_text("alpha\n\nbeta")
+    save = str(tmp_path / "gsave")
+    rows = parse(spark, str(d), grounding_save_dir=save).collect()
+    paths = [
+        g["image_path"]
+        for r in rows
+        for c in r["chunks"]
+        for g in c["grounding"]
+        if g["image_path"] is not None
+    ]
+    assert len(paths) == 3  # one media chunk + two text chunks
+    missing = [p for p in paths if not os.path.isfile(p)]
+    assert missing == []
+
+
 def test_parse_parquet_directory(spark, tmp_path):
     # a df.write.parquet() output directory is the canonical corpus and
     # must route to the parquet reader, not the binaryFile scan

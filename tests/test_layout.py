@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 from agentic_doc_spark.pipeline import extract
@@ -133,3 +135,72 @@ def test_html_table_to_markdown_span(spark, tmp_path):
     ]
     assert kinds == ["text", "table", "text"]
     assert "| bolt | 12 |" in parsed["markdown"]
+
+
+@functools.cache
+def _ladder_inputs() -> dict[str, bytes]:
+    import numpy as np
+
+    from agentic_doc_spark.functions import bmp, gif, jpeg, jpx, png, tiff
+
+    img = ((np.arange(6 * 8 * 3) * 7) % 256).astype(np.uint8).reshape(6, 8, 3)
+    return {
+        "png": png.encode_png(img),
+        "jpeg": jpeg.encode_jpeg(img),
+        "gif": gif.encode_gif([img]),
+        "bmp": bmp.encode_bmp(img),
+        "tiff": tiff.encode_tiff([img], 5, 2),
+        "jpx": jpx.encode_jpx(img),
+        "webp": b"RIFF" + (20).to_bytes(4, "little") + b"WEBPVP8 "
+        + b"\x00" * 12,
+        "jpeg_broken": b"\xff\xd8\xff\xe0" + b"\x00" * 200,
+        "bmw_text": ("BMW sales rose sharply. " * 10).encode(),
+    }
+
+
+@pytest.fixture(scope="module")
+def ladder_sidecar(spark):
+    from agentic_doc_spark.sources.layout import image_media_table
+
+    df = spark.createDataFrame(
+        [(k, bytearray(v), "image") for k, v in _ladder_inputs().items()],
+        "doc_id string, content binary, doc_type string",
+    )
+    return {r["doc_id"]: r["decodable"] for r in image_media_table(df).collect()}
+
+
+# (input, format the ladder names, sidecar decodable); None = text path
+@pytest.mark.parametrize(
+    "name,fmt,decodable",
+    [
+        ("png", "png", True),
+        ("jpeg", "jpeg", True),
+        ("gif", "gif", True),
+        ("bmp", "bmp", True),
+        ("tiff", "tiff", True),
+        ("jpx", "jpx", True),
+        ("webp", "webp", False),
+        ("jpeg_broken", "jpeg", False),
+        ("bmw_text", None, None),
+    ],
+)
+def test_routing_and_decoding_agree(ladder_sidecar, name, fmt, decodable):
+    # one sniff-and-decode decision: a file routes as a raster document
+    # iff the ladder names its format, and the sidecar calls it
+    # decodable iff _decode_array returns an array — a format added to
+    # only one side fails here
+    from agentic_doc_spark.operators.multimodal import (
+        _HAS_PIL,
+        _decode_array,
+        raster_format,
+    )
+    from agentic_doc_spark.sources.layout import _raster_spans
+
+    data = _ladder_inputs()[name]
+    assert raster_format(data) == fmt
+    assert (_raster_spans(data, name) is not None) == (fmt is not None)
+    assert ladder_sidecar.get(name) == (
+        None if fmt is None else _decode_array(data) is not None
+    )
+    if not _HAS_PIL:
+        assert ladder_sidecar.get(name) == decodable

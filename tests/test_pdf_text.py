@@ -330,7 +330,7 @@ def test_objstm_embedded_page_and_font_dicts():
 
 
 def _lzw_encode(data: bytes, early: int = 1) -> bytes:
-    """TIFF-variant LZW encoder (fixture twin of pdf_text._lzw_decode)."""
+    """TIFF-variant LZW encoder (fixture twin of tiff.lzw_decode)."""
     table = {bytes([i]): i for i in range(256)}
     next_code, width = 258, 9
     acc = nbits = 0
@@ -371,7 +371,7 @@ def _lzw_encode(data: bytes, early: int = 1) -> bytes:
 def test_lzw_decode_roundtrip_and_stream():
     import random
 
-    from agentic_doc_spark.sources.pdf_text import _lzw_decode
+    from agentic_doc_spark.functions.tiff import lzw_decode
 
     rng = random.Random(5)
     cases = [
@@ -382,13 +382,19 @@ def test_lzw_decode_roundtrip_and_stream():
     ]
     for data in cases:
         for early in (0, 1):
-            assert _lzw_decode(_lzw_encode(data, early), early) == data
+            assert lzw_decode(_lzw_encode(data, early), 1 << 20, early) == data
     # hand-derived prefix: clear(256), 'A'(65), 'B'(66), then "AB"
     # matches the first table entry 258
     enc = _lzw_encode(b"ABABAB")
     bits = "".join(f"{byte:08b}" for byte in enc)
     codes = [int(bits[i : i + 9], 2) for i in range(0, 5 * 9, 9)]
     assert codes[:4] == [256, 65, 66, 258]
+    # a clear resets the table: code 258 right after it is corrupt (it
+    # must not replay the entry from before the clear)
+    stale = "".join(f"{c:09b}" for c in (256, 65, 66, 256, 258, 257))
+    stale += "0" * (-len(stale) % 8)
+    with pytest.raises(ValueError):
+        lzw_decode(int(stale, 2).to_bytes(len(stale) // 8, "big"), 1 << 20)
     # and an LZW-compressed content stream decodes through the full path
     content = b"BT (lzw words here) Tj ET"
     enc_stream = _lzw_encode(content)
