@@ -61,8 +61,9 @@ def parse(
       ``sinks.read_parsed_json``.
     - ``grounding_save_dir``: populate ``grounding.image_path`` AND write
       the crop PNGs there (reference parse.py:441-448 + utils.py:63-169);
-      ``page_rasters`` supplies renderer output (doc_id, page, content),
-      else pages are synthesized deterministically from the layout;
+      ``page_rasters`` supplies renderer output (doc_id, page, content);
+      a page it lacks, or whose bytes do not decode, is synthesized
+      deterministically from the layout;
       ``render_groundings=False`` attaches paths only.
     - ``config``: full Settings object; wins over keyword flags
       (reference precedence, parse.py:93-101).
@@ -118,56 +119,31 @@ def parse(
         # and the crop PNGs are written there
         # (save_groundings_as_images, utils.py:63-169). ``page_rasters``
         # (doc_id, page, content) supplies real page images when the
-        # caller has a renderer; otherwise rasterize_pages synthesizes
-        # deterministic layout pages so the loop closes in-engine.
+        # caller has a renderer; raster DOCUMENTS (scanned TIFF/PNG/
+        # JPEG/... files) bring their own. The renderer synthesizes
+        # every (doc, page) with no raster or an undecodable one from
+        # the layout, so each image_path names a file that is written.
         from agentic_doc_spark.operators.multimodal import (
             attach_grounding_image_paths,
-            rasterize_pages,
             render_grounding_crops,
             write_grounding_images,
         )
 
         parsed = attach_grounding_image_paths(parsed, grounding_save_dir)
         if render_groundings:
-            # the render job consumes `parsed` on BOTH join sides (crop
-            # specs and synthesized rasters), and a result_save_dir write
-            # may follow — persist across parse()'s eager actions so
-            # extract() runs once, not once per consumer; ALWAYS released
-            # (try/finally below) so a failed write cannot pin the cached
-            # corpus for the driver's lifetime
+            # the render job consumes `parsed`, and a result_save_dir
+            # write may follow — persist across parse()'s eager actions
+            # so extract() runs once, not once per consumer; ALWAYS
+            # released (try/finally below) so a failed write cannot pin
+            # the cached corpus for the driver's lifetime
             persisted = parsed = parsed.persist()
             pages = page_rasters
             if pages is None and binary_routed is not None:
-                # raster DOCUMENTS (scanned TIFF/PNG/JPEG/... files)
-                # have REAL page images — use them for crops; all other
-                # (doc, page)s fall back to the synthesized layout pages
-                from pyspark.sql import functions as F
+                from agentic_doc_spark.sources.layout import image_media_table
 
-                from agentic_doc_spark.sources.layout import (
-                    image_media_table,
+                pages = image_media_table(binary_routed).select(
+                    "doc_id", "page", "content"
                 )
-
-                # decodable-only: an undecodable real page (WebP, a bad
-                # TIFF page, a JPEG with a corrupt body) must NOT
-                # anti-join away the doc's synthesized fallback pages —
-                # image_path would then point at crop files that are
-                # never written
-                real = (
-                    image_media_table(binary_routed)
-                    .filter(F.col("decodable"))
-                    .select("doc_id", "page", "content")
-                )
-                # per-PAGE anti-join: a doc whose page 1 is undecodable
-                # keeps its synthesized page 1 while page 0 crops come
-                # from the real scan (crop rects scale to either size)
-                synth_pages = rasterize_pages(parsed).join(
-                    real.select("doc_id", "page"),
-                    ["doc_id", "page"],
-                    "left_anti",
-                )
-                pages = real.unionByName(synth_pages)
-            elif pages is None:
-                pages = rasterize_pages(parsed)
             try:
                 write_grounding_images(
                     render_grounding_crops(parsed, pages), grounding_save_dir

@@ -1,12 +1,11 @@
 """Embedded 5×7 bitmap font + numpy text renderer.
 
-Closes the last sandbox-reachable K1 gap (round-4 VERDICT task 6): the
-reference rasterizes born-digital PDF pages with pymupdf
+The reference rasterizes born-digital PDF pages with pymupdf
 (agentic_doc/utils.py:110-124 ``page_to_image``), so its grounding crops
-contain readable text. This container has no PDF renderer, so
-``rasterize_pages`` synthesizes pages — previously as tinted blocks with
-ragged ink runs; now the chunk's ACTUAL text renders through this font,
-so crops of born-digital documents carry legible glyph pixels.
+contain readable text. The pure-stdlib build has no PDF renderer, so
+``multimodal._synth_page`` synthesizes pages as tinted blocks, and the
+chunk's ACTUAL text renders inside them through this font: crops of
+born-digital documents carry legible glyph pixels.
 
 The glyph set is a hand-authored classic 5×7 dot-matrix design (the
 HD44780-style public-domain pattern family): A–Z, 0–9, and common

@@ -455,12 +455,16 @@ def decode_embedded(
     accumulated type-0 symbol dictionaries it refers to). Raises
     ValueError for anything outside that scope —
     the caller surfaces the gap. ``expect=(w, h)`` cross-checks the
-    region dimensions against the container's declared size, so a
-    corrupt header claiming a huge region fails fast instead of
-    spinning the per-pixel decode loop for minutes."""
+    region dimensions against the container's declared size, and a
+    region must lie inside the page a preceding page-information
+    segment (type 48) declares (T.88 7.4.8; height 0xFFFFFFFF = striped,
+    height unchecked) — so a corrupt header claiming a huge region
+    fails fast instead of spinning the per-pixel decode loop for
+    minutes."""
     pos = 0
     n = len(data)
     dicts: dict[int, list[np.ndarray]] = {}
+    page: tuple[int, int] | None = None
     while pos + 11 <= n:
         _num, flags = struct.unpack_from(">IB", data, pos)
         stype = flags & 0x3F
@@ -494,6 +498,13 @@ def decode_embedded(
         if stype == 0:  # symbol dictionary
             dicts[_num] = _decode_symbol_dict(body)
             continue
+        if stype == 48:  # page information: width, height, ...
+            if len(body) < 8:
+                raise ValueError("JBIG2 page-info segment too short")
+            page = struct.unpack_from(">II", body, 0)
+            continue
+        if stype in (4, 6, 7, 36, 38, 39):
+            _check_region_in_page(body, page)
         if stype in (4, 6, 7):  # (intermediate/immediate) text region
             syms: list[np.ndarray] = []
             for rn in refs:
@@ -537,6 +548,24 @@ def decode_embedded(
                 "refinement) unsupported"
             )
     raise ValueError("no region segment found in JBIG2 stream")
+
+
+def _check_region_in_page(
+    body: bytes, page: tuple[int, int] | None
+) -> None:
+    """Raise ValueError when a region segment's info field (w, h, x, y —
+    T.88 7.4.1) places it outside the declared page; no page-info
+    segment seen → nothing to check against."""
+    if len(body) < 16:
+        raise ValueError("JBIG2 region segment too short")
+    if page is None:
+        return
+    w, h, x, y = struct.unpack_from(">IIII", body, 0)
+    pw, ph = page
+    if x + w > pw or (ph != 0xFFFFFFFF and y + h > ph):
+        raise ValueError(
+            f"JBIG2 region {w}x{h}+{x}+{y} outside its {pw}x{ph} page"
+        )
 
 
 # --- symbol dictionary + text region (T.88 6.4/6.5, arithmetic only) -------

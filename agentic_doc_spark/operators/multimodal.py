@@ -210,8 +210,8 @@ def grounding_crop_specs(
     partition — per-page locality is all the render-each-page-once
     iteration needs (A3, utils.py:94-104); the chunk explode is narrow,
     so a doc's rows are already co-located and a global range shuffle
-    would buy nothing at any scale. Feeding these specs plus page
-    rasters to a crop UDF is the stubbed step.
+    would buy nothing at any scale. render_grounding_crops cuts the
+    crops these specs name from the page rasters.
 
     Default page dims = US-letter at the reference's 96 dpi
     (agentic_doc/config.py:118-122)."""
@@ -267,11 +267,10 @@ def attach_grounding_image_paths(parsed: DataFrame, save_dir: str) -> DataFrame:
     image_path stays NULL for groundings the renderer would SKIP
     (invalid/degenerate boxes — the same box_is_valid predicate
     grounding_crop_specs filters on), so no path ever points at a file
-    that cannot exist. A caller-supplied ``page_rasters`` page that fails
-    to decode is the one case this in-row transform cannot see (the
-    renderer skips it); parse() checks its own raster-document pages with
-    ``_decode_array`` and falls back to synthesized pages for the rest.
-    NULL chunk / grounding elements pass through as NULL."""
+    that cannot exist: render_grounding_crops writes a crop for every
+    other grounding, synthesizing any page whose raster is missing or
+    does not decode. NULL chunk / grounding elements pass through as
+    NULL."""
     from pyspark.sql import functions as F
 
     from agentic_doc_spark.functions.geometry import box_is_valid
@@ -368,129 +367,110 @@ _CROPS_SCHEMA = T.StructType(
 )
 
 
+def _synth_page(cs, page_width: int, page_height: int) -> np.ndarray:
+    """K1's raster half: one (page_height, page_width, 3) uint8 page
+    rendered from the parsed layout itself — the in-engine stand-in for
+    a PDF renderer (reference page_to_image, agentic_doc/utils.py:
+    110-124, rasterizes with pypdfium2; the pure-stdlib build has no
+    PDF renderer, so the page is SYNTHESIZED deterministically from the
+    chunk geometry: each grounding box ``cs`` (chunk_id, chunk_type, px,
+    text, … structs, sorted — chunk_id first, so that order is the
+    z-order of overlapping blocks) draws a tinted bordered block and the
+    chunk's ACTUAL TEXT renders inside it through the embedded 5×7
+    bitmap font (functions/bitmapfont.py) — grounding crops of
+    born-digital documents therefore contain legible glyph pixels, the
+    closest a renderer-free build gets to the reference's pymupdf page
+    render. Text-less chunks (media/figure placeholders) keep the ragged
+    sha256(chunk_id)-seeded ink runs."""
+    from agentic_doc_spark.functions.bitmapfont import render_wrapped
+
+    canvas = np.full((page_height, page_width, 3), 255, np.uint8)
+    for c in cs:
+        px = c["px"]
+        x0, y0 = int(px["x0"]), int(px["y0"])
+        x1, y1 = int(px["x1"]), int(px["y1"])
+        if x1 <= x0 or y1 <= y0:
+            continue
+        seed = hashlib.sha256(str(c["chunk_id"]).encode()).digest()
+        # block background tint + 2px border
+        canvas[y0:y1, x0:x1] = (
+            205 + seed[0] % 50,
+            215 + seed[1] % 40,
+            225 + seed[2] % 30,
+        )
+        canvas[y0 : min(y0 + 2, y1), x0:x1] = 60
+        canvas[max(y1 - 2, y0) : y1, x0:x1] = 60
+        canvas[y0:y1, x0 : min(x0 + 2, x1)] = 60
+        canvas[y0:y1, max(x1 - 2, x0) : x1] = 60
+        text = (c["text"] or "").strip()
+        if text:
+            # the chunk's real text in 5×7 glyphs, wrapped
+            render_wrapped(canvas, x0 + 4, y0 + 4, x1 - 3, y1 - 2, text)
+            continue
+        # ragged text runs: 2px dark lines, widths from the seed
+        for li, y in enumerate(range(y0 + 5, y1 - 4, 7)):
+            frac = 0.5 + (seed[(3 + li) % 32] % 115) / 256.0
+            xe = x0 + 3 + int((x1 - x0 - 6) * min(frac, 1.0))
+            canvas[y : y + 2, x0 + 3 : max(xe, x0 + 4)] = 30
+    return canvas
+
+
+def _page_crops(
+    cs, content, page_width: int, page_height: int
+) -> list[tuple[str, bytes]]:
+    """One page's crops: (rel_path, PNG bytes) per grounding in ``cs``.
+
+    The page decodes ONCE (``_decode_array``); no content, or content
+    that does not decode (R6), falls back to the synthesized page
+    (``_synth_page``), so every spec gets its file. Spec px live in the
+    reference page space (page_width × page_height); the real page
+    image may have any dimensions (scanned rasters, caller DPI), so each
+    rect scales to the page array, keeping ≥1 px."""
+    from agentic_doc_spark.functions.png import crop, encode_png
+
+    arr = None if content is None else _decode_array(bytes(content))
+    if arr is None:
+        arr = _synth_page(cs, page_width, page_height)
+    ah, aw = arr.shape[:2]
+    sx, sy = aw / page_width, ah / page_height
+    out = []
+    for c in cs:
+        px = c["px"]
+        x0 = int(px["x0"] * sx)
+        y0 = int(px["y0"] * sy)
+        x1 = max(int(px["x1"] * sx), x0 + 1)
+        y1 = max(int(px["y1"] * sy), y0 + 1)
+        piece = crop(arr, x0, y0, min(x1, aw), min(y1, ah))
+        if piece.size:
+            out.append((c["rel_path"], encode_png(piece)))
+    return out
+
+
 def render_grounding_crops(
     parsed: DataFrame,
-    pages: DataFrame,
+    pages: DataFrame | None = None,
     page_width: int = 816,
     page_height: int = 1056,
-    count_decodes: bool = False,
 ) -> DataFrame:
     """S9/K2 for REAL: crop PNG bytes per grounding, named exactly as the
     reference writes them (save_groundings_as_images,
     agentic_doc/utils.py:63-169: ``page_{p}/{type}_{chunk_id}_{i}.png``).
 
-    ``pages`` is (doc_id, page, content BINARY) — rasterized page images
-    (PNG; any PIL-readable format when PIL is present; rasterize_pages
-    synthesizes them when no renderer output is available). The crop
-    specs (geometry, clamping, naming) come from grounding_crop_specs;
-    this join + mapInPandas kernel decodes each page ONCE per
-    partition-local group and emits one PNG per grounding. Undecodable
-    pages are skipped (R6). The join is an equi-join on (doc_id, page) —
-    at 10^12 docs both sides partition on the same key, no broadcast
-    assumption. The (doc_id, page) sort runs AFTER the join so the
-    decode-once LRU holds under EVERY join strategy — a shuffled hash
-    join interleaves keys arbitrarily, and pre-join order does not
-    survive its exchange.
-
-    ``count_decodes=True`` appends a ``cache_miss`` column (True on the
-    row that triggered the page decode) — the instrumentation the
-    decode-locality test pins the once-per-page property with."""
-    from agentic_doc_spark.functions.png import crop, encode_png
-
-    specs = grounding_crop_specs(parsed, page_width, page_height)
-    joined = (
-        specs.join(pages, ["doc_id", "page"])
-        .select("doc_id", "page", "rel_path", "px", "content")
-        .sortWithinPartitions("doc_id", "page")
-    )
-    schema = _CROPS_SCHEMA
-    if count_decodes:
-        schema = T.StructType(
-            _CROPS_SCHEMA.fields + [T.StructField("cache_miss", T.BooleanType())]
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import OrderedDict
-
-        cols = [f.name for f in schema.fields]
-        # decode each page once per key GROUP: rows arrive key-sorted
-        # (sortWithinPartitions AFTER the join) so a small LRU suffices —
-        # an unbounded cache of decoded pages (~2.6 MB each) would grow
-        # without limit on page-diverse partitions. Scoped to the
-        # PARTITION (outside the batch loop) so a group that straddles an
-        # Arrow batch boundary still decodes once.
-        cache: OrderedDict[tuple, np.ndarray | None] = OrderedDict()
-        for pdf in batches:
-            rows = []
-            for doc_id, page, rel, px, data in zip(
-                pdf["doc_id"], pdf["page"], pdf["rel_path"], pdf["px"], pdf["content"]
-            ):
-                key = (doc_id, page)
-                miss = key not in cache
-                if miss:
-                    arr = _decode_array(bytes(data) if data is not None else b"")
-                    cache[key] = arr
-                    while len(cache) > 8:
-                        cache.popitem(last=False)
-                arr = cache[key]
-                if arr is None:  # R6: undecodable page → skip its crops
-                    continue
-                # spec px live in the reference page space
-                # (page_width × page_height); the REAL page image may
-                # have any dimensions (scanned rasters, caller DPI) —
-                # scale the rect to the decoded page, keeping ≥1 px.
-                ah, aw = arr.shape[:2]
-                sx, sy = aw / page_width, ah / page_height
-                x0 = int(px["x0"] * sx)
-                y0 = int(px["y0"] * sy)
-                x1 = max(int(px["x1"] * sx), x0 + 1)
-                y1 = max(int(px["y1"] * sy), y0 + 1)
-                piece = crop(arr, x0, y0, min(x1, aw), min(y1, ah))
-                if piece.size == 0:
-                    continue
-                out = (doc_id, rel, bytearray(encode_png(piece)))
-                rows.append(out + (miss,) if count_decodes else out)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return joined.mapInPandas(run, schema)
-
-
-_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("page", T.IntegerType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
-
-def rasterize_pages(
-    parsed: DataFrame, page_width: int = 816, page_height: int = 1056
-) -> DataFrame:
-    """K1's raster half: (doc_id, page, content PNG) page images rendered
-    from the parsed layout itself — the in-engine stand-in for a PDF
-    renderer (reference page_to_image, agentic_doc/utils.py:110-124,
-    rasterizes with pypdfium2; this container has no PDF renderer, so the
-    page is SYNTHESIZED deterministically from the chunk geometry: each
-    grounding box draws a tinted bordered block and the chunk's ACTUAL
-    TEXT renders inside it through the embedded 5×7 bitmap font
-    (functions/bitmapfont.py) — grounding crops of born-digital
-    documents therefore contain legible glyph pixels, the closest this
-    sandbox gets to the reference's pymupdf page render. Text-less
-    chunks (media/figure placeholders) keep the ragged
-    sha256(chunk_id)-seeded ink runs). Feeding these to
-    render_grounding_crops closes the parse → crop-files loop with zero
-    caller-supplied rasters; swap in real renderer output (same schema)
-    when one is available.
-
-    Plan shape: one groupBy (doc_id, page) over the exploded crop specs
-    (map-side combinable collect_list, groups are page-sized), then a
-    pure mapInPandas render — canvas memory is one page (~2.6 MB) at a
-    time per worker."""
+    The ONE renderer, and the reference's loop: the crop specs
+    (grounding_crop_specs: geometry, clamping, naming) group by
+    (doc_id, page) — the chunk_id-first sort of each group is the
+    z-order of synthesized blocks — and ``pages`` (doc_id, page,
+    content BINARY: renderer output, scanned rasters; optional)
+    LEFT-joins on that key. One mapInPandas row is one page, so each
+    page decodes once by construction (``_page_crops``); a page with no
+    raster, or whose raster does not decode, is synthesized from the
+    layout (``_synth_page``) — every valid grounding gets its crop, the
+    exact set attach_grounding_image_paths names. Plan shape: one
+    map-side-combinable groupBy (groups are page-sized) plus, with
+    ``pages``, one equi-join on (doc_id, page) — both sides partition
+    on the same key at any scale, no broadcast assumption; canvas
+    memory is one page (~2.6 MB) at a time per worker."""
     from pyspark.sql import functions as F
-
-    from agentic_doc_spark.functions.bitmapfont import render_wrapped
-    from agentic_doc_spark.functions.png import encode_png
 
     specs = grounding_crop_specs(
         parsed, page_width, page_height, include_text=True
@@ -498,51 +478,31 @@ def rasterize_pages(
     per_page = specs.groupBy("doc_id", "page").agg(
         F.sort_array(
             # chunk_id leads the struct, so sort order (and thus z-order
-            # of overlapping blocks) is unchanged by the text field
-            F.collect_list(F.struct("chunk_id", "chunk_type", "px", "text"))
+            # of overlapping blocks) is unchanged by the trailing fields
+            F.collect_list(
+                F.struct("chunk_id", "chunk_type", "px", "text", "rel_path")
+            )
         ).alias("cs")
     )
+    if pages is None:
+        per_page = per_page.withColumn("content", F.lit(None).cast("binary"))
+    else:
+        per_page = per_page.join(
+            pages.select("doc_id", "page", "content"), ["doc_id", "page"], "left"
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id, page, cs in zip(pdf["doc_id"], pdf["page"], pdf["cs"]):
-                canvas = np.full((page_height, page_width, 3), 255, np.uint8)
-                for c in cs:
-                    px = c["px"]
-                    x0, y0 = int(px["x0"]), int(px["y0"])
-                    x1, y1 = int(px["x1"]), int(px["y1"])
-                    if x1 <= x0 or y1 <= y0:
-                        continue
-                    seed = hashlib.sha256(
-                        str(c["chunk_id"]).encode()
-                    ).digest()
-                    # block background tint + 2px border
-                    canvas[y0:y1, x0:x1] = (
-                        205 + seed[0] % 50,
-                        215 + seed[1] % 40,
-                        225 + seed[2] % 30,
-                    )
-                    canvas[y0 : min(y0 + 2, y1), x0:x1] = 60
-                    canvas[max(y1 - 2, y0) : y1, x0:x1] = 60
-                    canvas[y0:y1, x0 : min(x0 + 2, x1)] = 60
-                    canvas[y0:y1, max(x1 - 2, x0) : x1] = 60
-                    text = (c["text"] or "").strip()
-                    if text:
-                        # the chunk's real text in 5×7 glyphs, wrapped
-                        render_wrapped(
-                            canvas, x0 + 4, y0 + 4, x1 - 3, y1 - 2, text
-                        )
-                        continue
-                    # ragged text runs: 2px dark lines, widths from the seed
-                    for li, y in enumerate(range(y0 + 5, y1 - 4, 7)):
-                        frac = 0.5 + (seed[(3 + li) % 32] % 115) / 256.0
-                        xe = x0 + 3 + int((x1 - x0 - 6) * min(frac, 1.0))
-                        canvas[y : y + 2, x0 + 3 : max(xe, x0 + 4)] = 30
-                rows.append((doc_id, int(page), bytearray(encode_png(canvas))))
-            yield pd.DataFrame(rows, columns=["doc_id", "page", "content"])
+            rows = [
+                (doc_id, rel, bytearray(png))
+                for doc_id, cs, data in zip(pdf["doc_id"], pdf["cs"], pdf["content"])
+                for rel, png in _page_crops(cs, data, page_width, page_height)
+            ]
+            yield pd.DataFrame(rows, columns=["doc_id", "rel_path", "content"])
 
-    return per_page.mapInPandas(run, _PAGES_SCHEMA)
+    return per_page.select("doc_id", "cs", "content").mapInPandas(
+        run, _CROPS_SCHEMA
+    )
 
 
 def write_grounding_images(crops: DataFrame, save_dir: str) -> None:

@@ -511,7 +511,7 @@ def assign_cells_fast(
     emit_norm: bool = False,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid — ZERO exchanges: a
-    mapInPandas kernel over the scan partitions (``_assign_np``: cosine
+    mapInArrow kernel over the scan partitions (``_assign_np``: cosine
     argmax, ties and zero-norm rows → lowest cell, a NaN score wins from
     its first cell; pinned against a scalar loop by
     test_assign_cells_fast_bit_identical). The centroids ride in the
@@ -519,11 +519,11 @@ def assign_cells_fast(
     n_cells × dim-literal SQL string to build or analyze. Output
     (id, vec, cell); ``emit_norm`` appends ``_vnorm`` (the row's ‖v‖
     computed with the exact ``_norm``-fold op sequence) so scoring can
-    reuse it instead of re-folding per candidate pair. Known defect: the
-    pandas → Arrow return trip turns NaN components of the passed-through
-    ``vec`` into NULL (cells and norms are computed before it)."""
+    reuse it instead of re-folding per candidate pair. id and vec pass
+    through as the input Arrow arrays, so NaN vector components stay
+    NaN (a pandas round trip would turn them into NULL)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     _require_cells(cells)
     id_type = corpus.schema[id_col].dataType.simpleString()
@@ -532,19 +532,22 @@ def assign_cells_fast(
         out_schema += ", _vnorm double"
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
-            )
+            vec = batch.column(vec_col)
+            if vec.type.value_type != pa.float64():
+                vec = vec.cast(pa.list_(pa.float64()))
+            V = np.stack(vec.to_numpy(zero_copy_only=False))
             cell, vnorm = _assign_np(V, cells, return_norm=True)
-            data = {id_col: pdf[id_col], vec_col: pdf[vec_col], "cell": cell}
+            cols = [batch.column(id_col), vec, pa.array(cell, pa.int64())]
+            names = [id_col, vec_col, "cell"]
             if emit_norm:
-                data["_vnorm"] = vnorm
-            yield pd.DataFrame(data)
+                cols.append(pa.array(vnorm, pa.float64()))
+                names.append("_vnorm")
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return corpus.select(id_col, vec_col).mapInPandas(run, out_schema)
+    return corpus.select(id_col, vec_col).mapInArrow(run, out_schema)
 
 
 def _probe_cells(

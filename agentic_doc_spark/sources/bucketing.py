@@ -36,10 +36,6 @@ def write_bucketed(
     )
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_join(
     spark: SparkSession, left_table: str, right_table: str, key: str = "doc_id"
 ) -> DataFrame:

@@ -14,12 +14,6 @@ from pyspark.sql import functions as F
 from agentic_doc_spark.schema import PARSED_DOCUMENT
 
 
-def write_parsed(parsed: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """S8: append parsed documents to the output table. parquet in the
-    sandbox; `.format("iceberg")` on a real catalog — same call shape."""
-    parsed.write.mode("append").format(fmt).save(path)
-
-
 def write_json_results(parsed: DataFrame, path: str) -> None:
     """S8 JSON-export parity: one JSON object per document, with the
     reference's result naming made a column instead of a filename

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -309,6 +310,52 @@ def test_grounding_paths_exist_for_undecodable_raster(spark, tmp_path):
     assert len(paths) == 3  # one media chunk + two text chunks
     missing = [p for p in paths if not os.path.isfile(p)]
     assert missing == []
+
+
+@pytest.mark.parametrize("raster", ["page0_only", "undecodable"])
+def test_grounding_paths_exist_with_partial_page_rasters(
+    spark, tmp_path, raster
+):
+    # caller page_rasters that cover only page 0 of a multi-page doc, or
+    # whose only page does not decode: the pages without a usable raster
+    # are synthesized, so every image_path parse() reports names a file
+    # that was written
+    import os
+
+    from agentic_doc_spark.functions.png import decode_png, encode_png
+
+    df = corpus_df(spark, 1).filter("doc_id = 'multi-000000'")
+    W, H = 816, 1056
+    page = np.zeros((H, W, 3), np.uint8)
+    page[..., 0] = 7  # a solid color no synthesized page contains
+    content = (
+        encode_png(page)
+        if raster == "page0_only"
+        else b"\x89PNG\r\n\x1a\n" + bytes(64)
+    )
+    rasters = spark.createDataFrame(
+        [("multi-000000", 0, bytearray(content))],
+        "doc_id string, page int, content binary",
+    )
+    save = str(tmp_path / "gsave")
+    rows = parse(
+        spark, df, grounding_save_dir=save, page_rasters=rasters
+    ).collect()
+    found = [
+        (g["page"], g["image_path"])
+        for r in rows
+        for c in r["chunks"]
+        for g in c["grounding"]
+        if g["image_path"] is not None
+    ]
+    assert {p for p, _ in found} - {0}  # pages beyond the raster's
+    assert [p for _, p in found if not os.path.isfile(p)] == []
+    for pg, path in found:
+        with open(path, "rb") as f:
+            cut = decode_png(f.read())
+        # page-0 crops come from the caller's raster when it decodes
+        from_caller = bool((cut == (7, 0, 0)).all())
+        assert from_caller == (raster == "page0_only" and pg == 0)
 
 
 def test_parse_parquet_directory(spark, tmp_path):

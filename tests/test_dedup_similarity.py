@@ -343,6 +343,26 @@ def test_ivf_zero_norm_vector_assignment(spark):
     assert 99 in {r["neighbor_id"] for r in res.collect()}
 
 
+def test_ivf_topk_nan_vector_scores_like_brute_force(spark):
+    # NaN components must reach IVF scoring as NaN — ranked first, as
+    # brute force ranks them — not as NULL components that score 0.0
+    import math
+
+    rows = [(i, [float(i + 1), float(2 * i + 1)]) for i in range(8)]
+    rows.append((99, [float("nan"), 1.0]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = emb.filter(F.col("vec_id") == 1)
+
+    def scores(res):
+        return {r["neighbor_id"]: r["cos"] for r in res.collect()}
+
+    brute = scores(brute_force_topk(emb, q, k=8))
+    ivf = scores(ivf_topk(emb, q, k=8, n_cells=4, n_probe=4))
+    assert math.isnan(brute[99]) and math.isnan(ivf[99])
+    assert set(ivf) == set(brute)
+    assert all(ivf[n] == brute[n] for n in brute if n != 99)
+
+
 def test_decontaminate_drops_overlapping_docs(spark):
     # any doc sharing a 3-shingle with the benchmark set is dropped;
     # disjoint docs survive
@@ -837,8 +857,8 @@ def test_semantic_dedup_kernel_matches_expression_join(spark):
     proj = emb.select("vec_id", "embedding")
     train = _train_sample(proj, 8, 256, "vec_id")
     cents = _train_centroids(train, 8, 1, "embedding", "vec_id")
-    # only the cells come from the kernel: its vector passthrough turns
-    # NaN components into NULL, and the pair join must see the originals
+    # only the cells come from the kernel; the pair join reads the
+    # original vectors
     assigned = proj.join(
         assign_cells_fast(proj, cents).select("vec_id", "cell"), "vec_id"
     )

@@ -774,6 +774,54 @@ def test_jpx_and_jbig2_fuzz_valueerror_only():
                 pass
 
 
+def test_jbig2_region_outside_page_raises_fast():
+    # T.88 7.4.8: a region must lie inside the page its page-info
+    # segment declares. A forged width (20×2,031,646 — under the
+    # max_pixels cap) used to decode for minutes; it must raise at once.
+    # A striped page (height 0xFFFFFFFF) leaves y unchecked.
+    import struct
+    import time
+
+    import numpy as np
+
+    from agentic_doc_spark.functions.bitmapfont import glyph
+    from agentic_doc_spark.functions.jbig2 import (
+        decode_embedded,
+        encode_embedded,
+        encode_embedded_text,
+    )
+
+    img = (np.random.default_rng(3).random((20, 30)) < 0.3).astype(np.uint8)
+    generic = encode_embedded(img)
+    text = encode_embedded_text(
+        12, 9, [glyph(c).astype(np.uint8) for c in "AB"], [(0, 0, 0), (1, 6, 1)]
+    )
+    # both streams: page info (11-byte header, body w/h at 11/15), then
+    # the region segments; the generic region's body starts at 41
+    page_w, region = 11, 41
+
+    def forged(data, *fields):
+        out = bytearray(data)
+        for off, val in fields:
+            struct.pack_into(">I", out, off, val)
+        return bytes(out)
+
+    bad = [
+        forged(generic, (region, 2_031_646)),  # region wider than page
+        forged(generic, (region + 8, 5)),  # x offset pushes it out
+        forged(generic, (page_w + 4, 19)),  # page one row short
+        forged(text, (page_w, 11)),  # text region wider than page
+    ]
+    for data in bad:
+        t0 = time.perf_counter()
+        with pytest.raises(ValueError, match="outside"):
+            decode_embedded(data)
+        assert time.perf_counter() - t0 < 1.0
+    striped = forged(generic, (page_w + 4, 0xFFFFFFFF), (region + 12, 7))
+    assert (decode_embedded(striped) == img).all()
+    assert decode_embedded(text).shape == (9, 12)
+
+
 def test_ccitt_g3_embedded_images():
     # K > 0 (mixed 2-D) and K = 0 (pure MH) G3 streams decode; the
     # /EndOfLine default (false) means bare tag bits / bare runs

@@ -219,35 +219,34 @@ def test_render_grounding_crops_real_bytes(spark):
         assert (got == want).all()
 
 
-def test_rasterize_pages_synthesizes_decodable_layout_pages(spark):
-    # K1 raster half: every parsed page with valid groundings renders to a
-    # real page-sized PNG with ink inside the grounding boxes
-    from agentic_doc_spark.operators.multimodal import (
-        grounding_crop_specs,
-        rasterize_pages,
-    )
+def _spec_pages(parsed):
+    # (doc_id, page) → the page's crop-spec dicts, text included — the
+    # per-page group render_grounding_crops hands its kernel
+    from collections import defaultdict
+
+    from agentic_doc_spark.operators.multimodal import grounding_crop_specs
+
+    pages = defaultdict(list)
+    for r in grounding_crop_specs(parsed, include_text=True).collect():
+        pages[(r["doc_id"], r["page"])].append(r.asDict(recursive=True))
+    return pages
+
+
+def test_synth_page_draws_layout_pages(spark):
+    # K1 raster half: a parsed page with valid groundings renders to a
+    # page-sized canvas with ink inside the grounding boxes
+    from agentic_doc_spark.operators.multimodal import _synth_page
     from agentic_doc_spark.pipeline import extract
     from agentic_doc_spark.synth import corpus_df
 
-    parsed = extract(corpus_df(spark, 1))
-    pages = {
-        (r["doc_id"], r["page"]): bytes(r["content"])
-        for r in rasterize_pages(parsed).collect()
-    }
-    spec_pages = {
-        (r["doc_id"], r["page"])
-        for r in grounding_crop_specs(parsed).collect()
-    }
-    assert set(pages) == spec_pages and pages
-    one = decode_png(next(iter(pages.values())))
-    assert one.shape == (1056, 816, 3)
+    pages = _spec_pages(extract(corpus_df(spark, 1)))
+    assert pages
+    cs = pages[min(pages)]
+    one = _synth_page(cs, 816, 1056)
+    assert one.shape == (1056, 816, 3) and one.dtype == np.uint8
     assert one.min() < 80  # text-run ink, not a blank page
-    # deterministic: a second render is byte-identical
-    again = {
-        (r["doc_id"], r["page"]): bytes(r["content"])
-        for r in rasterize_pages(parsed).collect()
-    }
-    assert again == pages
+    # deterministic: a second render is identical
+    assert (_synth_page(cs, 816, 1056) == one).all()
 
 
 def test_parse_grounding_save_dir_end_to_end(spark, tmp_path):
@@ -372,14 +371,11 @@ def test_parse_with_caller_supplied_page_rasters(spark, tmp_path):
         assert (got == want).all()  # cut from the caller's raster
 
 
-def test_rasterize_pages_renders_legible_glyphs(spark):
-    # K1 last gap (round-4 VERDICT task 6): a born-digital chunk's TEXT
-    # must appear as exact 5×7 glyph bitmaps inside its grounding block
+def test_synth_page_renders_legible_glyphs(spark):
+    # a born-digital chunk's TEXT must appear as exact 5×7 glyph
+    # bitmaps inside its grounding block
     from agentic_doc_spark.functions.bitmapfont import CELL_W, glyph
-    from agentic_doc_spark.operators.multimodal import (
-        grounding_crop_specs,
-        rasterize_pages,
-    )
+    from agentic_doc_spark.operators.multimodal import _synth_page
     from agentic_doc_spark.schema import PARSED_DOCUMENT
 
     row = {
@@ -406,8 +402,9 @@ def test_rasterize_pages_renders_legible_glyphs(spark):
         "errors": [],
     }
     parsed = spark.createDataFrame([row], PARSED_DOCUMENT)
-    px = grounding_crop_specs(parsed).collect()[0]["px"]
-    arr = decode_png(bytes(rasterize_pages(parsed).collect()[0]["content"]))
+    [cs] = _spec_pages(parsed).values()
+    px = cs[0]["px"]
+    arr = _synth_page(cs, 816, 1056)
     x, y = px["x0"] + 4, px["y0"] + 4
     for i, ch in enumerate("HELLO"):
         region = arr[y : y + 7, x + i * CELL_W : x + i * CELL_W + 5]
@@ -428,32 +425,48 @@ def test_rasterize_pages_renders_legible_glyphs(spark):
     assert (canvas2[:, 14:] == 255).all() and (canvas2 != 255).any()
 
 
-def test_render_crops_decode_once_per_page(spark):
-    # the post-join sortWithinPartitions pins the once-per-(doc,page)
-    # decode property under every join strategy: total cache misses ==
-    # distinct rendered (doc_id, page) groups
-    from pyspark.sql import functions as F
+def test_page_crops_decode_once_or_synthesize(monkeypatch):
+    # one kernel row is one page: its raster decodes exactly once for
+    # all of the page's crops, and a missing or undecodable raster
+    # falls back to the synthesized page — never to a skipped crop
+    from agentic_doc_spark.operators import multimodal as mm
 
-    from agentic_doc_spark.operators.multimodal import (
-        rasterize_pages,
-        render_grounding_crops,
+    W, H = 60, 40
+    cs = [
+        {"chunk_id": f"c{i}", "chunk_type": "text", "text": t,
+         "px": {"x0": x0, "y0": 4, "x1": x0 + 25, "y1": 30},
+         "rel_path": f"page_0/text_c{i}_0.png"}
+        for i, (x0, t) in enumerate([(2, "AB"), (31, "")])
+    ]
+    decodes = []
+    real_decode = mm._decode_array
+    monkeypatch.setattr(
+        mm, "_decode_array", lambda b: decodes.append(b) or real_decode(b)
     )
-    from agentic_doc_spark.pipeline import extract
-    from agentic_doc_spark.synth import corpus_df
 
-    parsed = extract(corpus_df(spark, 2))
-    pages = rasterize_pages(parsed)
-    crops = render_grounding_crops(parsed, pages, count_decodes=True).cache()
-    n_groups = (
-        crops.select(
-            F.split(F.col("rel_path"), "/").getItem(0).alias("p"), "doc_id"
-        )
-        .distinct()
-        .count()
-    )
-    n_decodes = crops.filter("cache_miss").count()
-    assert n_decodes == n_groups, (n_decodes, n_groups)
-    crops.unpersist()
+    def cut(page):
+        return {
+            c["rel_path"]: page[c["px"]["y0"] : c["px"]["y1"],
+                                c["px"]["x0"] : c["px"]["x1"]]
+            for c in cs
+        }
+
+    page = _gradient(H, W, 3)
+    got = mm._page_crops(cs, encode_png(page), W, H)
+    assert len(decodes) == 1
+    want = cut(page)
+    assert [rel for rel, _ in got] == list(want)
+    for rel, png in got:
+        assert (decode_png(png) == want[rel]).all()
+
+    synth = cut(mm._synth_page(cs, W, H))
+    for content, n_decodes in ((None, 0), (b"\x89PNG\r\n\x1a\n" + bytes(40), 1)):
+        decodes.clear()
+        got = mm._page_crops(cs, content, W, H)
+        assert len(decodes) == n_decodes
+        assert [rel for rel, _ in got] == list(synth)
+        for rel, png in got:
+            assert (decode_png(png) == synth[rel]).all()
 
 
 def test_decode_16bit_gray_and_rgb():
