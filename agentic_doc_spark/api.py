@@ -88,17 +88,15 @@ def parse(
         settings = replace(settings, **overrides)
 
     persisted: DataFrame | None = None
-    df = resolve(
-        spark,
-        documents,
-        **(
-            {"pattern": connector_pattern}
-            if connector_pattern and not isinstance(documents, DataFrame)
-            else {}
-        ),
-    )
-    if connector_path and not isinstance(documents, DataFrame):
-        df = resolve(spark, connector_path, pattern=connector_pattern)
+    if isinstance(documents, DataFrame):
+        df = documents
+    else:
+        # a connector path replaces ``documents`` as the source
+        df = resolve(
+            spark,
+            connector_path or documents,
+            **({"pattern": connector_pattern} if connector_pattern else {}),
+        )
 
     binary_routed = None
     if "spans" not in df.columns:

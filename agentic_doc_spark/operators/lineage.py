@@ -23,30 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def doc_checksum_col() -> F.Column:
-    """Deterministic per-document checksum over the ordered output spans
-    (expression form — kept as the semantic reference; the hot path is
-    the Arrow kernel below, byte-identical, pinned by
-    test_lineage.py::test_kernel_checksum_matches_expression)."""
-    parts = F.transform(
-        F.col("spans"),
-        lambda s: F.concat_ws(
-            "\x1f",
-            F.col("doc_id"),
-            s["offset"],
-            s["kind"],
-            F.coalesce(s["text"], F.lit("")),
-            F.coalesce(s["media_ref"], F.lit("")),
-        ),
-    )
-    return F.sha2(F.array_join(parts, "\x1e"), 256)
-
-
 def _per_doc_checksums(parsed: DataFrame) -> DataFrame:
     """(partition_id, doc_id, n_spans, doc_checksum) via a mapInArrow
     kernel: vectorized string assembly (pandas C ops) + hashlib sha256.
+    doc_checksum = sha256 hex of the doc's spans in order, one line per
+    span (doc_id, offset, kind, text, media_ref joined by '\\x1f', NULL
+    as ''), lines joined by '\\x1e'.
 
-    The JVM expression twin (sha2 inside an interpreted HOF) measured 8×
+    An expression form (sha2 inside an interpreted HOF) measured 8×
     SLOWER at 32 threads than at 8 on the same data — MessageDigest and
     HOF allocation contend under high thread counts (BENCH/BASELINE.md
     spark-submit section). Heavy per-row hashing belongs in a kernel."""

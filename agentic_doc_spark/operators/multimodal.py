@@ -206,12 +206,8 @@ def grounding_crop_specs(
     chunks explode to one row per grounding, boxes clamp and convert to
     pixel rects (F3, utils.py:193-208), and the output path follows the
     reference naming ``page_{p}/{chunk_type}_{chunk_id}_{i}.png``
-    (utils.py:150-156). Rows come back sorted by (doc, page) WITHIN each
-    partition — per-page locality is all the render-each-page-once
-    iteration needs (A3, utils.py:94-104); the chunk explode is narrow,
-    so a doc's rows are already co-located and a global range shuffle
-    would buy nothing at any scale. render_grounding_crops cuts the
-    crops these specs name from the page rasters.
+    (utils.py:150-156). render_grounding_crops cuts the crops these
+    specs name from the page rasters.
 
     Default page dims = US-letter at the reference's 96 dpi
     (agentic_doc/config.py:118-122)."""
@@ -252,7 +248,6 @@ def grounding_crop_specs(
                 F.lit(".png"),
             ).alias("rel_path"),
         )
-        .sortWithinPartitions("doc_id", "page")
     )
 
 

@@ -9,11 +9,10 @@ page, their bytes served by ``image_media_table``. A document that
 reaches the parser but cannot be decoded becomes a one-span corrupt
 marker, which extract turns into failed-part error rows.
 
-Everything is one mapInPandas kernel over binaryFile rows: it emits flat
-(doc_id, kind, text, media_ref, offset) rows, and a groupBy(doc_id) +
-collect_list re-assembles them into the nested spans array
-pipeline.extract consumes. A document with no blocks at all emits one
-NULL-offset placeholder row, so it still reaches extract (spans=[]).
+Everything is one mapInArrow kernel over binaryFile rows: each input row
+becomes one (doc_id, spans) row, its spans already in offset order (a
+document with no blocks gets spans=[]), followed by a hash exchange on
+doc_id that spreads extract over AQE-coalesced tasks.
 """
 
 from __future__ import annotations
@@ -22,9 +21,13 @@ import re
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from agentic_doc_spark.schema import DOCUMENTS_RAW
 
 
 #: blank-line block splitter (one or more empty lines)
@@ -59,16 +62,6 @@ def _html_table_to_markdown(m: "re.Match[str]") -> str:
         if cells:
             rows.append("| " + " | ".join(cells) + " |")
     return "\n\n" + "\n".join(rows) + "\n\n" if rows else "\n\n"
-
-_SPANS_FLAT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ]
-)
 
 
 def split_blocks(data: bytes, doc_type: str) -> list[str]:
@@ -167,6 +160,50 @@ def _raster_spans(
     return [("raw", "", f"imgdoc://{doc_id}/p{i}") for i in range(n)]
 
 
+def _doc_spans(
+    doc_id: str, data: bytes, doc_type: str | None, spans_per_page: int
+) -> list[tuple[str, str | None, str | None, int]]:
+    """One document's bytes → its (kind, text, media_ref, offset) spans
+    in offset order. HTML routes by ``doc_type`` or a leading '<' (the
+    magic sniff calls markup 'image'); raster documents get one span per
+    page with offsets spaced by ``spans_per_page``, so page_no = offset
+    // spans_per_page equals the real scan page and end_page_idx and
+    grounding pages line up with the ``image_media_table`` sidecar. A
+    document with no blocks (whitespace-only text, markup-only HTML)
+    gets no spans."""
+    is_html = doc_type == "image" and data[:1] == b"<"
+    eff = "html" if is_html or doc_type == "html" else doc_type
+    step = 1
+    try:
+        if eff == "pdf":
+            spans = _pdf_spans(data, doc_id)
+        else:
+            spans = _raster_spans(data, doc_id)
+            if spans is not None:
+                step = spans_per_page
+            else:
+                spans = [("raw", b, None) for b in split_blocks(data, eff)]
+    except NotImplementedError as ex:
+        # A document that reaches the parser but cannot be decoded is a
+        # PARSE failure, not a download failure: a one-span corrupt
+        # marker makes extract produce the reference's failed-part shape
+        # — empty spans + per-page error rows (agentic_doc/parse.py:
+        # 722-739, pinned by reference tests/unit/test_parse.py:473-501)
+        # — instead of the document silently vanishing. (The
+        # skip-silently precedent, parse.py:183-190, covers download
+        # failures only.)
+        return [("corrupt", f"undecodable document: {ex}", None, 0)]
+    return [(k, t, m, i * step) for i, (k, t, m) in enumerate(spans)]
+
+
+#: documents_raw with a nullable ``doc_id``: the schema layout_parse
+#: declares to mapInArrow (a fresh StructType — never mutate schema.py's)
+_LAYOUT_STRUCT = T.StructType(
+    [T.StructField("doc_id", T.StringType())] + DOCUMENTS_RAW.fields[1:]
+)
+_LAYOUT_SCHEMA = to_arrow_schema(_LAYOUT_STRUCT)
+
+
 def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
     """(doc_id, content BINARY, doc_type) → documents_raw (doc_id, spans).
 
@@ -178,97 +215,26 @@ def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
     from agentic_doc_spark.config import DEFAULT_SETTINGS
 
     spans_per_page = (settings or DEFAULT_SETTINGS).spans_per_page
+    spans_type = _LAYOUT_SCHEMA.field("spans").type
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, kinds, texts, refs, offs = [], [], [], [], []
-            for doc_id, content, dt in zip(
-                pdf["doc_id"], pdf["content"], pdf["doc_type"]
-            ):
-                data = bytes(content)
-                is_html = dt == "image" and data[:1] == b"<"
-                eff = "html" if is_html or dt == "html" else dt
-                step = 1
-                try:
-                    if eff == "pdf":
-                        spans = _pdf_spans(data, doc_id)
-                    else:
-                        spans = _raster_spans(data, doc_id)
-                        if spans is not None:
-                            # one span PER PAGE: space offsets by
-                            # spans_per_page so page_no = offset // spp
-                            # equals the real scan page — end_page_idx
-                            # and grounding pages line up with the
-                            # image_media_table sidecar
-                            step = spans_per_page
-                        else:
-                            spans = [
-                                ("raw", b, None)
-                                for b in split_blocks(data, eff)
-                            ]
-                except NotImplementedError as ex:
-                    # A document that reaches the parser but cannot be
-                    # decoded is a PARSE failure, not a download failure:
-                    # emit a one-span corrupt marker so extract produces
-                    # the reference's failed-part shape — empty spans +
-                    # per-page error rows (agentic_doc/parse.py:722-739,
-                    # pinned by reference tests/unit/test_parse.py:473-501)
-                    # — instead of the document silently vanishing. (The
-                    # skip-silently precedent, parse.py:183-190, covers
-                    # download failures only.)
-                    ids.append(doc_id)
-                    kinds.append("corrupt")
-                    texts.append(f"undecodable document: {ex}")
-                    refs.append(None)
-                    offs.append(0)
-                    continue
-                if not spans:
-                    # no blocks (whitespace-only text, markup-only HTML):
-                    # one NULL-offset placeholder row keeps the document
-                    # in the groupBy below, whose collect_list drops it,
-                    # so the doc reaches extract with spans=[]
-                    ids.append(doc_id)
-                    kinds.append(None)
-                    texts.append(None)
-                    refs.append(None)
-                    offs.append(None)
-                    continue
-                ids.extend([doc_id] * len(spans))
-                kinds.extend(k for k, _t, _m in spans)
-                texts.extend(t for _k, t, _m in spans)
-                refs.extend(m for _k, _t, m in spans)
-                offs.extend(i * step for i in range(len(spans)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "kind": kinds,
-                    "text": texts,
-                    "media_ref": refs,
-                    "offset": offs,
-                }
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            doc_ids = batch.column("doc_id")
+            spans = [
+                _doc_spans(doc_id, data, dt, spans_per_page)
+                for doc_id, data, dt in zip(
+                    doc_ids.to_pylist(),
+                    batch.column("content").to_pylist(),
+                    batch.column("doc_type").to_pylist(),
+                )
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [doc_ids, pa.array(spans, spans_type)], schema=_LAYOUT_SCHEMA
             )
 
-    flat = binary_df.mapInPandas(run, _SPANS_FLAT)
-    # sort key must lead the struct (sort_array orders by field position);
-    # collect_list skips the NULL a placeholder row maps to
-    ordered = F.sort_array(
-        F.collect_list(
-            F.when(
-                F.col("offset").isNotNull(),
-                F.struct("offset", "kind", "text", "media_ref"),
-            )
-        )
-    )
-    spans = F.transform(
-        ordered,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return flat.groupBy("doc_id").agg(spans.alias("spans"))
+    # the exchange stays: without it extract runs in the scan's few tasks
+    # and parse_small measured slower in 6/6 pairs (python_init_s 2.8 → 6.3 s)
+    return binary_df.mapInArrow(run, _LAYOUT_STRUCT).repartition("doc_id")
 
 
 def route_doc_types(raw: DataFrame) -> DataFrame:
@@ -335,34 +301,23 @@ def pdf_media_table(binary_df: DataFrame) -> DataFrame:
     return binary_df.mapInPandas(run, _MEDIA_TABLE)
 
 
-_IMG_MEDIA_TABLE = T.StructType(
-    list(_MEDIA_TABLE.fields)
-    + [T.StructField("decodable", T.BooleanType())]
-)
-
-
 def image_media_table(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, content, doc_type) → (doc_id, media_ref, page, content,
-    decodable): payloads behind ``_raster_spans``'s ``imgdoc://`` refs —
-    one row per routed page, the same ``raster_format`` decision.
-    Single-image formats pass their original bytes through; multi-page
+    """(doc_id, content, doc_type) → (doc_id, media_ref, page, content):
+    payloads behind ``_raster_spans``'s ``imgdoc://`` refs — one row per
+    routed page, the same ``raster_format`` decision. Single-image
+    formats pass their original bytes through undecoded; multi-page
     TIFFs transcode each page to PNG (pure functions/tiff.py →
     functions/png.py) PER PAGE — one bad page (CCITT, corrupt strip)
-    yields an undecodable row, not the loss of the document's good
-    pages. ``decodable`` is exactly "``_decode_array`` returns an
-    array" (per page for TIFF), so a sniffed-but-corrupt image (a JPEG
-    SOI over a broken body, WebP without PIL) is False and grounding
-    falls back to the synthesized page for it — the crop renderer
-    decodes with the same function. Same narrow-table discipline as
+    yields an empty payload, not the loss of the document's good pages.
+    Routing a page never decodes it: the crop renderer decodes each page
+    once with ``_decode_array`` and synthesizes the page from the layout
+    when that fails. Same narrow-table discipline as
     ``pdf_media_table``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from agentic_doc_spark.functions import tiff
         from agentic_doc_spark.functions.png import encode_png
-        from agentic_doc_spark.operators.multimodal import (
-            _decode_array,
-            raster_format,
-        )
+        from agentic_doc_spark.operators.multimodal import raster_format
 
         for pdf in batches:
             rows = []
@@ -379,20 +334,16 @@ def image_media_table(binary_df: DataFrame) -> DataFrame:
                             png = b"" if arr is None else encode_png(arr)
                             rows.append(
                                 (doc_id, f"imgdoc://{doc_id}/p{i}", i,
-                                 bytearray(png), arr is not None)
+                                 bytearray(png))
                             )
                     except ValueError:
                         continue  # broken container: no pages to serve
                 elif fmt is not None:
                     rows.append(
-                        (doc_id, f"imgdoc://{doc_id}/p0", 0, bytearray(data),
-                         _decode_array(data) is not None)
+                        (doc_id, f"imgdoc://{doc_id}/p0", 0, bytearray(data))
                     )
             yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "page", "content", "decodable",
-                ],
+                rows, columns=["doc_id", "media_ref", "page", "content"]
             )
 
-    return binary_df.mapInPandas(run, _IMG_MEDIA_TABLE)
+    return binary_df.mapInPandas(run, _MEDIA_TABLE)

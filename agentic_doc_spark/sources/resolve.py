@@ -296,7 +296,10 @@ def redact_config(config: dict) -> dict:
 def create_connector(config: dict) -> dict:
     """S7: connector factory — type string → Spark reader options
     (agentic_doc/connectors.py:520-533 twin). Returns a reader-spec dict
-    consumed by read_binary_dir/resolve."""
+    (path, pattern, recursive) whose keys are read_binary_dir's
+    arguments: ``read_binary_dir(spark, **spec)``. Nothing in resolve or
+    parse() consumes the dict; parse() takes ``connector_path`` and
+    ``connector_pattern`` instead."""
     kind = config.get("connector_type")
     if kind == "local":
         return {

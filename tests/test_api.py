@@ -288,6 +288,40 @@ def test_parse_span_less_docs_keep_their_row(spark, tmp_path):
     assert [s["text"] for s in rows["good.txt"]["spans"]] == ["alpha", "beta"]
 
 
+def test_parse_raw_rows_sharing_doc_id_stay_separate(spark):
+    # each raw input row is one document: two files under one doc_id
+    # must not merge into one row whose spans interleave both by offset
+    raw = spark.createDataFrame(
+        [
+            ("dup", bytearray(b"a1\n\na2"), "text"),
+            ("dup", bytearray(b"b1\n\nb2\n\nb3"), "text"),
+        ],
+        "doc_id string, content binary, doc_type string",
+    )
+    texts = sorted(
+        [s["text"] for s in r["spans"]] for r in parse(spark, raw).collect()
+    )
+    assert texts == [["a1", "a2"], ["b1", "b2", "b3"]]
+
+
+def test_parse_connector_path_replaces_documents(spark, tmp_path):
+    # with connector_path set, ``documents`` is not resolved at all: a
+    # missing documents path must not raise PATH_NOT_FOUND
+    d = tmp_path / "conn"
+    d.mkdir()
+    (d / "a.txt").write_text("alpha\n\nbeta")
+    (d / "b.md").write_text("gamma")
+    out = parse(
+        spark,
+        str(tmp_path / "missing"),
+        connector_path=str(d),
+        connector_pattern="*.txt",
+    )
+    rows = [r.asDict(recursive=True) for r in out.collect()]
+    assert [r["doc_id"].rsplit("/", 1)[-1] for r in rows] == ["a.txt"]
+    assert [s["text"] for s in rows[0]["spans"]] == ["alpha", "beta"]
+
+
 def test_grounding_paths_exist_for_undecodable_raster(spark, tmp_path):
     # a .jpg whose SOI marker sniffs as JPEG but whose body does not
     # decode: its crops come from the synthesized page, so every

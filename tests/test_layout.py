@@ -47,6 +47,45 @@ def test_split_blocks_pdf_is_stubbed():
         split_blocks(b"%PDF-1.7 ...", "pdf")
 
 
+def test_doc_spans_routes_each_document_type():
+    # the per-document routing layout_parse's kernel runs, driver-side:
+    # (kind, text, media_ref, offset) spans in offset order
+    import numpy as np
+
+    from agentic_doc_spark.functions.tiff import encode_tiff
+    from agentic_doc_spark.sources.layout import _doc_spans
+
+    assert _doc_spans("a.txt", b"one\n\ntwo", "text", 5) == [
+        ("raw", "one", None, 0),
+        ("raw", "two", None, 1),
+    ]
+    html = b"<html><body><p>Alpha</p><p>Beta</p></body></html>"
+    want = [("raw", "Alpha", None, 0), ("raw", "Beta", None, 1)]
+    assert _doc_spans("b.html", html, "html", 5) == want
+    # the magic sniff calls markup 'image'; a leading '<' routes it HTML
+    assert _doc_spans("b", html, "image", 5) == want
+
+    body = b"BT (Hello world) Tj ET"
+    pdf = (
+        b"%PDF-1.4\n1 0 obj\n<< /Length " + str(len(body)).encode()
+        + b" >>\nstream\n" + body + b"\nendstream\nendobj\n%%EOF\n"
+    )
+    assert _doc_spans("c.pdf", pdf, "pdf", 5) == [
+        ("raw", "Hello world", None, 0)
+    ]
+    bad = b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n%%EOF"
+    [(kind, text, ref, off)] = _doc_spans("d.pdf", bad, "pdf", 5)
+    assert (kind, ref, off) == ("corrupt", None, 0)
+    assert text.startswith("undecodable document: ")
+
+    pages = [np.full((4, 5, 3), 40 * p, np.uint8) for p in range(3)]
+    tif = encode_tiff(pages, 5, 2)
+    assert _doc_spans("e.tiff", tif, "image", 7) == [
+        ("raw", "", f"imgdoc://e.tiff/p{p}", 7 * p) for p in range(3)
+    ]
+    assert _doc_spans("f.md", b"  \n\n \t\n", "text", 5) == []
+
+
 def test_ingest_directory_end_to_end(spark, tmp_path):
     (tmp_path / "a.txt").write_bytes(TXT)
     (tmp_path / "b.html").write_bytes(HTML)
@@ -166,10 +205,16 @@ def ladder_sidecar(spark):
         [(k, bytearray(v), "image") for k, v in _ladder_inputs().items()],
         "doc_id string, content binary, doc_type string",
     )
-    return {r["doc_id"]: r["decodable"] for r in image_media_table(df).collect()}
+    from agentic_doc_spark.operators.multimodal import _decode_array
+
+    return {
+        r["doc_id"]: _decode_array(bytes(r["content"])) is not None
+        for r in image_media_table(df).collect()
+    }
 
 
-# (input, format the ladder names, sidecar decodable); None = text path
+# (input, format the ladder names, sidecar payload decodes); None = text
+# path
 @pytest.mark.parametrize(
     "name,fmt,decodable",
     [
@@ -186,9 +231,9 @@ def ladder_sidecar(spark):
 )
 def test_routing_and_decoding_agree(ladder_sidecar, name, fmt, decodable):
     # one sniff-and-decode decision: a file routes as a raster document
-    # iff the ladder names its format, and the sidecar calls it
-    # decodable iff _decode_array returns an array — a format added to
-    # only one side fails here
+    # iff the ladder names its format, and the sidecar serves a payload
+    # the renderer decodes iff _decode_array decodes the file — a format
+    # added to only one side fails here
     from agentic_doc_spark.operators.multimodal import (
         _HAS_PIL,
         _decode_array,

@@ -112,32 +112,33 @@ def test_corrupt_metrics_table_raises(spark, tmp_path):
     assert not isinstance(exc_info.value, AnalysisException)
 
 
-def test_kernel_checksum_matches_expression(spark):
-    # the Arrow checksum kernel must be byte-identical to the expression
-    # reference (doc_checksum_col)
-    from pyspark.sql import functions as F
+def test_kernel_checksum_matches_scalar_loop(spark):
+    # the Arrow checksum kernel must hash exactly these bytes per doc:
+    # each span is doc_id, offset, kind, text, media_ref joined by
+    # '\x1f' (NULL text or media_ref as ''), spans joined by '\x1e'
+    import hashlib
 
-    from agentic_doc_spark.operators.lineage import (
-        _per_doc_checksums,
-        doc_checksum_col,
-    )
+    from agentic_doc_spark.operators.lineage import _per_doc_checksums
 
     parsed = extract(corpus_df(spark, 2))
-    want = {
-        r["doc_id"]: r["c"]
-        for r in parsed.select("doc_id", doc_checksum_col().alias("c")).collect()
-    }
+    want = {}
+    for r in parsed.select("doc_id", "spans").collect():
+        lines = [
+            "\x1f".join(
+                [r["doc_id"], str(s["offset"]), s["kind"],
+                 s["text"] or "", s["media_ref"] or ""]
+            )
+            for s in r["spans"]
+        ]
+        want[r["doc_id"]] = (
+            len(lines),
+            hashlib.sha256("\x1e".join(lines).encode("utf-8")).hexdigest(),
+        )
     got = {
-        r["doc_id"]: r["doc_checksum"]
+        r["doc_id"]: (r["n_spans"], r["doc_checksum"])
         for r in _per_doc_checksums(parsed).collect()
     }
     assert got == want
-    n = {r["doc_id"]: r["n_spans"] for r in _per_doc_checksums(parsed).collect()}
-    sizes = {
-        r["doc_id"]: r["s"]
-        for r in parsed.select("doc_id", F.size("spans").alias("s")).collect()
-    }
-    assert n == {k: v for k, v in sizes.items()}
 
 
 def test_replay_guard_rejects_committed_run_id(spark, tmp_path):

@@ -109,3 +109,32 @@ def test_decontaminate_broadcasts_benchmark_side(spark, entry):
     plan = _plan(entry.queries()["decontaminate"](spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_layout_parse_is_one_kernel_and_one_exchange(spark):
+    # each raw row leaves the kernel as one nested (doc_id, spans) row,
+    # so the only wide step is the hash exchange that spreads extract
+    # over coalesced tasks — no re-nesting aggregate
+    from agentic_doc_spark.sources.layout import layout_parse
+
+    raw = spark.createDataFrame(
+        [("a.txt", bytearray(b"one\n\ntwo"), "text")],
+        "doc_id string, content binary, doc_type string",
+    )
+    plan = _plan(layout_parse(raw))
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "hashpartitioning" in exchanges[0], plan
+    assert "Aggregate" not in plan, plan
+
+
+def test_grounding_crop_aggregate_reads_unsorted_specs(spark):
+    # the crop renderer groups specs by (doc_id, page) with a hash
+    # aggregate, which needs no input order: a Sort under it is waste
+    from agentic_doc_spark.operators.multimodal import render_grounding_crops
+    from agentic_doc_spark.pipeline import extract
+    from agentic_doc_spark.synth import corpus_df
+
+    plan = _plan(render_grounding_crops(extract(corpus_df(spark, 1))))
+    lines = plan.splitlines()
+    assert any("HashAggregate" in ln for ln in lines), plan
+    assert not any(ln.lstrip(" +-:").startswith("Sort ") for ln in lines), plan

@@ -408,19 +408,6 @@ def test_url_connector_staging(spark, tmp_path):
         srv.shutdown()
 
 
-def test_crop_specs_partition_local_page_order(spark):
-    # per-page render locality without a global sort: within every
-    # partition rows must be non-decreasing on (doc_id, page)
-    from agentic_doc_spark.operators.multimodal import grounding_crop_specs
-
-    parsed = extract(corpus_df(spark, 2))
-    specs = grounding_crop_specs(parsed).select("doc_id", "page")
-    parts = specs.rdd.glom().collect()
-    for part in parts:
-        keys = [(r["doc_id"], r["page"]) for r in part]
-        assert keys == sorted(keys)
-
-
 def test_viz_crop_specs_svg(spark):
     # K3: textual overlay renderer — one SVG per (doc, page), every chunk
     # present as a rect + label, page-sized canvas

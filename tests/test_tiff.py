@@ -264,6 +264,7 @@ def test_tiff_bad_page_keeps_good_pages_in_sidecar(spark, tmp_path):
 
     from agentic_doc_spark.functions.png import decode_png
     from agentic_doc_spark.functions.tiff import iter_tiff_pages
+    from agentic_doc_spark.operators.multimodal import _decode_array
     from agentic_doc_spark.sources.layout import image_media_table
     from agentic_doc_spark.sources.resolve import read_binary_dir
 
@@ -285,9 +286,10 @@ def test_tiff_bad_page_keeps_good_pages_in_sidecar(spark, tmp_path):
     raw = read_binary_dir(spark, str(tmp_path))
     rows = {r["page"]: r for r in image_media_table(raw).collect()}
     assert sorted(rows) == [0, 1, 2]
-    assert rows[1]["decodable"] is False
+    assert bytes(rows[1]["content"]) == b""
+    assert _decode_array(bytes(rows[1]["content"])) is None
     for p in (0, 2):
-        assert rows[p]["decodable"] is True
+        assert _decode_array(bytes(rows[p]["content"])) is not None
         assert np.array_equal(
             decode_png(bytes(rows[p]["content"])), pages[p]
         )
