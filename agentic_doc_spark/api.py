@@ -16,6 +16,7 @@ from dataclasses import replace
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from agentic_doc_spark.config import DEFAULT_SETTINGS, Settings
@@ -37,7 +38,6 @@ def parse(
     result_format: str = "parquet",
     grounding_save_dir: str | None = None,
     page_rasters: DataFrame | None = None,
-    render_groundings: bool = True,
     connector_path: str | None = None,
     connector_pattern: str | None = None,
     extraction_model: T.StructType | None = None,
@@ -63,8 +63,7 @@ def parse(
       the crop PNGs there (reference parse.py:441-448 + utils.py:63-169);
       ``page_rasters`` supplies renderer output (doc_id, page, content);
       a page it lacks, or whose bytes do not decode, is synthesized
-      deterministically from the layout;
-      ``render_groundings=False`` attaches paths only.
+      deterministically from the layout.
     - ``config``: full Settings object; wins over keyword flags
       (reference precedence, parse.py:93-101).
     """
@@ -102,8 +101,10 @@ def parse(
     if "spans" not in df.columns:
         # raw-binary corpus (directory / bytes / path list): run the
         # layout-parse stage — txt/md/HTML and text-layer PDFs decode for
-        # real (sources/layout.py, sources/pdf_text.py); undecodable
-        # documents are skipped, not fatal (R6, reference parse.py:183-190)
+        # real (sources/layout.py, sources/pdf_text.py); an undecodable
+        # document becomes a one-span ``corrupt`` document, which extract
+        # turns into an empty-spans row with per-page error rows
+        # (reference parse.py:722-739)
         from agentic_doc_spark.sources.layout import layout_parse, route_doc_types
 
         binary_routed = route_doc_types(df)
@@ -127,28 +128,28 @@ def parse(
             write_grounding_images,
         )
 
-        parsed = attach_grounding_image_paths(parsed, grounding_save_dir)
-        if render_groundings:
-            # the render job consumes `parsed`, and a result_save_dir
-            # write may follow — persist across parse()'s eager actions
-            # so extract() runs once, not once per consumer; ALWAYS
-            # released (try/finally below) so a failed write cannot pin
-            # the cached corpus for the driver's lifetime
-            persisted = parsed = parsed.persist()
-            pages = page_rasters
-            if pages is None and binary_routed is not None:
-                from agentic_doc_spark.sources.layout import image_media_table
+        # the render job consumes `parsed`, and a result_save_dir write
+        # may follow — persist across parse()'s eager actions so
+        # extract() runs once, not once per consumer; ALWAYS released
+        # (try/finally below) so a failed write cannot pin the cached
+        # corpus for the session's lifetime
+        persisted = parsed = attach_grounding_image_paths(
+            parsed, grounding_save_dir
+        ).persist()
+        pages = page_rasters
+        if pages is None and binary_routed is not None:
+            from agentic_doc_spark.sources.layout import image_media_table
 
-                pages = image_media_table(binary_routed).select(
-                    "doc_id", "page", "content"
-                )
-            try:
-                write_grounding_images(
-                    render_grounding_crops(parsed, pages), grounding_save_dir
-                )
-            except BaseException:
-                persisted.unpersist()
-                raise
+            pages = image_media_table(binary_routed).select(
+                "doc_id", "page", "content"
+            )
+        try:
+            write_grounding_images(
+                render_grounding_crops(parsed, pages), grounding_save_dir
+            )
+        except BaseException:
+            persisted.unpersist()
+            raise
 
     try:
         return _finish_parse(
@@ -183,69 +184,42 @@ def _finish_parse(
     action here)."""
     schema = extraction_model or extraction_schema
     if schema is not None:
-        if (
-            extraction_metadata_col is not None
-            and extraction_metadata_col not in df.columns
-        ):
+        if isinstance(schema, str):
+            schema = T._parse_datatype_string(schema)
+        md_col = extraction_metadata_col
+        extra = [md_col] if md_col else []
+        if md_col is not None and md_col not in df.columns:
             # silently ignoring a missing metadata column would drop the
             # user's requested extraction_metadata with no signal
             raise ValueError(
-                f"extraction_metadata_col {extraction_metadata_col!r} is not "
-                f"a column of the input (columns: {df.columns})"
+                f"extraction_metadata_col {md_col!r} is not a column of "
+                f"the input (columns: {df.columns})"
             )
         if extraction_payload_col in df.columns:
-            cols = ["doc_id", extraction_payload_col]
-            md_col = extraction_metadata_col
-            if md_col:
-                cols.append(md_col)
-            payloads = df.select(*cols)
+            payloads = df.select("doc_id", extraction_payload_col, *extra)
             parsed = parsed.join(payloads, "doc_id", "left")
-            parsed = validate_extraction(
-                parsed, extraction_payload_col, schema, metadata_col=md_col
-            )
-            parsed = parsed.drop(extraction_payload_col)
-            if md_col:
-                parsed = parsed.drop(md_col)
-            if settings.include_metadata_in_markdown:
-                # P3/F9: embed the extracted fields as a markdown table
-                from pyspark.sql import functions as F
-
-                from agentic_doc_spark.functions.markdown import (
-                    append_metadata_to_markdown,
-                )
-
-                st = (
-                    T._parse_datatype_string(schema)
-                    if isinstance(schema, str)
-                    else schema
-                )
-                parsed = parsed.withColumn(
-                    "markdown",
-                    append_metadata_to_markdown(
-                        F.col("markdown"), F.col("extraction"), st
-                    ),
-                )
         else:
-            # no payload column: extraction is NULL but typed as the SAME
-            # struct the payload path produces — one query, one dtype,
-            # whether or not the input carried payloads
-            from pyspark.sql import functions as F
-
-            from agentic_doc_spark.operators.extraction import metadata_schema
-
-            st = (
-                T._parse_datatype_string(schema)
-                if isinstance(schema, str)
-                else schema
+            # no payload column: NULL payloads validate to a NULL
+            # extraction of the SAME struct the payload path produces —
+            # one query, one dtype, whether or not the input carried
+            # payloads
+            for c in [extraction_payload_col, *extra]:
+                parsed = parsed.withColumn(c, F.lit(None).cast("string"))
+        parsed = validate_extraction(
+            parsed, extraction_payload_col, schema, metadata_col=md_col
+        ).drop(extraction_payload_col, *extra)
+        if settings.include_metadata_in_markdown:
+            # P3/F9: embed the extracted fields as a markdown table
+            from agentic_doc_spark.functions.markdown import (
+                append_metadata_to_markdown,
             )
+
             parsed = parsed.withColumn(
-                "extraction", F.lit(None).cast(st)
-            ).withColumn("extraction_error", F.lit(None).cast("string"))
-            if extraction_metadata_col is not None:
-                parsed = parsed.withColumn(
-                    "extraction_metadata",
-                    F.lit(None).cast(metadata_schema(st)),
-                )
+                "markdown",
+                append_metadata_to_markdown(
+                    F.col("markdown"), F.col("extraction"), schema
+                ),
+            )
         parsed = extraction_page_guard(parsed, settings.extraction_split_size)
 
     if result_save_dir:

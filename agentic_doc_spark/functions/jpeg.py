@@ -1,26 +1,28 @@
-"""Pure-stdlib baseline JPEG codec (numpy + huffman, no imaging libs).
+"""Pure-stdlib JPEG codec (numpy + huffman, no imaging libs).
 
 Implements the baseline sequential DCT process (SOF0), 12-bit extended
 sequential (SOF1 — level shift 2048, output scaled to 8-bit) AND the
 progressive DCT process (SOF2, Annex G — spectral selection and
 successive approximation, Huffman coding) of the public JPEG spec
-(ITU-T T.81 / ISO 10918-1): 8-bit samples, grayscale or YCbCr with
-arbitrary 1-2× chroma subsampling factors and restart markers on the
-decode side. The encoders emit baseline (Annex K example tables,
-quality-scaled via the usual IJG formula) and progressive (flat
+(ITU-T T.81 / ISO 10918-1): grayscale or YCbCr with arbitrary 1-4×
+integer subsampling factors, interleaved or per-component scans and
+restart markers on the decode side. One scan decoder serves every
+frame type: each scan accumulates quantized coefficients, and after EOI
+one batched dequantize + IDCT pass reconstructs the planes. The
+encoders emit baseline (Annex K example tables, quality-scaled via the
+usual IJG formula), progressive and 12-bit sequential (flat
 fixture-grade Huffman tables) streams — enough to round-trip tests
-without PIL and to decode the baseline AND progressive scans real web
-corpora carry. Arithmetic-coded, 12-bit, and hierarchical modes remain
-out of scope and raise ValueError (the decode ladder in
+without PIL and to decode the scans real web and scanner corpora
+carry. Arithmetic-coded, 12-bit progressive, lossless and hierarchical
+modes remain out of scope and raise ValueError (the decode ladder in
 operators/multimodal.py then falls through to the deterministic-fake
 path, with the boundary surfaced by the ``decoded`` flag).
 
 Reference analog: the upstream engine crops any cv2-readable image
 (/root/reference/agentic_doc/utils.py:417-430); this codec extends the
-no-dependency coverage from PNG (functions/png.py) to baseline JPEG.
+no-dependency coverage from PNG (functions/png.py) to JPEG.
 Not copied from any implementation — written against the spec's
-annexes (zigzag Table 5, quant Annex K.1, Huffman Annex K.3).
-"""
+annexes (zigzag Table 5, quant Annex K.1, Huffman Annex K.3)."""
 
 from __future__ import annotations
 
@@ -211,7 +213,8 @@ def _extend(v: int, s: int) -> int:
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes -> uint8 array (h, w) gray or (h, w, 3) RGB.
+    """JPEG bytes (SOF0/SOF1 sequential or SOF2 progressive, Huffman) ->
+    uint8 array (h, w) gray or (h, w, 3) RGB.
 
     Raises ValueError for anything unsupported, truncated, or corrupt —
     structural errors from crafted streams (short tables, dangling
@@ -233,7 +236,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict] = {}
     frame = None
-    prog = None  # progressive coefficient state, created at first SOS
+    coef = None  # per-component zigzag coefficients, created at first SOS
     restart_interval = 0
     i = 2
     while i < len(data):
@@ -302,6 +305,9 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 comps.append({"id": cid, "h": hf, "v": vf, "tq": tq})
             frame = {"h": h, "w": w, "comps": comps, "prec": prec,
                      "progressive": marker == 0xC2}
+            hmax, vmax, _, _ = _grid_dims(frame)
+            if any(hmax % c["h"] or vmax % c["v"] for c in comps):
+                raise ValueError("jpeg: non-integer subsampling ratios")
         elif marker == 0xC4:  # DHT
             j = 0
             while j < len(seg):
@@ -323,132 +329,35 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
                 scan[cid] = (tabs >> 4, tabs & 15)
                 order.append(cid)
-            if not frame["progressive"]:
-                return _decode_scan(
-                    data, i + seglen, frame, scan, qt, huff, restart_interval
-                )
             ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
             ahal = seg[3 + 2 * ns]
-            if prog is None:
-                prog = _init_progressive(frame)
-            i = _progressive_scan(
+            if coef is None:
+                _, _, mcux, mcuy = _grid_dims(frame)
+                coef = [
+                    np.zeros((mcuy * c["v"], mcux * c["h"], 64), np.int64)
+                    for c in frame["comps"]
+                ]
+            i = _decode_scan(
                 data, i + seglen, frame, order, scan,
-                ss, se, ahal >> 4, ahal & 15, huff, restart_interval, prog,
+                ss, se, ahal >> 4, ahal & 15, huff, restart_interval, coef,
             )
             continue
         i += seglen
-    if frame is not None and frame["progressive"] and prog is not None:
-        return _assemble(frame, _reconstruct_progressive(frame, prog, qt))
-    raise ValueError("jpeg: no scan data found")
-
-
-def _decode_scan(data, start, frame, scan, qt, huff, restart_interval):
-    h, w, comps = frame["h"], frame["w"], frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if any(hmax % c["h"] or vmax % c["v"] for c in comps):
-        raise ValueError("jpeg: non-integer subsampling ratios")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = [
-        np.zeros((mcuy * c["v"] * 8, mcux * c["h"] * 8)) for c in comps
-    ]
-    br = _BitReader(data, start)
-    preds = [0] * len(comps)
-    idct_t = _BASIS.T
-    center = float(1 << (frame.get("prec", 8) - 1))
-
-    def decode_block(ci):
-        c = comps[ci]
-        dc_tab = huff[(0, scan[c["id"]][0])]
-        ac_tab = huff[(1, scan[c["id"]][1])]
-        q = qt[c["tq"]]
-        coef = np.zeros(64)
-        s = _read_huff(br, dc_tab)
-        diff = _extend(br.read_bits(s), s) if s else 0
-        preds[ci] += diff
-        coef[0] = preds[ci] * q[0]
-        k = 0
-        while k < 63:
-            rs = _read_huff(br, ac_tab)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break  # EOB
-            k += r + 1
-            if k > 63:
-                raise ValueError("jpeg: AC index overrun")
-            coef[_ZIGZAG[k]] = _extend(br.read_bits(s), s) * q[k]
-        block = idct_t @ coef.reshape(8, 8) @ _BASIS + center
-        return block
-
-    mcus_done = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcus_done == restart_interval:
-                br.consume_restart()
-                preds[:] = [0] * len(comps)
-                mcus_done = 0
-            try:
-                for ci, c in enumerate(comps):
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            blk = decode_block(ci)
-                            y0 = (my * c["v"] + by) * 8
-                            x0 = (mx * c["h"] + bx) * 8
-                            planes[ci][y0 : y0 + 8, x0 : x0 + 8] = blk
-            except _EndOfScan:
-                raise ValueError("jpeg: scan ended early")
-            mcus_done += 1
-
-    return _assemble(frame, planes)
-
-
-def _assemble(frame, planes) -> np.ndarray:
-    """Component sample planes → upsample to full resolution, crop to
-    (h, w), color-convert. Shared by the baseline and progressive paths."""
-    h, w, comps = frame["h"], frame["w"], frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    full = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        if c["h"] != hmax or c["v"] != vmax:
-            p = np.repeat(
-                np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1
-            )
-        full.append(p[:h, :w])
-    prec = frame.get("prec", 8)
-    maxv = (1 << prec) - 1
-    shift = prec - 8
-
-    def to8(a):
-        q = np.clip(a + 0.5, 0, maxv).astype(np.int32)
-        return (q >> shift).astype(np.uint8) if shift else q.astype(np.uint8)
-
-    if len(full) == 1:
-        return to8(full[0])
-    half = float(1 << (prec - 1))
-    y, cb, cr = full[0], full[1] - half, full[2] - half
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=-1)
-    return to8(rgb)
+    if coef is None:
+        raise ValueError("jpeg: no scan data found")
+    return _assemble(frame, _reconstruct(frame, coef, qt))
 
 
 # ---------------------------------------------------------------------------
-# Progressive DCT decoding (ITU-T T.81 Annex G, Huffman coding)
+# Scan decoding (ITU-T T.81 Annex F sequential, Annex G progressive)
 # ---------------------------------------------------------------------------
 #
-# Coefficients accumulate across scans in per-component int64 arrays
-# (zigzag order, MCU-padded block grids); DC scans may be interleaved,
-# AC scans are single-component over the component's NOMINAL block grid
-# (spec A.2.2 — padding blocks simply never receive AC energy). After
-# EOI the accumulated coefficients dequantize + IDCT in one vectorized
-# pass (_reconstruct_progressive).
+# Every scan, sequential or progressive, decodes into per-component
+# int64 coefficient arrays (zigzag order, MCU-padded block grids).
+# Interleaved scans walk MCUs; single-component scans walk the
+# component's NOMINAL block grid (spec A.2.2 — padding blocks simply
+# never receive coefficients). After EOI the coefficients dequantize +
+# IDCT in one vectorized pass (_reconstruct).
 
 
 def _grid_dims(frame):
@@ -468,18 +377,9 @@ def _nominal_blocks(frame, c):
     return -(-ch // 8), -(-cw // 8)
 
 
-def _init_progressive(frame):
-    _, _, mcux, mcuy = _grid_dims(frame)
-    return {
-        "coef": [
-            np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int64)
-            for c in frame["comps"]
-        ],
-    }
-
-
 def _ac_first(br, blk, ss, se, al, ac_tab, state) -> None:
-    """First scan of an AC band: EOB-run aware (G.1.2.2)."""
+    """First scan of an AC band: EOB-run aware (G.1.2.2); a sequential
+    scan (F.2.2.2) is the band 1..63 at Al=0 with EOB runs forbidden."""
     if state["eobrun"] > 0:
         state["eobrun"] -= 1
         return
@@ -491,6 +391,8 @@ def _ac_first(br, blk, ss, se, al, ac_tab, state) -> None:
             if r == 15:  # ZRL
                 k += 16
                 continue
+            if r and not state["progressive"]:
+                raise ValueError("jpeg: EOB run in a sequential scan")
             state["eobrun"] = (1 << r) - 1
             if r:
                 state["eobrun"] += br.read_bits(r)
@@ -548,21 +450,35 @@ def _ac_refine(br, blk, ss, se, al, ac_tab, state) -> None:
         state["eobrun"] -= 1
 
 
-def _progressive_scan(
-    data, start, frame, order, scan, ss, se, ah, al, huff, ri, prog
+def _decode_scan(
+    data, start, frame, order, scan, ss, se, ah, al, huff, ri, coef
 ) -> int:
-    """Decode one progressive scan into the accumulated coefficient
-    state; returns the byte offset of the next marker."""
+    """Decode one scan into the accumulated coefficients; returns the
+    byte offset of the next marker. A sequential scan's block unit is
+    the DC difference followed by the whole AC band 1..63."""
     comps = frame["comps"]
-    if not (0 <= ss <= se <= 63 and al < 14):
+    progressive = frame["progressive"]
+    if not progressive:  # Ss/Se/Ah/Al carry no meaning in sequential
+        ss, se, ah, al = 0, 63, 0, 0
+    elif not (0 <= ss <= se <= 63 and al < 14):
         raise ValueError("jpeg: invalid spectral selection")
+    elif ss == 0 and se != 0:
+        raise ValueError("jpeg: DC scan with Se != 0")
     idx = {c["id"]: ci for ci, c in enumerate(comps)}
     members = [idx[cid] for cid in order]
+    if ss > 0 and len(members) != 1:
+        raise ValueError("jpeg: interleaved AC scan")
+    dc_tabs = {
+        ci: huff[(0, scan[comps[ci]["id"]][0])]
+        for ci in members if ss == 0 and ah == 0
+    }
+    ac_tabs = {
+        ci: huff[(1, scan[comps[ci]["id"]][1])] for ci in members if se > 0
+    }
     _, _, mcux, mcuy = _grid_dims(frame)
     br = _BitReader(data, start)
-    coef = prog["coef"]
     preds = [0] * len(comps)
-    state = {"eobrun": 0}
+    state = {"eobrun": 0, "progressive": progressive}
     done = 0
 
     def maybe_restart():
@@ -573,9 +489,9 @@ def _progressive_scan(
             state["eobrun"] = 0
             done = 0
 
-    def dc_unit(blk, tab, ci):
+    def dc_unit(ci, blk):
         if ah == 0:
-            s = _read_huff(br, tab)
+            s = _read_huff(br, dc_tabs[ci])
             if s > 16:  # corrupt table: DC category is ≤ 16 by spec
                 raise ValueError("jpeg: bad DC magnitude category")
             diff = _extend(br.read_bits(s), s) if s else 0
@@ -584,51 +500,40 @@ def _progressive_scan(
         elif br.read_bit():
             blk[0] |= 1 << al
 
+    if not progressive:
+        def unit(ci, blk):
+            dc_unit(ci, blk)
+            _ac_first(br, blk, 1, 63, 0, ac_tabs[ci], state)
+    elif ss == 0:
+        unit = dc_unit
+    else:
+        band = _ac_first if ah == 0 else _ac_refine
+
+        def unit(ci, blk):
+            band(br, blk, ss, se, al, ac_tabs[ci], state)
+
     try:
-        if ss == 0:
-            if se != 0:
-                raise ValueError("jpeg: DC scan with Se != 0")
-            tabs = {
-                ci: huff[(0, scan[comps[ci]["id"]][0])] if ah == 0 else None
-                for ci in members
-            }
-            if len(members) > 1:  # interleaved MCU order
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        maybe_restart()
-                        for ci in members:
-                            c = comps[ci]
-                            for by in range(c["v"]):
-                                for bx in range(c["h"]):
-                                    dc_unit(
-                                        coef[ci][my * c["v"] + by,
-                                                 mx * c["h"] + bx],
-                                        tabs[ci],
-                                        ci,
-                                    )
-                        done += 1
-            else:
-                ci = members[0]
-                byn, bxn = _nominal_blocks(frame, comps[ci])
-                for by in range(byn):
-                    for bx in range(bxn):
-                        maybe_restart()
-                        dc_unit(coef[ci][by, bx], tabs[ci], ci)
-                        done += 1
+        if len(members) > 1:  # interleaved MCU order
+            for my in range(mcuy):
+                for mx in range(mcux):
+                    maybe_restart()
+                    for ci in members:
+                        c = comps[ci]
+                        for by in range(c["v"]):
+                            for bx in range(c["h"]):
+                                unit(ci, coef[ci][my * c["v"] + by,
+                                                  mx * c["h"] + bx])
+                    done += 1
         else:
-            if len(members) != 1:
-                raise ValueError("jpeg: interleaved AC scan")
             ci = members[0]
-            ac_tab = huff[(1, scan[comps[ci]["id"]][1])]
             byn, bxn = _nominal_blocks(frame, comps[ci])
-            fn = _ac_first if ah == 0 else _ac_refine
             for by in range(byn):
                 for bx in range(bxn):
                     maybe_restart()
-                    fn(br, coef[ci][by, bx], ss, se, al, ac_tab, state)
+                    unit(ci, coef[ci][by, bx])
                     done += 1
     except _EndOfScan:
-        raise ValueError("jpeg: progressive scan ended early")
+        raise ValueError("jpeg: scan ended early")
 
     # step to the next marker (skip any partial byte + stuffing)
     pos = br.pos if br.bit == 0 else br.pos + 1
@@ -643,22 +548,55 @@ def _progressive_scan(
     return len(data)
 
 
-def _reconstruct_progressive(frame, prog, qt):
+def _reconstruct(frame, coef, qt):
     """Accumulated zigzag coefficients → sample planes, vectorized:
-    dequantize, zigzag→natural scatter, batched 2-D IDCT via einsum."""
+    dequantize, zigzag→natural scatter, batched 2-D IDCT, level shift
+    by 2^(prec-1)."""
+    center = float(1 << (frame["prec"] - 1))
     planes = []
-    for ci, c in enumerate(frame["comps"]):
+    for c, z in zip(frame["comps"], coef):
         q = qt[c["tq"]]
-        z = prog["coef"][ci]
         nat = np.zeros(z.shape, dtype=np.float64)
         nat[:, :, _ZIGZAG] = z * q[None, None, :]
         by, bx = nat.shape[:2]
         blocks = nat.reshape(by, bx, 8, 8)
-        # stacked matmul, NOT einsum: same 8×8 kernel as the baseline
-        # per-block path, so reconstruction is bit-identical to it
-        out = np.matmul(np.matmul(_BASIS.T, blocks), _BASIS) + 128.0
+        # stacked matmul, NOT einsum: the same 8×8 products as the
+        # encoders' forward DCT (test_decoded_pixels_match_golden_digests)
+        out = np.matmul(np.matmul(_BASIS.T, blocks), _BASIS) + center
         planes.append(out.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8))
     return planes
+
+
+def _assemble(frame, planes) -> np.ndarray:
+    """Component sample planes → upsample to full resolution, crop to
+    (h, w), color-convert."""
+    h, w, comps = frame["h"], frame["w"], frame["comps"]
+    hmax, vmax, _, _ = _grid_dims(frame)
+    full = []
+    for ci, c in enumerate(comps):
+        p = planes[ci]
+        if c["h"] != hmax or c["v"] != vmax:
+            p = np.repeat(
+                np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1
+            )
+        full.append(p[:h, :w])
+    prec = frame["prec"]
+    maxv = (1 << prec) - 1
+    shift = prec - 8
+
+    def to8(a):
+        q = np.clip(a + 0.5, 0, maxv).astype(np.int32)
+        return (q >> shift).astype(np.uint8) if shift else q.astype(np.uint8)
+
+    if len(full) == 1:
+        return to8(full[0])
+    half = float(1 << (prec - 1))
+    y, cb, cr = full[0], full[1] - half, full[2] - half
+    r = y + 1.402 * cr
+    g = y - 0.344136 * cb - 0.714136 * cr
+    b = y + 1.772 * cb
+    rgb = np.stack([r, g, b], axis=-1)
+    return to8(rgb)
 
 
 # ---------------------------------------------------------------------------

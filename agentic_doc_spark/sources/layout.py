@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from agentic_doc_spark.functions.classify import is_boilerplate
 from agentic_doc_spark.schema import DOCUMENTS_RAW
 
 
@@ -70,7 +71,14 @@ def split_blocks(data: bytes, doc_type: str) -> list[str]:
     PDFs go through the pure-stdlib text-layer extractor
     (sources/pdf_text.py — handles Flate/plain content streams of simple
     generators like the reference's reportlab fixtures); a PDF with no
-    extractable text layer raises the documented stub boundary."""
+    extractable text layer raises the documented stub boundary.
+
+    HTML blocks lose their tags, except blocks that
+    ``classify.is_boilerplate`` flags (nav/footer/aside, copyright and
+    cookie lines, anchor-dense link soup): those keep their markup so
+    extract's boilerplate strip can see the tags and the anchor density.
+    With ``Settings.strip_boilerplate=False`` such blocks reach the
+    output with their markup."""
     if doc_type == "pdf":
         from agentic_doc_spark.sources.pdf_text import extract_pdf_blocks
 
@@ -89,12 +97,14 @@ def split_blocks(data: bytes, doc_type: str) -> list[str]:
         # would dissolve their structure into plain text blocks)
         text = _HTML_TABLE_RE.sub(_html_table_to_markdown, text)
         text = _HTML_BLOCK_RE.sub("\n\n", text)
-        blocks = [b.strip() for b in _BLOCK_RE.split(text)]
-        # a block that is ONLY markup (<html><body>, </body></html>, …)
-        # carries no text and must not become a span
-        return [
-            b for b in blocks if b and _ANY_TAG_RE.sub("", b).strip()
-        ]
+        out = []
+        for b in _BLOCK_RE.split(text):
+            bare = _ANY_TAG_RE.sub("", b).strip()
+            # a block that is ONLY markup (<html><body>, </body></html>,
+            # …) carries no text and must not become a span
+            if bare:
+                out.append(b.strip() if is_boilerplate(b) else bare)
+        return out
     blocks = [b.strip() for b in _BLOCK_RE.split(text)]
     return [b for b in blocks if b]
 

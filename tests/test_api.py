@@ -238,6 +238,26 @@ def test_parse_raw_file_directory(spark, tmp_path):
     assert not any("junk" in t for t in html_texts)  # script stripped
 
 
+def test_parse_html_inline_markup_stays_out_of_markdown(spark, tmp_path):
+    # inline <b>/<a> tags inside a content paragraph are removed, while
+    # the nav and footer blocks still reach extract's boilerplate strip
+    d = tmp_path / "inline"
+    d.mkdir()
+    (d / "page.html").write_text(
+        "<html><body><nav><a href='/'>home</a><a href='/x'>about</a></nav>"
+        "<p>Revenue grew <b>twelve percent</b> per the "
+        "<a href='/r'>annual report</a> this year.</p>"
+        "<footer>\u00a9 2024 Example Corp - All rights reserved</footer>"
+        "</body></html>",
+        encoding="utf-8",
+    )
+    [row] = parse(spark, str(d)).collect()
+    md = row["markdown"]
+    assert "<" not in md
+    assert "Revenue grew twelve percent per the annual report this year." in md
+    assert "home" not in md and "All rights reserved" not in md
+
+
 def test_parse_undecodable_doc_yields_error_rows(spark, tmp_path):
     # a document that reaches the parser but cannot be decoded (e.g. a
     # scanned PDF with no text layer) must produce the reference's

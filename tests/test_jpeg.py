@@ -4,6 +4,9 @@ upsampling, unsupported-mode rejection, and the multimodal decode ladder."""
 
 from __future__ import annotations
 
+import hashlib
+import struct
+
 import numpy as np
 import pytest
 
@@ -103,6 +106,11 @@ def test_progressive_matches_baseline_bit_for_bit():
     for shape, sub in [((24, 33, 3), "444"), ((40, 56, 3), "420")]:
         arr = _gradient(*shape)
         base = decode_jpeg(encode_jpeg(arr, quality=85, subsampling=sub))
+        for ri in (1, 3):
+            rst = decode_jpeg(
+                encode_jpeg(arr, quality=85, restart_interval=ri, subsampling=sub)
+            )
+            assert (rst == base).all(), (shape, sub, ri)
         for successive in (True, False):
             prog = decode_jpeg(
                 encode_progressive_jpeg(
@@ -282,3 +290,108 @@ def test_extended_sequential_12bit():
     data[sof + 1] = 0xC2
     with _pytest.raises(ValueError):
         decode_jpeg(bytes(data))
+
+
+def _segments(data):
+    """Baseline stream → ([(marker, payload) ... up to SOS], entropy bytes)."""
+    i, segs = 2, []
+    while True:
+        marker = data[i + 1]
+        (n,) = struct.unpack(">H", data[i + 2 : i + 4])
+        segs.append((marker, data[i + 4 : i + 2 + n]))
+        i += 2 + n
+        if marker == 0xDA:
+            return segs, data[i:-2]  # entropy data up to EOI
+
+
+def test_noninterleaved_sequential_decodes():
+    # a sequential frame may code each component in its own scan (spec
+    # A.2.2, Ns=1): three grayscale baseline streams spliced under one
+    # 3-component SOF0 (1×1 sampling, tables 0) decode as YCbCr
+    yy, xx = np.mgrid[0:21, 0:30]
+    arr = np.stack(
+        [40 + yy * 6, 200 - xx * 4, 90 + yy * 2 + xx * 2], axis=-1
+    ).astype(np.uint8)
+    r, g, b = (arr[:, :, c].astype(np.float64) for c in range(3))
+    ycc = [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+    ]
+    out = bytearray(b"\xff\xd8")
+    for ci, plane in enumerate(ycc):
+        gray = np.clip(np.round(plane), 0, 255).astype(np.uint8)
+        segs, entropy = _segments(encode_jpeg(gray, quality=92))
+        for marker, payload in segs:
+            if ci and marker != 0xDA:
+                continue  # every gray stream carries the same tables
+            if marker == 0xC0:
+                payload = payload[:5] + bytes(
+                    [3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]
+                )
+            elif marker == 0xDA:
+                payload = bytes([1, ci + 1]) + payload[2:]
+            out += b"\xff" + bytes([marker])
+            out += struct.pack(">H", len(payload) + 2) + payload
+        out += entropy
+    out += b"\xff\xd9"
+    back = decode_jpeg(bytes(out))
+    assert back.shape == arr.shape
+    assert np.abs(back.astype(int) - arr.astype(int)).max() <= 13
+
+
+def _golden_corpus():
+    """(layout, stream) pairs from the repo's encoders at a fixed seed:
+    each layout's baseline streams (restart intervals 0, 1, 3) and
+    progressive streams (with and without successive approximation)
+    quantize identically, so they decode to the same pixels."""
+    from agentic_doc_spark.functions.jpeg import (
+        encode_jpeg12,
+        encode_progressive_jpeg,
+    )
+
+    rng = np.random.default_rng(20261018)
+    yy, xx = np.mgrid[0:27, 0:38]
+    smooth = (yy[..., None] * 5 + xx[..., None] * 3 + np.arange(3) * 40) % 256
+    noisy = smooth + rng.integers(-40, 41, smooth.shape)
+    rgb = np.clip(noisy, 0, 255).astype(np.uint8)
+    noise = rng.integers(0, 256, (17, 23, 3), dtype=np.uint8)
+    for layout, arr, sub, q in (
+        ("444", rgb, "444", 80),
+        ("420", rgb, "420", 80),
+        ("gray", rgb[:, :, 1], "444", 80),
+        ("noise420", noise, "420", 95),
+    ):
+        for ri in (0, 1, 3):
+            yield layout, encode_jpeg(
+                arr, quality=q, restart_interval=ri, subsampling=sub
+            )
+        for sa in (True, False):
+            yield layout, encode_progressive_jpeg(
+                arr, quality=q, subsampling=sub, successive=sa
+            )
+    d12 = 2048 + 1800 * np.sin(yy / 6.0) * np.cos(xx / 9.0)
+    d12 = (d12 + rng.integers(-200, 201, yy.shape)).clip(0, 4095)
+    yield "sof1_12bit", encode_jpeg12(d12.astype(np.uint16), quality=90)
+
+
+# SHA-256 of the decoded pixels, recorded while baseline and progressive
+# frames still had separate scan decoders
+_GOLDEN = {
+    "444": ((27, 38, 3), "ea5b3c7c215846d3886904b230e6d35f314ca9c828ad96a050fa9c3d03ffdcf7"),
+    "420": ((27, 38, 3), "767b51297d7e9af8553bb0c9f6bff552c98c1608ca56c697a506b413a1852574"),
+    "gray": ((27, 38), "c3a6672f10bf69a8e3bbf38ba87a14067cf86a8867439521b4970894673d8c63"),
+    "noise420": ((17, 23, 3), "ac3084ed5605ab5f8189cdd3ae8f06812a33c20ced7406dca3874e9a1c2207ba"),
+    "sof1_12bit": ((27, 38), "8296d28343d085cade6c0a392323c90817372b2f8f9ec8481599c489468814b5"),
+}
+
+
+def test_decoded_pixels_match_golden_digests():
+    seen = set()
+    for layout, data in _golden_corpus():
+        out = decode_jpeg(data)
+        shape, digest = _GOLDEN[layout]
+        assert out.shape == shape, layout
+        assert hashlib.sha256(out.tobytes()).hexdigest() == digest, layout
+        seen.add(layout)
+    assert seen == set(_GOLDEN)

@@ -129,8 +129,8 @@ def test_split_blocks_property_random_text():
 
 
 def test_split_blocks_html_tag_soup_order():
-    # block tags of any flavor become separators; inline tags do not split;
-    # script/style bodies vanish entirely
+    # block tags of any flavor become separators; inline tags do not split
+    # and are removed; script/style bodies vanish entirely
     html = (
         "<div>one <b>bold</b> piece</div>"
         "<script>var x = 'SECRET';</script>"
@@ -140,7 +140,7 @@ def test_split_blocks_html_tag_soup_order():
     )
     got = split_blocks(html.encode(), "html")
     assert got == [
-        "one <b>bold</b> piece",
+        "one bold piece",
         "item a",
         "item b",
         "final heading",
