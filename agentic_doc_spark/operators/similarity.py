@@ -11,10 +11,14 @@
   is the difference between a full scan per query and a bucketed
   equi-join.
 
-Pair scoring (brute force, IVF candidates, ADC) is JVM higher-order
-functions (zip_with/aggregate). Cell assignment, PQ encoding and
-SemDeDup's within-cell pairs are numpy kernels that keep the same IEEE
-op sequence, so every score is the same double either way.
+Pair scoring (brute force, IVF candidates, ADC sums) is JVM
+higher-order functions (zip_with/aggregate). Vector-to-centroid scoring
+has one numpy home per metric, run in mapInArrow kernels on both sides
+of a search: ``_cos_cells_np`` (corpus cell assignment and query
+probes) and ``_sub_l2_np`` (PQ encoding and the per-query ADC tables).
+SemDeDup's within-cell pairs are a numpy kernel too. Every kernel keeps
+the IEEE op sequence of the JVM folds, so every score is the same
+double either way.
 """
 
 from __future__ import annotations
@@ -58,10 +62,7 @@ def _topk_per_group(
     """Two-phase bounded per-group top-k — the distributed replacement
     for ``Window.partitionBy(group).orderBy(...)`` + row_number, whose
     rank step funnels EVERY candidate row of a group through ONE reducer
-    task (at 10^10 vectors with n_probe/n_cells = 1/4 that is ~2.5e9
-    rows per query in a single task — the per-group analog of the
-    TakeOrderedAndProject pattern ``q_top_orders`` uses for global
-    top-k).
+    task.
 
     Phase 1 — ZERO shuffle: a mapInArrow kernel keeps only the top-k
     rows per group within each partition, streaming Arrow batches
@@ -226,8 +227,8 @@ def _fast_count(df: DataFrame) -> int:
     training-sample modulus is the only use — the modulus is a pure
     function of n, so values are identical either way. At 100 TB this
     replaces a dedicated full counting scan per ANN index build with a
-    driver-side metadata read (round-5 VERDICT item 7; guide §6 —
-    parquet footers carry exact row counts)."""
+    driver-side metadata read (parquet footers carry exact row
+    counts)."""
     from agentic_doc_spark.operators.dedup import _plan_node_names
 
     row_preserving = {
@@ -259,69 +260,131 @@ def _fast_count(df: DataFrame) -> int:
         return df.count()
 
 
-def _assign_np(V, cells: list[tuple[int, list[float]]], return_norm: bool = False):
-    """numpy nearest-centroid assignment with the IEEE op sequence of
-    the ``_norm`` / ``_dot`` folds (and so of ``_scored_cells_sql``'s
-    probe scoring): dots and norms accumulate dimension-by-dimension in
-    ascending order (((0 + x0·y0) + x1·y1)…), centroid norms are the
-    ``_seq_norm`` driver constants, cos = dot/(vnorm·cnorm) with the
-    try_divide+coalesce zero-denominator → 0.0 convention, and the
-    winner is the FIRST maximum in cell order — np.argmax's tie rule —
-    with a NaN anywhere winning from its first occurrence (np.argmax's
-    NaN rule: NaN sorts greatest, as in the DuckDB oracle). Pinned
-    against a scalar loop by test_assign_cells_fast_bit_identical.
-    Returns the int64 cell id per row (plus ‖v‖ per row when
-    ``return_norm``)."""
+def _dense(vec, width: int):
+    """An Arrow vector column as (V, have, whole). V is (n, w) in the
+    element type, w = max(width, longest row): each row's elements, 0
+    past its end and at a NULL element, so a sequential sum of squares
+    over V is the row's own fold. ``have`` marks the elements present,
+    ``whole`` the non-NULL rows without a NULL element; NaN components
+    stay NaN. Keeping float32 elements float32 keeps the engine's
+    arithmetic: x·x of a float is a float, x·c with a double centroid a
+    double."""
+    import numpy as np
+
+    off = np.asarray(vec.offsets, dtype=np.int64)
+    null = vec.is_null().to_numpy(zero_copy_only=False)
+    lens = np.where(null, 0, np.diff(off))
+    # a trailing sentinel slot stands in for every absent element
+    x = vec.values.to_numpy(zero_copy_only=False)
+    x = np.append(x, np.zeros(1, x.dtype))
+    ok = np.append(vec.values.is_valid().to_numpy(zero_copy_only=False), 0)
+    j = np.arange(max(width, int(lens.max(initial=0))))
+    pos = np.where(j < lens[:, None], off[:-1, None] + j, len(x) - 1)
+    have = ok[pos].astype(bool)
+    V = x[pos]
+    V[~have] = 0
+    return V, have, ~null & (have.sum(1) == lens)
+
+
+def _cos_cells_np(V, cells: list[tuple[int, list[float]]], ok=None):
+    """The one cos-to-centroids scorer (corpus assignment, query probes,
+    centroid training): (cos (n, cells) in list order, ‖v‖ (n,)).
+
+    The IEEE op sequence of the ``_norm`` / ``_dot`` folds: sums run
+    dimension-by-dimension in ascending order (((0 + x0·y0) + x1·y1)…),
+    centroid norms are ``_seq_norm`` constants, and cos =
+    dot/(vnorm·cnorm) with the try_divide+coalesce convention (a zero
+    denominator gives 0.0). Rows outside ``ok`` — those whose dot fold
+    is NULL in the engine — score 0.0 everywhere."""
     import numpy as np
 
     C = np.asarray([v for _, v in cells], dtype=np.float64)
     cnorm = np.asarray([_seq_norm(v) for _, v in cells], dtype=np.float64)
-    n, dim = V.shape
-    acc = np.zeros(n)
-    for d in range(dim):
+    acc = np.zeros(V.shape[0])
+    for d in range(V.shape[1]):
         acc = acc + V[:, d] * V[:, d]
     vnorm = np.sqrt(acc)
-    dot = np.zeros((n, len(cells)))
-    for d in range(dim):
+    dot = np.zeros((V.shape[0], len(cells)))
+    for d in range(C.shape[1]):
         dot = dot + V[:, d : d + 1] * C[None, :, d]
     denom = vnorm[:, None] * cnorm[None, :]
     with np.errstate(invalid="ignore", over="ignore"):
         cos = np.divide(dot, denom, out=np.zeros_like(dot), where=denom != 0)
-    idx = np.argmax(cos, axis=1)
-    cell_ids = np.asarray([c for c, _ in cells], dtype=np.int64)
-    if return_norm:
-        return cell_ids[idx], vnorm
-    return cell_ids[idx]
+    if ok is not None:
+        cos[~ok] = 0.0
+    return cos, vnorm
 
 
-def _pq_codes_np(V, cb: dict[tuple[int, int], list[float]], m: int, d_sub: int):
-    """numpy PQ encoding: per subspace, squared-L2 to every PRESENT
-    cell accumulates (x−y)·(x−y) dimension-by-dimension in order (the
-    op sequence of ``_adc_query_table``'s in-row fold); the winner is
-    the first STRICT minimum in cell order (np.argmin's tie rule, ties →
-    lowest cell); a NaN distance is never selected (masked to +inf) and
-    a subspace with no finite distance yields code −1. Pinned against a
-    scalar loop by test_pq_encode_kernel_matches_scalar_loop. Returns
-    (n, m) int64."""
+def _nearest_cell(cos, cells: list[tuple[int, list[float]]]):
+    """Cell ids of the FIRST maximum per row (np.argmax: ties → earlier
+    cell, a NaN wins from its first occurrence — NaN greatest, as in
+    the DuckDB oracle)."""
     import numpy as np
 
-    n = V.shape[0]
-    codes = np.full((n, m), -1, dtype=np.int64)
+    return np.asarray([c for c, _ in cells], dtype=np.int64)[cos.argmax(1)]
+
+
+def _cos_batch(vec, cells: list[tuple[int, list[float]]], width: int = 0):
+    """``_cos_cells_np`` over an Arrow vector column: (V, have, cos,
+    ‖v‖ as Arrow doubles). The engine's norm fold is NULL for a NULL
+    row or element, and its dot fold also for a row of another length
+    than the centroids (zip_with pads with NULL): such rows score 0.0."""
+    import pyarrow as pa
+
+    dim = len(cells[0][1])
+    V, have, whole = _dense(vec, max(dim, width))
+    cos, vnorm = _cos_cells_np(V, cells, whole & (have.sum(1) == dim))
+    return V, have, cos, pa.array(vnorm, pa.float64(), mask=~whole)
+
+
+def _sub_l2_np(V, cb: dict, m: int, d_sub: int, have=None):
+    """The one squared-L2-to-codebook scorer (PQ encoding, ADC query
+    tables): yields (sub, cell ids ascending, dist (n, cells)) per
+    subspace with present cells. Each distance is the sequential
+    (x−y)·(x−y) fold in element order, so NaN components give NaN; a
+    subvector missing an element (``have``; NULL in the engine) gives
+    +inf."""
+    import numpy as np
+
     for s in range(m):
         cells = sorted(c for (ss, c) in cb if ss == s)
         if not cells:
             continue
         C = np.asarray([cb[(s, c)] for c in cells], dtype=np.float64)
-        dist = np.zeros((n, len(cells)))
+        lo = s * d_sub
+        dist = np.zeros((V.shape[0], len(cells)))
         for i in range(d_sub):
-            diff = V[:, s * d_sub + i, None] - C[None, :, i]
+            diff = V[:, lo + i, None] - C[None, :, i]
             dist = dist + diff * diff
+        if have is not None:
+            dist[~have[:, lo : lo + d_sub].all(1)] = np.inf
+        yield s, np.asarray(cells, dtype=np.int64), dist
+
+
+def _pq_codes_np(V, cb: dict, m: int, d_sub: int, have=None):
+    """PQ codes (n, m) int64 over ``_sub_l2_np``: per subspace the first
+    strict minimum in cell order (ties → lowest cell); a NaN distance
+    never wins, and a subspace with no finite distance gets −1."""
+    import numpy as np
+
+    codes = np.full((V.shape[0], m), -1, dtype=np.int64)
+    for s, cells, dist in _sub_l2_np(V, cb, m, d_sub, have):
         masked = np.where(np.isnan(dist), np.inf, dist)
-        best = np.argmin(masked, axis=1)
-        none = ~np.isfinite(masked.min(axis=1))
-        cell_ids = np.asarray(cells, dtype=np.int64)
-        codes[:, s] = np.where(none, -1, cell_ids[best])
+        best = masked.argmin(1)
+        codes[:, s] = np.where(np.isfinite(masked.min(1)), cells[best], -1)
     return codes
+
+
+def _nested(a):
+    """An (n, d1, …) numpy array as n nested Arrow lists."""
+    import numpy as np
+    import pyarrow as pa
+
+    out = pa.array(a.reshape(-1))
+    for k in reversed(a.shape[1:]):
+        step = np.arange(len(out) // k + 1, dtype=np.int32) * k
+        out = pa.ListArray.from_arrays(pa.array(step), out)
+    return out
 
 
 def _seq_norm(vec: list[float]) -> float:
@@ -329,23 +392,11 @@ def _seq_norm(vec: list[float]) -> float:
     the exact IEEE op sequence of the Catalyst ``_norm`` fold (aggregate
     init 0.0, acc + x*x in element order, then sqrt), so a norm
     precomputed here is bit-identical to one computed per-row in the
-    engine. Keeps DuckDB-oracle parity while hoisting the per-centroid
-    norm out of the per-row scoring loop entirely."""
+    engine."""
     s = 0.0
     for x in vec:
         s += float(x) * float(x)
     return math.sqrt(s)
-
-
-def _sql_double(x: float) -> str:
-    """Exact-round-trip SQL double literal (repr is shortest-round-trip;
-    NaN/Inf spelled via CAST)."""
-    x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-    return repr(x) + "D"
 
 
 def _norm_sql(col: str) -> str:
@@ -357,49 +408,27 @@ def _norm_sql(col: str) -> str:
     )
 
 
-def _dot_sql(col: str, vec: list[float]) -> str:
-    arr = "array(" + ",".join(_sql_double(x) for x in vec) + ")"
-    return (
-        f"aggregate(zip_with({col}, {arr}, (x, y) -> x * y), 0.0D,"
-        " (acc, v) -> acc + v)"
-    )
+def _modulo_seeds(rows, k: int) -> dict[int, tuple[int, list]]:
+    """Trainer seeds: cell → (id, vector) of the min-id row per
+    ``id % k`` bucket, with SQL's TRUNCATED remainder (sign of the
+    dividend, unlike Python's floor mod) so negative ids bucket as in
+    the engines."""
+    seeds: dict[int, tuple[int, list]] = {}
+    for r in rows:
+        i = int(r[0])
+        cell = i % k if i >= 0 else -((-i) % k)
+        if cell not in seeds or i < seeds[cell][0]:
+            seeds[cell] = (i, r[1])
+    return seeds
 
 
-def _scored_cells_sql(
-    col: str, vnorm_col: str, cells: list[tuple[int, list[float]]]
-) -> str:
-    """SQL text for array<struct<cos, cell>> of the row vector scored
-    against every centroid, cells ascending — the scoring core of probe
-    selection (``_probe_cells``).
-
-    Why SQL text: building this expression through the Python Column API
-    costs ~0.7 s PER CALL in py4j round-trips (hundreds of calls for the
-    per-cell literals and lambdas) — 3× the execution time of a
-    full-corpus assignment job at sf0.1. One selectExpr string is parsed
-    JVM-side in a single call; the resulting Catalyst tree is identical.
-
-    Cost shape: the per-cell expressions are UNROLLED (not a transform
-    over a literal array-of-structs), so per row the work is n_cells
-    zip_with dot-folds + ONE staged ``vnorm_col`` + n_cells divisions;
-    the centroid norms are driver-side constants (``_seq_norm``). The
-    previous transform form re-ran the |v| fold inside every cell's
-    lambda and the |c| fold per row per cell — 3× the fold work. The
-    unrolling also makes the norm column textually referenced n_cells
-    times, which is what stops CollapseProject from inlining the
-    non-cheap norm fold back into the consumer (repo perf ground rules:
-    single-referenced non-cheap expressions DO get inlined).
-
-    Value parity: dot/(vnorm*cnorm) with try_divide + coalesce(0.0) is
-    the exact ``cosine()`` op order, so scores are bit-identical to the
-    DuckDB oracle; zero-norm rows/centroids score 0.0, NaN-valued
-    embeddings propagate NaN (handled by the caller's comparator)."""
-    items = ",".join(
-        "named_struct('cos', coalesce(try_divide("
-        f"{_dot_sql(col, vec)}, {vnorm_col} * {_sql_double(_seq_norm(vec))}"
-        f"), 0.0D), 'cell', {int(cell)}L)"
-        for cell, vec in cells
-    )
-    return f"array({items})"
+def _round6_mean(members, seed: list[float]) -> list[float]:
+    """A trainer cell's Lloyd update: its members' per-column mean
+    rounded through ``_spark_round6`` (which absorbs summation-order
+    drift), or the seed for a cell without members."""
+    if not len(members):
+        return seed
+    return [_spark_round6(float(c.mean())) for c in members.T]
 
 
 def _train_centroids(
@@ -411,59 +440,33 @@ def _train_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Driver-orchestrated Lloyd training over a (bounded) train frame.
 
-    Seeds are the min-id vector per id-modulo bucket; each of the
-    ``refine`` Lloyd rounds assigns the sample with ``_assign_np`` and
-    moves every centroid to its per-dim member mean rounded to 6 dp —
-    the cross-engine determinism contract; empty cells keep their seed.
+    Seeds are the min-id vector per id-modulo bucket
+    (``_modulo_seeds``); each of the ``refine`` Lloyd rounds assigns
+    the sample by cosine (``_cos_cells_np``) and moves every centroid
+    to its 6-dp-rounded member mean (``_round6_mean``) — the
+    cross-engine determinism contract; empty cells keep their seed.
     It runs as exactly ONE bounded collect of the training sample with
-    the Lloyd iterations in numpy on the driver (r6 rework). Means round
-    through ``_spark_round6`` (the engine's HALF_UP-on-shortest-repr
-    rule), and the 6-dp rounding absorbs summation-order drift, so the
-    centroids do not depend on the partition count and equal the DuckDB
-    oracle's ``cents`` in ``_SQL_IVF_ASSIGNED`` (pinned by
-    test_train_centroids_partition_invariant). The per-round job chain
-    this replaced paid 1 + refine driver-blocking aggregation jobs plus
-    a persist — at sf1.0 local[32] that was ~3 s of the
-    ann_ivf/ann_ivfpq wall for a ≤ ~2k-row sample."""
+    the Lloyd iterations in numpy on the driver. The 6-dp rounding
+    absorbs summation-order drift, so the centroids do not depend on
+    the partition count and equal the DuckDB oracle's ``cents`` in
+    ``_SQL_IVF_ASSIGNED`` (pinned by
+    test_train_centroids_partition_invariant)."""
     import numpy as np
 
     rows = train.select(F.col(id_col), F.col(vec_col)).collect()
-    seed: dict[int, tuple] = {}
-    for r in rows:
-        i = int(r[0])
-        # SQL % is a TRUNCATED remainder (sign of the dividend), unlike
-        # Python's floor mod — mirror it so negative ids bucket the way
-        # the engines' ``id % n_cells`` does
-        cell = i % n_cells if i >= 0 else -((-i) % n_cells)
-        if cell not in seed or r[0] < seed[cell][0]:
-            seed[cell] = (r[0], r[1])
     cents = sorted(
-        (c, [float(x) for x in v]) for c, (_, v) in seed.items()
+        (c, [float(x) for x in v])
+        for c, (_, v) in _modulo_seeds(rows, n_cells).items()
     )
     if not cents:
         return cents
-    V = np.asarray(
-        [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-    )
-    dim = V.shape[1]
+    V = np.asarray([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
     for _ in range(refine):
-        member_cell = _assign_np(V, cents)
-        new_cents = []
-        for cell, seed_vec in cents:
-            members = V[member_cell == cell]
-            if len(members):
-                new_cents.append(
-                    (
-                        cell,
-                        [
-                            _spark_round6(float(members[:, d].mean()))
-                            for d in range(dim)
-                        ],
-                    )
-                )
-            else:
-                new_cents.append((cell, seed_vec))
-        cents = new_cents
+        member_cell = _nearest_cell(_cos_cells_np(V, cents)[0], cents)
+        cents = [
+            (cell, _round6_mean(V[member_cell == cell], seed_vec))
+            for cell, seed_vec in cents
+        ]
     return cents
 
 
@@ -495,12 +498,16 @@ def _train_sample(
 
 
 def _require_cells(cells: list[tuple[int, list[float]]]) -> None:
-    """Driver-side guard for the ``_assign_np`` kernels: with no cells
-    there is no nearest one, and the kernel would fail in the executor."""
+    """Driver-side guard for the cosine kernels: with no cells there is
+    no nearest one, and the kernel would fail in the executor."""
     if not cells:
         raise ValueError(
             "no centroid cells to assign to (was the training sample empty?)"
         )
+
+
+def _type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
 
 
 def assign_cells_fast(
@@ -508,44 +515,35 @@ def assign_cells_fast(
     cells: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    emit_norm: bool = False,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid — ZERO exchanges: a
-    mapInArrow kernel over the scan partitions (``_assign_np``: cosine
-    argmax, ties and zero-norm rows → lowest cell, a NaN score wins from
-    its first cell; pinned against a scalar loop by
-    test_assign_cells_fast_bit_identical). The centroids ride in the
-    kernel closure, so at 10^10 vectors there is no shuffle term and no
-    n_cells × dim-literal SQL string to build or analyze. Output
-    (id, vec, cell); ``emit_norm`` appends ``_vnorm`` (the row's ‖v‖
-    computed with the exact ``_norm``-fold op sequence) so scoring can
-    reuse it instead of re-folding per candidate pair. id and vec pass
-    through as the input Arrow arrays, so NaN vector components stay
-    NaN (a pandas round trip would turn them into NULL)."""
-    import numpy as np
+    mapInArrow kernel over the scan partitions (``_cos_cells_np`` +
+    ``_nearest_cell``: cosine argmax, ties and zero-norm rows → lowest
+    cell, a NaN score wins from its first cell; pinned against a scalar
+    loop by test_assign_cells_fast_bit_identical). The centroids ride
+    in the kernel closure, so at 10^10 vectors there is no shuffle term.
+    Output (id, vec, cell, _vnorm): ``_vnorm`` is the row's ‖v‖ from
+    the same kernel (the exact ``_norm``-fold doubles), so scoring
+    reuses it instead of re-folding per candidate pair. id and vec pass
+    through as the input Arrow arrays (vec cast to double), so NaN
+    components stay NaN."""
     import pyarrow as pa
 
     _require_cells(cells)
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, {vec_col} array<double>, cell bigint"
-    if emit_norm:
-        out_schema += ", _vnorm double"
+    out_schema = (
+        f"{id_col} {_type(corpus, id_col)}, {vec_col} array<double>,"
+        " cell bigint, _vnorm double"
+    )
 
     def run(batches):
         for batch in batches:
-            if not batch.num_rows:
-                continue
-            vec = batch.column(vec_col)
-            if vec.type.value_type != pa.float64():
-                vec = vec.cast(pa.list_(pa.float64()))
-            V = np.stack(vec.to_numpy(zero_copy_only=False))
-            cell, vnorm = _assign_np(V, cells, return_norm=True)
-            cols = [batch.column(id_col), vec, pa.array(cell, pa.int64())]
-            names = [id_col, vec_col, "cell"]
-            if emit_norm:
-                cols.append(pa.array(vnorm, pa.float64()))
-                names.append("_vnorm")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            vec = batch.column(vec_col).cast(pa.list_(pa.float64()))
+            _, _, cos, vnorm = _cos_batch(vec, cells)
+            cell = pa.array(_nearest_cell(cos, cells), pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), vec, cell, vnorm],
+                names=[id_col, vec_col, "cell", "_vnorm"],
+            )
 
     return corpus.select(id_col, vec_col).mapInArrow(run, out_schema)
 
@@ -557,37 +555,47 @@ def _probe_cells(
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Top-n_probe nearest cells per query, selected INSIDE the row
-    (array_sort with a (cos DESC, cell ASC) comparator + slice) — no
-    query-side shuffle either. Scoring is ``_scored_cells_sql`` (staged
-    query norm, constant centroid norms). Zero-norm queries score 0.0
-    everywhere and probe the lowest cells; the NaN branches in the
-    comparator handle NaN-valued embeddings only (NaN greatest)."""
-    vq = f"`{vec_col}`"
-    staged = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        f"{vq} AS qv",
-        f"{_norm_sql(vq)} AS __qnorm",
+    """Top-n_probe nearest cells per query: (query_id, qv, qn, cell),
+    one row per probed cell, from a row-local mapInArrow kernel (no
+    query-side shuffle). Cells are scored by ``_cos_cells_np``, the
+    scorer corpus assignment uses, and ranked cos DESC (NaN greatest),
+    cell ASC; zero-norm and NULL queries score 0.0 everywhere and probe
+    the lowest cells. ``qn`` is ‖q‖ (NULL where the ``_norm`` fold is),
+    so scoring divides by qn·cn instead of re-folding ‖q‖ per pair.
+    Pinned against a scalar loop by
+    test_probe_cells_matches_scalar_loop."""
+    import numpy as np
+    import pyarrow as pa
+
+    _require_cells(cells)
+    out_schema = (
+        f"query_id {_type(queries, id_col)}, qv {_type(queries, vec_col)},"
+        " qn double, cell bigint"
     )
-    scored = _scored_cells_sql("qv", "__qnorm", cells)
-    cmp = (
-        "(a, b) -> CASE"
-        " WHEN isnan(a.cos) AND NOT isnan(b.cos) THEN -1"
-        " WHEN isnan(b.cos) AND NOT isnan(a.cos) THEN 1"
-        " WHEN a.cos > b.cos THEN -1"
-        " WHEN a.cos < b.cos THEN 1"
-        " ELSE CAST(signum(a.cell - b.cell) AS INT) END"
-    )
-    top = f"slice(array_sort({scored}, {cmp}), 1, {int(n_probe)})"
-    return staged.selectExpr(
-        "query_id",
-        "qv",
-        # the staged query norm rides along so downstream scoring can
-        # divide by qn·cn instead of re-folding ‖q‖ per candidate pair
-        # (same doubles — the fold already produced this exact value)
-        "__qnorm AS qn",
-        f"explode(transform({top}, s -> s.cell)) AS cell",
-    )
+    cell_ids = np.asarray([c for c, _ in cells], dtype=np.int64)
+    k = max(0, min(int(n_probe), len(cells)))
+
+    def run(batches):
+        for batch in batches:
+            vec = batch.column(vec_col)
+            _, _, cos, qn = _cos_batch(vec, cells)
+            nan = np.isnan(cos)
+            # lexsort's LAST key is primary
+            order = np.lexsort(
+                (np.broadcast_to(cell_ids, cos.shape), -cos, ~nan)
+            )[:, :k]
+            rows = pa.array(np.repeat(np.arange(batch.num_rows), k))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col).take(rows),
+                    vec.take(rows),
+                    qn.take(rows),
+                    pa.array(cell_ids[order].reshape(-1), pa.int64()),
+                ],
+                names=["query_id", "qv", "qn", "cell"],
+            )
+
+    return queries.select(id_col, vec_col).mapInArrow(run, out_schema)
 
 
 def ivf_topk(
@@ -611,9 +619,7 @@ def ivf_topk(
     numpy over ONE collected deterministic md5-mod hash-sample of
     ≈ train_per_cell × n_cells vectors (``_train_sample`` →
     ``_train_centroids``), so training costs one footer-metadata count
-    + one bounded collect regardless of refine rounds — at 10^10
-    vectors the full-corpus Lloyd chain this replaces re-scanned and
-    posexploded the whole corpus per round.
+    + one bounded collect regardless of refine rounds.
 
     Exchange budget: the probes (queries × n_probe rows) BROADCAST into
     the assigned corpus stream (no corpus exchange), and 1 BOUNDED
@@ -629,9 +635,7 @@ def ivf_topk(
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     train = _train_sample(proj, n_cells, train_per_cell, id_col)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
-    assigned = assign_cells_fast(
-        proj, cents, vec_col, id_col, emit_norm=True
-    )
+    assigned = assign_cells_fast(proj, cents, vec_col, id_col)
     probes = _probe_cells(queries, cents, n_probe, vec_col, id_col)
     cand = assigned.select(
         F.col(id_col).alias("neighbor_id"),
@@ -673,16 +677,16 @@ def semantic_dedup(
     Returns the SURVIVORS as (id, cell).
 
     Scale shape: centroid training is the bounded sampled-Lloyd path of
-    ``ivf_topk`` (one filtered scan); assignment is zero-exchange
-    (centroid literals, in-row argmax); the only quadratic term is the
-    within-cell pair join — the same candidate-bounding tradeoff as the
-    published method, tunable by ``n_cells`` (cells shrink as cells
+    ``ivf_topk`` (one filtered scan); assignment is the zero-exchange
+    ``assign_cells_fast`` kernel; the only quadratic term is the
+    within-cell pair scoring — the same candidate-bounding tradeoff as
+    the published method, tunable by ``n_cells`` (cells shrink as cells
     multiply; at 10^10 vectors use n_cells ~ 10^5 so cells hold ~10^5
-    vectors). The anti-join back is an equi-join on id.
+    vectors).
 
     Skew guard: a degenerate corpus (all vectors in one tight cluster)
-    collapses every row into ONE cell and the pair join silently goes
-    O(n²). Before joining, the cell histogram (one bounded agg over the
+    collapses every row into ONE cell and the pair scoring silently goes
+    O(n²). Before scoring, the cell histogram (one bounded agg over the
     already-materialized assignment) is checked against
     ``max_cell_rows`` — default 8 × the expected n/n_cells population,
     floored at 2048 rows (≤ ~4M pairs is trivial, so small corpora with
@@ -733,28 +737,21 @@ def semantic_dedup(
             "multiply) or pass an explicit max_cell_rows budget. "
             f"Top cells (cell, rows): {hist[:5]}"
         )
-    # Within-cell survivor selection runs as ONE applyInPandas kernel
-    # per cell (r6 rework): the previous within-cell pair JOIN streamed
-    # ~Σ n_c²/2 pair rows through interpreted dot/norm folds (the
-    # measured 7.6 s wall at sf1.0 was almost entirely this stage);
-    # here each cell's vectors shuffle once (the same single exchange
-    # the join's build side paid) and the pair math is vectorized
-    # numpy. BIT-PARITY with the expression pair join is preserved by
-    # accumulating dots and norms dimension-by-dimension in ascending
-    # order — the exact IEEE op sequence of the Catalyst
-    # aggregate/zip_with folds (same doubles, same cos, same ≥
-    # decisions; pinned by
-    # test_semantic_dedup_kernel_matches_expression_join) —
+    # Within-cell survivor selection is ONE applyInPandas kernel per
+    # cell: each cell's vectors shuffle once and the pair math is
+    # vectorized numpy. Dots accumulate dimension-by-dimension in
+    # ascending order and the norms are the assignment kernel's
+    # ``_vnorm`` — the IEEE op sequence of the Catalyst zip_with /
+    # aggregate folds, so cos and every ≥ decision match the expression
+    # pair join (test_semantic_dedup_kernel_matches_expression_join),
     # with Spark's NaN semantics (NaN ≥ threshold is TRUE) and the
-    # try_divide+coalesce zero-denominator convention (cos = 0.0)
-    # replicated explicitly. Memory is bounded: cells are capped by
-    # the skew guard and the pair matrix is computed in 2048-row
-    # blocks. sf1.0 local[32]: 7.63 → ~1.5 s.
+    # try_divide+coalesce zero-denominator convention (cos = 0.0).
+    # Memory is bounded: the skew guard caps cells and the pair matrix
+    # is computed in tiles.
     import numpy as np
     import pandas as pd
 
-    id_field = assigned.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_field}, cell bigint"
+    out_schema = f"{id_col} {_type(assigned, id_col)}, cell bigint"
     th = float(threshold)
 
     def _cell_survivors(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -764,12 +761,8 @@ def semantic_dedup(
             np.float64, copy=False
         )
         n, dim = vecs.shape
-        # sequential-over-dims norm: ((0 + x0²) + x1²) + … then sqrt —
-        # the _norm fold's op order, vectorized ACROSS rows only
-        acc = np.zeros(n)
-        for d in range(dim):
-            acc = acc + vecs[:, d] * vecs[:, d]
-        nrm = np.sqrt(acc)
+        # the assignment kernel's ‖v‖ (the _norm fold's op order)
+        nrm = pdf["_vnorm"].to_numpy(dtype=np.float64)[order]
         dropped = np.zeros(n, dtype=bool)
         # 512×512 tiles keep the dim-loop's accumulator in cache (the
         # untiled form streamed a block×n matrix from DRAM once per
@@ -827,48 +820,20 @@ def pq_train_codebook(
     Returns (sub, cell, centroid: array<double>) — m × k rows, a
     dimension table.
 
-    Driver-orchestrated for job count (the `_train_centroids` lesson:
-    bounded-output training loops beat DataFrame chains): ONE bounded
-    collect of the deterministic training sample (the modulus comes
-    from parquet footer metadata when possible — ``_fast_count``), then
-    seeds + the Lloyd round run in numpy on the driver (r6 rework):
-    per-subspace encoding against the seeds uses ``_pq_codes_np``
-    (pq_encode's kernel: squared L2, ties → lowest cell), and member
-    means round through
-    ``_spark_round6`` — the 6-dp rounding absorbs summation-order
-    drift exactly as it already does between Spark's partial
-    aggregation and the DuckDB oracle. The seed/mean coalesce for
-    empty cells runs over ≤ m × k rows. The previous form paid a head
-    job + count job + two driver-blocking aggregation jobs over
-    literal-heavy expressions (~2.8 s at sf1.0 local[32] → ~0.4 s).
+    Driver-orchestrated for job count: ONE bounded collect of the
+    deterministic training sample (the modulus comes from parquet
+    footer metadata when possible — ``_fast_count``), then the seeds
+    and the Lloyd round run in numpy on the driver with the IVF
+    trainer's ``_modulo_seeds`` and ``_round6_mean`` and pq_encode's
+    ``_pq_codes_np`` — the 6-dp rounding absorbs summation-order drift
+    exactly as it does between Spark's partial aggregation and the
+    DuckDB oracle.
 
-    The returned DataFrame carries the codebook rows as an attached
-    ``_pq_cb_rows`` attribute so ``_codebook_dict`` (pq_topk/pq_encode)
-    reads them without a collect job."""
-    rows, _dim = _pq_train_rows(
-        corpus, m, k, train_per_cell, vec_col, id_col, n=n
-    )
-    df = corpus.sparkSession.createDataFrame(
-        rows, "sub int, cell int, centroid array<double>"
-    )
-    df._pq_cb_rows = rows
-    return df
-
-
-def _pq_train_rows(
-    corpus: DataFrame,
-    m: int,
-    k: int,
-    train_per_cell: int,
-    vec_col: str,
-    id_col: str,
-    n: int | None = None,
-) -> tuple[list[tuple[int, int, list[float]]], int]:
-    """Driver-side PQ codebook training over the collected bounded
-    sample (see ``pq_train_codebook``): returns (rows, dim) where rows
-    are (sub, cell, centroid) sorted by (sub, cell). The corpus head is
-    only consulted when the sample comes back empty (empty-corpus error
-    + dim validation — the rare path)."""
+    The returned DataFrame carries the codebook rows, sorted by (sub,
+    cell), as an attached ``_pq_cb_rows`` attribute so
+    ``_codebook_dict`` reads them without a collect job. The corpus
+    head is only read when the sample comes back empty, to validate
+    dim."""
     import numpy as np
 
     train = _train_sample(
@@ -876,78 +841,51 @@ def _pq_train_rows(
         id_col, n=n,
     )
     srows = train.collect()
-    if not srows:
+    if srows:
+        dim = len(srows[0][1])
+    else:
         head = corpus.select(vec_col).first()
         if head is None or head[0] is None:
             raise ValueError("empty corpus: cannot train a PQ codebook")
         dim = len(head[0])
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        return [], dim
-    dim = len(srows[0][1])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     d_sub = dim // m
-    # seeds: the min-id row per id-modulo bucket donates every
-    # subspace's seed (SQL truncated remainder, as in the relational
-    # min_by(subvec, id) form)
-    best: dict[int, tuple[int, list]] = {}
-    for r in srows:
-        i = int(r[0])
-        cell = i % k if i >= 0 else -((-i) % k)
-        if cell not in best or i < best[cell][0]:
-            best[cell] = (i, r[1])
+    # one Lloyd round: every subspace seeds from the same min-id rows,
+    # the sample is encoded against the seeds, and each cell moves to
+    # its 6-dp-rounded member mean (empty cells keep their seed)
     seed_cb = {
         (s, cell): [float(x) for x in vec[s * d_sub : (s + 1) * d_sub]]
-        for cell, (_, vec) in best.items()
+        for cell, (_, vec) in _modulo_seeds(srows, k).items()
         for s in range(m)
     }
-    # one Lloyd round: encode the sample against the seeds, take
-    # 6-dp-rounded per-dim member means, keep seeds for empty cells
     V = np.asarray([[float(x) for x in r[1]] for r in srows], dtype=np.float64)
     codes = _pq_codes_np(V, seed_cb, m, d_sub)
     rows = []
     for (s, cell), seed_vec in sorted(seed_cb.items()):
-        members = V[codes[:, s] == cell]
-        if len(members):
-            rows.append(
-                (
-                    s,
-                    cell,
-                    [
-                        _spark_round6(float(members[:, s * d_sub + i].mean()))
-                        for i in range(d_sub)
-                    ],
-                )
-            )
-        else:
-            rows.append((s, cell, seed_vec))
-    return rows, dim
+        members = V[codes[:, s] == cell][:, s * d_sub : (s + 1) * d_sub]
+        rows.append((s, cell, _round6_mean(members, seed_vec)))
+    df = corpus.sparkSession.createDataFrame(
+        rows, "sub int, cell int, centroid array<double>"
+    )
+    df._pq_cb_rows = rows
+    return df
 
 
 def _codebook_dict(
     codebook: DataFrame,
 ) -> tuple[dict[tuple[int, int], list[float]], int, int, int]:
-    """Collect the bounded PQ codebook to a driver dict:
-    ((sub, cell) → centroid, m, d_sub, max_cell). Shared by
-    encode/topk/ivfpq so the code/cell conventions live in one place.
-    A codebook built by ``pq_train_codebook`` carries its rows as the
-    ``_pq_cb_rows`` attribute — read directly, no collect job."""
+    """The bounded PQ codebook as a driver dict: ((sub, cell) →
+    centroid, m, d_sub, max_cell) — the single place the codebook row
+    shape is interpreted. A codebook built by ``pq_train_codebook``
+    carries its rows as the ``_pq_cb_rows`` attribute — read directly,
+    no collect job."""
     rows = getattr(codebook, "_pq_cb_rows", None)
     if rows is None:
         rows = [
             (int(r["sub"]), int(r["cell"]), [float(x) for x in r["centroid"]])
             for r in codebook.collect()
         ]
-    return _cb_from_rows(rows)
-
-
-def _cb_from_rows(
-    rows: list[tuple[int, int, list[float]]],
-) -> tuple[dict[tuple[int, int], list[float]], int, int, int]:
-    """(rows → cb dict, m, d_sub, max_cell) — the single place the
-    codebook row shape is interpreted (``_codebook_dict`` and
-    ``ivfpq_topk`` both route through here)."""
     if not rows:
         raise ValueError("empty PQ codebook")
     m = max(r[0] for r in rows) + 1
@@ -962,46 +900,35 @@ def pq_encode(
     codebook: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode every vector as m one-byte-ish codes: per subspace, the
-    nearest codebook centroid (squared L2, ties → lowest cell).
+    nearest codebook centroid (squared L2, ties → lowest cell; −1 where
+    a subspace has no finite distance).
 
-    Output (id, [passthrough cols,] codes: array<int>, sub order) — the
-    10^10-vector memory story: m codes replace the full vector (dim=64,
-    m=32, k=16 → 32 nibbles vs 512 bytes of doubles). Plan: the
-    codebook (bounded m × k × d_sub doubles) rides in the kernel
-    closure and the argmin runs inside the row (``_pq_codes_np``,
-    pinned against a scalar loop by
-    test_pq_encode_kernel_matches_scalar_loop), so encoding is one pure
-    map over the scan — zero exchanges at any corpus size — in
-    vectorized numpy. ``passthrough`` columns (e.g. the IVF cell) ride
-    along unchanged."""
-    import numpy as np
-    import pandas as pd
+    Output (id, codes: array<int>, sub order) — the 10^10-vector memory
+    story: m codes replace the full vector (dim=64, m=32, k=16 → 32
+    nibbles vs 512 bytes of doubles). Plan: the codebook (bounded m × k
+    × d_sub doubles) rides in the closure of a mapInArrow kernel and
+    the argmin runs inside the row (``_pq_codes_np``, pinned against a
+    scalar loop by test_pq_encode_kernel_matches_scalar_loop), so
+    encoding is one pure map over the scan — zero exchanges at any
+    corpus size — in vectorized numpy."""
+    import pyarrow as pa
 
     cb, m, d_sub, _ = _codebook_dict(codebook)
-    fields = [id_col, *passthrough]
-    types = {
-        f.name: f.dataType.simpleString() for f in corpus.schema.fields
-    }
-    out_schema = (
-        ", ".join(f"{c} {types[c]}" for c in fields) + ", codes array<int>"
-    )
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
+        for batch in batches:
+            V, have, _ = _dense(batch.column(vec_col), m * d_sub)
+            codes = _pq_codes_np(V, cb, m, d_sub, have).astype("int32")
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), _nested(codes)],
+                names=[id_col, "codes"],
             )
-            codes = _pq_codes_np(V, cb, m, d_sub).astype(np.int32)
-            data = {c: pdf[c] for c in fields}
-            data["codes"] = list(codes)
-            yield pd.DataFrame(data)
 
-    return corpus.select(*fields, vec_col).mapInPandas(run, out_schema)
+    return corpus.select(id_col, vec_col).mapInArrow(
+        run, f"{id_col} {_type(corpus, id_col)}, codes array<int>"
+    )
 
 
 def _adc_query_table(
@@ -1014,52 +941,31 @@ def _adc_query_table(
     id_col: str,
 ) -> DataFrame:
     """(query_id, dtab array<array<double>>): the per-query asymmetric-
-    distance table to every (sub, cell) centroid, computed IN-ROW on
-    the queries DataFrame with the codebook riding as literals (r6
-    rework — round-5 VERDICT item 1: the previous driver-side
-    ``queries.collect()`` + nested Python loops were the last
-    per-row-Python driver stage; at a 10⁵–10⁶-query batch that was
-    minutes of serial driver time while the cluster idled — now the
-    query side scales with the cluster). Each dpart is the sequential
-    ‖q_sub − c‖² fold ((x−y)·(x−y) accumulated in element order) — the
-    exact IEEE op sequence of the Python loops it replaces, so the
-    table is bit-identical. Holes (cells the sampled seeds skipped)
-    stay +inf and are never referenced — codes only ever name cells
-    present in the codebook.
+    distance table to every (sub, cell) centroid, dtab[sub][cell] —
+    a row-local mapInArrow kernel over the queries DataFrame with the
+    codebook in its closure, so the query side scales with the cluster
+    and nothing is collected to the driver. Each entry is
+    ``_sub_l2_np``'s ‖q_sub − c‖² (the scorer PQ encoding uses), the
+    exact IEEE op sequence of the sequential (x−y)·(x−y) fold. Holes
+    (cells the sampled seeds skipped) stay +inf and are never
+    referenced — codes only ever name cells present in the codebook; a
+    query subvector with a NULL or missing element is +inf too."""
+    import numpy as np
+    import pyarrow as pa
 
-    Expression shape: the codebook rides as ONE nested literal array
-    (missing cells are NULL slots) and the table is built by FOUR
-    lambda functions total (two transforms + zip_with + aggregate) —
-    an earlier form unrolled one aggregate/zip_with fold PER (sub,
-    cell), and Catalyst's per-lambda analysis cost on those ~m × k
-    folds dominated the whole query (seconds of driver time per
-    execution, independent of data size)."""
-    null_arr = "CAST(NULL AS array<double>)"
-    subs = []
-    for s in range(m):
-        entries = []
-        for c in range(max_cell + 1):
-            cent = cb.get((s, c))
-            if cent is None:
-                entries.append(null_arr)
-            else:
-                entries.append(
-                    "array(" + ",".join(_sql_double(x) for x in cent) + ")"
-                )
-        subs.append("array(" + ",".join(entries) + ")")
-    cb_lit = "array(" + ",".join(subs) + ")"
-    fold = (
-        f"aggregate(zip_with(slice(`{vec_col}`, s * {d_sub} + 1, {d_sub}),"
-        " element_at(element_at(__cb, s + 1), c + 1),"
-        " (x, y) -> (x - y) * (x - y)), 0.0D, (a, z) -> a + z)"
-    )
-    dtab = (
-        f"transform(sequence(0, {m - 1}), s -> "
-        f"transform(sequence(0, {max_cell}), c -> "
-        f"coalesce({fold}, CAST('Infinity' AS DOUBLE))))"
-    ).replace("__cb", cb_lit)
-    return queries.selectExpr(
-        f"`{id_col}` AS query_id", f"{dtab} AS dtab"
+    def run(batches):
+        for batch in batches:
+            V, have, _ = _dense(batch.column(vec_col), m * d_sub)
+            tab = np.full((batch.num_rows, m, max_cell + 1), np.inf)
+            for s, cells, dist in _sub_l2_np(V, cb, m, d_sub, have):
+                tab[:, s, cells] = dist
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), _nested(tab)],
+                names=["query_id", "dtab"],
+            )
+
+    return queries.select(id_col, vec_col).mapInArrow(
+        run, f"query_id {_type(queries, id_col)}, dtab array<array<double>>"
     )
 
 
@@ -1071,10 +977,13 @@ def _adc_dist_sql(m: int) -> str:
     higher-order-function lambdas are interpreted per element while
     element_at/+ compile under whole-stage codegen (~3× on the scoring
     stage). Identical doubles: ((a0 + a1) + …) in ascending s, and the
-    fold's 0.0 seed is a no-op for the non-negative squared distances."""
+    fold's 0.0 seed is a no-op for the non-negative squared distances.
+    A −1 code (no finite distance when encoded) contributes NaN, so
+    that vector's distance is NaN and ranks after every finite one."""
     terms = " + ".join(
-        f"element_at(element_at(dtab, {s + 1}), element_at(codes, {s + 1})"
-        " + 1)"
+        f"IF(element_at(codes, {s + 1}) < 0, CAST('NaN' AS DOUBLE),"
+        f" element_at(element_at(dtab, {s + 1}),"
+        f" element_at(codes, {s + 1}) + 1))"
         for s in range(m)
     )
     return f"round({terms}, 6) AS adist"
@@ -1092,24 +1001,22 @@ def pq_topk(
     subvectors, corpus vectors are represented only by their codes;
     approximate distance = Σ_sub ‖q_sub − centroid(code_sub)‖².
 
-    Plan: the per-(query, sub, cell) distance TABLE is built IN-ROW on
-    the queries DataFrame by ``_adc_query_table`` (the codebook rides as
-    one nested literal; no driver collect of the queries) and
-    broadcast as ONE row per query (bounded — the same queries ≪ corpus
-    contract brute_force_topk's broadcast relies on; |queries| × m × k
-    doubles); the approximate distance is then an IN-ROW fold over the
-    m codes in ascending sub order — the exact double sequence the
-    DuckDB twin's list(dpart ORDER BY sub) sum sees. The corpus side is
-    therefore a pure map over the codes scan (m ints per row at 10^10
-    vectors): no corpus × m explode, no per-(query, vector) hash
-    aggregation, and ranking is the two-phase bounded
-    ``_topk_per_group`` — the previous explode + broadcast-join +
-    collect_list-agg + window plan shuffled corpus-sized row sets twice.
+    Plan: the per-(query, sub, cell) distance TABLE is built by the
+    row-local ``_adc_query_table`` kernel (no driver collect of the
+    queries) and broadcast as ONE row per query (bounded — the same
+    queries ≪ corpus contract brute_force_topk's broadcast relies on;
+    |queries| × m × k doubles); the approximate distance is then an
+    IN-ROW sum over the m codes in ascending sub order
+    (``_adc_dist_sql``) — the exact double sequence the DuckDB twin's
+    list(dpart ORDER BY sub) sum sees. The corpus side is therefore a
+    pure map over the codes scan (m ints per row at 10^10 vectors): no
+    corpus × m explode, no per-(query, vector) hash aggregation, and
+    ranking is the two-phase bounded ``_topk_per_group``.
 
-    Value parity: each dpart is the sequential ‖q_sub − c‖² fold
-    ((x−y)·(x−y) accumulated in element order) evaluated by Spark's
-    double arithmetic — the same IEEE-754 op sequence as the relational
-    _l2 form, so the table is bit-identical to it."""
+    Value parity: each table entry is the sequential ‖q_sub − c‖² fold
+    ((x−y)·(x−y) accumulated in element order), the same IEEE-754 op
+    sequence as the relational _l2 form, so the table is bit-identical
+    to it."""
     cb, m, d_sub, max_cell = _codebook_dict(codebook)
     qdf = _adc_query_table(queries, cb, m, d_sub, max_cell, vec_col, id_col)
     scored = (
@@ -1130,37 +1037,35 @@ def _assign_encode_fast(
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Fused IVF assignment + PQ encoding in ONE mapInPandas kernel:
+    """Fused IVF assignment + PQ encoding in ONE mapInArrow kernel:
     (id, cell, codes) from a single pass over the corpus scan — the
     vectors cross the Arrow boundary once instead of riding through two
-    chained kernels. Assignment is ``_assign_np`` and encoding is
-    ``_pq_codes_np``, the same functions ``assign_cells_fast`` and
-    ``pq_encode`` run, so cells and codes are identical to theirs."""
-    import numpy as np
-    import pandas as pd
+    chained kernels. Assignment is ``_cos_cells_np`` + ``_nearest_cell``
+    and encoding is ``_pq_codes_np``, the same functions
+    ``assign_cells_fast`` and ``pq_encode`` run, so cells and codes are
+    identical to theirs."""
+    import pyarrow as pa
 
     _require_cells(cells)
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, cell bigint, codes array<int>"
+    out_schema = (
+        f"{id_col} {_type(corpus, id_col)}, cell bigint, codes array<int>"
+    )
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": _assign_np(V, cells),
-                    "codes": list(
-                        _pq_codes_np(V, cb, m, d_sub).astype(np.int32)
-                    ),
-                }
+        for batch in batches:
+            vec = batch.column(vec_col).cast(pa.list_(pa.float64()))
+            V, have, cos, _ = _cos_batch(vec, cells, m * d_sub)
+            codes = _pq_codes_np(V, cb, m, d_sub, have).astype("int32")
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col),
+                    pa.array(_nearest_cell(cos, cells), pa.int64()),
+                    _nested(codes),
+                ],
+                names=[id_col, "cell", "codes"],
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(run, out_schema)
+    return corpus.select(id_col, vec_col).mapInArrow(run, out_schema)
 
 
 def ivfpq_topk(
@@ -1192,18 +1097,18 @@ def ivfpq_topk(
     by both sample moduli + one bounded collect each — no job chains);
     assignment + encode fuse into ONE zero-exchange kernel map over the
     single corpus scan (``_assign_encode_fast``); the probe table
-    (queries × n_probe rows joined to the IN-ROW per-query ADC tables)
-    broadcasts into the codes stream, so scoring shuffles NOTHING —
-    followed by the two-phase bounded top-k. Exchange budget: the
-    bounded top-k merge only."""
+    (queries × n_probe rows joined to the per-query ADC tables, both
+    row-local kernels over the queries: ``_probe_cells`` and
+    ``_adc_query_table``) broadcasts into the codes stream, so scoring
+    shuffles NOTHING — followed by the two-phase bounded top-k.
+    Exchange budget: the bounded top-k merge only."""
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     n = _fast_count(proj)  # shared by both training samples
     train = _train_sample(proj, n_cells, train_per_cell, id_col, n=n)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
-    cb_rows, _dim = _pq_train_rows(
-        proj, m, pq_k, pq_train_per_cell, vec_col, id_col, n=n
+    cb, mm, d_sub, max_cell = _codebook_dict(
+        pq_train_codebook(proj, m, pq_k, pq_train_per_cell, vec_col, id_col, n)
     )
-    cb, mm, d_sub, max_cell = _cb_from_rows(cb_rows)
     codes = _assign_encode_fast(proj, cents, cb, mm, d_sub, vec_col, id_col)
     probes = _probe_cells(queries, cents, n_probe, vec_col, id_col).select(
         "query_id", "cell"

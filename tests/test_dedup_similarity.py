@@ -772,9 +772,10 @@ def test_pq_encode_kernel_matches_scalar_loop(spark):
 
 
 def test_adc_query_table_is_distributed(spark):
-    """Round-5 VERDICT item 1: the ADC query table must be computed in
-    the Spark plan (codebook literals, in-row folds), not collected to
-    the driver — the dtab expression appears in the query-side plan."""
+    """The ADC query table must be computed in the Spark plan by a
+    Python map kernel over the queries, not collected to the driver:
+    building it launches no job, and the query-side plan holds the
+    MapInArrow node that emits dtab."""
     from agentic_doc_spark.operators.similarity import (
         _adc_query_table,
         _codebook_dict,
@@ -788,12 +789,20 @@ def test_adc_query_table_is_distributed(spark):
     )
     cb = pq_train_codebook(emb, m=8, k=16)
     cbd, m, d_sub, max_cell = _codebook_dict(cb)
-    qdf = _adc_query_table(
-        emb.filter(F.col("vec_id") < 5), cbd, m, d_sub, max_cell,
-        "embedding", "vec_id",
-    )
-    plan = qdf._jdf.queryExecution().optimizedPlan().toString()
-    assert "zip_with" in plan and "dtab" in plan, plan
+    sc = spark.sparkContext
+    sc.setJobGroup("adc-query-table-build", "build only")
+    try:
+        qdf = _adc_query_table(
+            emb.filter(F.col("vec_id") < 5), cbd, m, d_sub, max_cell,
+            "embedding", "vec_id",
+        )
+        plan = qdf._jdf.queryExecution().optimizedPlan().toString()
+        jobs = sc.statusTracker().getJobIdsForGroup("adc-query-table-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
+    assert "MapInArrow" in plan and "dtab" in plan, plan
     # and it evaluates to the same doubles the driver-side loops built
     import math
 
@@ -815,6 +824,166 @@ def test_adc_query_table_is_distributed(spark):
                     d = qv[s * d_sub + i] - cent[i]
                     acc += d * d
                 assert dtab[s][c] == acc  # bit-identical fold
+
+
+def _real_emb(spark):
+    return spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet"
+    ).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def test_probe_cells_matches_scalar_loop(spark):
+    """_probe_cells (the shared numpy cosine scorer + top-n_probe) vs a
+    scalar loop: same probed cells and bit-equal qn on real embeddings
+    plus zero-norm, NaN and NULL queries. A duplicated centroid under a
+    higher cell id ties with its twin for every query (ties → lower
+    cell); NaN scores sort greatest; zero-norm and NULL queries score
+    0.0 everywhere and probe the lowest cells, with qn NULL for NULL."""
+    import math
+
+    from agentic_doc_spark.operators.similarity import (
+        _probe_cells,
+        _train_centroids,
+        _train_sample,
+        ivf_topk,
+    )
+
+    emb = _real_emb(spark)
+    dim = len(emb.select("embedding").first()[0])
+    cents = _train_centroids(
+        _train_sample(emb, 8, 256, "vec_id"), 8, 1, "embedding", "vec_id"
+    )
+    cells = cents + [(8, cents[3][1])]  # exact twin of cell 3
+    nan = float("nan")
+    edge = spark.createDataFrame(
+        [
+            (900001, [0.0] * dim),
+            (900002, [nan] * dim),
+            (900003, [nan] + [0.25] * (dim - 1)),
+            (900004, None),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    queries = emb.unionByName(edge)
+
+    def seq_dot(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc += a * b
+        return acc
+
+    def probe(v):
+        if v is None:
+            scores, qn = [0.0] * len(cells), None
+        else:
+            qn = math.sqrt(seq_dot(v, v))
+            scores = []
+            for _, c in cells:
+                den = qn * math.sqrt(seq_dot(c, c))
+                scores.append(seq_dot(v, c) / den if den != 0 else 0.0)
+        ranked = sorted(
+            zip(scores, (c for c, _ in cells)),
+            key=lambda t: (not math.isnan(t[0]),
+                           0.0 if math.isnan(t[0]) else -t[0], t[1]),
+        )
+        return {c for _, c in ranked[:3]}, qn
+
+    got: dict = {}
+    for r in _probe_cells(queries, cells, 3, "embedding", "vec_id").collect():
+        got.setdefault(r["query_id"], (set(), r["qn"]))[0].add(r["cell"])
+
+    def same(a, b):
+        return a == b or (a is not None and b is not None
+                          and math.isnan(a) and math.isnan(b))
+
+    ref = {r["vec_id"]: probe(r["embedding"]) for r in queries.collect()}
+    assert got.keys() == ref.keys()
+    for qid, (cs, qn) in ref.items():
+        assert got[qid][0] == cs, (qid, got[qid], cs)
+        assert same(got[qid][1], qn), (qid, got[qid][1], qn)
+    # the NULL query keeps its answer: the three lowest cells, qn NULL,
+    # and its IVF neighbours are the lowest candidate ids at cos 0.0
+    assert got[900004] == ({0, 1, 2}, None)
+    res = ivf_topk(emb, edge.filter("vec_id = 900004"), k=3, n_cells=8,
+                   n_probe=3)
+    assert sorted((r["neighbor_id"], r["cos"], r["rank"])
+                  for r in res.collect()) == [(0, 0.0, 1), (1, 0.0, 2),
+                                              (2, 0.0, 3)]
+
+
+def test_pq_topk_null_query_ranks_by_id(spark):
+    """A NULL query's ADC table is +inf everywhere, so every neighbour
+    is at adist +inf and the ranking falls back to the lowest ids."""
+    from agentic_doc_spark.operators.similarity import (
+        pq_encode,
+        pq_topk,
+        pq_train_codebook,
+    )
+
+    emb = _real_emb(spark)
+    cb = pq_train_codebook(emb, m=8, k=16)
+    q = spark.createDataFrame(
+        [(900004, None)], "vec_id long, embedding array<double>"
+    )
+    got = sorted(
+        (r["neighbor_id"], r["adist"], r["rank"])
+        for r in pq_topk(q, pq_encode(emb, cb), cb, topk=3).collect()
+    )
+    inf = float("inf")
+    assert got == [(0, inf, 1), (1, inf, 2), (2, inf, 3)]
+
+
+def test_pq_topk_answers_a_vector_with_no_finite_code(spark):
+    """An all-NaN corpus vector encodes to code -1 in every subspace.
+    Its ADC terms are NaN, so pq_topk and ivfpq_topk rank it after every
+    finite distance instead of failing the query on element_at(_, 0);
+    every other row is unchanged."""
+    import math
+
+    from agentic_doc_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_encode,
+        pq_topk,
+        pq_train_codebook,
+    )
+
+    base = _real_emb(spark)
+    dim = len(base.select("embedding").first()[0])
+    emb = base.unionByName(
+        spark.createDataFrame(
+            [(900002, [float("nan")] * dim)],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    n = emb.count()
+    q = base.filter(F.col("vec_id") < 3)
+    cb = pq_train_codebook(emb, m=8, k=16)
+    codes = pq_encode(emb, cb)
+    assert [r["codes"] for r in codes.filter("vec_id = 900002").collect()] \
+        == [[-1] * 8]
+
+    def split(rows):
+        last = {}
+        for r in rows:
+            if r["neighbor_id"] == 900002:
+                assert math.isnan(r["adist"])
+                last[r["query_id"]] = r["rank"]
+        return last, sorted(
+            tuple(r) for r in rows if r["neighbor_id"] != 900002
+        )
+
+    nan_rank, rest = split(pq_topk(q, codes, cb, topk=n).collect())
+    assert nan_rank == {0: n - 1, 1: n - 1, 2: n - 1}
+    plain = pq_topk(q, pq_encode(base, cb), cb, topk=n).collect()
+    assert rest == sorted(map(tuple, plain))
+
+    nan_rank, rest = split(
+        ivfpq_topk(emb, q, k=n, n_cells=8, n_probe=8, m=8, pq_k=16).collect()
+    )
+    assert nan_rank == {0: n - 1, 1: n - 1, 2: n - 1}
+    assert all(not math.isnan(r[2]) for r in rest)
 
 
 def test_semantic_dedup_kernel_matches_expression_join(spark):
