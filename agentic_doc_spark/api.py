@@ -97,20 +97,26 @@ def parse(
             **({"pattern": connector_pattern} if connector_pattern else {}),
         )
 
-    binary_routed = None
+    # ``source``: the documents_raw input whose payload/metadata columns
+    # _finish_parse joins back; raw bytes carry none
+    binary_routed = source = None
     if "spans" not in df.columns:
-        # raw-binary corpus (directory / bytes / path list): run the
-        # layout-parse stage — txt/md/HTML and text-layer PDFs decode for
-        # real (sources/layout.py, sources/pdf_text.py); an undecodable
+        # raw-binary corpus (directory / bytes / path list): ONE Python
+        # stage, where each batch runs the layout kernel and then the
+        # extract kernel (a small input is one task: every Python task
+        # pays a fixed worker setup; sources/layout._raw_stage). txt/md/
+        # HTML and text-layer PDFs decode for real
+        # (sources/layout.py, sources/pdf_text.py); an undecodable
         # document becomes a one-span ``corrupt`` document, which extract
         # turns into an empty-spans row with per-page error rows
         # (reference parse.py:722-739)
-        from agentic_doc_spark.sources.layout import layout_parse, route_doc_types
+        from agentic_doc_spark.sources.layout import layout_extract, route_doc_types
 
         binary_routed = route_doc_types(df)
-        df = layout_parse(binary_routed, settings)
-
-    parsed = extract(df, settings)
+        parsed = layout_extract(binary_routed, settings)
+    else:
+        source = df
+        parsed = extract(df, settings)
 
     if grounding_save_dir:
         # reference behavior: image_path is populated ONLY when a
@@ -153,7 +159,7 @@ def parse(
 
     try:
         return _finish_parse(
-            df,
+            source,
             parsed,
             settings,
             extraction_model,
@@ -169,7 +175,7 @@ def parse(
 
 
 def _finish_parse(
-    df: DataFrame,
+    source: DataFrame | None,
     parsed: DataFrame,
     settings: Settings,
     extraction_model,
@@ -188,15 +194,16 @@ def _finish_parse(
             schema = T._parse_datatype_string(schema)
         md_col = extraction_metadata_col
         extra = [md_col] if md_col else []
-        if md_col is not None and md_col not in df.columns:
+        cols = source.columns if source is not None else []
+        if md_col is not None and md_col not in cols:
             # silently ignoring a missing metadata column would drop the
             # user's requested extraction_metadata with no signal
             raise ValueError(
                 f"extraction_metadata_col {md_col!r} is not a column of "
-                f"the input (columns: {df.columns})"
+                f"the input (columns: {cols})"
             )
-        if extraction_payload_col in df.columns:
-            payloads = df.select("doc_id", extraction_payload_col, *extra)
+        if extraction_payload_col in cols:
+            payloads = source.select("doc_id", extraction_payload_col, *extra)
             parsed = parsed.join(payloads, "doc_id", "left")
         else:
             # no payload column: NULL payloads validate to a NULL

@@ -408,6 +408,14 @@ def _norm_sql(col: str) -> str:
     )
 
 
+def _vector_rows(train: DataFrame) -> list:
+    """The trainers' one collect of their (id, vector) sample, rows with
+    a NULL vector left out: such a row never seeds a cell and adds
+    nothing to a member mean, as in the DuckDB twins (``arg_min(v, id)``
+    skips a NULL ``v`` and ``unnest(NULL)`` yields no rows)."""
+    return [r for r in train.collect() if r[1] is not None]
+
+
 def _modulo_seeds(rows, k: int) -> dict[int, tuple[int, list]]:
     """Trainer seeds: cell → (id, vector) of the min-id row per
     ``id % k`` bucket, with SQL's TRUNCATED remainder (sign of the
@@ -453,7 +461,7 @@ def _train_centroids(
     test_train_centroids_partition_invariant)."""
     import numpy as np
 
-    rows = train.select(F.col(id_col), F.col(vec_col)).collect()
+    rows = _vector_rows(train.select(F.col(id_col), F.col(vec_col)))
     cents = sorted(
         (c, [float(x) for x in v])
         for c, (_, v) in _modulo_seeds(rows, n_cells).items()
@@ -755,6 +763,13 @@ def semantic_dedup(
     th = float(threshold)
 
     def _cell_survivors(pdf: pd.DataFrame) -> pd.DataFrame:
+        # a NULL vector is no one's near-duplicate (its cos is NULL in
+        # the DuckDB twin): it survives and drops nothing
+        null = pdf[vec_col].isna().to_numpy()
+        survivors = pdf.loc[null, [id_col, "cell"]]
+        pdf = pdf[~null]
+        if pdf.empty:
+            return survivors
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
         vecs = np.stack(pdf[vec_col].to_numpy()[order]).astype(
@@ -789,9 +804,12 @@ def semantic_dedup(
                 tri = np.arange(j0, j1)[None, :] > rows
                 dropped[j0:j1] |= (near & tri).any(axis=0)
         keep = ~dropped
-        return pd.DataFrame(
-            {id_col: ids[keep], "cell": pdf["cell"].to_numpy()[order][keep]}
-        )
+        return pd.concat([
+            pd.DataFrame(
+                {id_col: ids[keep], "cell": pdf["cell"].to_numpy()[order][keep]}
+            ),
+            survivors,
+        ])
 
     return assigned.groupBy("cell").applyInPandas(_cell_survivors, out_schema)
 
@@ -831,21 +849,21 @@ def pq_train_codebook(
 
     The returned DataFrame carries the codebook rows, sorted by (sub,
     cell), as an attached ``_pq_cb_rows`` attribute so
-    ``_codebook_dict`` reads them without a collect job. The corpus
-    head is only read when the sample comes back empty, to validate
-    dim."""
+    ``_codebook_dict`` reads them without a collect job. The corpus is
+    read again, for its first non-NULL vector, only when the sample
+    holds none, to validate dim."""
     import numpy as np
 
     train = _train_sample(
         corpus.select(F.col(id_col), F.col(vec_col)), k, train_per_cell,
         id_col, n=n,
     )
-    srows = train.collect()
+    srows = _vector_rows(train)
     if srows:
         dim = len(srows[0][1])
     else:
-        head = corpus.select(vec_col).first()
-        if head is None or head[0] is None:
+        head = corpus.where(F.col(vec_col).isNotNull()).select(vec_col).first()
+        if head is None:
             raise ValueError("empty corpus: cannot train a PQ codebook")
         dim = len(head[0])
     if dim % m:

@@ -9,10 +9,13 @@ page, their bytes served by ``image_media_table``. A document that
 reaches the parser but cannot be decoded becomes a one-span corrupt
 marker, which extract turns into failed-part error rows.
 
-Everything is one mapInArrow kernel over binaryFile rows: each input row
-becomes one (doc_id, spans) row, its spans already in offset order (a
-document with no blocks gets spans=[]), followed by a hash exchange on
-doc_id that spreads extract over AQE-coalesced tasks.
+The kernel is ``layout_batch``: each binaryFile row becomes one
+(doc_id, spans) row, its spans already in offset order (a document with
+no blocks gets spans=[]). ``layout_extract`` (``api.parse``'s raw route)
+runs it and then ``arrow_engine.extract_batch`` on each batch in ONE
+mapInArrow; ``layout_parse`` runs it alone. Both share ``_raw_stage``,
+whose exchange below the kernel makes a small input one Python task and
+spreads a larger one over every core.
 """
 
 from __future__ import annotations
@@ -214,6 +217,54 @@ _LAYOUT_STRUCT = T.StructType(
 _LAYOUT_SCHEMA = to_arrow_schema(_LAYOUT_STRUCT)
 
 
+def layout_batch(batch: pa.RecordBatch, spans_per_page: int) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, content, doc_type) rows → one batch of
+    documents_raw (doc_id, spans) rows, row for row."""
+    doc_ids = batch.column("doc_id")
+    spans = [
+        _doc_spans(doc_id, data, dt, spans_per_page)
+        for doc_id, data, dt in zip(
+            doc_ids.to_pylist(),
+            batch.column("content").to_pylist(),
+            batch.column("doc_type").to_pylist(),
+        )
+    ]
+    return pa.RecordBatch.from_arrays(
+        [doc_ids, pa.array(spans, _LAYOUT_SCHEMA.field("spans").type)],
+        schema=_LAYOUT_SCHEMA,
+    )
+
+
+#: raw input whose plan estimate exceeds this many bytes spreads over
+#: every core: its kernels cost more than the ≈0.25 s worker setup per
+#: Python task that coalescing saves (layout + extract of text PDFs take
+#: over 1 s of CPU per MB on a 4-vCPU VM)
+_SPREAD_BYTES = 256 * 1024
+#: Spark's default minimum size of an AQE-coalesced partition
+_AQE_MIN_PARTITION_BYTES = 1 << 20
+
+
+def _raw_stage(binary_df: DataFrame, run, schema: T.StructType) -> DataFrame:
+    """The raw rows' one Python stage: ``run`` maps (doc_id, content,
+    doc_type) batches to ``schema`` rows, over an exchange BELOW it.
+
+    The exchange rebalances by doc_id, so AQE sizes the tasks by bytes:
+    a small input (the plan estimates at most ``_SPREAD_BYTES``, or has
+    no estimate: rows built on the driver) becomes one task, since there
+    the per-task worker setup is most of the cost. AQE packs at least
+    1 MB into a task, so input between the two sizes, up to 1 MB per
+    core, would run on fewer tasks than cores; it is dealt round-robin
+    to one task per core instead, so CPU-heavy documents keep their
+    parallelism."""
+    # a file scan's estimate is its files' bytes; local rows report
+    # Long.MaxValue or more
+    size = binary_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cores = binary_df.sparkSession.sparkContext.defaultParallelism
+    if _SPREAD_BYTES < size < cores * _AQE_MIN_PARTITION_BYTES:
+        return binary_df.repartition(cores).mapInArrow(run, schema)
+    return binary_df.hint("rebalance", "doc_id").mapInArrow(run, schema)
+
+
 def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
     """(doc_id, content BINARY, doc_type) → documents_raw (doc_id, spans).
 
@@ -225,26 +276,29 @@ def layout_parse(binary_df: DataFrame, settings=None) -> DataFrame:
     from agentic_doc_spark.config import DEFAULT_SETTINGS
 
     spans_per_page = (settings or DEFAULT_SETTINGS).spans_per_page
-    spans_type = _LAYOUT_SCHEMA.field("spans").type
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc_ids = batch.column("doc_id")
-            spans = [
-                _doc_spans(doc_id, data, dt, spans_per_page)
-                for doc_id, data, dt in zip(
-                    doc_ids.to_pylist(),
-                    batch.column("content").to_pylist(),
-                    batch.column("doc_type").to_pylist(),
-                )
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(spans, spans_type)], schema=_LAYOUT_SCHEMA
-            )
+            yield layout_batch(batch, spans_per_page)
 
-    # the exchange stays: without it extract runs in the scan's few tasks
-    # and parse_small measured slower in 6/6 pairs (python_init_s 2.8 → 6.3 s)
-    return binary_df.mapInArrow(run, _LAYOUT_STRUCT).repartition("doc_id")
+    return _raw_stage(binary_df, run, _LAYOUT_STRUCT)
+
+
+def layout_extract(binary_df: DataFrame, settings) -> DataFrame:
+    """(doc_id, content BINARY, doc_type) → ParsedDocument rows: the
+    layout kernel and then the extract kernel on each batch, in the one
+    Python stage ``layout_parse`` would run alone (what
+    ``extract(layout_parse(df, s), s)`` returns, minus a Python node)."""
+    from agentic_doc_spark.arrow_engine import _OUT_STRUCT, extract_batch
+
+    spans_per_page = settings.spans_per_page
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield extract_batch(layout_batch(batch, spans_per_page), settings)
+
+    return _raw_stage(binary_df, run, _OUT_STRUCT)
 
 
 def route_doc_types(raw: DataFrame) -> DataFrame:

@@ -9,10 +9,17 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+#: the Python-boundary operators of a physical plan
+_PY_OP = (
+    r"\b(MapInPandas|PythonMapInArrow|MapInArrow|FlatMapGroupsInPandas"
+    r"|ArrowEvalPython|BatchEvalPython)\b"
+)
 
 
 def main() -> None:
@@ -34,7 +41,8 @@ def main() -> None:
         "",
         f"Generated by `python scripts/explain_audit.py {sf_dir}`.",
         "For each query: exchanges (shuffles/broadcasts), scan pruning,",
-        "join strategies, and Python-boundary operators.",
+        "join strategies, and Python-boundary operators (counted: each",
+        "node pays one Python worker setup per task).",
         "",
         "| query | exchanges | broadcasts | scans (pruned columns) | joins | python ops |",
         "|---|---|---|---|---|---|",
@@ -52,9 +60,12 @@ def main() -> None:
         joins = sorted(
             set(re.findall(r"(\w*(?:HashJoin|NestedLoopJoin|SortMergeJoin))", plan))
         )
-        pyops = sorted(
-            set(re.findall(r"\b(MapInPandas|PythonMapInArrow|MapInArrow|FlatMapGroupsInPandas|ArrowEvalPython|BatchEvalPython)\b", plan))
-        )
+        # counted, not a set: every Python node pays one worker setup
+        # per task
+        pyops = [
+            f"{op} ×{n}" if n > 1 else op
+            for op, n in sorted(Counter(re.findall(_PY_OP, plan)).items())
+        ]
         ex_cell = f"{n_ex} hash + {n_rr} rr"
         if n_rg:
             ex_cell += f" + {n_rg} range"

@@ -1082,6 +1082,39 @@ def test_semantic_dedup_partition_invariant(spark):
     assert a == b and 0 < len(a) < 40
 
 
+def test_null_embedding_never_seeds_or_moves_a_cell(spark):
+    # one NULL vector among 40 used to crash both trainers (TypeError on
+    # the float() list comprehension). As in the DuckDB twin it seeds no
+    # cell (arg_min skips NULL — id 0 would be cell 0's min-id seed),
+    # adds nothing to a member mean (unnest(NULL) yields no rows) and
+    # is no one's near-duplicate, so it survives in the lowest cell
+    import duckdb
+    import numpy as np
+
+    import __spark_entry__ as e
+    from agentic_doc_spark.operators.similarity import (
+        pq_train_codebook,
+        semantic_dedup,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = [(i, rng.normal(size=16).round(3).tolist()) for i in range(1, 41)]
+    rows = [(0, None)] + vecs
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame(rows, schema)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings(vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    ref = sorted(con.execute(e.oracle_sql()["semantic_dedup"]).fetchall())
+    got = sorted(map(tuple, semantic_dedup(emb, threshold=0.3).collect()))
+    assert got == ref and (0, min(c for _, c in ref)) in got
+
+    def codebook(df):
+        return sorted(map(tuple, pq_train_codebook(df, m=4, k=4).collect()))
+
+    assert codebook(emb) == codebook(spark.createDataFrame(vecs, schema))
+
+
 def test_semantic_dedup_skew_guard_on_single_cluster(spark):
     # pathological corpus: every vector in one tight cluster → one IVF
     # cell holds ~all rows and the within-cell pair join would be O(n²).

@@ -111,10 +111,20 @@ def test_decontaminate_broadcasts_benchmark_side(spark, entry):
     assert "CartesianProduct" not in plan, plan
 
 
+def _python_nodes(plan: str) -> list[tuple[str, str]]:
+    """(Python map node, the plan line directly under it) per node."""
+    lines = plan.splitlines()
+    return [
+        (ln.lstrip(" +-:"), lines[i + 1].lstrip(" +-:"))
+        for i, ln in enumerate(lines[:-1])
+        if ln.lstrip(" +-:").startswith(("MapInArrow", "MapInPandas"))
+    ]
+
+
 def test_layout_parse_is_one_kernel_and_one_exchange(spark):
-    # each raw row leaves the kernel as one nested (doc_id, spans) row,
-    # so the only wide step is the hash exchange that spreads extract
-    # over coalesced tasks — no re-nesting aggregate
+    # each raw row leaves the kernel as one nested (doc_id, spans) row —
+    # no re-nesting aggregate — and the only wide step is the hash
+    # exchange BELOW the kernel, which lets AQE size its Python tasks
     from agentic_doc_spark.sources.layout import layout_parse
 
     raw = spark.createDataFrame(
@@ -124,7 +134,55 @@ def test_layout_parse_is_one_kernel_and_one_exchange(spark):
     plan = _plan(layout_parse(raw))
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 1 and "hashpartitioning" in exchanges[0], plan
+    nodes = _python_nodes(plan)
+    assert len(nodes) == 1, plan
+    assert nodes[0][1].startswith("Exchange hashpartitioning(doc_id"), plan
     assert "Aggregate" not in plan, plan
+
+
+def test_parse_raw_dir_is_one_python_stage(spark, tmp_path):
+    # parse() over raw files is ONE Python node: layout and extract run
+    # back to back in one kernel over rows rebalanced by doc_id, and AQE
+    # coalesces a small directory's exchange into few tasks (each Python
+    # task pays a fixed worker setup)
+    from agentic_doc_spark.api import parse
+
+    for i in range(12):
+        (tmp_path / f"d{i:02d}.txt").write_text(f"title {i}\n\nbody {i}")
+    df = parse(spark, str(tmp_path))
+    nodes = _python_nodes(_plan(df))
+    assert len(nodes) == 1 and nodes[0][0].startswith("MapInArrow"), nodes
+    under = nodes[0][1]
+    assert under.startswith("Exchange hashpartitioning(doc_id"), under
+    assert "REBALANCE_PARTITIONS_BY_COL" in under, under
+    assert len(df.collect()) == 12
+    final = _plan(df)
+    assert "isFinalPlan=true" in final, final
+    lines = [ln.lstrip(" +-:") for ln in final.splitlines()]
+    i = next(i for i, ln in enumerate(lines) if ln.startswith("MapInArrow"))
+    assert lines[i + 1] == "AQEShuffleRead coalesced", final
+
+
+def test_parse_larger_raw_dir_spreads_over_every_core(spark, tmp_path):
+    # above _SPREAD_BYTES the kernels outweigh the per-task setup that
+    # coalescing saves, and AQE would pack ≥ 1 MB into a task: the one
+    # Python node reads a round-robin exchange with one partition per
+    # core, so CPU-heavy documents keep their parallelism
+    from agentic_doc_spark.api import parse
+    from agentic_doc_spark.sources.layout import _SPREAD_BYTES
+
+    block = "word " * 200
+    for i in range(4):
+        n = _SPREAD_BYTES // 3 // len(block)
+        (tmp_path / f"d{i}.txt").write_text("\n\n".join([block] * n))
+    df = parse(spark, str(tmp_path))
+    nodes = _python_nodes(_plan(df))
+    cores = spark.sparkContext.defaultParallelism
+    assert len(nodes) == 1 and nodes[0][0].startswith("MapInArrow"), nodes
+    assert nodes[0][1].startswith(f"Exchange RoundRobinPartitioning({cores})"), nodes
+    assert sorted(r.doc_id[-6:] for r in df.select("doc_id").collect()) == [
+        f"d{i}.txt" for i in range(4)
+    ]
 
 
 def test_grounding_crop_aggregate_reads_unsorted_specs(spark):
