@@ -17,7 +17,7 @@ Representation: a decoded page is an (h, w) uint8 array with 1 = BLACK
 map to samples via their container's photometric convention (TIFF
 PhotometricInterpretation, PDF BlackIs1/Decode).
 
-Scale note: this is a per-page kernel invoked inside mapInPandas decode
+Scale note: this is a per-page kernel invoked inside the row kernels' decode
 ladders — run-loop Python over at most a few thousand runs per scanned
 page, never a per-row Spark UDF.
 """

@@ -25,11 +25,14 @@ features" (WSDM 2010).
 from __future__ import annotations
 
 import re
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # --- shared regex contract -------------------------------------------------
 

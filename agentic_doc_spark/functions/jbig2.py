@@ -28,7 +28,7 @@ third-party JBIG2 implementation exists in this container to
 cross-check; the Qe table is transcribed from the published standard and
 the encoder/decoder are INDEPENDENT walks of the two spec procedures.
 
-Scale note: per-page kernel inside mapInPandas decode ladders — a
+Scale note: per-page kernel inside the row kernels' decode ladders — a
 pixel-loop Python decoder bounded by page size, never a per-row Spark
 UDF.
 """

@@ -24,7 +24,7 @@ this container to cross-check: the context tables are transcribed from
 the published standard and the encoder and decoder are INDEPENDENT
 walks of the spec procedures — agreement on random images pins both.
 
-Scale note: per-image kernel inside mapInPandas decode ladders.
+Scale note: per-image kernel inside the row kernels' decode ladders.
 """
 
 from __future__ import annotations

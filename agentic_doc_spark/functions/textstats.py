@@ -2,7 +2,8 @@
 scoring, token counting, fingerprinting.
 
 Column functions are pure Catalyst expressions (JVM, whole-stage
-codegen, no UDF); the ``*_fast`` functions are mapInPandas kernels.
+codegen, no UDF); the ``*_fast`` functions are Arrow row kernels
+(``kernel.map_arrow``).
 Every query built on them has an exact ANSI-SQL twin in
 __spark_entry__.oracle_sql() — portability across engines is part of
 the contract, so only portable primitives are used (md5, regexp, array
@@ -13,6 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from agentic_doc_spark.kernel import map_arrow
 
 #: tiny language marker sets for the n-gram/stopword heuristic language ID.
 LANG_MARKERS = {
@@ -47,7 +51,7 @@ def token_count_bpe(text: Column) -> Column:
 
 
 def token_counts_fast(df, text_col: str = "text", id_col: str = "doc_id"):
-    """(id, n_ws, n_bpe) in one mapInPandas kernel — BIT-IDENTICAL to
+    """(id, n_ws, n_bpe) in one row kernel — BIT-IDENTICAL to
     ``token_count_ws`` / ``token_count_bpe`` (pinned by
     test_token_counts_fast_matches_expressions): n_ws counts \\S+ runs
     (≡ size of the empty-filtered \\s+ split) and n_bpe counts TOKEN_RE
@@ -56,30 +60,23 @@ def token_counts_fast(df, text_col: str = "text", id_col: str = "doc_id"):
     interpreted regexp machinery per row (~1.3 s at sf1.0 local[32]
     → ~0.45 s)."""
     import re as _re
-    from typing import Iterator
-
-    import pandas as pd
 
     ws_re = _re.compile(r"\S+", _re.ASCII)
     bpe_re = _re.compile(TOKEN_RE, _re.ASCII)
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, n_ws int, n_bpe int"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_ws, n_bpe = [], []
-            for t in pdf[text_col]:
-                if t is None:  # size(split(NULL)) is NULL
-                    n_ws.append(None)
-                    n_bpe.append(None)
-                else:
-                    n_ws.append(len(ws_re.findall(t)))
-                    n_bpe.append(len(bpe_re.findall(t)))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "n_ws": n_ws, "n_bpe": n_bpe}
-            )
+    def body(texts):
+        # size(split(NULL)) is NULL
+        return {
+            "n_ws": [None if t is None else len(ws_re.findall(t)) for t in texts],
+            "n_bpe": [None if t is None else len(bpe_re.findall(t)) for t in texts],
+        }
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    out = [
+        id_col,
+        T.StructField("n_ws", T.IntegerType()),
+        T.StructField("n_bpe", T.IntegerType()),
+    ]
+    return map_arrow(df, [text_col], out, body)
 
 
 def stopword_ratio(text: Column, markers: tuple[str, ...]) -> Column:
@@ -137,7 +134,8 @@ def cjk_ratio(text: Column) -> Column:
 
 def text_profile_fast(df, text_col: str = "text", id_col: str = "doc_id"):
     """Language ID + quality per document: (id, text, pred_lang,
-    quality) rows from one mapInPandas kernel.
+    quality) rows from one row kernel; ``text`` is the input's own
+    Arrow array, passed through.
 
     Language ID: the CJK-character ratio decides 'zh' first (ideographic
     text carries no space-separated stopwords), then the argmax of the
@@ -153,9 +151,6 @@ def text_profile_fast(df, text_col: str = "text", id_col: str = "doc_id"):
     the DuckDB ``quality_langid`` twin in oracle_sql() (pinned by
     test_text_profile_fast_matches_duckdb_twin)."""
     import re as _re
-    from typing import Iterator
-
-    import pandas as pd
 
     from agentic_doc_spark.operators.similarity import _spark_round6
 
@@ -163,11 +158,6 @@ def text_profile_fast(df, text_col: str = "text", id_col: str = "doc_id"):
     cjk_re = _re.compile(CJK_RE)
     punct_re = _re.compile(r"[a-zA-Z0-9\s]", _re.ASCII)
     markers = {k: frozenset(v) for k, v in LANG_MARKERS.items()}
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, {text_col} string,"
-        " pred_lang string, quality double"
-    )
 
     def profile(t):
         if t is None:
@@ -216,23 +206,21 @@ def text_profile_fast(df, text_col: str = "text", id_col: str = "doc_id"):
         quality = 0.3 * len_ok + 0.2 * punct_ok + 0.3 * stop_ok + 0.2 * wl_ok
         return pred, _spark_round6(quality)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            langs, quals = [], []
-            for t in pdf[text_col]:
-                pred, q = profile(t)
-                langs.append(pred)
-                quals.append(q)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    text_col: pdf[text_col],
-                    "pred_lang": langs,
-                    "quality": quals,
-                }
-            )
+    def body(texts):
+        profiles = [profile(t) for t in texts]
+        return {
+            "pred_lang": [pred for pred, _ in profiles],
+            "quality": [q for _, q in profiles],
+        }
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    # id and text pass through as the input's own Arrow arrays
+    out = [
+        id_col,
+        text_col,
+        T.StructField("pred_lang", T.StringType()),
+        T.StructField("quality", T.DoubleType()),
+    ]
+    return map_arrow(df, [text_col], out, body)
 
 
 def normalize_text(text: Column) -> Column:

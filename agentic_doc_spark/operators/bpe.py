@@ -13,9 +13,10 @@ the shape every production tokenizer trainer uses at corpus scale:
    most frequent pair, repeat). Ties break to the lexicographically
    smallest pair — fully deterministic, engine- and partition-order-
    independent.
-3. DISTRIBUTED: application is an Arrow-batched ``mapInPandas``
-   kernel that tokenizes each DISTINCT word once per batch (memoised)
-   — no per-row Python at the Spark level, no JVM round-trips.
+3. DISTRIBUTED: application is an Arrow row kernel
+   (``kernel.map_arrow``) that tokenizes each DISTINCT word once per
+   task (memoised) — no per-row Python at the Spark level, no JVM
+   round-trips.
 
 BPE merge learning is inherently iterative (each merge depends on the
 previous), so these queries carry no DuckDB oracle twin; correctness
@@ -24,10 +25,13 @@ is pinned by pytest against an independent reference implementation.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from agentic_doc_spark.kernel import map_arrow
 
 END = "</w>"
 
@@ -153,37 +157,30 @@ def apply_bpe(
     table is closure-captured (bounded: ``n_merges`` entries), not a
     join."""
     ranks = {p: i for i, p in enumerate(merges)}
-    # carry the caller's actual id dtype through (doc ids are strings
-    # in documents_raw frames, longs in the benchmark tables)
-    id_type = docs.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, n_words long, n_bpe_tokens long"
+    memo: dict[str, int] = {}
 
-    def kernel(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def count(text: str | None) -> tuple[int, int]:
+        words = [w for w in (text or "").split(" ") if w]
+        total = 0
+        for w in words:
+            n = memo.get(w)
+            if n is None:
+                n = memo[w] = len(encode_word(w, ranks))
+            total += n
+        return len(words), total
 
-        memo: dict[str, int] = {}
+    def body(texts):
+        counts = [count(t) for t in texts]
+        return {
+            "n_words": [nw for nw, _ in counts],
+            "n_bpe_tokens": [nb for _, nb in counts],
+        }
 
-        def count(text: str) -> tuple[int, int]:
-            words = [w for w in (text or "").split(" ") if w]
-            total = 0
-            for w in words:
-                n = memo.get(w)
-                if n is None:
-                    n = len(encode_word(w, ranks))
-                    memo[w] = n
-                total += n
-            return len(words), total
-
-        for pdf in batches:
-            nw, nb = zip(*(count(t) for t in pdf[text_col])) if len(
-                pdf
-            ) else ((), ())
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_words": list(nw),
-                    "n_bpe_tokens": list(nb),
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, schema)
+    # the caller's id type passes through (doc ids are strings in
+    # documents_raw frames, longs in the benchmark tables)
+    out = [
+        id_col,
+        T.StructField("n_words", T.LongType()),
+        T.StructField("n_bpe_tokens", T.LongType()),
+    ]
+    return map_arrow(docs, [text_col], out, body)

@@ -24,10 +24,16 @@ only within candidate buckets.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from agentic_doc_spark.functions.textstats import normalize_text, words
+from agentic_doc_spark.kernel import map_arrow
 
 
 # --- exact -----------------------------------------------------------------
@@ -76,23 +82,48 @@ def _plan_node_names(df: DataFrame) -> list[str] | None:
         return None
 
 
-# --- kernel-side normalization (shared) --------------------------------------
+# --- kernel-side tokenizing (shared) -----------------------------------------
+
+#: Java's \s: ``re.ASCII`` — Python's default \s is Unicode and would also
+#: match NBSP/U+3000 etc., which the Catalyst regex and the DuckDB RE2
+#: twin do NOT
+_WS_RE = re.compile(r"\s+", re.ASCII)
 
 
-def _norm_series_py(texts):
-    """pandas twin of ``normalize_text`` + the ``words`` split contract,
-    bit-for-bit: lower, collapse JAVA-\\s runs (``re.ASCII`` — Python's
-    default \\s is Unicode and would also match NBSP/U+3000 etc., which
-    the Catalyst regex and the DuckDB RE2 twin do NOT), then trim the
-    0x20 SPACE only (``F.trim`` strips spaces, not all whitespace).
-    Every mapInPandas kernel that tokenizes like the expressions MUST
-    route through here so the normalization cannot drift per kernel."""
-    import re
+def _norm_py(text: str) -> str:
+    """Scalar twin of ``normalize_text``, bit for bit: lower (Python's
+    ``str.lower``, not ``pc.utf8_lower``, which differs on some code
+    points), collapse Java-\\s runs to one space, then strip the 0x20
+    SPACE only (``F.trim`` strips spaces, not all whitespace). Every
+    kernel that tokenizes like the expressions routes through here so
+    the normalization cannot drift per kernel."""
+    return _WS_RE.sub(" ", text.lower()).strip(" ")
 
-    ws = re.compile(r"\s+", re.ASCII)
-    return (
-        texts.fillna("").str.replace(ws, " ", regex=True).str.strip(" ")
-    )
+
+def _tokens_py(text: str | None) -> list[str]:
+    """``words(normalize_text(text))``: the normalized text's tokens,
+    [] for empty, whitespace-only or NULL text."""
+    norm = _norm_py(text) if text is not None else ""
+    return norm.split(" ") if norm else []
+
+
+def _md5_key64_py(s: str) -> int:
+    """Python twin of ``_md5_key64``: the first 15 hex chars of the
+    utf-8 md5 as an int."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _shingle_keys(text: str | None, k: int) -> list[int | None]:
+    """``transform(shingles(text, k), _md5_key64)`` in Python: the 60-bit
+    fold of each DISTINCT k-shingle string of the document, in no
+    particular order. A text shorter than k tokens is one shingle (''
+    when it has none). NULL text is one NULL shingle, as in the
+    expression, so it has one NULL key."""
+    if text is None:
+        return [None]
+    toks = _tokens_py(text)
+    n = max(len(toks) - k + 1, 1)
+    return [_md5_key64_py(g) for g in {" ".join(toks[i : i + k]) for i in range(n)}]
 
 
 # --- shingles (shared) -------------------------------------------------------
@@ -228,88 +259,76 @@ def minhash_bands_fast(
 ) -> DataFrame:
     """Arrow fast path of :func:`minhash_bands` — BIT-IDENTICAL band keys
     (same md5 base hash, same linear maps, same band digest), computed in
-    a mapInPandas kernel: normalization and tokenization are pandas .str
-    ops, the per-seed minima are one numpy reduction per document, and
-    hashlib.md5 (C) replaces the interpreted-HOF md5 chain. Measured ~5×
-    faster than the expression version on the sf ladder. The per-doc
-    math is the shared ``_batch_bands_shingles`` core (one
-    implementation for this kernel and the lsh base table)."""
-    from typing import Iterator
+    a row kernel: the per-seed minima are one numpy reduction per
+    document, and hashlib.md5 (C) replaces the interpreted-HOF md5
+    chain. Measured ~5× faster than the expression version on the sf
+    ladder. The per-doc math is the shared ``_batch_bands_shingles``
+    core (one implementation for this kernel and the lsh base table)."""
 
-    import pandas as pd
+    def body(ids, texts):
+        keys, _ = _batch_bands_shingles(texts, num_hashes, bands, k, want_sh=False)
+        return {
+            id_col: [i for i in ids for _ in range(bands)],
+            "band_idx": list(range(bands)) * len(ids),
+            "band_key": [key for ks in keys for key in ks],
+        }
 
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, band_idx int, band_key string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, keys, _ = _batch_bands_shingles(
-                pdf, text_col, id_col, num_hashes, bands, k, want_sh=False
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: [i for i, ks in zip(ids, keys) for _ in ks],
-                    "band_idx": [bi for ks in keys for bi in range(len(ks))],
-                    "band_key": [key for ks in keys for key in ks],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    out = [
+        id_col,
+        T.StructField("band_idx", T.IntegerType()),
+        T.StructField("band_key", T.StringType()),
+    ]
+    return map_arrow(df, [id_col, text_col], out, body)
 
 
 def _batch_bands_shingles(
-    pdf,
-    text_col: str,
-    id_col: str,
+    texts: list[str | None],
     num_hashes: int,
     bands: int,
     k: int,
     want_sh: bool,
 ):
     """Per-batch minhash core shared by ``minhash_bands_fast`` and
-    ``minhash_bands_with_shingles``: normalize (``_norm_series_py``),
-    build each doc's distinct k-shingle set, fold one C md5 per shingle
-    to the 60-bit int, derive the seeded-linear-map signature minima,
-    digest the band keys. Returns (ids, band_keys per doc, sorted
-    distinct 60-bit shingle arrays per doc or None). One implementation
-    so the shingle→signature→band-key contract cannot drift between
-    the kernels (the bit-identity tests pin it against the
-    expressions)."""
-    import hashlib as _hl
+    ``minhash_bands_with_shingles``: each document's distinct k-shingle
+    keys (``_shingle_keys``), folded to the 31-bit base hash, the
+    seeded-linear-map signature minima, the band-key digests. Returns
+    (band keys per doc, sorted distinct 60-bit shingle keys per doc or
+    None). One implementation so the shingle→signature→band-key
+    contract cannot drift between the kernels (the bit-identity tests
+    pin it against the expressions).
 
-    import numpy as np
-
+    NULL text follows the expression: its one NULL shingle makes every
+    signature minimum NULL, ``array_join`` skips NULLs, so every band
+    key is md5(''), and its key set is [NULL]."""
     rows_per_band = num_hashes // bands
     a = np.array([2 * s + 1 for s in range(num_hashes)], dtype=np.int64)
     b = np.array([12289 * s + 1 for s in range(num_hashes)], dtype=np.int64)
-    norm = _norm_series_py(pdf[text_col].str.lower())
-    out_ids, out_keys, out_sh = [], [], ([] if want_sh else None)
-    for doc_id, text in zip(pdf[id_col], norm):
-        toks = text.split(" ") if text else []
-        n = max(len(toks) - k + 1, 1)
-        sh = {" ".join(toks[i : i + k]) for i in range(n)}
-        h60 = np.fromiter(
-            (int(_hl.md5(g.encode()).hexdigest()[:15], 16) for g in sh),
-            dtype=np.int64,
-            count=len(sh),
-        )
+    null_keys = [hashlib.md5(b"").hexdigest()] * bands
+    out_keys, out_sh = [], ([] if want_sh else None)
+    for text in texts:
+        if text is None:
+            out_keys.append(null_keys)
+            if want_sh:
+                out_sh.append([None])
+            continue
+        h60 = np.array(_shingle_keys(text, k), dtype=np.int64)
         hv = h60 % MINHASH_P
         # (num_hashes, n_shingles) minima in one vectorized shot
         sig = ((a[:, None] * hv[None, :] + b[:, None]) % MINHASH_P).min(axis=1)
-        keys = [
-            _hl.md5(
-                "_".join(
-                    str(x)
-                    for x in sig[bi * rows_per_band : (bi + 1) * rows_per_band]
-                ).encode()
-            ).hexdigest()
-            for bi in range(bands)
-        ]
-        out_ids.append(doc_id)
-        out_keys.append(keys)
+        out_keys.append(
+            [
+                hashlib.md5(
+                    "_".join(
+                        str(x)
+                        for x in sig[bi * rows_per_band : (bi + 1) * rows_per_band]
+                    ).encode()
+                ).hexdigest()
+                for bi in range(bands)
+            ]
+        )
         if want_sh:
             out_sh.append(np.unique(h60).tolist())
-    return out_ids, out_keys, out_sh
+    return out_keys, out_sh
 
 
 def minhash_bands_with_shingles(
@@ -329,31 +348,25 @@ def minhash_bands_with_shingles(
     test_minhash_with_shingles_bands_bit_identical). ``sh`` is the
     document's DISTINCT shingle set folded to 60-bit ints (first 15 hex
     chars of the SAME per-shingle md5 the signature uses — one C md5 per
-    shingle covers both outputs), sorted ascending. Verification
+    shingle covers both outputs), sorted ascending; NULL text has the
+    one NULL element ``shingles`` gives it, so a pair of NULL documents
+    verifies at Jaccard 1 instead of dividing by zero. Verification
     intersects these int sets instead of the shingle strings: identical
     counts unless two distinct shingles of one candidate pair collide in
     60 bits (~n²/2^61 per pair — negligible; the ``jaccard_pairs``
     xxhash64 fold makes the same argument), and the verify join ships
     8-byte ints instead of ~20-byte strings."""
-    from typing import Iterator
 
-    import pandas as pd
+    def body(texts):
+        keys, shs = _batch_bands_shingles(texts, num_hashes, bands, k, want_sh=True)
+        return {"band_keys": keys, "sh": shs}
 
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = (
-        f"{id_col} {id_type}, band_keys array<string>, sh array<bigint>"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, keys, shs = _batch_bands_shingles(
-                pdf, text_col, id_col, num_hashes, bands, k, want_sh=True
-            )
-            yield pd.DataFrame(
-                {id_col: ids, "band_keys": keys, "sh": shs}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    out = [
+        id_col,
+        T.StructField("band_keys", T.ArrayType(T.StringType())),
+        T.StructField("sh", T.ArrayType(T.LongType())),
+    ]
+    return map_arrow(df, [text_col], out, body)
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -395,53 +408,41 @@ def simhash_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
 ) -> DataFrame:
     """Arrow fast path of the ``simhash`` expression — BIT-IDENTICAL
-    fingerprints (same normalization, same md5-hex-digit parity votes,
-    same 2^j bit assembly; pure integer arithmetic, so no float-order
-    concerns), computed in a mapInPandas kernel: hashlib.md5 (C) runs
-    once per token instead of the interpreted-HOF chain re-evaluating
-    the full tokenize+md5 subtree once PER BIT (the expression plan
-    embeds ``md5s`` inside the per-bit lambda — 16× the hash work;
-    measured ~5× faster at sf1). Pinned bit-identical to ``simhash``
-    by test_simhash_fast_path_bit_identical."""
-    import hashlib as _hl
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
+    fingerprints (same tokens via ``_tokens_py``, same md5-hex-digit
+    parity votes, same 2^j bit assembly; pure integer arithmetic, so no
+    float-order concerns), computed in a row kernel: hashlib.md5 (C)
+    runs once per token instead of the interpreted-HOF chain
+    re-evaluating the full tokenize+md5 subtree once PER BIT (the
+    expression plan embeds ``md5s`` inside the per-bit lambda — 16×
+    the hash work; measured ~5× faster at sf1). NULL text votes nothing
+    and fingerprints 0, as in the expression. Pinned bit-identical to
+    ``simhash`` by test_simhash_fast_path_bit_identical."""
     assert bits <= 32
-    id_type = dict(df.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, simhash bigint"
     weights = np.power(2, np.arange(bits), dtype=np.int64)
-
     n_bytes = (bits + 1) // 2  # hex digits j in [0, bits) live in these
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            norm = _norm_series_py(pdf[text_col].str.lower())
-            out = np.zeros(len(pdf), dtype=np.int64)
-            for row_i, text in enumerate(norm):
-                toks = text.split(" ") if text else []
-                if not toks:
-                    continue
-                # bit j of a token's vote = parity of hex digit j of
-                # md5(token): digit j lives in digest byte j//2, high
-                # nibble for even j — identical to the expression's
-                # conv(substr(hex, j+1, 1), 16, 10) % 2
-                dig = np.frombuffer(
-                    b"".join(
-                        _hl.md5(t.encode()).digest()[:n_bytes] for t in toks
-                    ),
-                    dtype=np.uint8,
-                ).reshape(len(toks), n_bytes)
-                parity = np.empty((len(toks), 2 * n_bytes), dtype=np.int64)
-                parity[:, 0::2] = (dig >> 4) & 1  # even j: high nibble
-                parity[:, 1::2] = dig & 1  # odd j: low nibble
-                votes = (2 * parity[:, :bits] - 1).sum(axis=0)
-                out[row_i] = int(weights[votes > 0].sum())
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+    def fingerprint(text):
+        toks = _tokens_py(text)
+        if not toks:
+            return 0
+        # bit j of a token's vote = parity of hex digit j of md5(token):
+        # digit j lives in digest byte j//2, high nibble for even j —
+        # identical to the expression's conv(substr(hex, j+1, 1), 16, 10) % 2
+        dig = np.frombuffer(
+            b"".join(hashlib.md5(t.encode()).digest()[:n_bytes] for t in toks),
+            dtype=np.uint8,
+        ).reshape(len(toks), n_bytes)
+        parity = np.empty((len(toks), 2 * n_bytes), dtype=np.int64)
+        parity[:, 0::2] = (dig >> 4) & 1  # even j: high nibble
+        parity[:, 1::2] = dig & 1  # odd j: low nibble
+        votes = (2 * parity[:, :bits] - 1).sum(axis=0)
+        return int(weights[votes > 0].sum())
 
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    def body(texts):
+        return {"simhash": [fingerprint(t) for t in texts]}
+
+    out = [id_col, T.StructField("simhash", T.LongType())]
+    return map_arrow(df, [text_col], out, body)
 
 
 def simhash_near_pairs(
@@ -767,40 +768,25 @@ def _gram_hashes_fast(
     id_col: str | None,
 ) -> DataFrame:
     """(id, h) — one row per DISTINCT k-token shingle per document,
-    ``h`` = the 60-bit md5 fold (``_md5_key64`` semantics: first 15 hex
-    chars of md5 → BIGINT), computed in a mapInPandas kernel: the same
-    normalization + shingle construction as ``shingles()`` (pinned
-    bit-identical for this construction by the minhash fast-path test),
-    with hashlib.md5 (C) replacing the interpreted-HOF slice/join/hash
-    chain. ``id_col=None`` emits just the hash column (benchmark side)."""
-    import hashlib as _hl
-    from typing import Iterator
+    ``h`` = its 60-bit md5 fold: the rows of
+    ``explode(transform(shingles(text, k), _md5_key64))`` (pinned by
+    test_gram_hashes_fast_matches_shingles_expression), computed by
+    ``_shingle_keys`` with hashlib.md5 (C) replacing the interpreted-HOF
+    slice/join/hash chain. NULL text is one row with a NULL ``h``, which
+    no join matches. ``id_col=None`` emits just the hash column
+    (benchmark side)."""
+    h = T.StructField("h", T.LongType())
+    if id_col is None:
 
-    import pandas as pd
+        def hashes(texts):
+            return {"h": [x for t in texts for x in _shingle_keys(t, k)]}
 
-    cols = [id_col, text_col] if id_col else [text_col]
-    id_type = dict(df.dtypes).get(id_col) if id_col else None
-    out_schema = (f"{id_col} {id_type}, " if id_col else "") + "h bigint"
+        return map_arrow(df, [text_col], [h], hashes)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            norm = _norm_series_py(pdf[text_col].str.lower())
-            out_ids, out_h = [], []
-            ids = pdf[id_col] if id_col else norm  # dummy iterable
-            for doc_id, text in zip(ids, norm):
-                toks = text.split(" ") if text else []
-                n = max(len(toks) - k + 1, 1)
-                sh = {" ".join(toks[i : i + k]) for i in range(n)}
-                for g in sh:
-                    out_h.append(int(_hl.md5(g.encode()).hexdigest()[:15], 16))
-                if id_col:
-                    out_ids.extend([doc_id] * len(sh))
-            data = {"h": out_h}
-            if id_col:
-                data = {id_col: out_ids, "h": out_h}
-            yield pd.DataFrame(data)
+    def body(ids, texts):
+        return [(i, x) for i, t in zip(ids, texts) for x in _shingle_keys(t, k)]
 
-    return df.select(*cols).mapInPandas(run, out_schema)
+    return map_arrow(df, [id_col, text_col], [id_col, h], body)
 
 
 def decontaminate(
@@ -820,7 +806,7 @@ def decontaminate(
     to (doc, shingle-hash) rows but the map-side LEFT SEMI against the
     broadcast emits only contaminated ids (tiny), and the final LEFT
     ANTI is narrow-vs-corpus. Shingle construction + hashing run in the
-    ``_gram_hashes_fast`` mapInPandas kernel (C md5, one pass — the
+    ``_gram_hashes_fast`` row kernel (C md5, one pass — the
     interpreted-HOF slice/join/hash chain it replaces measured 3.7 s →
     ~1.3 s at sf1.0 local[32]); both sides fold to the 60-bit
     ``_md5_key64`` key (NOT the 31-bit minhash base fold, whose
@@ -898,7 +884,7 @@ def duplicate_gram_spans(
     covered exactly (its k-windows chain into one merged interval);
     shorter overlaps are not flagged.
 
-    Plan: gram keys + positions from ONE lineage-truncated mapInPandas
+    Plan: gram keys + positions from ONE lineage-truncated row
     kernel pass (r6 rework: the previous posexplode + interpreted
     slice/join/md5 chain was re-evaluated by BOTH consumers below —
     the aggregation side and the semi-join side — so the corpus was
@@ -911,42 +897,28 @@ def duplicate_gram_spans(
     (AQE broadcasts the hot-gram set when small) → per-doc interval
     merge via running-max windows PARTITIONED by doc (no global
     sort)."""
-    import hashlib as _hl
-    import re as _re
-    from typing import Iterator
 
-    import pandas as pd
+    def body(ids, texts):
+        out_ids, out_p, out_g = [], [], []
+        for doc_id, text in zip(ids, texts):
+            if text is None:
+                continue  # split(trim(null)) → size -1, filtered
+            # F.trim strips 0x20 only; split keeps leading/trailing
+            # empty tokens exactly as Java split(limit=-1)
+            toks = _WS_RE.split(text.strip(" "))
+            n = len(toks) - k
+            for p in range(n + 1):
+                out_ids.append(doc_id)
+                out_p.append(p)
+                out_g.append(_md5_key64_py("\x1f".join(toks[p : p + k])))
+        return {id_col: out_ids, "p": out_p, "g": out_g}
 
-    id_type = dict(docs.dtypes)[id_col]
-    out_schema = f"{id_col} {id_type}, p int, g bigint"
-    ws = _re.compile(r"\s+", _re.ASCII)  # Java \s == ASCII \s
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_p, out_g = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue  # split(trim(null)) → size -1, filtered
-                # F.trim strips 0x20 only; split keeps leading/trailing
-                # empty tokens exactly as Java split(limit=-1)
-                toks = ws.split(text.strip(" "))
-                n = len(toks) - k
-                if n < 0:
-                    continue
-                for p in range(n + 1):
-                    gram = "\x1f".join(toks[p : p + k])
-                    out_ids.append(doc_id)
-                    out_p.append(p)
-                    out_g.append(
-                        int(_hl.md5(gram.encode()).hexdigest()[:15], 16)
-                    )
-            yield pd.DataFrame(
-                {id_col: out_ids, "p": out_p, "g": out_g}
-            )
-
-    grams = _truncate_lineage(
-        docs.select(id_col, text_col).mapInPandas(run, out_schema)
-    )
+    out = [
+        id_col,
+        T.StructField("p", T.IntegerType()),
+        T.StructField("g", T.LongType()),
+    ]
+    grams = _truncate_lineage(map_arrow(docs, [id_col, text_col], out, body))
     # "occurs in more than one document" ⟺ min(id) ≠ max(id) — the
     # count_distinct form planned an extra distinct-expansion phase
     # over the ~all-unique gram stream; min/max partial-aggregate

@@ -15,23 +15,22 @@ MJPEG and raw-DIB AVIs plus animated GIFs; the
 reference fills the same contract with cv2/pymupdf
 (agentic_doc/utils.py:110-211, K1/K2).
 
-All operators are mapInPandas — one Arrow batch in/out, no per-row Python
-at the Spark level; the pandas frame is processed with vectorized ops plus
-a tight loop over binary payloads (unavoidable for codecs; each payload is
+All operators are Arrow row kernels (``kernel.map_arrow``) — one Arrow
+batch in/out, no per-row Python at the Spark level; each batch is a
+tight loop over binary payloads (unavoidable for codecs; each payload is
 itself bulk work).
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from agentic_doc_spark.functions import bmp, gif, jpeg, jpx, png, tiff
+from agentic_doc_spark.kernel import map_arrow
 
 try:  # real decoder if ever available — not in this container
     from PIL import Image  # noqa: F401
@@ -164,19 +163,14 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     decode cost dominates so partitioning by file size (maxPartitionBytes)
     load-balances executors."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(data) if data is not None else b""
-                w, h, feat, ok = _decode_image(b)
-                rows.append((ref, w, h, feat.tolist(), ok))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "width", "height", "features", "decoded"],
-            )
+    def body(refs, contents):
+        rows = []
+        for ref, data in zip(refs, contents):
+            w, h, feat, ok = _decode_image(data or b"")
+            rows.append((ref, w, h, feat.tolist(), ok))
+        return rows
 
-    return media.mapInPandas(run, _FEATURES_SCHEMA)
+    return map_arrow(media, ["media_ref", "content"], _FEATURES_SCHEMA, body)
 
 
 def _safe_path_part(col) -> "F.Column":
@@ -456,7 +450,7 @@ def render_grounding_crops(
     (doc_id, page) — the chunk_id-first sort of each group is the
     z-order of synthesized blocks — and ``pages`` (doc_id, page,
     content BINARY: renderer output, scanned rasters; optional)
-    LEFT-joins on that key. One mapInPandas row is one page, so each
+    LEFT-joins on that key. One kernel row is one page, so each
     page decodes once by construction (``_page_crops``); a page with no
     raster, or whose raster does not decode, is synthesized from the
     layout (``_synth_page``) — every valid grounding gets its crop, the
@@ -486,18 +480,14 @@ def render_grounding_crops(
             pages.select("doc_id", "page", "content"), ["doc_id", "page"], "left"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, rel, bytearray(png))
-                for doc_id, cs, data in zip(pdf["doc_id"], pdf["cs"], pdf["content"])
-                for rel, png in _page_crops(cs, data, page_width, page_height)
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "rel_path", "content"])
+    def body(doc_ids, css, contents):
+        return [
+            (doc_id, rel, png)
+            for doc_id, cs, data in zip(doc_ids, css, contents)
+            for rel, png in _page_crops(cs, data, page_width, page_height)
+        ]
 
-    return per_page.select("doc_id", "cs", "content").mapInPandas(
-        run, _CROPS_SCHEMA
-    )
+    return map_arrow(per_page, ["doc_id", "cs", "content"], _CROPS_SCHEMA, body)
 
 
 def write_grounding_images(crops: DataFrame, save_dir: str) -> None:
@@ -549,29 +539,27 @@ def resize_media(media: DataFrame, width: int = 224, height: int = 224) -> DataF
     payloads: a deterministic sha-derived payload of the target shape so
     batching/schema stay production-shaped.
 
-    Scale: pure mapInPandas over binary parquet — decode dominates, so
+    Scale: one row kernel over binary parquet — decode dominates, so
     partitioning by file size (maxPartitionBytes) load-balances; output
     bytes are bounded by the target shape, not the input."""
     from agentic_doc_spark.functions.png import encode_png, resize_nearest
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(data) if data is not None else b""
-                arr = _decode_array(b)
-                if arr is not None:
-                    out = encode_png(resize_nearest(arr, width, height))
-                else:  # deterministic fake, bounded size
-                    seed = hashlib.sha256(b).digest()
-                    reps = (width * height * 3) // len(seed) + 1
-                    out = (seed * reps)[: width * height * 3]
-                rows.append((ref, width, height, bytearray(out)))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "width", "height", "content"]
-            )
+    def resized(b: bytes) -> bytes:
+        arr = _decode_array(b)
+        if arr is not None:
+            return encode_png(resize_nearest(arr, width, height))
+        # deterministic fake, bounded size
+        seed = hashlib.sha256(b).digest()
+        reps = (width * height * 3) // len(seed) + 1
+        return (seed * reps)[: width * height * 3]
 
-    return media.mapInPandas(run, _RESIZED_SCHEMA)
+    def body(refs, contents):
+        return [
+            (ref, width, height, resized(data or b""))
+            for ref, data in zip(refs, contents)
+        ]
+
+    return map_arrow(media, ["media_ref", "content"], _RESIZED_SCHEMA, body)
 
 
 _FRAME_SCHEMA = T.StructType(
@@ -596,76 +584,48 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     demuxable AVI keep the previous deterministic byte-slice contract
     with ``decoded=False`` — the same surfaced boundary as
     extract_media_features."""
+    from agentic_doc_spark.functions.riff import extract_avi_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from agentic_doc_spark.functions.riff import extract_avi_frames
+    def sha16(b: bytes) -> str:
+        return hashlib.sha256(b).hexdigest()[:16]
 
-        for pdf in batches:
+    def frame_rows(ref, b: bytes) -> list[tuple]:
+        frames = extract_avi_frames(b)
+        if frames:
             rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(data) if data is not None else b""
-                frames = extract_avi_frames(b)
-                if frames:
-                    for i in range(0, len(frames), every_n):
-                        arr = _decode_array(frames[i])
-                        h, w = arr.shape[:2] if arr is not None else (0, 0)
-                        rows.append(
-                            (
-                                ref,
-                                i,
-                                int(w),
-                                int(h),
-                                hashlib.sha256(frames[i]).hexdigest()[:16],
-                                arr is not None,
-                            )
-                        )
-                    continue
-                if gif.is_gif(b):
-                    try:
-                        # stride retains only the sampled frames: every
-                        # frame is still COMPOSED (disposal semantics),
-                        # but memory holds n/every_n canvases, not n
-                        composed = gif.gif_frames(b, stride=every_n)
-                    except Exception:
-                        composed = []
-                    if composed:
-                        for i, arr in enumerate(composed):
-                            rows.append(
-                                (
-                                    ref,
-                                    i * every_n,
-                                    int(arr.shape[1]),
-                                    int(arr.shape[0]),
-                                    hashlib.sha256(
-                                        arr.tobytes()
-                                    ).hexdigest()[:16],
-                                    True,
-                                )
-                            )
-                        continue
-                # non-AVI/GIF payload: deterministic fake slices, surfaced
-                n_frames = max(1, len(b) // 256)
-                for i in range(0, n_frames, every_n):
-                    chunk = b[i * 256 : (i + 1) * 256]
-                    rows.append(
-                        (
-                            ref,
-                            i,
-                            0,
-                            0,
-                            hashlib.sha256(chunk).hexdigest()[:16],
-                            False,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "frame_idx", "width", "height",
-                    "frame_sha", "decoded",
-                ],
-            )
+            for i in range(0, len(frames), every_n):
+                arr = _decode_array(frames[i])
+                h, w = arr.shape[:2] if arr is not None else (0, 0)
+                rows.append((ref, i, int(w), int(h), sha16(frames[i]), arr is not None))
+            return rows
+        if gif.is_gif(b):
+            try:
+                # stride retains only the sampled frames: every frame is
+                # still COMPOSED (disposal semantics), but memory holds
+                # n/every_n canvases, not n
+                composed = gif.gif_frames(b, stride=every_n)
+            except Exception:
+                composed = []
+            if composed:
+                return [
+                    (ref, i * every_n, a.shape[1], a.shape[0], sha16(a.tobytes()), True)
+                    for i, a in enumerate(composed)
+                ]
+        # non-AVI/GIF payload: deterministic fake slices, surfaced
+        n_frames = max(1, len(b) // 256)
+        return [
+            (ref, i, 0, 0, sha16(b[i * 256 : (i + 1) * 256]), False)
+            for i in range(0, n_frames, every_n)
+        ]
 
-    return media.mapInPandas(run, _FRAME_SCHEMA)
+    def body(refs, contents):
+        return [
+            row
+            for ref, data in zip(refs, contents)
+            for row in frame_rows(ref, data or b"")
+        ]
+
+    return map_arrow(media, ["media_ref", "content"], _FRAME_SCHEMA, body)
 
 
 _AUDIO_SCHEMA = T.StructType(
@@ -690,61 +650,33 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     stdlib, 8/16-bit integer and float32, multi-channel downmixed);
     other codecs (mp3/ogg/flac need decoders this container lacks) take
     the deterministic hash fake with ``decoded=False`` — the same
-    surfaced boundary as the image/video operators. mapInPandas over
+    surfaced boundary as the image/video operators. One row kernel over
     binary parquet; decode dominates, so size-based partitioning
     (maxPartitionBytes) load-balances."""
+    from agentic_doc_spark.functions.riff import parse_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from agentic_doc_spark.functions.riff import parse_wav
-
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(data) if data is not None else b""
-                w = parse_wav(b)
-                if w is not None and len(w["samples"]):
-                    x = w["samples"]
-                    sr = w["sample_rate"]
-                    zc = (
-                        float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                        if len(x) > 1
-                        else 0.0  # a 1-sample clip has no crossings
-                    )
-                    rows.append(
-                        (
-                            ref,
-                            sr,
-                            w["channels"],
-                            len(x) / sr,
-                            float(np.sqrt(np.mean(x * x))),
-                            zc,
-                            float(np.max(np.abs(x))),
-                            True,
-                        )
-                    )
-                else:  # deterministic fake, surfaced
-                    seed = hashlib.sha256(b).digest()
-                    rows.append(
-                        (
-                            ref,
-                            16000,
-                            1,
-                            (seed[0] % 60) + 1.0,
-                            seed[1] / 512.0,
-                            seed[2] / 512.0,
-                            seed[3] / 256.0,
-                            False,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "sample_rate", "channels", "duration_sec",
-                    "rms", "zero_cross_rate", "peak", "decoded",
-                ],
+    def features(ref, b: bytes) -> tuple:
+        w = parse_wav(b)
+        if w is not None and len(w["samples"]):
+            x = w["samples"]
+            sr = w["sample_rate"]
+            zc = (
+                float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
+                if len(x) > 1
+                else 0.0  # a 1-sample clip has no crossings
             )
+            rms = float(np.sqrt(np.mean(x * x)))
+            peak = float(np.max(np.abs(x)))
+            return (ref, sr, w["channels"], len(x) / sr, rms, zc, peak, True)
+        # deterministic fake, surfaced
+        seed = hashlib.sha256(b).digest()
+        fake = (seed[0] % 60 + 1.0, seed[1] / 512.0, seed[2] / 512.0, seed[3] / 256.0)
+        return (ref, 16000, 1, *fake, False)
 
-    return media.mapInPandas(run, _AUDIO_SCHEMA)
+    def body(refs, contents):
+        return [features(ref, data or b"") for ref, data in zip(refs, contents)]
+
+    return map_arrow(media, ["media_ref", "content"], _AUDIO_SCHEMA, body)
 
 
 def strip_media_boilerplate(

@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from agentic_doc_spark.kernel import map_arrow
 
 
 def _bucket_counts(
@@ -46,51 +49,34 @@ def _bucket_counts(
     needs, so the consumer never shuffles to re-group or re-sort.
     Replaces the explode → expression md5 per token → partial-agg
     shuffle shape. Integer-only, so there is no float-parity surface."""
-    id_type = docs.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_type}, _is_t boolean,"
-        " buckets array<bigint>, counts array<bigint>"
-    )
+    from collections import Counter
 
-    def kernel(batches):
-        import hashlib
-        from collections import Counter
+    from agentic_doc_spark.operators.dedup import _md5_key64_py
 
-        import pandas as pd
+    memo: dict[str, int] = {}
 
-        memo: dict[str, int] = {}
+    def bucket(w: str) -> int:
+        r = memo.get(w)
+        if r is None:
+            r = memo[w] = _md5_key64_py(w) % n_buckets
+        return r
 
-        def b(w: str) -> int:
-            r = memo.get(w)
-            if r is None:
-                r = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    % n_buckets
-                )
-                memo[w] = r
-            return r
-
-        for pdf in batches:
-            ids, ts, bs, cs = [], [], [], []
-            for i, t, tgt in zip(
-                pdf[id_col], pdf[text_col], pdf[target_col]
-            ):
-                cnt = sorted(
-                    Counter(
-                        b(w) for w in (t or "").split(" ")
-                    ).items()
-                )
-                ids.append(i)
-                ts.append(bool(tgt))
-                bs.append([bk for bk, _ in cnt])
-                cs.append([c for _, c in cnt])
-            yield pd.DataFrame(
-                {id_col: ids, "_is_t": ts, "buckets": bs, "counts": cs}
+    def body(ids, texts, targets):
+        rows = []
+        for i, t, tgt in zip(ids, texts, targets):
+            cnt = sorted(Counter(bucket(w) for w in (t or "").split(" ")).items())
+            rows.append(
+                (i, bool(tgt), [bk for bk, _ in cnt], [c for _, c in cnt])
             )
+        return rows
 
-    return docs.select(id_col, text_col, target_col).mapInPandas(
-        kernel, schema
-    )
+    out = [
+        id_col,
+        T.StructField("_is_t", T.BooleanType()),
+        T.StructField("buckets", T.ArrayType(T.LongType())),
+        T.StructField("counts", T.ArrayType(T.LongType())),
+    ]
+    return map_arrow(docs, [id_col, text_col, target_col], out, body)
 
 
 def dsir_weights(

@@ -139,7 +139,7 @@ def _dedup_stage(
     canon agg + semi-join left, decontaminate's shingle explode +
     anti-join left), so without the cuts the composed plan paid the
     profile ~4× more (training_set 18.7 s → ~4 s total). The profile is
-    a mapInPandas kernel, so a filter on its ``quality`` output cannot
+    a Python row kernel, so a filter on its ``quality`` output cannot
     be pushed below it; the cut is not needed for that."""
     from agentic_doc_spark.operators.dedup import _truncate_lineage
 

@@ -23,7 +23,6 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from agentic_doc_spark.functions.classify import is_boilerplate
+from agentic_doc_spark.kernel import map_arrow
 from agentic_doc_spark.schema import DOCUMENTS_RAW
 
 
@@ -323,6 +323,8 @@ def ingest_directory(spark, path: str, **options) -> DataFrame:
     return layout_parse(route_doc_types(read_binary_dir(spark, path, **options)))
 
 
+#: the binaryFile columns both media-table kernels read
+_MEDIA_COLS = ["doc_id", "content", "doc_type"]
 _MEDIA_TABLE = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -340,29 +342,17 @@ def pdf_media_table(binary_df: DataFrame) -> DataFrame:
     features / resize / crop) consume. Span rows carry only the ref
     string; bytes stay in this narrow table so the text pipeline never
     shuffles image payloads (north-rule media-column discipline)."""
+    from agentic_doc_spark.sources.pdf_text import extract_pdf_images
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from agentic_doc_spark.sources.pdf_text import extract_pdf_images
+    def body(doc_ids, contents, doc_types):
+        return [
+            (doc_id, f"pdfimg://{doc_id}/{i}", int(page), img)
+            for doc_id, content, dt in zip(doc_ids, contents, doc_types)
+            if dt == "pdf"
+            for i, (page, img) in enumerate(extract_pdf_images(content))
+        ]
 
-        for pdf in batches:
-            rows = []
-            for doc_id, content, dt in zip(
-                pdf["doc_id"], pdf["content"], pdf["doc_type"]
-            ):
-                if dt != "pdf":
-                    continue
-                for i, (page, img) in enumerate(
-                    extract_pdf_images(bytes(content))
-                ):
-                    rows.append(
-                        (doc_id, f"pdfimg://{doc_id}/{i}", int(page),
-                         bytearray(img))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "page", "content"]
-            )
-
-    return binary_df.mapInPandas(run, _MEDIA_TABLE)
+    return map_arrow(binary_df, _MEDIA_COLS, _MEDIA_TABLE, body)
 
 
 def image_media_table(binary_df: DataFrame) -> DataFrame:
@@ -377,37 +367,31 @@ def image_media_table(binary_df: DataFrame) -> DataFrame:
     once with ``_decode_array`` and synthesizes the page from the layout
     when that fails. Same narrow-table discipline as
     ``pdf_media_table``."""
+    from agentic_doc_spark.functions import tiff
+    from agentic_doc_spark.functions.png import encode_png
+    from agentic_doc_spark.operators.multimodal import raster_format
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from agentic_doc_spark.functions import tiff
-        from agentic_doc_spark.functions.png import encode_png
-        from agentic_doc_spark.operators.multimodal import raster_format
+    def pages(doc_id: str, data: bytes) -> list[tuple]:
+        fmt = raster_format(data)
+        if fmt is None:
+            return []
+        if fmt != "tiff":
+            return [(doc_id, f"imgdoc://{doc_id}/p0", 0, data)]
+        rows = []
+        try:
+            for i, arr in tiff.iter_tiff_pages(data):
+                png = b"" if arr is None else encode_png(arr)
+                rows.append((doc_id, f"imgdoc://{doc_id}/p{i}", i, png))
+        except ValueError:
+            pass  # broken container: serve the pages read before it
+        return rows
 
-        for pdf in batches:
-            rows = []
-            for doc_id, content, dt in zip(
-                pdf["doc_id"], pdf["content"], pdf["doc_type"]
-            ):
-                if dt == "pdf":
-                    continue
-                data = bytes(content)
-                fmt = raster_format(data)
-                if fmt == "tiff":
-                    try:
-                        for i, arr in tiff.iter_tiff_pages(data):
-                            png = b"" if arr is None else encode_png(arr)
-                            rows.append(
-                                (doc_id, f"imgdoc://{doc_id}/p{i}", i,
-                                 bytearray(png))
-                            )
-                    except ValueError:
-                        continue  # broken container: no pages to serve
-                elif fmt is not None:
-                    rows.append(
-                        (doc_id, f"imgdoc://{doc_id}/p0", 0, bytearray(data))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "page", "content"]
-            )
+    def body(doc_ids, contents, doc_types):
+        return [
+            row
+            for doc_id, content, dt in zip(doc_ids, contents, doc_types)
+            if dt != "pdf"
+            for row in pages(doc_id, content)
+        ]
 
-    return binary_df.mapInPandas(run, _MEDIA_TABLE)
+    return map_arrow(binary_df, _MEDIA_COLS, _MEDIA_TABLE, body)

@@ -67,12 +67,24 @@ def _unicode_ws_edge(spark):
     )
 
 
+def _null_text_edge(spark):
+    """NULL text next to the empty text it must not be confused with:
+    ``shingles(NULL)`` is one NULL shingle, ``shingles('')`` is ['']."""
+    return spark.createDataFrame(
+        [(9200001, None), (9200002, ""), (9200003, None)],
+        "doc_id long, text string",
+    )
+
+
 def test_minhash_fast_path_bit_identical(spark):
     from agentic_doc_spark.operators.dedup import minhash_bands, minhash_bands_fast
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").unionByName(_unicode_ws_edge(spark))
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .unionByName(_unicode_ws_edge(spark))
+        .unionByName(_null_text_edge(spark))
+    )
     a = sorted(map(tuple, minhash_bands(docs).collect()))
     b = sorted(map(tuple, minhash_bands_fast(docs).collect()))
     assert a == b
@@ -88,9 +100,12 @@ def test_minhash_with_shingles_bands_bit_identical(spark):
         shingles,
     )
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").unionByName(_unicode_ws_edge(spark))
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .unionByName(_unicode_ws_edge(spark))
+        .unionByName(_null_text_edge(spark))
+    )
     ws = minhash_bands_with_shingles(docs)
     got = sorted(
         (r["doc_id"], bi, key)
@@ -383,6 +398,27 @@ def test_decontaminate_drops_overlapping_docs(spark):
     assert got == [2]  # 1 and 3 share the 'quick brown fox' shingle
 
 
+def test_null_text_is_no_duplicate_of_empty_text(spark):
+    """NULL text is one NULL shingle, empty text is the shingle '': an
+    empty document is neither a near-duplicate of a NULL one nor does an
+    empty benchmark text contaminate a NULL document. Two NULL documents
+    still pair (identical band keys md5(''), sh [NULL] each) without the
+    verify dividing by zero."""
+    from agentic_doc_spark.operators.dedup import decontaminate, lsh_jaccard_pairs
+
+    docs = _null_text_edge(spark)
+    pairs = sorted(
+        (r["a"], r["b"], r["jaccard"]) for r in lsh_jaccard_pairs(docs).collect()
+    )
+    assert pairs == [(9200001, 9200003, 1.0)]
+    corpus = spark.createDataFrame(
+        [(1, None), (2, "the quick brown fox")], "doc_id long, text string"
+    )
+    bench = spark.createDataFrame([("",)], "text string")
+    got = sorted(r["doc_id"] for r in decontaminate(corpus, bench).collect())
+    assert got == [1, 2]
+
+
 def test_connected_components_checkpoint_bounds_plan(spark):
     # a deep chain forces many propagation rounds; with a small
     # checkpoint_interval the FINAL plan must be a leaf scan (lineage
@@ -490,10 +526,12 @@ def test_gram_hashes_fast_matches_shingles_expression(spark):
         shingles,
     )
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").limit(100).unionByName(
-        _unicode_ws_edge(spark)
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .limit(100)
+        .unionByName(_unicode_ws_edge(spark))
+        .unionByName(_null_text_edge(spark))
     )
     ref = sorted(
         map(
