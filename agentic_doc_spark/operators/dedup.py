@@ -28,7 +28,7 @@ import hashlib
 import re
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -613,11 +613,16 @@ def cosine(a: Column, b: Column) -> Column:
 
 def sign_bucket(vec: Column, dims: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7)) -> Column:
     """Axis-aligned sign-LSH bucket: concatenated signs of fixed dims.
-    Deterministic, portable; random-hyperplane LSH slots in the same way."""
+    Deterministic, portable; random-hyperplane LSH slots in the same way.
+    A dim past the vector's end reads NULL and signs as '0' (DuckDB's
+    ``embedding[d + 1]`` twin does the same) instead of raising under
+    ANSI mode."""
     return F.concat_ws(
         "",
         *[
-            F.when(F.element_at(vec, d + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
+            F.when(F.try_element_at(vec, F.lit(d + 1)) >= 0, F.lit("1")).otherwise(
+                F.lit("0")
+            )
             for d in dims
         ],
     )
@@ -662,7 +667,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 25,
-    checkpoint_interval: int = 5,
     raise_on_non_convergence: bool = False,
 ) -> DataFrame:
     """Near-dup cluster canonicalization: connected components over a
@@ -672,76 +676,50 @@ def connected_components(
     The step after pair generation in a real dedup pipeline: LSH/simhash
     emit pairs, components decide which document of each duplicate
     CLUSTER survives. Algorithm is iterative min-label propagation
-    (the standard large-graph CC on Spark — "hash-to-min", Rastogi et
-    al., ICDE 2013): each round joins labels to the symmetric edge list
-    and takes the min over (own label, neighbor labels); rounds needed
-    ≈ graph diameter (near-dup clusters are shallow — duplicates of one
-    source form a star). Each round is ONE shuffle join + one groupBy;
-    the convergence check is an aggregate (no driver-side row data).
+    (hash-to-min, Rastogi et al., ICDE 2013): a vertex's new label is the
+    min over its closed neighbourhood; rounds needed ≈ graph diameter
+    (near-dup clusters are shallow — duplicates of one source form a
+    star). The edge list is symmetric plus one self-loop per vertex, so
+    each round is ONE join (edges ⋈ labels) and ONE groupBy(src) whose
+    ``max(when(src = dst, component))`` carries the old label beside the
+    new min. The round's change count is an ``Observation`` on that
+    aggregate, filled by the round's single action: the lineage cut
+    (reliable checkpoint when a checkpoint dir is set, else
+    localCheckpoint). Every round's labels are therefore a leaf plan,
+    the returned frame included; the label table is one row per paired
+    vertex, so AQE picks the join strategy from runtime stats.
 
-    The RETURNED DataFrame is checkpointed (a leaf plan — recomputing it
-    would otherwise replay the whole iterative join chain); intermediate
-    rounds and the edge list are released here. Long-lived drivers using
-    a reliable checkpoint dir should keep
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (build_spark
-    sets it) so checkpoint files are reclaimed with their DataFrames.
-
-    Lineage is TRUNCATED every ``checkpoint_interval`` rounds and once on
-    the final labels (reliable checkpoint when a checkpoint dir is set,
-    else localCheckpoint): without it the unrolled plan grows by two
-    joins per round — quadratic driver re-analysis at 25 rounds and a
-    full-chain replay on executor loss. Non-convergence (graph diameter
-    > max_iter) is SURFACED: a warning naming the residual changed count
-    by default, ValueError when ``raise_on_non_convergence`` — silently
-    non-canonical labels would make near_dedup keep extra survivors.
+    Non-convergence (graph diameter > max_iter) is SURFACED: a warning
+    naming the residual changed count by default, ValueError when
+    ``raise_on_non_convergence`` — silently non-canonical labels would
+    make near_dedup keep extra survivors.
     """
-    # symmetric edges once; self-loops make isolated-after-filter rows safe
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-        .persist()
+    a, b = F.col(a_col), F.col(b_col)
+    both_ways_and_loops = F.array(
+        F.array(a, b), F.array(b, a), F.array(a, a), F.array(b, b)
     )
-    labels = (
-        edges.select(F.col("src").alias("v"))
+    edges = _truncate_lineage(
+        pairs.select(F.explode(both_ways_and_loops).alias("e"))
+        .select(F.col("e")[0].alias("src"), F.col("e")[1].alias("dst"))
         .distinct()
-        .withColumn("lbl", F.col("v"))
-        .persist()
+    )
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("doc_id"), F.col("dst").alias("component")
     )
     changed = 0
-    for i in range(max_iter):
-        neigh_min = (
-            edges.join(labels, edges["dst"] == labels["v"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nlbl"))
+    own = F.when(F.col("src") == F.col("dst"), F.col("component"))
+    for _ in range(max_iter):
+        seen = Observation()
+        labels = _truncate_lineage(
+            edges.join(labels, F.col("dst") == F.col("doc_id"))
+            .groupBy(F.col("src").alias("doc_id"))
+            .agg(F.min("component").alias("component"), F.max(own).alias("old"))
+            .observe(seen, F.count_if(F.col("component") != F.col("old")).alias("n"))
+            .select("doc_id", "component")
         )
-        new_labels = (
-            labels.join(neigh_min, labels["v"] == neigh_min["src"], "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
+        changed = seen.get["n"]
         if changed == 0:
             break
-        if (i + 1) % checkpoint_interval == 0:
-            checkpointed = _truncate_lineage(labels)
-            labels.unpersist()
-            labels = checkpointed
-    edges.unpersist()
     if changed != 0:
         msg = (
             f"connected_components did not converge in {max_iter} rounds "
@@ -749,16 +727,11 @@ def connected_components(
             "canonical; raise max_iter (rounds needed ≈ graph diameter)"
         )
         if raise_on_non_convergence:
-            labels.unpersist()
             raise ValueError(msg)
         import warnings
 
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    final = _truncate_lineage(
-        labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("component"))
-    )
-    labels.unpersist()
-    return final
+    return labels
 
 
 def _gram_hashes_fast(

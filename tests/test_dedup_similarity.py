@@ -216,6 +216,48 @@ def test_embedding_near_pairs(vectors):
     assert (0, 4) not in got  # opposite sign → different bucket anyway
 
 
+def test_sign_bucket_short_vectors_sign_missing_dims_zero(spark):
+    # 3-dim vectors against the default 8 bucket dims: ANSI element_at
+    # would raise INVALID_ARRAY_INDEX_IN_ELEMENT_AT; a missing dim signs
+    # as '0' (the DuckDB twin's NULL → ELSE '0')
+    import math
+
+    from agentic_doc_spark.operators.dedup import sign_bucket
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.99, 0.1, -0.0]),
+        (2, [-0.5, 1.0, 0.2]),
+        (3, [-0.4, 0.9, 0.3]),
+        (4, [0.2, -1.0, 0.0]),
+        (5, [1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def bucket(v):
+        return "".join("1" if d < len(v) and v[d] >= 0 else "0" for d in range(8))
+
+    def cos(x, y):
+        dot = sum(a * b for a, b in zip(x, y))
+        n = math.sqrt(sum(a * a for a in x)) * math.sqrt(sum(b * b for b in y))
+        return dot / n if n else 0.0
+
+    buckets = df.select("vec_id", sign_bucket(F.col("embedding")).alias("bucket"))
+    got_b = {r["vec_id"]: r["bucket"] for r in buckets.collect()}
+    assert got_b == {i: bucket(v) for i, v in rows}
+    got = {
+        (r["a"], r["b"]): round(r["cos"], 9)
+        for r in embedding_near_pairs(df, threshold=0.9).collect()
+    }
+    want = {
+        (i, j): round(cos(v, w), 9)
+        for i, v in rows
+        for j, w in rows
+        if i < j and bucket(v) == bucket(w) and cos(v, w) >= 0.9
+    }
+    assert got == want and want
+
+
 def test_brute_force_topk(vectors):
     res = brute_force_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=2)
     rows = sorted(res.collect(), key=lambda r: r["rank"])
@@ -420,14 +462,14 @@ def test_null_text_is_no_duplicate_of_empty_text(spark):
 
 
 def test_connected_components_checkpoint_bounds_plan(spark):
-    # a deep chain forces many propagation rounds; with a small
-    # checkpoint_interval the FINAL plan must be a leaf scan (lineage
-    # truncated), not an unrolled join chain — and labels stay correct
+    # a deep chain forces many propagation rounds; the FINAL plan must be
+    # a leaf scan (lineage truncated), not an unrolled join chain — and
+    # labels stay correct
     from agentic_doc_spark.operators.dedup import connected_components
 
     n = 12  # path graph 0-1-...-12 → diameter 12
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], ["a", "b"])
-    comp = connected_components(pairs, checkpoint_interval=2)
+    comp = connected_components(pairs)
     assert {r["component"] for r in comp.collect()} == {0}
     plan = comp._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan, plan  # lineage truncated, not unrolled
@@ -443,10 +485,64 @@ def test_connected_components_non_convergence_surfaced(spark):
     pairs = spark.createDataFrame([(i, i + 1) for i in range(12)], ["a", "b"])
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(pairs, max_iter=2)
-        assert any("did not converge" in str(x.message) for x in w)
+        comp = connected_components(pairs, max_iter=2)
+        assert any(
+            "did not converge" in str(x.message)
+            and "(11 labels still changing)" in str(x.message)
+            for x in w
+        )
+    # two rounds of closed-neighbourhood min: each label moves 2 steps
+    got = sorted((r["doc_id"], r["component"]) for r in comp.collect())
+    assert got == [(0, 0), (1, 0), (2, 0)] + [(v, v - 2) for v in range(3, 13)]
     with pytest.raises(ValueError, match="did not converge"):
         connected_components(pairs, max_iter=2, raise_on_non_convergence=True)
+
+
+def test_connected_components_matches_union_find(spark):
+    # seeded random forest-plus-extra-edges graph: several components of
+    # diameter <= 25, duplicate and reversed pairs, one (a, a) self-pair;
+    # labels must be each component's min id, as a union-find computes
+    import random
+
+    from agentic_doc_spark.operators.dedup import connected_components
+
+    rng = random.Random(14)
+    ids = rng.sample(range(1, 10_000), 121)  # ids[-1] only in (a, a)
+    pairs, start = [], 0
+    for size in (2, 5, 9, 17, 25, 40, 22):
+        comp = ids[start:start + size]
+        start += size
+        depth = [0]
+        for i in range(1, size):  # deep random tree, depth <= 12
+            p = rng.randrange(max(0, i - 3), i)
+            while depth[p] >= 12:
+                p = rng.randrange(i)
+            depth.append(depth[p] + 1)
+            pairs.append((comp[i], comp[p]))
+        for _ in range(size // 4):
+            pairs.append(tuple(rng.sample(comp, 2)))
+    pairs += [pairs[3], pairs[10][::-1], pairs[30][::-1], (ids[-1], ids[-1])]
+    rng.shuffle(pairs)
+
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {v: find(v) for v in parent}
+    assert len(set(want.values())) == 8
+
+    df = spark.createDataFrame(pairs, "a long, b long")
+    got = {r["doc_id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == want
 
 
 def test_connected_components_empty_pairs(spark):
