@@ -1172,7 +1172,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ combined ANN (the billion-vector IVFADC shape): IVF cells
     prune the corpus to 3 probed cells per query, PQ codes stand in for
     the vectors inside them — one zero-exchange assignment+encode map,
-    broadcast probe tables, two-phase bounded top-k
+    one broadcast probe table, two-phase bounded top-k
     (operators/similarity.py:ivfpq_topk). Same cell/codebook parameters
     as ann_ivf and ann_pq, so the oracle composes their CTEs."""
     from agentic_doc_spark.operators.similarity import ivfpq_topk

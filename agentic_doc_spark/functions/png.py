@@ -5,9 +5,9 @@ Covers the PNG subset a document pipeline produces/consumes on decode:
 greyscale at 1/2/4/8/16 bits (1-bit is the classic scanned-document
 format), palette (PLTE, optional tRNS alpha) at 1/2/4/8 bits, 8- and
 16-bit RGB / grey+alpha / RGBA (16-bit reduces to the high byte) —
-plain or Adam7-interlaced — with all five scanline filters; encode writes 8-bit non-interlaced filter-0. JPEG and
-exotic PNGs still route to PIL when present (operators/multimodal.py),
-and the deterministic fake remains the last-resort fallback.
+plain or Adam7-interlaced — with all five scanline filters; encode
+writes 8-bit non-interlaced filter-0. The deterministic fake
+(operators/multimodal.py) remains the last-resort fallback.
 Public-spec implementation (RFC 2083 / W3C PNG); no external code.
 
 Perf boundary: filters None/Up/Sub decode fully vectorized; Average and
@@ -258,8 +258,7 @@ def crop(arr: np.ndarray, x0: int, y0: int, x1: int, y1: int) -> np.ndarray:
 
 def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     """Nearest-neighbor resize (index-map gather — the deterministic,
-    dependency-free kernel; PIL's resampled variants slot in when
-    available)."""
+    dependency-free kernel)."""
     h, w = arr.shape[:2]
     ys = (np.arange(height) * h // height).clip(0, h - 1)
     xs = (np.arange(width) * w // width).clip(0, w - 1)

@@ -3,12 +3,11 @@
 Images/audio/video ride as opaque BINARY columns with typed metadata
 (schema.MEDIA_REFS). Image decode is REAL for PNG, baseline AND
 progressive JPEG, GIF (incl. animation), BMP, TIFF and JPEG 2000 via the
-pure-stdlib codecs in functions/{png,jpeg,gif,bmp,tiff,jpx}.py (PIL
-replaces them when installed): ``raster_format`` sniffs the format and
-``_decode_array`` dispatches on it. Payloads outside that ladder
-(arithmetic/12-bit JPEG, WebP, other formats)
-fall back to a deterministic fake derived from the bytes,
-and every row SURFACES which path it took via the ``decoded`` flag.
+pure-stdlib codecs in functions/{png,jpeg,gif,bmp,tiff,jpx}.py:
+``raster_format`` sniffs the format and ``_decode_array`` dispatches on
+it. Payloads outside that ladder (arithmetic/12-bit JPEG, WebP, other
+formats) fall back to a deterministic fake derived from the bytes, and
+every row SURFACES which path it took via the ``decoded`` flag.
 Audio features are REAL for WAV/PCM payloads (functions/riff.py
 parse_wav → extract_audio_features); video frame sampling is REAL for
 MJPEG and raw-DIB AVIs plus animated GIFs; the
@@ -31,14 +30,6 @@ from pyspark.sql import types as T
 
 from agentic_doc_spark.functions import bmp, gif, jpeg, jpx, png, tiff
 from agentic_doc_spark.kernel import map_arrow
-
-try:  # real decoder if ever available — not in this container
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
-
 
 #: magic-byte tests in ladder order; the first hit names the format
 _RASTER_MAGIC = (
@@ -79,23 +70,15 @@ def raster_format(data: bytes) -> str | None:
     return next((fmt for fmt, is_fmt in _RASTER_MAGIC if is_fmt(data)), None)
 
 
-def _pil_decode(data: bytes) -> np.ndarray:
-    import io
-
-    return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"), dtype=np.uint8)
-
-
 def _decode_array(data: bytes) -> np.ndarray | None:
     """bytes → uint8 (h, w, ch) array, or None when undecodable.
 
-    ``raster_format`` picks the decoder: PIL when installed, else the
-    pure-stdlib codec for the sniffed format (functions/{png,jpeg,gif,
-    bmp,tiff,jpx}.py, no third-party dependency). Bytes the sniff does
-    not name, WebP without PIL, and any payload whose codec fails are
-    None."""
-    fmt = raster_format(data)
-    decode = _pil_decode if _HAS_PIL else _DECODERS.get(fmt)
-    if fmt is None or decode is None:
+    ``raster_format`` picks the pure-stdlib codec for the sniffed format
+    (functions/{png,jpeg,gif,bmp,tiff,jpx}.py, no third-party
+    dependency). Bytes the sniff does not name, WebP, and any payload
+    whose codec fails are None."""
+    decode = _DECODERS.get(raster_format(data))
+    if decode is None:
         return None
     try:
         arr = decode(data)
@@ -173,18 +156,29 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     return map_arrow(media, ["media_ref", "content"], _FEATURES_SCHEMA, body)
 
 
-def _safe_path_part(col) -> "F.Column":
-    """Sanitize a path component derived from untrusted data (doc_id is
-    an arbitrary string for parquet corpora and a filesystem path for dir
-    corpora): every character outside [A-Za-z0-9._-] becomes '_', so a
-    component can never introduce a path separator — '../' in a doc_id
-    cannot escape the save dir, and path-shaped ids cannot fan out into
-    unintended directory trees. Applied identically by the spec builder
-    and the image_path attacher so the two stay equal; the reference
-    avoids the issue with opaque chunk ids (utils.py:150-156)."""
+def _crop_rel_path(page, chunk_type, chunk_id, idx) -> "F.Column":
+    """The one definition of a grounding crop's file name under the save
+    dir, ``page_{p}/{chunk_type}_{chunk_id}_{i}.png`` (the reference
+    naming, utils.py:150-156): the spec builder names the file the
+    renderer writes with it, and the image_path attacher names the same
+    file, so the two cannot drift apart.
+
+    chunk_type and chunk_id derive from untrusted data (doc_id is an
+    arbitrary string for parquet corpora and a filesystem path for dir
+    corpora), so every character of theirs outside [A-Za-z0-9._-]
+    becomes '_': a component can never introduce a path separator —
+    '../' in a doc_id cannot escape the save dir, and path-shaped ids
+    cannot fan out into unintended directory trees. The reference
+    sidesteps this with opaque chunk ids."""
     from pyspark.sql import functions as F
 
-    return F.regexp_replace(col.cast("string"), "[^A-Za-z0-9._-]", "_")
+    def safe(col):
+        return F.regexp_replace(col.cast("string"), "[^A-Za-z0-9._-]", "_")
+
+    return F.concat(
+        F.lit("page_"), page, F.lit("/"), safe(chunk_type), F.lit("_"),
+        safe(chunk_id), F.lit("_"), idx, F.lit(".png"),
+    )
 
 
 def grounding_crop_specs(
@@ -230,16 +224,9 @@ def grounding_crop_specs(
             "chunk_type",
             *(["text"] if include_text else []),
             px.alias("px"),
-            F.concat(
-                F.lit("page_"),
-                F.col("g.page"),
-                F.lit("/"),
-                _safe_path_part(F.col("chunk_type")),
-                F.lit("_"),
-                _safe_path_part(F.col("chunk_id")),
-                F.lit("_"),
+            _crop_rel_path(
+                F.col("g.page"), F.col("chunk_type"), F.col("chunk_id"),
                 F.col("grounding_idx"),
-                F.lit(".png"),
             ).alias("rel_path"),
         )
     )
@@ -268,15 +255,8 @@ def attach_grounding_image_paths(parsed: DataFrame, save_dir: str) -> DataFrame:
 
     def grounding_out(c, g, i):
         path = F.concat(
-            F.lit(f"{base}/page_"),
-            g["page"],
-            F.lit("/"),
-            _safe_path_part(c["chunk_type"]),
-            F.lit("_"),
-            _safe_path_part(c["chunk_id"]),
-            F.lit("_"),
-            i,
-            F.lit(".png"),
+            F.lit(f"{base}/"),
+            _crop_rel_path(g["page"], c["chunk_type"], c["chunk_id"], i),
         )
         new = F.struct(
             g["page"].alias("page"),

@@ -3,27 +3,24 @@
 - brute_force_topk: exact cosine top-k — the correctness baseline. The
   query side is broadcast (queries ≪ corpus), the corpus side streams:
   one wide scan, no shuffle until the per-query top-k aggregation.
-- ivf_topk: the scale path — k-means-lite IVF. Centroids are derived
-  deterministically from a bounded hash-sample, refined with Lloyd
-  rounds driver-side, every vector is assigned to its nearest centroid
-  (one narrow pass), and queries probe only the nearest n_probe cells:
-  the candidate set shrinks by ~n_cells/n_probe. At 10^10 vectors this
-  is the difference between a full scan per query and a bucketed
-  equi-join.
+- ivf_topk / pq_topk / ivfpq_topk: the IVFADC index (Jégou et al. 2011)
+  — optional coarse cells (deterministic k-means over one bounded
+  sample), plus exact cosine or a PQ codebook. A query scores only
+  its n_probe nearest cells, ~n_probe/n_cells of the corpus.
 
-Pair scoring (brute force, IVF candidates, ADC sums) is JVM
-higher-order functions (zip_with/aggregate). Vector-to-centroid scoring
-has one numpy home per metric, run in mapInArrow kernels on both sides
-of a search: ``_cos_cells_np`` (corpus cell assignment and query
-probes) and ``_sub_l2_np`` (PQ encoding and the per-query ADC tables).
-SemDeDup's within-cell pairs are a numpy kernel too. Every kernel keeps
-the IEEE op sequence of the JVM folds, so every score is the same
-double either way.
+Every index runs one corpus kernel (``_corpus_table``) and one query
+kernel (``_query_table``), which branch only on whether there are cells
+and whether there is a codebook; ``_search`` joins, scores and ranks.
+Vector-to-centroid scoring has one numpy home per metric,
+``_cos_cells_np`` and ``_sub_l2_np``; pair scores are JVM expressions.
+Every kernel keeps the IEEE op sequence of the JVM folds, so every score
+is the same double either way.
 """
 
 from __future__ import annotations
 
 import math
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -176,8 +173,6 @@ def brute_force_topk(
     per side before the cross join (the exact ``_norm`` fold doubles),
     so each pair pays one dot fold instead of dot + 2 norm folds —
     bit-identical cos via the same try_divide(dot, qn·cn) op order."""
-    from agentic_doc_spark.operators.dedup import _dot
-
     q = F.broadcast(
         queries.selectExpr(
             f"`{id_col}` AS query_id",
@@ -191,14 +186,19 @@ def brute_force_topk(
         f"{_norm_sql(f'`{vec_col}`')} AS __cn",
     ).selectExpr("neighbor_id", "cv", "__cn AS cn")
     scored = c.crossJoin(q).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = F.coalesce(
-        F.try_divide(
-            _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
-        ),
-        F.lit(0.0),
-    )
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cos"))
+    scored = scored.select("query_id", "neighbor_id", _staged_cos())
     return _topk_per_group(scored, k, "cos", ascending=False)
+
+
+def _staged_cos():
+    """``cos`` over the vectors and norms staged on each side (qv/qn,
+    cv/cn): the exact ``cosine()`` doubles with one dot fold per pair;
+    a zero or NULL denominator gives 0.0."""
+    from agentic_doc_spark.operators.dedup import _dot
+
+    dot = _dot(F.col("qv"), F.col("cv"))
+    cos = F.try_divide(dot, F.col("qn") * F.col("cn"))
+    return F.coalesce(cos, F.lit(0.0)).alias("cos")
 
 
 def _spark_round6(x: float) -> float:
@@ -253,7 +253,9 @@ def _fast_count(df: DataFrame) -> int:
             return df.count()
         total = 0
         for f in files:
-            path = f[len("file:") :] if f.startswith("file:") else f
+            # entries are URIs: a local path's space or % is escaped
+            u = urlparse(f)
+            path = unquote(u.path) if u.scheme == "file" else f
             total += _pq.ParquetFile(path).metadata.num_rows
         return total
     except Exception:
@@ -505,10 +507,12 @@ def _train_sample(
     return corpus.filter(key == F.lit(0))
 
 
-def _require_cells(cells: list[tuple[int, list[float]]]) -> None:
-    """Driver-side guard for the cosine kernels: with no cells there is
-    no nearest one, and the kernel would fail in the executor."""
-    if not cells:
+def _require_cells(cells: list | None, pq: tuple | None) -> None:
+    """Guard for the index kernels, raised before any job runs: an
+    index without a codebook needs cells, and given cells must be
+    non-empty — with none there is no nearest one, and the kernel would
+    fail in the executor."""
+    if not cells and (cells is not None or pq is None):
         raise ValueError(
             "no centroid cells to assign to (was the training sample empty?)"
         )
@@ -518,92 +522,171 @@ def _type(df: DataFrame, col: str) -> str:
     return df.schema[col].dataType.simpleString()
 
 
+def _ddl(cols: dict) -> str:
+    """A kernel's output schema from {name: SQL type, or False to leave
+    the column out}."""
+    return ", ".join(f"{n} {t}" for n, t in cols.items() if t)
+
+
+def _corpus_table(
+    corpus: DataFrame,
+    cells: list[tuple[int, list[float]]] | None,
+    pq: tuple | None,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The one corpus-side index kernel: a zero-exchange mapInArrow map
+    over the scan with the index in its closure, so each vector crosses
+    the Arrow boundary once. ``cells`` (or None) adds ``cell``, the
+    nearest centroid (``_cos_cells_np`` + ``_nearest_cell``: ties and
+    zero-norm rows → lowest cell, a NaN score wins from its first
+    cell); ``pq`` (``_codebook_dict``'s tuple, or None) adds ``codes``
+    (``_pq_codes_np``). Without a codebook the cells are scored exactly,
+    so the row also carries its vector cast to double (NaN stays NaN)
+    and ``_vnorm``, ‖v‖ as the exact ``_norm``-fold double. Output
+    (id, [vec], [cell], _vnorm | codes)."""
+    import pyarrow as pa
+
+    _require_cells(cells, pq)
+    exact = pq is None
+    cols = {
+        id_col: _type(corpus, id_col),
+        vec_col: exact and "array<double>",
+        "cell": cells is not None and "bigint",
+        "_vnorm": exact and "double",
+        "codes": not exact and "array<int>",
+    }
+    names = [n for n, t in cols.items() if t]
+    cb, m, d_sub, _ = pq or (None, 0, 0, 0)
+
+    def run(batches):
+        for batch in batches:
+            vec = batch.column(vec_col).cast(pa.list_(pa.float64()))
+            out = {id_col: batch.column(id_col), vec_col: vec}
+            if cells is not None:
+                V, have, cos, out["_vnorm"] = _cos_batch(vec, cells, m * d_sub)
+                out["cell"] = pa.array(_nearest_cell(cos, cells), pa.int64())
+            else:
+                V, have, _ = _dense(vec, m * d_sub)
+            if not exact:
+                codes = _pq_codes_np(V, cb, m, d_sub, have).astype("int32")
+                out["codes"] = _nested(codes)
+            yield pa.RecordBatch.from_arrays(
+                [out[n] for n in names], names=names
+            )
+
+    return corpus.select(id_col, vec_col).mapInArrow(run, _ddl(cols))
+
+
 def assign_cells_fast(
     corpus: DataFrame,
     cells: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid — ZERO exchanges: a
-    mapInArrow kernel over the scan partitions (``_cos_cells_np`` +
-    ``_nearest_cell``: cosine argmax, ties and zero-norm rows → lowest
-    cell, a NaN score wins from its first cell; pinned against a scalar
-    loop by test_assign_cells_fast_bit_identical). The centroids ride
-    in the kernel closure, so at 10^10 vectors there is no shuffle term.
-    Output (id, vec, cell, _vnorm): ``_vnorm`` is the row's ‖v‖ from
-    the same kernel (the exact ``_norm``-fold doubles), so scoring
-    reuses it instead of re-folding per candidate pair. id and vec pass
-    through as the input Arrow arrays (vec cast to double), so NaN
-    components stay NaN."""
-    import pyarrow as pa
-
-    _require_cells(cells)
-    out_schema = (
-        f"{id_col} {_type(corpus, id_col)}, {vec_col} array<double>,"
-        " cell bigint, _vnorm double"
-    )
-
-    def run(batches):
-        for batch in batches:
-            vec = batch.column(vec_col).cast(pa.list_(pa.float64()))
-            _, _, cos, vnorm = _cos_batch(vec, cells)
-            cell = pa.array(_nearest_cell(cos, cells), pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), vec, cell, vnorm],
-                names=[id_col, vec_col, "cell", "_vnorm"],
-            )
-
-    return corpus.select(id_col, vec_col).mapInArrow(run, out_schema)
+    """Assign every vector to its nearest centroid: the corpus kernel
+    with cells and no codebook, ZERO exchanges (pinned against a scalar
+    loop by test_assign_cells_fast_bit_identical). Output (id, vec,
+    cell, _vnorm)."""
+    return _corpus_table(corpus, cells, None, vec_col, id_col)
 
 
-def _probe_cells(
+def _query_table(
     queries: DataFrame,
-    cells: list[tuple[int, list[float]]],
+    cells: list[tuple[int, list[float]]] | None,
     n_probe: int,
+    pq: tuple | None,
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """Top-n_probe nearest cells per query: (query_id, qv, qn, cell),
-    one row per probed cell, from a row-local mapInArrow kernel (no
-    query-side shuffle). Cells are scored by ``_cos_cells_np``, the
-    scorer corpus assignment uses, and ranked cos DESC (NaN greatest),
-    cell ASC; zero-norm and NULL queries score 0.0 everywhere and probe
-    the lowest cells. ``qn`` is ‖q‖ (NULL where the ``_norm`` fold is),
-    so scoring divides by qn·cn instead of re-folding ‖q‖ per pair.
-    Pinned against a scalar loop by
-    test_probe_cells_matches_scalar_loop."""
+    """The one query-side index kernel: a row-local mapInArrow map over
+    the queries, which are never collected. With ``cells`` it emits one
+    row per probed cell: the top-n_probe cells by ``_cos_cells_np``,
+    ranked cos DESC (NaN greatest), cell ASC; a zero-norm or NULL query
+    scores 0.0 everywhere and probes the lowest cells. Without cells it
+    emits one row per query. With ``pq`` each row carries
+    ``dtab[sub][cell]``, ``_sub_l2_np``'s ‖q_sub − c‖²: +inf at the
+    cells the seeds skipped (no code names them) and for a subvector
+    with a NULL or missing element. Without a codebook it carries
+    ``qv`` as given and ``qn``, ‖q‖ (NULL where the ``_norm`` fold is).
+    Output (query_id, [cell], qv, qn | dtab)."""
     import numpy as np
     import pyarrow as pa
 
-    _require_cells(cells)
-    out_schema = (
-        f"query_id {_type(queries, id_col)}, qv {_type(queries, vec_col)},"
-        " qn double, cell bigint"
-    )
-    cell_ids = np.asarray([c for c, _ in cells], dtype=np.int64)
-    k = max(0, min(int(n_probe), len(cells)))
+    _require_cells(cells, pq)
+    exact = pq is None
+    cols = {
+        "query_id": _type(queries, id_col),
+        "cell": cells is not None and "bigint",
+        "qv": exact and _type(queries, vec_col),
+        "qn": exact and "double",
+        "dtab": not exact and "array<array<double>>",
+    }
+    names = [n for n, t in cols.items() if t]
+    cb, m, d_sub, max_cell = pq or (None, 0, 0, 0)
+    if cells is not None:
+        cell_ids = np.asarray([c for c, _ in cells], dtype=np.int64)
+        k = max(0, min(int(n_probe), len(cells)))
 
     def run(batches):
         for batch in batches:
             vec = batch.column(vec_col)
-            _, _, cos, qn = _cos_batch(vec, cells)
-            nan = np.isnan(cos)
-            # lexsort's LAST key is primary
-            order = np.lexsort(
-                (np.broadcast_to(cell_ids, cos.shape), -cos, ~nan)
-            )[:, :k]
-            rows = pa.array(np.repeat(np.arange(batch.num_rows), k))
+            out = {"query_id": batch.column(id_col), "qv": vec}
+            if cells is not None:
+                V, have, cos, out["qn"] = _cos_batch(vec, cells, m * d_sub)
+            else:
+                V, have, _ = _dense(vec, m * d_sub)
+            if not exact:
+                tab = np.full((batch.num_rows, m, max_cell + 1), np.inf)
+                for s, cs, dist in _sub_l2_np(V, cb, m, d_sub, have):
+                    tab[:, s, cs] = dist
+                out["dtab"] = _nested(tab)
+            if cells is not None:
+                # lexsort's LAST key is primary
+                order = np.lexsort(
+                    (np.broadcast_to(cell_ids, cos.shape), -cos,
+                     ~np.isnan(cos))
+                )[:, :k]
+                rows = pa.array(np.repeat(np.arange(batch.num_rows), k))
+                out = {n: a.take(rows) for n, a in out.items() if n in names}
+                out["cell"] = pa.array(cell_ids[order].reshape(-1), pa.int64())
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(id_col).take(rows),
-                    vec.take(rows),
-                    qn.take(rows),
-                    pa.array(cell_ids[order].reshape(-1), pa.int64()),
-                ],
-                names=["query_id", "qv", "qn", "cell"],
+                [out[n] for n in names], names=names
             )
 
-    return queries.select(id_col, vec_col).mapInArrow(run, out_schema)
+    return queries.select(id_col, vec_col).mapInArrow(run, _ddl(cols))
+
+
+def _search(
+    side: DataFrame,
+    probes: DataFrame,
+    k: int,
+    pq: tuple | None,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Score a corpus table (``_corpus_table``) against a query table
+    (``_query_table``) and rank. The bounded query table BROADCASTS
+    into the corpus stream, joined on ``cell`` when the index has cells
+    and crossed otherwise, so scoring shuffles nothing; self-matches are
+    dropped. Without a codebook the score is exact cosine over the norms
+    both kernels staged (the ``cosine()`` doubles, one dot fold per
+    pair), ranked DESC; with one it is the in-row ADC sum
+    (``_adc_dist_sql``), ranked ASC. The only exchange is the bounded
+    top-k merge of ``_topk_per_group``."""
+    cell = ["cell"] if "cell" in probes.columns else []
+    staged = [F.col(vec_col).alias("cv"), F.col("_vnorm").alias("cn")]
+    cols = staged if pq is None else ["codes"]
+    cand = side.select(F.col(id_col).alias("neighbor_id"), *cols, *cell)
+    q = F.broadcast(probes)
+    cand = (cand.join(q, "cell") if cell else cand.crossJoin(q)).filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    if pq is not None:
+        scored = cand.selectExpr("query_id", "neighbor_id", _adc_dist_sql(pq[1]))
+        return _topk_per_group(scored, k, "adist", ascending=True)
+    scored = cand.select("query_id", "neighbor_id", _staged_cos())
+    return _topk_per_group(scored, k, "cos", ascending=False)
 
 
 def ivf_topk(
@@ -629,38 +712,18 @@ def ivf_topk(
     ``_train_centroids``), so training costs one footer-metadata count
     + one bounded collect regardless of refine rounds.
 
-    Exchange budget: the probes (queries × n_probe rows) BROADCAST into
-    the assigned corpus stream (no corpus exchange), and 1 BOUNDED
-    exchange (≤ k × partitions rows per query) for the two-phase top-k
-    merge — corpus assignment (``assign_cells_fast`` kernel) and probe
-    selection are row-local, so the full corpus is scanned exactly once
-    at query time and no corpus-sized row set ever funnels through a
-    single task. Scoring divides by the STAGED ‖q‖·‖v‖ norms both
-    kernels already computed (the exact ``cosine()`` doubles — one dot
-    fold per pair instead of dot + 2 norm folds)."""
-    from agentic_doc_spark.operators.dedup import _dot
-
+    Query time is one ``_search``: the probes (queries × n_probe rows,
+    with ‖q‖) broadcast into the assigned corpus stream (with ‖v‖), so
+    the corpus is scanned once and the only exchange is the bounded
+    top-k merge."""
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     train = _train_sample(proj, n_cells, train_per_cell, id_col)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
-    assigned = assign_cells_fast(proj, cents, vec_col, id_col)
-    probes = _probe_cells(queries, cents, n_probe, vec_col, id_col)
-    cand = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.col("_vnorm").alias("cn"),
-        "cell",
-    ).join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
+    return _search(
+        assign_cells_fast(proj, cents, vec_col, id_col),
+        _query_table(queries, cents, n_probe, None, vec_col, id_col),
+        k, None, vec_col, id_col,
     )
-    cos = F.coalesce(
-        F.try_divide(
-            _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
-        ),
-        F.lit(0.0),
-    )
-    scored = cand.select("query_id", "neighbor_id", cos.alias("cos"))
-    return _topk_per_group(scored, k, "cos", ascending=False)
 
 
 def semantic_dedup(
@@ -925,66 +988,11 @@ def pq_encode(
 
     Output (id, codes: array<int>, sub order) — the 10^10-vector memory
     story: m codes replace the full vector (dim=64, m=32, k=16 → 32
-    nibbles vs 512 bytes of doubles). Plan: the codebook (bounded m × k
-    × d_sub doubles) rides in the closure of a mapInArrow kernel and
-    the argmin runs inside the row (``_pq_codes_np``, pinned against a
-    scalar loop by test_pq_encode_kernel_matches_scalar_loop), so
-    encoding is one pure map over the scan — zero exchanges at any
-    corpus size — in vectorized numpy."""
-    import pyarrow as pa
-
-    cb, m, d_sub, _ = _codebook_dict(codebook)
-
-    def run(batches):
-        for batch in batches:
-            V, have, _ = _dense(batch.column(vec_col), m * d_sub)
-            codes = _pq_codes_np(V, cb, m, d_sub, have).astype("int32")
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), _nested(codes)],
-                names=[id_col, "codes"],
-            )
-
-    return corpus.select(id_col, vec_col).mapInArrow(
-        run, f"{id_col} {_type(corpus, id_col)}, codes array<int>"
-    )
-
-
-def _adc_query_table(
-    queries: DataFrame,
-    cb: dict[tuple[int, int], list[float]],
-    m: int,
-    d_sub: int,
-    max_cell: int,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(query_id, dtab array<array<double>>): the per-query asymmetric-
-    distance table to every (sub, cell) centroid, dtab[sub][cell] —
-    a row-local mapInArrow kernel over the queries DataFrame with the
-    codebook in its closure, so the query side scales with the cluster
-    and nothing is collected to the driver. Each entry is
-    ``_sub_l2_np``'s ‖q_sub − c‖² (the scorer PQ encoding uses), the
-    exact IEEE op sequence of the sequential (x−y)·(x−y) fold. Holes
-    (cells the sampled seeds skipped) stay +inf and are never
-    referenced — codes only ever name cells present in the codebook; a
-    query subvector with a NULL or missing element is +inf too."""
-    import numpy as np
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            V, have, _ = _dense(batch.column(vec_col), m * d_sub)
-            tab = np.full((batch.num_rows, m, max_cell + 1), np.inf)
-            for s, cells, dist in _sub_l2_np(V, cb, m, d_sub, have):
-                tab[:, s, cells] = dist
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), _nested(tab)],
-                names=["query_id", "dtab"],
-            )
-
-    return queries.select(id_col, vec_col).mapInArrow(
-        run, f"query_id {_type(queries, id_col)}, dtab array<array<double>>"
-    )
+    nibbles vs 512 bytes of doubles). Plan: the corpus kernel with a
+    codebook and no cells (pinned against a scalar loop by
+    test_pq_encode_kernel_matches_scalar_loop) — one pure map over the
+    scan, zero exchanges at any corpus size."""
+    return _corpus_table(corpus, None, _codebook_dict(codebook), vec_col, id_col)
 
 
 def _adc_dist_sql(m: int) -> str:
@@ -1019,71 +1027,15 @@ def pq_topk(
     subvectors, corpus vectors are represented only by their codes;
     approximate distance = Σ_sub ‖q_sub − centroid(code_sub)‖².
 
-    Plan: the per-(query, sub, cell) distance TABLE is built by the
-    row-local ``_adc_query_table`` kernel (no driver collect of the
-    queries) and broadcast as ONE row per query (bounded — the same
-    queries ≪ corpus contract brute_force_topk's broadcast relies on;
-    |queries| × m × k doubles); the approximate distance is then an
-    IN-ROW sum over the m codes in ascending sub order
-    (``_adc_dist_sql``) — the exact double sequence the DuckDB twin's
-    list(dpart ORDER BY sub) sum sees. The corpus side is therefore a
-    pure map over the codes scan (m ints per row at 10^10 vectors): no
-    corpus × m explode, no per-(query, vector) hash aggregation, and
-    ranking is the two-phase bounded ``_topk_per_group``.
-
-    Value parity: each table entry is the sequential ‖q_sub − c‖² fold
-    ((x−y)·(x−y) accumulated in element order), the same IEEE-754 op
-    sequence as the relational _l2 form, so the table is bit-identical
-    to it."""
-    cb, m, d_sub, max_cell = _codebook_dict(codebook)
-    qdf = _adc_query_table(queries, cb, m, d_sub, max_cell, vec_col, id_col)
-    scored = (
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes")
-        .crossJoin(F.broadcast(qdf))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", _adc_dist_sql(m))
-    )
-    return _topk_per_group(scored, topk, "adist", ascending=True)
-
-
-def _assign_encode_fast(
-    corpus: DataFrame,
-    cells: list[tuple[int, list[float]]],
-    cb: dict[tuple[int, int], list[float]],
-    m: int,
-    d_sub: int,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Fused IVF assignment + PQ encoding in ONE mapInArrow kernel:
-    (id, cell, codes) from a single pass over the corpus scan — the
-    vectors cross the Arrow boundary once instead of riding through two
-    chained kernels. Assignment is ``_cos_cells_np`` + ``_nearest_cell``
-    and encoding is ``_pq_codes_np``, the same functions
-    ``assign_cells_fast`` and ``pq_encode`` run, so cells and codes are
-    identical to theirs."""
-    import pyarrow as pa
-
-    _require_cells(cells)
-    out_schema = (
-        f"{id_col} {_type(corpus, id_col)}, cell bigint, codes array<int>"
-    )
-
-    def run(batches):
-        for batch in batches:
-            vec = batch.column(vec_col).cast(pa.list_(pa.float64()))
-            V, have, cos, _ = _cos_batch(vec, cells, m * d_sub)
-            codes = _pq_codes_np(V, cb, m, d_sub, have).astype("int32")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(id_col),
-                    pa.array(_nearest_cell(cos, cells), pa.int64()),
-                    _nested(codes),
-                ],
-                names=[id_col, "cell", "codes"],
-            )
-
-    return corpus.select(id_col, vec_col).mapInArrow(run, out_schema)
+    Plan: one ``_search``. The query kernel builds one distance table
+    per query (|queries| × m × k doubles, bounded — the queries ≪ corpus
+    contract brute_force_topk's broadcast relies on) and it broadcasts;
+    the distance is an IN-ROW sum over the m codes (``_adc_dist_sql``).
+    The corpus side is a pure map over the codes scan: no corpus × m
+    explode and no per-(query, vector) hash aggregation."""
+    pq = _codebook_dict(codebook)
+    probes = _query_table(queries, None, 0, pq, vec_col, id_col)
+    return _search(codes, probes, topk, pq, vec_col, id_col)
 
 
 def ivfpq_topk(
@@ -1110,33 +1062,21 @@ def ivfpq_topk(
     determinism contract favours one shared codebook, and the recall
     cost at these cell counts is pinned by test, not hidden.)
 
-    Plan (the 10^10-vector shape): IVF training + PQ training are the
-    bounded sampled driver-side paths (one footer-metadata count shared
-    by both sample moduli + one bounded collect each — no job chains);
-    assignment + encode fuse into ONE zero-exchange kernel map over the
-    single corpus scan (``_assign_encode_fast``); the probe table
-    (queries × n_probe rows joined to the per-query ADC tables, both
-    row-local kernels over the queries: ``_probe_cells`` and
-    ``_adc_query_table``) broadcasts into the codes stream, so scoring
-    shuffles NOTHING — followed by the two-phase bounded top-k.
-    Exchange budget: the bounded top-k merge only."""
+    Plan (the 10^10-vector shape): IVF and PQ training run in numpy over
+    bounded samples (one footer-metadata count shared by both sample
+    moduli + one bounded collect each), then one ``_search``: the corpus
+    kernel assigns and encodes in one pass over the scan, and the query
+    kernel's (query_id, cell, dtab) rows, one per probed cell, broadcast
+    into the codes stream."""
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     n = _fast_count(proj)  # shared by both training samples
     train = _train_sample(proj, n_cells, train_per_cell, id_col, n=n)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
-    cb, mm, d_sub, max_cell = _codebook_dict(
+    pq = _codebook_dict(
         pq_train_codebook(proj, m, pq_k, pq_train_per_cell, vec_col, id_col, n)
     )
-    codes = _assign_encode_fast(proj, cents, cb, mm, d_sub, vec_col, id_col)
-    probes = _probe_cells(queries, cents, n_probe, vec_col, id_col).select(
-        "query_id", "cell"
+    return _search(
+        _corpus_table(proj, cents, pq, vec_col, id_col),
+        _query_table(queries, cents, n_probe, pq, vec_col, id_col),
+        k, pq, vec_col, id_col,
     )
-    qdf = _adc_query_table(queries, cb, mm, d_sub, max_cell, vec_col, id_col)
-    probe_tab = probes.join(qdf, "query_id")  # ≤ queries × n_probe rows
-    scored = (
-        codes.select(F.col(id_col).alias("neighbor_id"), "cell", "codes")
-        .join(F.broadcast(probe_tab), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", _adc_dist_sql(mm))
-    )
-    return _topk_per_group(scored, k, "adist", ascending=True)

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from agentic_doc_spark.functions.textstats import fingerprint
+from agentic_doc_spark.streaming import _start
 
 
 def stream_dedup_exact(
@@ -45,11 +46,7 @@ def stream_dedup_exact(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 def stream_dedup_within_watermark(
@@ -80,11 +77,7 @@ def stream_dedup_within_watermark(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 def stream_near_dedup(
@@ -139,11 +132,7 @@ def stream_near_dedup(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 def _process_near_dedup_batch(

@@ -20,6 +20,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from agentic_doc_spark.streaming import _start
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -196,8 +198,4 @@ def sessionize_stream(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)

@@ -27,6 +27,7 @@ from agentic_doc_spark.config import DEFAULT_SETTINGS, Settings
 from agentic_doc_spark.operators.lineage import lineage_rows
 from agentic_doc_spark.pipeline import extract
 from agentic_doc_spark.schema import DOCUMENTS_RAW
+from agentic_doc_spark.streaming import _start
 
 
 def stream_extract(
@@ -66,11 +67,7 @@ def stream_extract(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)
 
 
 def _process_extract_batch(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from agentic_doc_spark.streaming import _start
+
 
 def stream_windowed_counts(
     spark: SparkSession,
@@ -47,8 +49,4 @@ def stream_windowed_counts(
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _start(writer, available_now)

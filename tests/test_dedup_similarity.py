@@ -754,11 +754,12 @@ def test_semantic_dedup_drops_higher_id_near_dups(spark):
     assert 9 not in kept
 
 
-def test_fast_count_matches_count(spark, monkeypatch):
+def test_fast_count_matches_count(spark, monkeypatch, tmp_path):
     """_fast_count: footer-metadata count on pure project/repartition
     plans equals df.count(); any other shape (filter, local relation,
     a single relation with no input files) falls back to df.count() —
-    never a wrong number."""
+    never a wrong number. A directory whose name needs URI escaping
+    still reads the footers: no Spark job runs."""
     from agentic_doc_spark.operators.similarity import _fast_count
 
     emb = (
@@ -767,6 +768,19 @@ def test_fast_count_matches_count(spark, monkeypatch):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     )
     assert _fast_count(emb) == emb.count()
+    escaped = str(tmp_path / "a dir%b" / "emb")
+    emb.write.parquet(escaped)
+    df = spark.read.parquet(escaped)
+    sc = spark.sparkContext
+    sc.setJobGroup("fast-count-escaped", "footers only")
+    try:
+        n = _fast_count(df)
+        jobs = sc.statusTracker().getJobIdsForGroup("fast-count-escaped")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
+    assert n == emb.count()
     filtered = emb.filter(F.col("vec_id") % 2 == 0)
     assert _fast_count(filtered) == filtered.count()
     local = spark.createDataFrame([(1, [0.5])], "vec_id long, embedding array<double>")
@@ -780,7 +794,7 @@ def test_assign_kernels_reject_empty_cells(spark):
     """An empty centroid list fails on the driver with a clear error
     before any job launches, not inside the executor's numpy kernel."""
     from agentic_doc_spark.operators.similarity import (
-        _assign_encode_fast,
+        _corpus_table,
         assign_cells_fast,
     )
 
@@ -790,7 +804,7 @@ def test_assign_kernels_reject_empty_cells(spark):
     with pytest.raises(ValueError, match="no centroid cells"):
         assign_cells_fast(emb, [])
     with pytest.raises(ValueError, match="no centroid cells"):
-        _assign_encode_fast(emb, [], {}, 1, 2, "embedding", "vec_id")
+        _corpus_table(emb, [], ({}, 1, 2, 0), "embedding", "vec_id")
 
 
 def test_assign_cells_fast_bit_identical(spark):
@@ -911,8 +925,8 @@ def test_adc_query_table_is_distributed(spark):
     building it launches no job, and the query-side plan holds the
     MapInArrow node that emits dtab."""
     from agentic_doc_spark.operators.similarity import (
-        _adc_query_table,
         _codebook_dict,
+        _query_table,
         pq_train_codebook,
     )
 
@@ -926,9 +940,9 @@ def test_adc_query_table_is_distributed(spark):
     sc = spark.sparkContext
     sc.setJobGroup("adc-query-table-build", "build only")
     try:
-        qdf = _adc_query_table(
-            emb.filter(F.col("vec_id") < 5), cbd, m, d_sub, max_cell,
-            "embedding", "vec_id",
+        qdf = _query_table(
+            emb.filter(F.col("vec_id") < 5), None, 0,
+            (cbd, m, d_sub, max_cell), "embedding", "vec_id",
         )
         plan = qdf._jdf.queryExecution().optimizedPlan().toString()
         jobs = sc.statusTracker().getJobIdsForGroup("adc-query-table-build")
@@ -969,16 +983,17 @@ def _real_emb(spark):
 
 
 def test_probe_cells_matches_scalar_loop(spark):
-    """_probe_cells (the shared numpy cosine scorer + top-n_probe) vs a
-    scalar loop: same probed cells and bit-equal qn on real embeddings
-    plus zero-norm, NaN and NULL queries. A duplicated centroid under a
-    higher cell id ties with its twin for every query (ties → lower
-    cell); NaN scores sort greatest; zero-norm and NULL queries score
-    0.0 everywhere and probe the lowest cells, with qn NULL for NULL."""
+    """_query_table's probes (the shared numpy cosine scorer +
+    top-n_probe) vs a scalar loop: same probed cells and bit-equal qn
+    on real embeddings plus zero-norm, NaN and NULL queries. A
+    duplicated centroid under a higher cell id ties with its twin for
+    every query (ties → lower cell); NaN scores sort greatest; zero-norm
+    and NULL queries score 0.0 everywhere and probe the lowest cells,
+    with qn NULL for NULL."""
     import math
 
     from agentic_doc_spark.operators.similarity import (
-        _probe_cells,
+        _query_table,
         _train_centroids,
         _train_sample,
         ivf_topk,
@@ -1025,7 +1040,9 @@ def test_probe_cells_matches_scalar_loop(spark):
         return {c for _, c in ranked[:3]}, qn
 
     got: dict = {}
-    for r in _probe_cells(queries, cells, 3, "embedding", "vec_id").collect():
+    for r in _query_table(
+        queries, cells, 3, None, "embedding", "vec_id"
+    ).collect():
         got.setdefault(r["query_id"], (set(), r["qn"]))[0].add(r["cell"])
 
     def same(a, b):

@@ -235,7 +235,6 @@ def test_routing_and_decoding_agree(ladder_sidecar, name, fmt, decodable):
     # the renderer decodes iff _decode_array decodes the file — a format
     # added to only one side fails here
     from agentic_doc_spark.operators.multimodal import (
-        _HAS_PIL,
         _decode_array,
         raster_format,
     )
@@ -247,5 +246,4 @@ def test_routing_and_decoding_agree(ladder_sidecar, name, fmt, decodable):
     assert ladder_sidecar.get(name) == (
         None if fmt is None else _decode_array(data) is not None
     )
-    if not _HAS_PIL:
-        assert ladder_sidecar.get(name) == decodable
+    assert ladder_sidecar.get(name) == decodable

@@ -121,6 +121,16 @@ def _python_nodes(plan: str) -> list[tuple[str, str]]:
     ]
 
 
+def test_ann_ivfpq_query_side_is_one_kernel(spark, entry):
+    # one query kernel emits (query_id, cell, dtab) per probed cell: the
+    # plan holds the corpus kernel, the query kernel and the local top-k
+    # pass, and its one join broadcasts the probes into the codes stream
+    plan = _plan(entry.queries()["ann_ivfpq"](spark, SF))
+    assert len(_python_nodes(plan)) == 3, plan
+    ops = [ln.lstrip(" +-:").split(" ")[0] for ln in plan.splitlines()]
+    assert sum(op.endswith("Join") for op in ops) == 1, plan
+
+
 def test_layout_parse_is_one_kernel_and_one_exchange(spark):
     # each raw row leaves the kernel as one nested (doc_id, spans) row —
     # no re-nesting aggregate — and the only wide step is the hash

@@ -433,32 +433,10 @@ def test_viz_crop_specs_svg(spark):
     assert len(svgs) == n_pages
 
 
-def test_decode_image_real_when_pil_present(spark):
-    # inverted-guard regression: with an imaging library installed the
-    # REAL decode must run (and report true dimensions); without one the
-    # deterministic fake serves the same contract
-    import agentic_doc_spark.operators.multimodal as mm
-
-    if not mm._HAS_PIL:
-        pytest.skip("no imaging library in this environment")
-    import io
-
-    from PIL import Image
-
-    img = Image.new("RGB", (30, 20), color=(255, 0, 0))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    w, h, feat = mm._decode_image(buf.getvalue())
-    assert (w, h) == (30, 20)
-    assert len(feat) == 8
-    # pure red → red-heavy channel mean of 255/3/255 per cell
-    assert all(abs(f - (1.0 / 3.0)) < 1e-3 for f in feat)
-
-
 def test_decode_image_fallback_deterministic():
     import agentic_doc_spark.operators.multimodal as mm
 
-    # non-image bytes always take the deterministic fallback, PIL or not
+    # non-image bytes always take the deterministic fallback
     a = mm._decode_image(b"not an image")
     b = mm._decode_image(b"not an image")
     assert a[0] == b[0] and a[1] == b[1]
@@ -507,16 +485,12 @@ def test_resize_media_shape_contract(spark):
         [("m1", bytearray(b"payload-one")), ("m2", bytearray(b"payload-two"))],
         "media_ref string, content binary",
     )
-    import agentic_doc_spark.operators.multimodal as mm
-
     rows = {r["media_ref"]: r for r in resize_media(media, 16, 8).collect()}
     assert set(rows) == {"m1", "m2"}
     for r in rows.values():
         assert (r["width"], r["height"]) == (16, 8)
-        if not mm._HAS_PIL:  # fake path emits exactly w*h*3 RGB bytes
-            assert len(bytes(r["content"])) == 16 * 8 * 3
-        else:  # non-image payload falls back to the fake even with PIL
-            assert len(bytes(r["content"])) == 16 * 8 * 3
+        # a non-image payload takes the fake path: exactly w*h*3 RGB bytes
+        assert len(bytes(r["content"])) == 16 * 8 * 3
     again = {r["media_ref"]: r for r in resize_media(media, 16, 8).collect()}
     assert bytes(rows["m1"]["content"]) == bytes(again["m1"]["content"])
 
