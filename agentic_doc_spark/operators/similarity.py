@@ -2,7 +2,7 @@
 
 - brute_force_topk: exact cosine top-k — the correctness baseline. The
   query side is broadcast (queries ≪ corpus), the corpus side streams:
-  one wide scan, no shuffle until the per-query top-k aggregation.
+  one wide scan, no shuffle until the per-query top-k window.
 - ivf_topk / pq_topk / ivfpq_topk: the IVFADC index (Jégou et al. 2011)
   — optional coarse cells (deterministic k-means over one bounded
   sample), plus exact cosine or a PQ codebook. A query scores only
@@ -10,7 +10,8 @@
 
 Every index runs one corpus kernel (``_corpus_table``) and one query
 kernel (``_query_table``), which branch only on whether there are cells
-and whether there is a codebook; ``_search`` joins, scores and ranks.
+and whether there is a codebook; ``_search`` joins, scores and ranks
+with one top-k window (``_topk_per_group``).
 Vector-to-centroid scoring has one numpy home per metric,
 ``_cos_cells_np`` and ``_sub_l2_np``; pair scores are JVM expressions.
 Every kernel keeps the IEEE op sequence of the JVM folds, so every score
@@ -22,29 +23,10 @@ from __future__ import annotations
 import math
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from agentic_doc_spark.operators.dedup import _md5_key64, cosine
-
-
-def _topk_cmp_sql(value_col: str, id_col: str, ascending: bool) -> str:
-    """array_sort comparator for (value ASC|DESC, id ASC) with the Spark
-    ordering convention for NaN (greatest: last in ASC, first in DESC).
-    SQL text, not the Column API — py4j expression-construction cost."""
-    lt, gt = (-1, 1) if ascending else (1, -1)
-    nan_cmp = 1 if ascending else -1
-    return (
-        "(a, b) -> CASE"
-        f" WHEN isnan(a.`{value_col}`) AND NOT isnan(b.`{value_col}`)"
-        f" THEN {nan_cmp}"
-        f" WHEN isnan(b.`{value_col}`) AND NOT isnan(a.`{value_col}`)"
-        f" THEN {-nan_cmp}"
-        f" WHEN a.`{value_col}` < b.`{value_col}` THEN {lt}"
-        f" WHEN a.`{value_col}` > b.`{value_col}` THEN {gt}"
-        f" WHEN a.`{id_col}` < b.`{id_col}` THEN -1"
-        f" WHEN a.`{id_col}` > b.`{id_col}` THEN 1 ELSE 0 END"
-    )
 
 
 def _topk_per_group(
@@ -56,104 +38,30 @@ def _topk_per_group(
     id_col: str = "neighbor_id",
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Two-phase bounded per-group top-k — the distributed replacement
-    for ``Window.partitionBy(group).orderBy(...)`` + row_number, whose
-    rank step funnels EVERY candidate row of a group through ONE reducer
-    task.
-
-    Phase 1 — ZERO shuffle: a mapInArrow kernel keeps only the top-k
-    rows per group within each partition, streaming Arrow batches
-    through a bounded carry (≤ groups-seen × k rows held at once — no
-    giant collect_list buffer, no partition-sized sort spill). The
-    kernel only SELECTS rows; the double values pass through Arrow
-    bit-exact, so cross-engine value parity is untouched.
-
-    Phase 2 — bounded shuffle: the ≤ k × partitions survivors per group
-    merge under one groupBy(group) via
-    slice(array_sort(collect_list(...)), 1, k).
+    """Per-group top-k as (group, id, value, rank): ``row_number()``
+    over (value ASC|DESC, id ASC) per group, kept where ≤ k. Spark plans
+    it as a two-phase ``WindowGroupLimit``, a Partial one below the hash
+    exchange on the group and a Final one above it, so no reducer reads
+    more than k × partitions rows of a group. Trap: for k above
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
+    Spark plans a plain ``Window`` with no limit, funnelling every
+    candidate of a group through one reducer; the rows stay the same.
 
     The (value, id) ordering is total (id unique per group in every
-    caller), so the result is the exact global top-k, partition-count
-    invariant, ties broken identically to the window form. NaN values
-    sort greatest (the Spark ASC/DESC convention); values must be
-    non-null (all callers compute coalesced/closed-form scores).
-    """
-    schema = scored.schema
-    vcol, gcol, icol, kk = value_col, group_col, id_col, int(k)
-    asc = bool(ascending)
-
-    def _local(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        names = [f.name for f in schema.fields]
-
-        def take(t):
-            vals = t.column(vcol).to_numpy(zero_copy_only=False)
-            vals = np.asarray(vals, dtype="float64")
-            # NaN ordering (greatest: last in ASC, first in DESC) rides
-            # a SEPARATE rank key — mapping NaN onto ±inf would collide
-            # with genuine infinite values (e.g. an overflowed adist)
-            # and break the total order phase 2 re-establishes
-            nan = np.isnan(vals)
-            nan_rank = nan.astype(np.int8) if asc else (~nan).astype(np.int8)
-            key = np.where(nan, 0.0, vals if asc else -vals)
-            t2 = t.append_column(
-                "__n", pa.array(nan_rank, type=pa.int8())
-            ).append_column("__k", pa.array(key, type=pa.float64()))
-            idx = pc.sort_indices(
-                t2,
-                sort_keys=[
-                    (gcol, "ascending"),
-                    ("__n", "ascending"),
-                    ("__k", "ascending"),
-                    (icol, "ascending"),
-                ],
-            )
-            t2 = t2.take(idx)
-            g = t2.column(gcol).to_numpy(zero_copy_only=False)
-            n = len(g)
-            if n == 0:
-                return t2.select(names)
-            change = np.ones(n, dtype=bool)
-            change[1:] = g[1:] != g[:-1]
-            starts = np.flatnonzero(change)
-            grp = np.cumsum(change) - 1
-            pos = np.arange(n) - starts[grp]
-            return t2.filter(pa.array(pos < kk)).select(names)
-
-        carry = None
-        for batch in batches:
-            t = pa.Table.from_batches([batch])
-            if carry is not None and carry.num_rows:
-                t = pa.concat_tables([carry, t])
-            carry = take(t)
-        if carry is not None and carry.num_rows:
-            yield from carry.combine_chunks().to_batches()
-
-    local = scored.mapInArrow(_local, schema)
-    cmp = _topk_cmp_sql(vcol, icol, asc)
-    merged = (
-        local.selectExpr(
-            f"`{gcol}`",
-            f"named_struct('{vcol}', `{vcol}`, '{icol}', `{icol}`) AS __s",
-        )
-        .groupBy(gcol)
-        .agg(
-            F.expr(
-                f"slice(array_sort(collect_list(__s), {cmp}), 1, {kk})"
-            ).alias("__top")
-        )
+    caller), so the result is partition-count invariant. NaN sorts
+    greatest and −0.0 equals 0.0; values must be non-null (every caller
+    computes coalesced/closed-form scores)."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    value = F.col(value_col)
+    w = Window.partitionBy(group_col).orderBy(
+        value.asc() if ascending else value.desc(), F.col(id_col).asc()
     )
     return (
-        merged.select(gcol, F.posexplode("__top").alias("__pos", "__s"))
-        .select(
-            gcol,
-            F.col("__s").getField(icol).alias(icol),
-            F.col("__s").getField(vcol).alias(vcol),
-            (F.col("__pos") + 1).cast("int").alias(rank_col),
+        scored.select(
+            group_col, id_col, value_col, F.row_number().over(w).alias(rank_col)
         )
+        .filter(F.col(rank_col) <= k)
     )
 
 
@@ -167,12 +75,12 @@ def brute_force_topk(
     """Exact top-k neighbors per query (query_id, neighbor_id, cos, rank).
 
     Self-matches excluded. Queries are broadcast — scoring is a map-side
-    nested loop over corpus partitions, then per-partition top-k
-    selection (zero shuffle) and one bounded merge of ≤ k × partitions
-    candidates per query (``_topk_per_group``). Norms are STAGED once
-    per side before the cross join (the exact ``_norm`` fold doubles),
-    so each pair pays one dot fold instead of dot + 2 norm folds —
-    bit-identical cos via the same try_divide(dot, qn·cn) op order."""
+    nested loop over corpus partitions, then the per-query top-k window
+    (``_topk_per_group``), whose only exchange carries ≤ k × partitions
+    candidates per query. Norms are STAGED once per side before the
+    cross join (the exact ``_norm`` fold doubles), so each pair pays one
+    dot fold instead of dot + 2 norm folds — bit-identical cos via the
+    same try_divide(dot, qn·cn) op order."""
     q = F.broadcast(
         queries.selectExpr(
             f"`{id_col}` AS query_id",
@@ -673,7 +581,7 @@ def _search(
     both kernels staged (the ``cosine()`` doubles, one dot fold per
     pair), ranked DESC; with one it is the in-row ADC sum
     (``_adc_dist_sql``), ranked ASC. The only exchange is the bounded
-    top-k merge of ``_topk_per_group``."""
+    one of the ``_topk_per_group`` window."""
     cell = ["cell"] if "cell" in probes.columns else []
     staged = [F.col(vec_col).alias("cv"), F.col("_vnorm").alias("cn")]
     cols = staged if pq is None else ["codes"]
@@ -715,7 +623,7 @@ def ivf_topk(
     Query time is one ``_search``: the probes (queries × n_probe rows,
     with ‖q‖) broadcast into the assigned corpus stream (with ‖v‖), so
     the corpus is scanned once and the only exchange is the bounded
-    top-k merge."""
+    one of the top-k window."""
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     train = _train_sample(proj, n_cells, train_per_cell, id_col)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
@@ -1067,7 +975,7 @@ def ivfpq_topk(
     moduli + one bounded collect each), then one ``_search``: the corpus
     kernel assigns and encodes in one pass over the scan, and the query
     kernel's (query_id, cell, dtab) rows, one per probed cell, broadcast
-    into the codes stream."""
+    into the codes stream, and the top-k window ranks the scored rows."""
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     n = _fast_count(proj)  # shared by both training samples
     train = _train_sample(proj, n_cells, train_per_cell, id_col, n=n)

@@ -94,12 +94,13 @@ def main() -> None:
         "  plan is the checkpointed result. Its real budget: 1 range",
         "  exchange + bounded driver offsets — no global-order window",
         "  (operators/packing.py docstring; pinned by test_packing.py).",
-        "- `near_dup_clusters`/`near_dup_survivors` show a LEAF final plan:",
-        "  the iterative CC loop truncates lineage (checkpoint every 5",
-        "  rounds + on the final labels), so the audited plan is the",
-        "  checkpointed result, not an unrolled join chain (round 2 showed",
-        "  306/612 unrolled exchanges here). Each ROUND is still 2",
-        "  equi-joins + a groupBy at runtime, with bounded plan size.",
+        "- `near_dup_clusters` shows a LEAF final plan: the iterative CC",
+        "  loop cuts lineage after every round (one equi-join + one",
+        "  groupBy each), so the audited plan is the cut result, not an",
+        "  unrolled join chain (round 2 showed 306/612 unrolled exchanges",
+        "  here). `near_dup_survivors` joins those labels back to the",
+        "  corpus; before execution that join plans as a sort-merge join",
+        "  (AQE picks the final strategy from runtime stats).",
     ]
     out = REPO / "PLANS.md"
     out.write_text("\n".join(lines) + "\n")

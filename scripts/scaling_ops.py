@@ -104,8 +104,10 @@ def op_semantic_dedup():
     return semantic_dedup(emb(), threshold=0.3, n_cells=32)
 
 def op_ann_ivf():
-    # round-5 two-phase bounded top-k: ranking must scale with
-    # partitions, not funnel through one reducer per query
+    # ranking is a row_number() <= k window that Spark plans as a
+    # two-phase WindowGroupLimit (k is far below the 1000-row
+    # windowGroupLimitThreshold): it must scale with partitions, not
+    # funnel through one reducer per query
     from agentic_doc_spark.operators.similarity import ivf_topk
     e = emb()
     return ivf_topk(e, e.filter(F.col("vec_id") < 5), k=3,

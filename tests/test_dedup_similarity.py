@@ -265,6 +265,67 @@ def test_brute_force_topk(vectors):
     assert rows[0]["cos"] > 0.99
 
 
+def test_topk_per_group_matches_sorted_reference(spark):
+    """The per-group top-k contract every ANN query ranks with: order by
+    value (NaN greatest, −0.0 = 0.0) then id ASC, keep the first k per
+    group, rank from 1. k=1001 is above Spark's window-group-limit
+    threshold (1000), where the plan keeps no limit."""
+    import math
+    import random
+    import struct
+
+    from agentic_doc_spark.operators.similarity import _topk_per_group
+
+    rnd = random.Random(16)
+    pool = [math.nan, math.inf, -math.inf, 0.0, -0.0, 0.5, -0.5, 1.0]
+    rows = [
+        (g, i, rnd.choice(pool) if rnd.random() < 0.5 else rnd.uniform(-2, 2))
+        for g in range(20)
+        for i in rnd.sample(range(10_000), 60)
+    ]
+    df = spark.createDataFrame(
+        rows, "query_id int, neighbor_id int, v double"
+    ).repartition(5)
+
+    def bits(x):  # NaN-safe, sign-of-zero-exact row identity
+        return struct.pack(">d", x)
+
+    for ascending in (True, False):
+        def key(r):
+            nan = math.isnan(r[2])
+            val = 0.0 if nan else (r[2] if ascending else -r[2])
+            return (r[0], nan == ascending, val, r[1])
+
+        # ASC: non-NaN first (key False); DESC: NaN first (key False)
+        ordered = sorted(rows, key=key)
+        for k in (1, 3, 10, 100, 1001):
+            want, seen = [], {}
+            for g, i, v in ordered:
+                seen[g] = seen.get(g, 0) + 1
+                if seen[g] <= k:
+                    want.append((g, i, bits(v), seen[g]))
+            top = _topk_per_group(df, k, "v", ascending=ascending)
+            assert top.dtypes == [
+                ("query_id", "int"), ("neighbor_id", "int"),
+                ("v", "double"), ("rank", "int"),
+            ]
+            got = sorted(
+                (r.query_id, r.neighbor_id, bits(r.v), r.rank)
+                for r in top.collect()
+            )
+            assert got == sorted(want), (ascending, k)
+
+
+def test_topk_negative_k_fails_before_any_plan(vectors):
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        brute_force_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=-1)
+
+
+def test_topk_zero_k_returns_no_rows(vectors):
+    q = vectors.filter(F.col("vec_id") == 0)
+    assert brute_force_topk(vectors, q, k=0).collect() == []
+
+
 def test_ivf_topk_finds_near_neighbor(vectors):
     # with enough probes IVF matches brute force on this tiny set
     res = ivf_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=1, n_cells=2, n_probe=2)

@@ -70,16 +70,35 @@ def test_ann_pq_has_no_sort_merge_join(spark, entry):
     assert "SortMergeJoin" not in plan, plan
 
 
-@pytest.mark.parametrize(
-    "name", ["ann_bruteforce", "ann_ivf", "ann_pq", "ann_ivfpq"]
-)
+#: Python map nodes per ANN plan: an index's corpus and query kernels
+_ANN_PYTHON_NODES = {"ann_bruteforce": 0, "ann_ivf": 2, "ann_pq": 2, "ann_ivfpq": 2}
+
+
+@pytest.mark.parametrize("name", sorted(_ANN_PYTHON_NODES))
 def test_ann_topk_has_no_single_partition_window(spark, entry, name):
-    # per-query ranking must be the two-phase bounded top-k
-    # (mapInArrow local top-k + bounded merge agg) — a
-    # Window.partitionBy(query_id) funnels every candidate row of a
-    # query through ONE reducer task (round-4 VERDICT finding #1)
+    # per-query ranking is row_number() <= k, which Spark plans as a
+    # two-phase WindowGroupLimit: the Partial one cuts each partition to
+    # k rows per query BELOW the hash exchange on query_id and the Final
+    # one ranks above it, so no reducer reads more than k × partitions
+    # rows of a query (an unlimited window would funnel every candidate
+    # of a query through ONE reducer task). The ranking crosses no
+    # Python boundary.
     plan = _plan(entry.queries()[name](spark, SF))
-    assert "Window" not in plan, (name, plan)
+    lines = [ln.lstrip(" +-:") for ln in plan.splitlines()]
+    ex = [i for i, ln in enumerate(lines) if ln.startswith("Exchange hashpartitioning")]
+    assert len(ex) == 1 and lines[ex[0]].startswith(
+        "Exchange hashpartitioning(query_id"
+    ), (name, plan)
+    below = lines[ex[0] + 1]
+    assert below.startswith("WindowGroupLimit") and below.endswith(", Partial"), (
+        name, plan,
+    )
+    final = [
+        i for i, ln in enumerate(lines)
+        if ln.startswith("WindowGroupLimit") and ln.endswith(", Final")
+    ]
+    assert len(final) == 1 and final[0] < ex[0], (name, plan)
+    assert len(_python_nodes(plan)) == _ANN_PYTHON_NODES[name], (name, plan)
 
 
 def test_semantic_dedup_assignment_materialized_once(spark):
@@ -123,10 +142,10 @@ def _python_nodes(plan: str) -> list[tuple[str, str]]:
 
 def test_ann_ivfpq_query_side_is_one_kernel(spark, entry):
     # one query kernel emits (query_id, cell, dtab) per probed cell: the
-    # plan holds the corpus kernel, the query kernel and the local top-k
-    # pass, and its one join broadcasts the probes into the codes stream
+    # plan holds the corpus kernel and the query kernel, and its one
+    # join broadcasts the probes into the codes stream
     plan = _plan(entry.queries()["ann_ivfpq"](spark, SF))
-    assert len(_python_nodes(plan)) == 3, plan
+    assert len(_python_nodes(plan)) == 2, plan
     ops = [ln.lstrip(" +-:").split(" ")[0] for ln in plan.splitlines()]
     assert sum(op.endswith("Join") for op in ops) == 1, plan
 
