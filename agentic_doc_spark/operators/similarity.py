@@ -29,39 +29,37 @@ from pyspark.sql import functions as F
 from agentic_doc_spark.operators.dedup import _md5_key64, cosine
 
 
-def _topk_per_group(
-    scored: DataFrame,
-    k: int,
-    value_col: str,
-    ascending: bool,
-    group_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Per-group top-k as (group, id, value, rank): ``row_number()``
-    over (value ASC|DESC, id ASC) per group, kept where ≤ k. Spark plans
-    it as a two-phase ``WindowGroupLimit``, a Partial one below the hash
-    exchange on the group and a Final one above it, so no reducer reads
-    more than k × partitions rows of a group. Trap: for k above
-    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
-    Spark plans a plain ``Window`` with no limit, funnelling every
-    candidate of a group through one reducer; the rows stay the same.
-
-    The (value, id) ordering is total (id unique per group in every
-    caller), so the result is partition-count invariant. NaN sorts
-    greatest and −0.0 equals 0.0; values must be non-null (every caller
-    computes coalesced/closed-form scores)."""
+def _require_k(k: int) -> None:
+    """Top-k guard, raised before an index trains (that runs jobs)."""
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
+
+
+def _topk_per_group(
+    scored: DataFrame, k: int, value_col: str, ascending: bool
+) -> DataFrame:
+    """Per-query top-k as (query_id, neighbor_id, value, rank):
+    ``row_number()`` over (value ASC|DESC, neighbor_id ASC) per query,
+    kept where ≤ k. Spark plans it as a two-phase ``WindowGroupLimit``,
+    a Partial one below the hash exchange on query_id and a Final one
+    above it, so no reducer reads more than k × partitions rows of a
+    query. Trap: for k above
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)
+    Spark plans a plain ``Window`` with no limit, funnelling every
+    candidate of a query through one reducer; the rows stay the same.
+
+    The (value, neighbor_id) ordering is total (neighbor_id unique per
+    query in every caller), so the result is partition-count invariant.
+    NaN sorts greatest and −0.0 equals 0.0; values must be non-null
+    (every caller computes coalesced/closed-form scores)."""
+    _require_k(k)
     value = F.col(value_col)
-    w = Window.partitionBy(group_col).orderBy(
-        value.asc() if ascending else value.desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        value.asc() if ascending else value.desc(), F.col("neighbor_id").asc()
     )
-    return (
-        scored.select(
-            group_col, id_col, value_col, F.row_number().over(w).alias(rank_col)
-        )
-        .filter(F.col(rank_col) <= k)
+    rank = F.row_number().over(w).alias("rank")
+    return scored.select("query_id", "neighbor_id", value_col, rank).filter(
+        F.col("rank") <= k
     )
 
 
@@ -624,6 +622,7 @@ def ivf_topk(
     with ‖q‖) broadcast into the assigned corpus stream (with ‖v‖), so
     the corpus is scanned once and the only exchange is the bounded
     one of the top-k window."""
+    _require_k(k)
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     train = _train_sample(proj, n_cells, train_per_cell, id_col)
     cents = _train_centroids(train, n_cells, refine, vec_col, id_col)
@@ -941,6 +940,7 @@ def pq_topk(
     the distance is an IN-ROW sum over the m codes (``_adc_dist_sql``).
     The corpus side is a pure map over the codes scan: no corpus × m
     explode and no per-(query, vector) hash aggregation."""
+    _require_k(topk)
     pq = _codebook_dict(codebook)
     probes = _query_table(queries, None, 0, pq, vec_col, id_col)
     return _search(codes, probes, topk, pq, vec_col, id_col)
@@ -976,6 +976,7 @@ def ivfpq_topk(
     kernel assigns and encodes in one pass over the scan, and the query
     kernel's (query_id, cell, dtab) rows, one per probed cell, broadcast
     into the codes stream, and the top-k window ranks the scored rows."""
+    _require_k(k)
     proj = corpus.select(F.col(id_col), F.col(vec_col))
     n = _fast_count(proj)  # shared by both training samples
     train = _train_sample(proj, n_cells, train_per_cell, id_col, n=n)

@@ -50,7 +50,7 @@ def main() -> None:
     for name, fn in entry.queries().items():
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         n_ex = len(re.findall(r"\bExchange hashpartitioning", plan))
-        n_rr = len(re.findall(r"\bExchange roundrobin", plan))
+        n_rr = len(re.findall(r"\bExchange RoundRobinPartitioning", plan))
         n_rg = len(re.findall(r"\bExchange rangepartitioning", plan))
         n_bc = len(re.findall(r"BroadcastExchange", plan))
         scans = re.findall(r"ReadSchema: struct<([^>]*)>", plan)

@@ -316,9 +316,28 @@ def test_topk_per_group_matches_sorted_reference(spark):
             assert got == sorted(want), (ascending, k)
 
 
-def test_topk_negative_k_fails_before_any_plan(vectors):
-    with pytest.raises(ValueError, match="k must be >= 0"):
-        brute_force_topk(vectors, vectors.filter(F.col("vec_id") == 0), k=-1)
+@pytest.mark.parametrize("entry", ["brute", "ivf", "pq", "ivfpq"])
+def test_topk_negative_k_fails_before_any_job(spark, vectors, entry):
+    # an index trains (collects) before it ranks: the guard must come first
+    from agentic_doc_spark.operators.similarity import ivfpq_topk, pq_topk
+
+    q = vectors.filter(F.col("vec_id") == 0)
+    call = {
+        "brute": lambda: brute_force_topk(vectors, q, k=-1),
+        "ivf": lambda: ivf_topk(vectors, q, k=-1, n_cells=2),
+        "pq": lambda: pq_topk(q, vectors, vectors, topk=-1),
+        "ivfpq": lambda: ivfpq_topk(vectors, q, k=-1, n_cells=2, m=2),
+    }[entry]
+    sc = spark.sparkContext
+    sc.setJobGroup("topk-negative-k", "guard only")
+    try:
+        with pytest.raises(ValueError, match="k must be >= 0"):
+            call()
+        jobs = sc.statusTracker().getJobIdsForGroup("topk-negative-k")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
 
 
 def test_topk_zero_k_returns_no_rows(vectors):
